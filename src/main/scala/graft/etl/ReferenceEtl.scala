@@ -1,9 +1,12 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import graft.ops.Ids
 import graft.parse.{GridRow, HtmlGrid, MiniDom, ParsedAssignment, Personnel}
@@ -62,14 +65,21 @@ final case class EtlTables(
   *    itself become the cache source for later rows), which no fixed
   *    window can express; files are independent, so this parallelizes
   *    exactly like the parse stage;
-  *  - E1-E4 dims — distinct + first-seen order + scale-safe two-phase
-  *    ranking (graft.ops.Ids.sequenceBy), replacing SERIAL PKs;
-  *  - E6 fact assembly — broadcast joins of the tiny dims;
+  *  - E1-E4 dims — one `groupBy(key).agg(min(orderKey))` per dimension,
+  *    collected once; the driver sorts by first-seen order and numbers
+  *    1..n ([[numberOnDriver]]), replacing SERIAL PKs. The numbered rows
+  *    come back as a local frame that feeds both the E6 join and the sink;
+  *  - E6 fact assembly — broadcast joins of the tiny dims; the fact table's
+  *    AssignmentID is the one fact-scale numbering (graft.ops.Ids.sequenceBy);
   *  - S5-S8 sinks — parquet, fact partitioned by Year (:160-169 indexes).
   *
-  * At 100 TB the per-file stages scale with file count, the only wide
-  * exchanges are the per-file window shuffle and the tiny dim builds, and
-  * every dim join is broadcast.
+  * At 100 TB the per-file stages scale with file count, and the only wide
+  * exchanges are the per-file window shuffle, the dimension aggregates and
+  * the fact numbering. Driver memory bounds the dimensions: E6 joins every
+  * one of them through an explicit `broadcast()` hint, which bypasses
+  * `autoBroadcastJoinThreshold`, so each dimension has to fit on the
+  * driver in any case. Numbering them there adds no new bound; it only
+  * stops collecting them twice.
   */
 object ReferenceEtl {
 
@@ -237,8 +247,14 @@ object ReferenceEtl {
     rows
   }
 
-  /** Full ETL: corpus directory → six star-schema tables (E1-E4, E6). */
-  def run(spark: SparkSession, dir: String): EtlTables = {
+  /** Full ETL: corpus directory → six star-schema tables (E1-E4, E6).
+    * The five dimensions are computed here, as local frames; the fact table
+    * stays lazy over the resolved rows, which are cached and stay cached. */
+  def run(spark: SparkSession, dir: String): EtlTables = build(spark, dir)._2
+
+  /** [[run]], also returning the cached resolved rows so that [[writeAll]]
+    * can release them. */
+  private def build(spark: SparkSession, dir: String): (DataFrame, EtlTables) = {
     import spark.implicits._
 
     val resolved = resolvedAssignments(spark, dir).toDF()
@@ -257,33 +273,30 @@ object ReferenceEtl {
       .withColumn("locKeyOkrug", stdUdf($"okrug"))
       .cache()
 
-    // E4/E1: Inspectors — first-seen canonical names over emitted named rows.
-    def firstSeenDim(keyed: DataFrame, keyCols: Seq[String], idCol: String): DataFrame = {
-      val grouped = keyed
-        .groupBy(keyCols.map(col): _*)
-        .agg(min($"orderKey").as("firstSeen"))
-      Ids.sequenceBy(grouped, Seq(col("firstSeen")), idCol).drop("firstSeen")
-    }
+    // First-seen surrogate keys of one single-key dimension.
+    def firstSeenIds(keyed: DataFrame, key: String, idCol: String): DataFrame =
+      numberOnDriver(keyed.groupBy(key).agg(min($"orderKey").as("firstSeen")), "firstSeen", idCol)
 
-    val inspectors = firstSeenDim(
+    // E4/E1: Inspectors — first-seen canonical names over emitted named rows.
+    val inspectors = firstSeenIds(
       resolved.where($"canonName".isNotNull).select($"canonName", $"orderKey"),
-      Seq("canonName"), "InspectorID")
-      .select($"InspectorID", $"canonName".as("FullName"), lit(null).cast(org.apache.spark.sql.types.StringType).as("Notes"))
+      "canonName", "InspectorID")
+      .select($"InspectorID", $"canonName".as("FullName"), lit(null).cast(StringType).as("Notes"))
 
     // E1: Ranks / Professions — dictionary-enriched first-seen dims.
     def dotFlex(dict: Map[String, String]) =
       udf((k: String) => if (k == null) None else D.dotFlexGet(dict, k))
 
-    val ranks = firstSeenDim(
+    val ranks = firstSeenIds(
       resolved.where($"emitted" && $"stdRank".isNotNull).select($"stdRank", $"orderKey"),
-      Seq("stdRank"), "RankID")
+      "stdRank", "RankID")
       .select($"RankID", $"stdRank".as("Abbreviation"),
         dotFlex(D.knownRanksMap)($"stdRank").as("FullName_RU"),
-        lit(null).cast(org.apache.spark.sql.types.StringType).as("RankType"))
+        lit(null).cast(StringType).as("RankType"))
 
-    val professions = firstSeenDim(
+    val professions = firstSeenIds(
       resolved.where($"emitted" && $"stdProf".isNotNull && !$"profRefused").select($"stdProf", $"orderKey"),
-      Seq("stdProf"), "ProfessionID")
+      "stdProf", "ProfessionID")
       .select($"ProfessionID", $"stdProf".as("Abbreviation"),
         dotFlex(D.knownProfessionsMap)($"stdProf").as("FullName_RU"))
 
@@ -293,32 +306,24 @@ object ReferenceEtl {
       .select($"stdEdu".as("k"), struct($"orderKey", lit(0).as("sub")).as("orderKey"))
       .unionAll(resolved.where($"emitted" && $"profRefused")
         .select($"stdProf".as("k"), struct($"orderKey", lit(1).as("sub")).as("orderKey")))
-    val educations = firstSeenDim(eduEvents, Seq("k"), "EducationID")
+    val educations = firstSeenIds(eduEvents, "k", "EducationID")
       .select($"EducationID", $"k".as("Abbreviation"),
         dotFlex(D.knownEducationsMap)($"k").as("FullName_RU"))
 
     // E3: Locations — null-safe composite key, first-seen per ROW (:717).
-    val rowGrain = resolved
-      .where($"ord" === 0) // one location probe per surviving row
-      .select($"locKeyCity", $"locKeyGub", $"locKeyOkrug",
-        $"cityStd", $"gub", $"okrug", $"orderKey")
-    val locFirst = rowGrain
-      .groupBy($"locKeyCity", $"locKeyGub", $"locKeyOkrug")
-      .agg(min($"orderKey").as("firstSeen"))
-    val locWithId = Ids.sequenceBy(locFirst, Seq(col("firstSeen")), "LocationID")
-    // Stored values come from the first row that created the location (:240-245).
-    val locations = locWithId.as("l")
-      .join(rowGrain.as("r"),
-        $"l.locKeyCity" <=> $"r.locKeyCity" &&
-        $"l.locKeyGub" <=> $"r.locKeyGub" &&
-        $"l.locKeyOkrug" <=> $"r.locKeyOkrug" &&
-        $"l.firstSeen" === $"r.orderKey")
+    // The stored values come from the row that created the location
+    // (:240-245): they ride in the same minimum, after the unique orderKey.
+    val locations = numberOnDriver(
+      resolved.where($"ord" === 0) // one location probe per surviving row
+        .groupBy($"locKeyCity", $"locKeyGub", $"locKeyOkrug")
+        .agg(min(struct($"orderKey", $"cityStd", $"gub", $"okrug")).as("firstRow")),
+      "firstRow", "LocationID")
       .select($"LocationID",
-        pyStripOrNullUdf($"r.cityStd").as("CityName"),
-        pyStripOrNullUdf($"r.gub").as("GuberniaName"),
-        pyStripOrNullUdf($"r.okrug").as("OkrugName"),
+        pyStripOrNullUdf($"firstRow.cityStd").as("CityName"),
+        pyStripOrNullUdf($"firstRow.gub").as("GuberniaName"),
+        pyStripOrNullUdf($"firstRow.okrug").as("OkrugName"),
         lit("Город").as("LocationType"),
-        $"l.locKeyCity", $"l.locKeyGub", $"l.locKeyOkrug")
+        $"locKeyCity", $"locKeyGub", $"locKeyOkrug")
 
     // E6: fact assembly — broadcast dim joins + scale-safe AssignmentID.
     val fact0 = resolved.where($"emitted")
@@ -349,25 +354,66 @@ object ReferenceEtl {
         $"estCount".as("EstablishmentsCount"), $"workCount".as("WorkerCount"),
         $"boilCount".as("BoilerCount"))
 
-    EtlTables(
+    (resolved, EtlTables(
       assignments,
       inspectors,
       locations.drop("locKeyCity", "locKeyGub", "locKeyOkrug"),
       ranks,
       professions,
-      educations)
+      educations))
+  }
+
+  /** E1-E4 numbering: collects `df`, sorts it on the driver by `orderCol`
+    * in Spark's ascending order (nulls first, struct fields left to right)
+    * and appends `idCol` = 1..n, returning a local frame. Same columns and
+    * ids as `graft.ops.Ids.sequenceBy(df, Seq(col(orderCol)), idCol)` for
+    * an `orderCol` that totally orders the rows. `df` must fit on the
+    * driver: it is meant for the dimensions, which E6 broadcasts anyway. */
+  private[graft] def numberOnDriver(df: DataFrame, orderCol: String, idCol: String): DataFrame = {
+    val i = df.schema.fieldIndex(orderCol)
+    val rows = df.collect().sortBy(_.get(i))(ascending(df.schema(i).dataType))
+    val numbered = rows.iterator.zipWithIndex
+      .map { case (r, n) => Row.fromSeq(r.toSeq :+ (n + 1L)) }.toList
+    df.sparkSession.createDataFrame(numbered.asJava, df.schema.add(idCol, LongType, nullable = false))
+  }
+
+  /** Spark's ascending sort order, nulls first, over collected values of
+    * the types order keys are built from. */
+  private def ascending(t: DataType): Ordering[Any] = {
+    val nonNull: Ordering[Any] = t match {
+      case IntegerType => Ordering.Int.on(_.asInstanceOf[Int])
+      case LongType => Ordering.Long.on(_.asInstanceOf[Long])
+      case StringType => Ordering.fromLessThan((a, b) =>
+        UTF8String.fromString(a.asInstanceOf[String]).compareTo(UTF8String.fromString(b.asInstanceOf[String])) < 0)
+      case s: StructType =>
+        val fields = s.fields.map(f => ascending(f.dataType))
+        (a, b) => {
+          val (x, y) = (a.asInstanceOf[Row], b.asInstanceOf[Row])
+          fields.indices.iterator.map(k => fields(k).compare(x.get(k), y.get(k))).find(_ != 0).getOrElse(0)
+        }
+      case other => throw new IllegalArgumentException(s"no driver-side order for $other")
+    }
+    (a, b) =>
+      if (a == null) { if (b == null) 0 else -1 }
+      else if (b == null) 1
+      else nonNull.compare(a, b)
   }
 
   /** S5-S8: parquet sinks; the fact table partitioned by Year (the
-    * reference's idx_assignments_year :168 becomes partition pruning). */
+    * reference's idx_assignments_year :168 becomes partition pruning).
+    * The cached resolved rows are released once the six sinks finish; the
+    * returned tables stay usable, the fact table then recomputing from the
+    * corpus. */
   def writeAll(spark: SparkSession, dir: String, outDir: String): EtlTables = {
-    val t = run(spark, dir)
-    t.assignments.write.mode("overwrite").partitionBy("Year").parquet(s"$outDir/assignments")
-    t.inspectors.write.mode("overwrite").parquet(s"$outDir/inspectors")
-    t.locations.write.mode("overwrite").parquet(s"$outDir/locations")
-    t.ranks.write.mode("overwrite").parquet(s"$outDir/ranks")
-    t.professions.write.mode("overwrite").parquet(s"$outDir/professions")
-    t.educations.write.mode("overwrite").parquet(s"$outDir/educations")
+    val (resolved, t) = build(spark, dir)
+    try {
+      t.assignments.write.mode("overwrite").partitionBy("Year").parquet(s"$outDir/assignments")
+      t.inspectors.write.mode("overwrite").parquet(s"$outDir/inspectors")
+      t.locations.write.mode("overwrite").parquet(s"$outDir/locations")
+      t.ranks.write.mode("overwrite").parquet(s"$outDir/ranks")
+      t.professions.write.mode("overwrite").parquet(s"$outDir/professions")
+      t.educations.write.mode("overwrite").parquet(s"$outDir/educations")
+    } finally resolved.unpersist()
     t
   }
 }

@@ -45,8 +45,6 @@ class ExtendedPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val recordedSpark = "4.1"
     if (!new java.io.File(s"$SfDir/lineitem.parquet").exists())
       Some(s"recorded against $SfDir, which is absent here")
-    else if (sys.env.get("SPARK_GRAFT_CPUS").exists(_ != "32"))
-      Some(s"recorded at local[32], SPARK_GRAFT_CPUS=${sys.env("SPARK_GRAFT_CPUS")}")
     else if (spark.conf.get("spark.sql.shuffle.partitions") != "32")
       Some("recorded at spark.sql.shuffle.partitions=32, session has " +
         spark.conf.get("spark.sql.shuffle.partitions"))

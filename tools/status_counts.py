@@ -5,16 +5,26 @@ reports — derive them from artifacts instead).
 
 Reads:
   - target/test-reports/*.xml   (scalatest JUnit XML: suites, tests)
+  - the sbt test log            (canceled tests by name: the JUnit XML
+                                 lists `assume`-canceled tests as passes)
   - CORRECTNESS_r{N}.json       (newest: registered/hash-green/no_oracle)
   - bench_full_sf0.1_r{N}.json  (newest: headline + extended totals)
 
-Usage: python3 tools/status_counts.py   (from the repo root)
+Usage: python3 tools/status_counts.py [SBT_LOG]   (from the repo root)
+
+SBT_LOG defaults to the newest of sbt's own test-task logs under
+target/streams; pass a saved console log of a test run instead when that
+run was not the last one.
 """
 import glob
 import json
 import os
 import re
+import sys
 import xml.etree.ElementTree as ET
+
+SBT_LOGS = ["target/streams/test/test/_global/streams/out",
+            "target/streams/test/testOnly/_global/streams/out"]
 
 
 def newest(pattern):
@@ -23,6 +33,26 @@ def newest(pattern):
         return int(m.group(1)) if m else -1
     paths = glob.glob(pattern)
     return max(paths, key=roundno) if paths else None
+
+
+def canceled_tests(log_path):
+    """(suite, test, reason) of every canceled test in an sbt test log,
+    and the log's last `Tests:` summary line."""
+    suite, canceled, summary = None, [], None
+    lines = [re.sub(r"^\[\w+\] ?", "", l.rstrip("\n"))
+             for l in open(log_path, encoding="utf-8", errors="replace")]
+    for i, line in enumerate(lines):
+        m = re.match(r"^(\w+):$", line)
+        if m:
+            suite = m.group(1)
+        m = re.match(r"^- (.*) !!! CANCELED !!!$", line)
+        if m:
+            nxt = lines[i + 1] if i + 1 < len(lines) else ""
+            reason = nxt.strip() if nxt.startswith("  ") else ""
+            canceled.append((suite, m.group(1), reason))
+        if line.startswith("Tests: succeeded"):
+            summary = line
+    return canceled, summary
 
 
 def main():
@@ -38,6 +68,15 @@ def main():
             errors += int(s.get("errors", 0))
     print(f"tests: {tests} across {suites} suites "
           f"({failures} failures, {errors} errors)")
+
+    logs = sys.argv[1:] or [p for p in SBT_LOGS if os.path.exists(p)]
+    if logs:
+        log = max(logs, key=os.path.getmtime)
+        canceled, summary = canceled_tests(log)
+        print(f"{log}: {summary or 'no Tests: summary line'}")
+        print(f"canceled: {len(canceled)} (the JUnit XML counts them as passes)")
+        for suite, test, reason in canceled:
+            print(f"  {suite}: {test} -- {reason}")
 
     cpath = newest("CORRECTNESS_r*.json")
     if cpath:
