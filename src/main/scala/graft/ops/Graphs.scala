@@ -1129,28 +1129,25 @@ object Graphs {
     * BroadcastNestedLoopJoin built internally for its broadcast
     * relation) and each partition scores its nodes in an
     * allocation-free long-array loop feeding a k-slot buffer, so only
-    * k rows per node are ever materialized as rows. The r18 probe
-    * (tools/D171Probe, sf0.1, n=5922) showed the old BNLJ + Catalyst
-    * pipeline spent ~12 s evaluating Round's per-pair BigDecimal and
-    * ~14 s in the udaf(TopKAgg) object-aggregation machinery against a
-    * ~4 s pair-stream floor; the kernel pays BigDecimal only for
+    * k rows per node are ever materialized as rows. The r18
+    * measurement (sf0.1, n=5922; OPTIMIZATION_r19.md) showed the old
+    * BNLJ + Catalyst pipeline spent ~12 s evaluating Round's per-pair
+    * BigDecimal and ~14 s in the udaf(TopKAgg) object-aggregation
+    * machinery against a ~4 s pair-stream floor; the kernel pays
+    * BigDecimal only for
     * buffer CONTENDERS — a candidate whose raw cosine sits more than
     * 1e-6 below the kth kept (rounded) value cannot round into the
     * buffer (round6 moves a finite double by at most 5e-7(1+ε)), so
     * the reject test is two primitive compares. Selection order and
     * values are bit-identical to the TopKAgg path: same exact-long
     * dot, same sqrt/divide, the same HALF_UP decimal-string rounding
-    * Catalyst's Round performs ([[round6]]), the same
-    * (sim DESC, id ASC) total order, the same −0.0 → 0.0
-    * normalization — pinned by GraphsSpec's kernel-vs-legacy
-    * equivalence sweep and the unchanged DuckDB hash gate.
+    * Catalyst's Round performs ([[round6]]), and the same order
+    * ([[TopKSlots]], whose −0.0 → 0.0 normalization the oracle matches
+    * with `+ 0`, so both engines emit the identical +0.0 bits) —
+    * pinned by GraphsSpec's kernel-vs-legacy equivalence sweep and the
+    * unchanged DuckDB hash gate.
     * Overflow: |units| ≤ ~2^20 from the trainer's bounded descent ⇒
     * dot ≤ dim·2^40 — inside Long to dim 16 with 3 orders to spare.
-    *
-    * −0.0 discipline: the kernel normalizes −0.0 → 0.0 at insert, the
-    * rule TopKAgg applies (a dot < 0 tiny against huge norms rounds to
-    * −0.0); the oracle applies the same `+ 0` normalization so both
-    * engines emit the identical +0.0 bits.
     *
     * Guard: refuses corpora over `maxNodes` (r15 verdict hardening) —
     * the N² baseline must be chosen deliberately, never reached by a
@@ -1221,11 +1218,7 @@ object Graphs {
         val mm = ids.length
         it.flatMap { case (node, av, n2) =>
           val an = math.sqrt(n2.toDouble)
-          // k-slot buffer ordered (sim DESC, id ASC) — TopKAgg's insert
-          // semantics verbatim (no id-dedup scan: candidates are unique)
-          val ks = new Array[Double](kk)
-          val ki = new Array[Long](kk)
-          var kn = 0
+          val top = new TopKSlots(kk)
           var c = 0
           while (c < mm) {
             val cid = ids(c)
@@ -1235,29 +1228,15 @@ object Graphs {
               val off = c * dim
               while (j < dim) { dot += av(j) * units(off + j); j += 1 }
               val raw = dot.toDouble / (an * norms(c))
-              // contender gate: ks holds ROUNDED sims; round6 moves a
-              // finite double by ≤ 5e-7(1+ε), so raw < kth − 1e-6 can
+              // contender gate: the slots hold ROUNDED sims; round6 moves
+              // a finite double by ≤ 5e-7(1+ε), so raw < kth − 1e-6 can
               // neither beat nor tie the kth slot after rounding
-              if (kn < kk || raw >= ks(kn - 1) - 1e-6) {
-                val r6 = round6(raw)
-                val sim = if (r6 == 0.0) 0.0 else r6 // −0.0 → 0.0 (TopKAgg rule)
-                var pos = kn
-                while (pos > 0 && {
-                    val cmp = java.lang.Double.compare(sim, ks(pos - 1))
-                    cmp > 0 || (cmp == 0 && cid < ki(pos - 1))
-                  }) pos -= 1
-                if (pos < kk) {
-                  var q = math.min(kn, kk - 1)
-                  while (q > pos) { ks(q) = ks(q - 1); ki(q) = ki(q - 1); q -= 1 }
-                  ks(pos) = sim
-                  ki(pos) = cid
-                  if (kn < kk) kn += 1
-                }
-              }
+              if (top.size < kk || raw >= top.kth - 1e-6) top.offer(round6(raw), cid)
             }
             c += 1
           }
-          (0 until kn).iterator.map(p => (node, ki(p), ks(p), (p + 1).toLong))
+          (0 until top.size).iterator
+            .map(p => (node, top.id(p), top.sim(p), (p + 1).toLong))
         }
       }
       .toDF("node", "rel_id", "cosine", "rank")

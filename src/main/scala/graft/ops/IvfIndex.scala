@@ -310,9 +310,9 @@ object IvfIndex {
     * "per-task work" / §2.3 "aggregate before you shuffle"). The
     * previous plan streamed every probed candidate as a row through a
     * codegen'd per-pair cosine into udaf([[TopKAgg]]) — correct, but
-    * the object-aggregation machinery pays per ROW (a D171Probe-style
-    * decomposition put it at ~0.4 µs/pair, ~14 s of d189's 18 s at
-    * sf0.1 where probes = K makes the stream N² pairs). Here each
+    * the object-aggregation machinery pays per ROW (~0.4 µs/pair, ~14 s
+    * of d189's 18 s at sf0.1 where probes = K makes the stream N² pairs;
+    * measurement in OPTIMIZATION_r19.md). Here each
     * (query, cell) group is scored in one allocation-free primitive
     * loop feeding a k-slot buffer, so only k rows per (query, cell)
     * ever BECOME rows — the downstream [[Similarity.topKRanks]]
@@ -324,10 +324,8 @@ object IvfIndex {
     * arithmetic — same sequential double dot ([[NativeFns.vecDot]]'s
     * fold order), same per-side sqrt hoisted once per vector, same
     * single IEEE division, so every emitted sim is bit-identical;
-    * selection — the buffer realizes TopKAgg's exact total order
-    * (java.lang.Double.compare DESC so NaN ranks greatest, −0.0
-    * normalized to 0.0 BEFORE comparing — TopKAgg's insert rule — ties
-    * to the lower id), and top-k selection over a union is the union
+    * selection — the buffer is a [[TopKSlots]], the order TopKAgg also
+    * uses, and top-k selection over a union is the union
     * of per-part top-k merged, so topKRanks(partials) = topKRanks(all
     * pairs) row for row (ids are unique across cells — a stored vector
     * lives in exactly one cell — so TopKAgg's id-dedup stays a no-op);
@@ -400,11 +398,7 @@ object IvfIndex {
         val qn = math.sqrt(q2)
         if (!(qn > 0.0)) Iterator.empty
         else {
-          // k-slot buffer under TopKAgg's insert order (sim DESC via
-          // Double.compare, id ASC; −0.0 → 0.0 before comparing)
-          val ks = new Array[Double](kk)
-          val ki = new Array[Long](kk)
-          var kn = 0
+          val top = new TopKSlots(kk)
           var c = 0
           while (c < mm) {
             val cid = mIds(c)
@@ -413,24 +407,11 @@ object IvfIndex {
               var t = 0
               val off = c * dim
               while (t < dim) { dot += qv(t) * mVals(off + t); t += 1 }
-              val raw = dot / (qn * mNrms(c))
-              val sim = if (raw == 0.0) 0.0 else raw
-              var pos = kn
-              while (pos > 0 && {
-                  val cmp = java.lang.Double.compare(sim, ks(pos - 1))
-                  cmp > 0 || (cmp == 0 && cid < ki(pos - 1))
-                }) pos -= 1
-              if (pos < kk) {
-                var q = math.min(kn, kk - 1)
-                while (q > pos) { ks(q) = ks(q - 1); ki(q) = ki(q - 1); q -= 1 }
-                ks(pos) = sim
-                ki(pos) = cid
-                if (kn < kk) kn += 1
-              }
+              top.offer(dot / (qn * mNrms(c)), cid)
             }
             c += 1
           }
-          (0 until kn).iterator.map(p => (qid, ki(p), ks(p)))
+          (0 until top.size).iterator.map(p => (qid, top.id(p), top.sim(p)))
         }
       }
     }.toDF("vec_id", "neighbor_id", "sim")

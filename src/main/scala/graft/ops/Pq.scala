@@ -382,7 +382,7 @@ object Pq {
           cn(j) = math.sqrt(acc); j += 1
         }
         val lut = new Array[Double](mm * km)
-        val bestS = new Array[Double](k); val bestI = new Array[Long](k)
+        val top = new TopKSlots(k)
         it.flatMap { case (qid, v) =>
           // LUT: subspace s × code c -> dot(q_s, centroid), sequential
           var s = 0
@@ -407,33 +407,20 @@ object Pq {
             qsq += d; qs += 1
           }
           val qn = math.sqrt(qsq)
-          // top-k selection under TopKAgg's total order: Double.compare
-          // (NaN greatest), -0.0 -> 0.0, ties to the smaller id
-          var n = 0
+          // one buffer per partition: the strict drain below copies it
+          // out before the next query clears it
+          top.clear()
           var ji = 0
           while (ji < cand.length) {
             val (cid, codes) = cand(ji)
             if (cid != qid) {
               var num = 0.0; var ss = 0
               while (ss < mm) { num += lut(ss * km + codes(ss)); ss += 1 }
-              val sim0 = num / (qn * cn(ji))
-              val sim = if (sim0 == 0.0) 0.0 else sim0
-              var pos = n
-              while (pos > 0 && {
-                  val c = java.lang.Double.compare(sim, bestS(pos - 1))
-                  c > 0 || (c == 0 && cid < bestI(pos - 1))
-                }) pos -= 1
-              if (pos < k) {
-                val last = math.min(n, k - 1)
-                var t = last
-                while (t > pos) { bestS(t) = bestS(t - 1); bestI(t) = bestI(t - 1); t -= 1 }
-                bestS(pos) = sim; bestI(pos) = cid
-                if (n < k) n += 1
-              }
+              top.offer(num / (qn * cn(ji)), cid)
             }
             ji += 1
           }
-          (0 until n).map(r => (qid, (r + 1).toLong, bestI(r)))
+          (0 until top.size).map(r => (qid, (r + 1).toLong, top.id(r)))
         }
       }.toDF("vec_id", "rank", "neighbor_id")
     } else {
@@ -556,7 +543,7 @@ object Pq {
     * Output and order are [[topKAdc]]'s ((vec_id, rank, neighbor_id),
     * sim DESC / id ASC) — including on degenerate inputs: a zero-norm
     * vector's sims are NaN, which the family's total order ranks FIRST
-    * (Double.compare; DuckDB orders NaN the same way). r8 shipped with
+    * ([[TopKSlots]]; DuckDB orders NaN the same way). r8 shipped with
     * zero-norm filters here that [[topKAdc]] and the d73/d74 oracle
     * don't apply, so the documented "equals topKAdc at full probes"
     * equivalence held only because the test corpus has no zero vector

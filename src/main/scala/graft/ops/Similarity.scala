@@ -9,10 +9,10 @@ import org.apache.spark.sql.types._
 import Tables._
 
 /** Bounded top-k buffer for [[TopKAgg]]: parallel (sim, id) arrays kept
-  * sorted under (sim DESC, id ASC), at most k entries. */
+  * sorted under [[TopKSlots]]' order, at most k entries. */
 case class TopKBuf(sims: Array[Double], ids: Array[Long])
 
-/** Exact top-k neighbors under (sim DESC, id ASC) as a typed Aggregator:
+/** Exact top-k neighbors under [[TopKSlots]]' order as a typed Aggregator:
   * constant-size buffers with map-side partial aggregation, so the
   * brute-force kNN join (d07) streams N*N pairs through codegen and
   * shuffles only k rows per query — no driver-side materialization
@@ -29,14 +29,7 @@ case class TopKBuf(sims: Array[Double], ids: Array[Long])
 class TopKAgg(k: Int) extends Aggregator[(Double, Long), TopKBuf, TopKBuf] {
   override def zero: TopKBuf = TopKBuf(new Array[Double](0), new Array[Long](0))
   private def insert(b0: TopKBuf, sim0: Double, id: Long): TopKBuf = {
-    // java.lang.Double.compare, not primitive > : NaN must rank GREATEST
-    // (both Spark's and DuckDB's sort order, hence the oracle's
-    // row_number) — primitive NaN comparisons are all-false and would
-    // silently rank NaN LAST instead. NaN sims arise from zero-norm
-    // vectors (0/0 cosine) the exact baseline must still rank like the
-    // oracle does. -0.0 normalizes to 0.0 first (Double.compare would
-    // order them, engines treat them equal).
-    val sim = if (sim0 == 0.0) 0.0 else sim0
+    val sim = TopKSlots.normalize(sim0)
     // id-dedup: if this id already holds a slot, keep the better sim
     // (identical sims in practice — the same vector pair scores the
     // same — but the general rule keeps the buffer a set under ANY
@@ -46,7 +39,7 @@ class TopKAgg(k: Int) extends Aggregator[(Double, Long), TopKBuf, TopKBuf] {
     while (j < n0 && b0.ids(j) != id) j += 1
     val b =
       if (j == n0) b0
-      else if (java.lang.Double.compare(sim, b0.sims(j)) <= 0) return b0
+      else if (!TopKSlots.precedes(sim, id, b0.sims(j), id)) return b0
       else {
         val ds = new Array[Double](n0 - 1); val di = new Array[Long](n0 - 1)
         System.arraycopy(b0.sims, 0, ds, 0, j)
@@ -56,11 +49,7 @@ class TopKAgg(k: Int) extends Aggregator[(Double, Long), TopKBuf, TopKBuf] {
         TopKBuf(ds, di)
       }
     val n = b.sims.length
-    var pos = n
-    while (pos > 0 && {
-        val c = java.lang.Double.compare(sim, b.sims(pos - 1))
-        c > 0 || (c == 0 && id < b.ids(pos - 1))
-      }) pos -= 1
+    val pos = TopKSlots.position(b.sims, b.ids, n, sim, id)
     if (pos >= k) b
     else {
       val m = math.min(n + 1, k)
@@ -959,6 +948,7 @@ object Similarity {
     * same pairs, no broadcast memory ceiling. */
   def cosineTopK(vecs: DataFrame, k: Int = 3,
       maxBroadcastBytes: Long = 256L << 20): DataFrame = {
+    require(k > 0, "need k > 0")
     val e = vecs
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x AS double))").as("v"))
     val withNorm = e.withColumn("nrm", sqrt(vecDot(col("v"), col("v"))))
@@ -972,8 +962,7 @@ object Similarity {
     // machinery pays ~0.4 µs per ROW; the kernel pays two array reads and
     // a compare per pair). Selection is row-identical: same sequential
     // vec_dot fold, same per-side sqrt, one IEEE divide, and the buffer
-    // realizes TopKAgg's total order (Double.compare DESC, −0.0→0.0
-    // before comparing, ties to the lower id). A zero-norm pair divisor
+    // is a TopKSlots, the order TopKAgg also uses. A zero-norm pair divisor
     // FAILS LOUDLY exactly like the pair stream does: under Spark 4's
     // default ANSI mode the legacy plan's double division throws
     // DIVIDE_BY_ZERO on the first zero-norm pair it evaluates (so the
@@ -1034,9 +1023,7 @@ object Similarity {
       val (ids, vals, nrms) = bc.value
       val mm = ids.length
       it.flatMap { case (qid, qv, qn) =>
-        val ks = new Array[Double](kk)
-        val ki = new Array[Long](kk)
-        var kn = 0
+        val top = new TopKSlots(kk)
         var c = 0
         while (c < mm) {
           val cid = ids(c)
@@ -1050,24 +1037,11 @@ object Similarity {
               "[DIVIDE_BY_ZERO] zero-norm cosine divisor in cosineTopK " +
                 s"(query $qid vs $cid) — the pair-stream plan's ANSI " +
                 "division fails the same way; drop failed encodes first")
-            val raw = dot / den
-            val sim = if (raw == 0.0) 0.0 else raw // −0.0 → 0.0 (TopKAgg rule)
-            var pos = kn
-            while (pos > 0 && {
-                val cmp = java.lang.Double.compare(sim, ks(pos - 1))
-                cmp > 0 || (cmp == 0 && cid < ki(pos - 1))
-              }) pos -= 1
-            if (pos < kk) {
-              var q = math.min(kn, kk - 1)
-              while (q > pos) { ks(q) = ks(q - 1); ki(q) = ki(q - 1); q -= 1 }
-              ks(pos) = sim
-              ki(pos) = cid
-              if (kn < kk) kn += 1
-            }
+            top.offer(dot / den, cid)
           }
           c += 1
         }
-        (0 until kn).iterator.map(p => (qid, ki(p), ks(p)))
+        (0 until top.size).iterator.map(p => (qid, top.id(p), top.sim(p)))
       }
     }.toDF("vec_id", "neighbor_id", "sim")
   }
@@ -1444,6 +1418,7 @@ object Similarity {
     * from an ANN/IVF candidate stream label-filtered the same way. */
   def hardNegativeTopK(vecs: DataFrame, k: Int = 3,
       maxBroadcastBytes: Long = 256L << 20): DataFrame = {
+    require(k > 0, "need k > 0")
     val labeled = vecs.where(col("label").isNotNull)
     val e = labeled.select(col("vec_id"),
         expr("transform(embedding, x -> cast(x AS double))").as("v"), col("label"))

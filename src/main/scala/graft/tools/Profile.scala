@@ -3,12 +3,19 @@ package graft.tools
 import java.util.Locale
 
 /** Dev utility: time individual registered queries against
-  * SPARK_GRAFT_SF_DIR (default sf0.1), repeating each `-n` times.
+  * SPARK_GRAFT_SF_DIR (default sf0.1), repeating each
+  * SPARK_GRAFT_PROFILE_REPS times (default 1; 2 gives a cold and a warm
+  * time per query).
   *
   *   sbt "runMain graft.tools.Profile d06_minhash_lsh d14_dedup_components"
   *
   * Unlike Bench (the driver contract, fixed query sets, one JSON line)
   * this is for interactive plan iteration only.
+  *
+  * Times a noop WRITE (the Bench discipline), not `count()`: count lets
+  * Catalyst prune whole subtrees — a left join against an aggregate
+  * unique on the join key is eliminated outright, so a count()-timed
+  * d130 skips its Levenshtein comparator entirely.
   */
 object Profile {
   def main(args: Array[String]): Unit = {

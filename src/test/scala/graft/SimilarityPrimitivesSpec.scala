@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
 
 /** Unit coverage for the round-3 similarity primitives: the native
-  * vec_dot expression, the bounded TopKAgg, and the exact d19 prefix
+  * vec_dot expression, the bounded TopKAgg and TopKSlots, and the exact d19 prefix
   * join's agreement with brute-force set similarity.
   */
 class SimilarityPrimitivesSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -100,11 +100,21 @@ class SimilarityPrimitivesSpec extends AnyFunSuite with BeforeAndAfterAll {
         val c = java.lang.Double.compare(s1, s2)
         c > 0 || (c == 0 && i1 < i2)
       }.take(3)
-      merged.ids.toSeq == ref.map(_._2) &&
-        merged.sims.length == ref.length &&
-        merged.sims.toSeq.zip(ref.map(_._1)).forall { case (a, b) =>
-          java.lang.Double.compare(a, b) == 0
-        }
+      // TopKSlots does not dedup (its kernels score each id once), so it
+      // sees each id at its first surfacing; a reused buffer is cleared
+      // first, as the PQ scan does per query
+      val slots = new graft.ops.TopKSlots(3)
+      items.reverse.foreach { case (s, i) => slots.offer(s, i) }
+      slots.clear()
+      ids.distinct.foreach(i => slots.offer(simOf(i), i.toLong))
+      val slotIds = (0 until slots.size).map(slots.id)
+      val slotSims = (0 until slots.size).map(slots.sim)
+      def sameAsRef(gotIds: Seq[Long], gotSims: Seq[Double]) =
+        gotIds == ref.map(_._2) && gotSims.length == ref.length &&
+          gotSims.zip(ref.map(_._1)).forall { case (a, b) =>
+            java.lang.Double.compare(a, b) == 0
+          }
+      sameAsRef(merged.ids.toSeq, merged.sims.toSeq) && sameAsRef(slotIds, slotSims)
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(500), prop)
     assert(res.passed, res.status.toString)
@@ -122,6 +132,15 @@ class SimilarityPrimitivesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // -0.0 and 0.0 tie (engines treat them equal): id breaks the tie
     val z = Seq((0.0, 9L), (-0.0, 4L)).foldLeft(agg.zero)(agg.reduce)
     assert(z.ids.toSeq == Seq(4L, 9L))
+    // the kernels' TopKSlots buffer keeps the same order
+    val slots = new graft.ops.TopKSlots(2)
+    Seq((0.9, 3L), (Double.NaN, 5L), (0.7, 1L)).foreach { case (s, i) => slots.offer(s, i) }
+    assert(slots.size == 2 && slots.id(0) == 5L && slots.id(1) == 3L)
+    assert(slots.sim(0).isNaN && slots.sim(1) == 0.9 && slots.kth == 0.9)
+    slots.clear()
+    Seq((0.0, 9L), (-0.0, 4L)).foreach { case (s, i) => slots.offer(s, i) }
+    assert(slots.id(0) == 4L && slots.id(1) == 9L)
+    assert(java.lang.Double.compare(slots.sim(0), 0.0) == 0, "-0.0 kept unnormalized")
   }
 
   test("connectedComponents equals in-memory union-find on random graphs") {

@@ -124,6 +124,30 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
       s"legacy zero-norm error was ${eLegacy}")
   }
 
+  test("cosineTopK and hardNegativeTopK reject k <= 0 on the kernel and blocked paths") {
+    import spark.implicits._
+    val vecs = Seq(
+      (1L, Array(1.0, 0.0), 0), (2L, Array(0.9, 0.1), 1),
+      (3L, Array(0.1, 0.9), 0), (4L, Array(0.0, 1.0), 1))
+      .toDF("vec_id", "embedding", "label")
+    // the default budget takes the kernel path (cosineTopK) / broadcast
+    // join; 16 bytes forces the blocked fragment-replicate join
+    for (k <- Seq(0, -1); budget <- Seq(256L << 20, 16L)) {
+      intercept[IllegalArgumentException] {
+        Similarity.cosineTopK(vecs, k = k, maxBroadcastBytes = budget).collect()
+      }
+      intercept[IllegalArgumentException] {
+        Similarity.hardNegativeTopK(vecs, k = k, maxBroadcastBytes = budget).collect()
+      }
+    }
+    intercept[IllegalArgumentException](new graft.ops.TopKSlots(0))
+    // k = 1 still answers on both paths
+    for (budget <- Seq(256L << 20, 16L))
+      assert(Similarity.cosineTopK(vecs, k = 1, maxBroadcastBytes = budget)
+        .as[(Long, Long, Long)].collect().toSet ==
+        Set((1L, 1L, 2L), (2L, 1L, 1L), (3L, 1L, 4L), (4L, 1L, 3L)))
+  }
+
   /** The throwable plus its cause chain (Spark wraps task failures). */
   private def exceptionChain(t: Throwable): Seq[Throwable] =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq

@@ -15,6 +15,12 @@ Usage: python3 tools/status_counts.py [SBT_LOG]   (from the repo root)
 SBT_LOG defaults to the newest of sbt's own test-task logs under
 target/streams; pass a saved console log of a test run instead when that
 run was not the last one.
+
+Exits 1 when a test canceled although its input is present: a plan pin
+(HeadlinePlanSpec, ExtendedPlanSpec) while the spec's `SfDir` holds
+lineitem.parquet, or a real-corpus golden (GoldenEtlSpec, JdbcSinkSpec)
+while the spec's `corpus` directory exists. Each input path is read from
+the spec's source, so the gate follows the spec.
 """
 import glob
 import json
@@ -25,6 +31,15 @@ import xml.etree.ElementTree as ET
 
 SBT_LOGS = ["target/streams/test/test/_global/streams/out",
             "target/streams/test/testOnly/_global/streams/out"]
+
+# suite -> (Scala val in the suite's source holding its input path,
+#           file inside that path the suite needs; None = the dir itself)
+INPUT_GATED = {
+    "HeadlinePlanSpec": ("SfDir", "lineitem.parquet"),
+    "ExtendedPlanSpec": ("SfDir", "lineitem.parquet"),
+    "GoldenEtlSpec": ("corpus", None),
+    "JdbcSinkSpec": ("corpus", None),
+}
 
 
 def newest(pattern):
@@ -55,7 +70,21 @@ def canceled_tests(log_path):
     return canceled, summary
 
 
+def gated_input(suite):
+    """The input path whose presence makes a cancel in `suite` a failure,
+    or None for suites without one."""
+    if suite not in INPUT_GATED:
+        return None
+    name, inside = INPUT_GATED[suite]
+    src = open(f"src/test/scala/graft/{suite}.scala", encoding="utf-8").read()
+    m = re.search(rf'private val {name} = "([^"]*)"', src)
+    if not m:
+        sys.exit(f"{suite}.scala: no `private val {name}` input path")
+    return os.path.join(m.group(1), inside) if inside else m.group(1)
+
+
 def main():
+    unexpected = []
     xmls = glob.glob("target/test-reports/*.xml")
     suites = tests = failures = errors = 0
     for p in xmls:
@@ -77,6 +106,9 @@ def main():
         print(f"canceled: {len(canceled)} (the JUnit XML counts them as passes)")
         for suite, test, reason in canceled:
             print(f"  {suite}: {test} -- {reason}")
+            path = gated_input(suite)
+            if path and os.path.exists(path):
+                unexpected.append(f"{suite}: {test} (input {path} is present)")
 
     cpath = newest("CORRECTNESS_r*.json")
     if cpath:
@@ -114,6 +146,12 @@ def main():
         green = sum(1 for v in c.values() if v.get("hash_match") is True)
         print(f"{os.path.basename(spath)}: {len(c)} bench-scale queries, "
               f"{green} hash-green")
+
+    if unexpected:
+        print(f"FAIL: {len(unexpected)} canceled with their input present:")
+        for u in unexpected:
+            print(f"  {u}")
+        sys.exit(1)
 
 
 if __name__ == "__main__":
