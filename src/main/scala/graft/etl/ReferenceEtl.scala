@@ -1,31 +1,18 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import graft.ops.Ids
-import graft.parse.{GridRow, HtmlGrid, MiniDom, ParsedAssignment, Personnel}
+import graft.parse.{GridRow, HtmlGrid}
 import graft.text.{Dictionaries => D, RuText}
 import graft.text.RuText.{pyStrip, stripChars}
 
-/** One assignment row after explode, before senior resolution (E5). */
-final case class AsgRow(
-    file: String, fileIdx: Int, year: Int, rowIdx: Int, segId: Long, ord: Int,
-    okrug: String, gub: String,
-    role: String, uchId: String, uchDesc: String,
-    cityStd: String, persRaw: String,
-    name: String, rankAbbr: String, profAbbr: String, eduAbbr: String,
-    startDateRaw: String, endDateRaw: String,
-    isVacancy: Boolean, isActing: Boolean, notes: String, specialRole: String,
-    estCount: Integer, workCount: Integer, boilCount: Integer)
-
-/** AsgRow after E5: inspector resolved to a canonical-name key, senior
-  * backfill applied, reference skip rule applied. */
+/** One assignment row after E5: inspector resolved to a canonical-name key,
+  * senior backfill applied, reference skip rule applied. */
 final case class AsgResolved(
     file: String, fileIdx: Int, year: Int, rowIdx: Int, ord: Int,
     okrug: String, gub: String,
@@ -50,21 +37,17 @@ final case class EtlTables(
 /** The reference's full ingestion ETL (SURVEY.md §2A) as a Spark pipeline.
   *
   * Stage map (reference populate_db_ru_v1.py):
-  *  - S1-S4/T1/T3/T4/T7 — per-file pure parse, one task per file
-  *    (graft.parse.HtmlGrid inside a flatMap; the only sequential state —
-  *    rowspan counters — is file-scoped by the data's own semantics);
-  *  - T2 okrug/gubernia forward-fill + segment ids — window `last`
-  *    over (file) ordered by rowIdx (:520,:567-572,:654-671);
-  *  - T5 location ditto — window `last` (:677-681);
-  *  - P1-P13 — `parsePersonnel` UDF + posexplode (:304-501,:706);
-  *  - T6 personnel ditto — window `last` over parsed-record structs
-  *    (:700-706,:754-755);
-  *  - E5 senior as-of resolution — per-file sorted fold via
-  *    groupByKey(file).flatMapGroups (:724-744): the senior cache is
-  *    *recursively* defined over emitted rows (a resolved special row can
-  *    itself become the cache source for later rows), which no fixed
-  *    window can express; files are independent, so this parallelizes
-  *    exactly like the parse stage;
+  *  - S1-S4/T1/T3/T4/T7 — per-file pure parse (graft.parse.HtmlGrid
+  *    inside a flatMap; each file is read and parsed inside one task);
+  *  - T2 okrug/gubernia fill + segments (:520,:567-572,:654-671), T5
+  *    location ditto (:677-681), T8/T9 role and stats (:656-659,:683-698),
+  *    P1-P13 personnel parse + explode (:304-501,:706), T6 personnel ditto
+  *    (:700-706,:754-755) and E5 senior as-of resolution (:724-744) — one
+  *    in-order pass over the file's grid rows ([[FileResolver]]), in the
+  *    same flatMap. All of this state is file-scoped: the reference walks
+  *    each roster top to bottom, and the E5 senior cache is *recursively*
+  *    defined over emitted rows. Files are independent, so S1..E5 is one
+  *    narrow stage with no shuffle;
   *  - E1-E4 dims — one `groupBy(key).agg(min(orderKey))` per dimension,
   *    collected once; the driver sorts by first-seen order and numbers
   *    1..n ([[numberOnDriver]]), replacing SERIAL PKs. The numbered rows
@@ -73,46 +56,43 @@ final case class EtlTables(
   *    AssignmentID is the one fact-scale numbering (graft.ops.Ids.sequenceBy);
   *  - S5-S8 sinks — parquet, fact partitioned by Year (:160-169 indexes).
   *
-  * At 100 TB the per-file stages scale with file count, and the only wide
-  * exchanges are the per-file window shuffle, the dimension aggregates and
-  * the fact numbering. Driver memory bounds the dimensions: E6 joins every
-  * one of them through an explicit `broadcast()` hint, which bypasses
-  * `autoBroadcastJoinThreshold`, so each dimension has to fit on the
-  * driver in any case. Numbering them there adds no new bound; it only
-  * stops collecting them twice.
+  * At 100 TB the per-file stage scales with file count; a task holds one
+  * file's grid rows ([[MaxFileRows]]). The only wide exchanges are the
+  * dimension aggregates and the fact numbering. Driver memory bounds the
+  * dimensions: E6 joins every one of them through an explicit
+  * `broadcast()` hint, which bypasses `autoBroadcastJoinThreshold`, so
+  * each dimension has to fit on the driver in any case. Numbering them
+  * there adds no new bound; it only stops collecting them twice.
   */
 object ReferenceEtl {
 
   // ---- scalar UDF surface (all pure Scala, deterministic) -----------------
   private val stdUdf = udf((s: String) => RuText.standardizeText(s))
-  private val canonUdf = udf((s: String) => RuText.canonicalInspectorName(s))
-  private val cleanNumUdf = udf((s: String) => RuText.cleanNumber(s))
-  private val parseUdf = udf((s: String) => Personnel.parse(s))
-  // Ditto-marker check (:701): standardize_text(html.unescape(cell).strip()).
-  private val dittoStdUdf = udf((s: String) =>
-    RuText.standardizeText(pyStrip(MiniDom.unescapeEntities(if (s == null) "" else s))))
-  // PersonnelRawString (:767): html.unescape(cell.strip()).
-  private val persRawUdf = udf((s: String) =>
-    MiniDom.unescapeEntities(pyStrip(if (s == null) "" else s)))
-  // T8 role classification (:683-698) → (role, uchastokId, uchastokDesc).
-  private val roleUdf = udf((raw: String) => RoleClassifier.classify(raw))
-  // T6 ditto memory: last record eligible to be remembered (:754 after the
-  // :748 skip — named, non-vacancy, non-special, canonicalizable).
-  private val lastRealUdf = udf((arr: Seq[ParsedAssignment]) =>
-    if (arr == null) None
-    else arr.reverseIterator.find(r =>
-      r.name != null && !r.isVacancy && r.specialRole == null &&
-        RuText.canonicalInspectorName(r.name) != null))
   private val stripCityKeyUdf = udf((s: String) =>
     if (s == null) null else stripChars(s, " .,:;"))
   private val pyStripOrNullUdf = udf((s: String) =>
     if (s == null || s.isEmpty) null else { val t = pyStrip(s); if (t.isEmpty) null else t })
-  private val pyStripUdf = udf((s: String) => pyStrip(if (s == null) "" else s))
 
   /** Read + parse the corpus directory into classified grid rows.
     * File order (= surrogate-id order) follows the reference's HTML_FILES
     * list (:16-21), which is filename-sorted. */
   def gridRows(spark: SparkSession, dir: String): Dataset[GridRow] = {
+    import spark.implicits._
+    perRoster(spark, dir)((base, year, content) => HtmlGrid.parseFile(base, year, year, content).iterator)
+  }
+
+  /** Stages T2..E5: each file's grid rows → resolved assignment rows, by
+    * [[FileResolver.resolveFile]] in the task that parsed the file. */
+  def resolvedAssignments(spark: SparkSession, dir: String): Dataset[AsgResolved] = {
+    import spark.implicits._
+    perRoster(spark, dir)((base, year, content) =>
+      FileResolver.resolveFile(guardFileRows(base, HtmlGrid.parseFile(base, year, year, content))))
+  }
+
+  /** One flatMap over the corpus' `fabricYYYY.html` files, handing `f` each
+    * one's name, year and whole text; other files are skipped. */
+  private def perRoster[T: Encoder](spark: SparkSession, dir: String)(
+      f: (String, Int, String) => Iterator[T]): Dataset[T] = {
     import spark.implicits._
     val files = spark.read.option("wholetext", "true").textFile(dir)
       .withColumn("path", input_file_name())
@@ -125,123 +105,29 @@ object ReferenceEtl {
           val year = m.group(1).toInt
           // fileIdx from the year rank is stable across listing order; the
           // corpus years are distinct and filename-ordered (:16-21).
-          HtmlGrid.parseFile(base, year, year, content)
-        case None => Vector.empty
+          f(base, year, content)
+        case None => Iterator.empty
       }
     }
   }
 
-  /** Stages T2..E5: grid rows → resolved assignment rows. */
-  def resolvedAssignments(spark: SparkSession, dir: String): Dataset[AsgResolved] = {
-    import spark.implicits._
-
-    val grid = gridRows(spark, dir).toDF()
-
-    val wFile = Window.partitionBy($"file").orderBy($"rowIdx")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    // T2: okrug fill + okrug-segment id; gubernia fill scoped to the okrug
-    // segment (okrug headers reset gubernia to "Неизвестно", :567).
-    val boundary = ($"kind" === "okrug") ||
-      ($"kind" === "gubernia" && $"gubText".isNotNull) ||
-      $"gubFromCell".isNotNull
-    val withCtx = grid
-      .withColumn("okrug", coalesce(last(when($"kind" === "okrug", $"okrugText"), ignoreNulls = true).over(wFile), lit("Неизвестно")))
-      .withColumn("okrugSeg", count(when($"kind" === "okrug", 1)).over(wFile))
-      .withColumn("segId", count(when(boundary, 1)).over(wFile))
-      .withColumn("gubVal",
-        when($"kind" === "gubernia", $"gubText").otherwise($"gubFromCell"))
-
-    val wOkrugSeg = Window.partitionBy($"file", $"okrugSeg").orderBy($"rowIdx")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withGub = withCtx
-      .withColumn("gub", coalesce(last($"gubVal", ignoreNulls = true).over(wOkrugSeg), lit("Неизвестно")))
-
-    val data = withGub.where($"kind" === "data")
-
-    // T5: location ditto fill over data rows in file order (:677-681).
-    val wFileData = Window.partitionBy($"file").orderBy($"rowIdx")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val locIdx = when($"year" === 1901, lit(2)).otherwise(lit(4))
-    val descIdx = when($"year" === 1901, lit(1)).otherwise(lit(0))
-    val persIdx = when($"year" === 1901, lit(3)).otherwise(lit(5))
-    val withCity = data
-      .withColumn("locRaw", element_at($"cells", locIdx + 1))
-      .withColumn("descRaw", element_at($"cells", descIdx + 1))
-      .withColumn("persHtml", element_at($"cells", persIdx + 1))
-      .withColumn("cityStdOwn", stdUdf($"locRaw")) // std strips internally (:39)
-      .withColumn("cityFill",
-        last(when($"cityStdOwn".isNotNull && $"cityStdOwn" =!= "»", $"cityStdOwn"), ignoreNulls = true).over(wFileData))
-      .withColumn("cityStd",
-        when($"cityStdOwn".isNull || $"cityStdOwn" === "»", $"cityFill").otherwise($"cityStdOwn"))
-      .where($"cityStd".isNotNull) // :680 — no city and no previous → drop row
-
-    // T9 stats (:656-659) + T8 role (:683-698).
-    val withRowAttrs = withCity
-      .withColumn("estCount", when($"year" =!= 1901, cleanNumUdf(element_at($"cells", lit(2)))).otherwise(lit(null: Integer)))
-      .withColumn("workCount", when($"year" =!= 1901, cleanNumUdf(element_at($"cells", lit(3)))).otherwise(lit(null: Integer)))
-      .withColumn("boilCount", when($"year" =!= 1901, cleanNumUdf(element_at($"cells", lit(4)))).otherwise(lit(null: Integer)))
-      .withColumn("roleTriple", roleUdf(pyStripUdf($"descRaw")))
-
-    // T6: personnel parse + ditto (:700-706). The ditto memory is the last
-    // real record from any STRICTLY PRIOR row in the current segment.
-    val wSegPrev = Window.partitionBy($"file", $"segId").orderBy($"rowIdx")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val withRecords = withRowAttrs
-      .withColumn("isDitto", dittoStdUdf($"persHtml") === "»")
-      .withColumn("parsedArr", when(!$"isDitto", parseUdf($"persHtml")))
-      .withColumn("lastReal", lastRealUdf($"parsedArr"))
-      .withColumn("dittoRec", last($"lastReal", ignoreNulls = true).over(wSegPrev))
-      .withColumn("records",
-        when($"isDitto", when($"dittoRec".isNotNull, array($"dittoRec")))
-          .otherwise($"parsedArr"))
-      // :708 — unparseable/empty (or ditto with no memory) → row dropped
-      .where($"records".isNotNull && size($"records") > 0)
-
-    // P1 explode → assignment grain.
-    val exploded = withRecords
-      .select(
-        $"file", $"fileIdx", $"year", $"rowIdx", $"segId",
-        $"okrug", $"gub",
-        $"roleTriple._1".as("role"), $"roleTriple._2".as("uchId"), $"roleTriple._3".as("uchDesc"),
-        $"cityStd", persRawUdf($"persHtml").as("persRaw"),
-        $"estCount", $"workCount", $"boilCount",
-        posexplode($"records").as(Seq("ord", "rec")))
-      .select(
-        $"file", $"fileIdx", $"year", $"rowIdx", $"segId", $"ord",
-        $"okrug", $"gub", $"role", $"uchId", $"uchDesc", $"cityStd", $"persRaw",
-        $"rec.name".as("name"), $"rec.rankAbbr".as("rankAbbr"),
-        $"rec.profAbbr".as("profAbbr"), $"rec.eduAbbr".as("eduAbbr"),
-        $"rec.startDateRaw".as("startDateRaw"), $"rec.endDateRaw".as("endDateRaw"),
-        $"rec.isVacancy".as("isVacancy"), $"rec.isActing".as("isActing"),
-        $"rec.notes".as("notes"), $"rec.specialRole".as("specialRole"),
-        $"estCount", $"workCount", $"boilCount")
-      .as[AsgRow]
-
-    // E5: per-file sorted fold (cache + as-of DB fallback + backfill).
-    //
-    // MEMORY BOUND: senior back-references are inherently sequential per
-    // source file (the reference walks one document's rows in order with a
-    // mutable seniors cache), so one file's exploded assignment rows are
-    // materialized in a single task. That is O(rows of the LARGEST file),
-    // not O(corpus) — parallelism is per-file and unaffected by corpus
-    // size. The guard below turns a pathological single file (one
-    // multi-GB document) into a diagnosable failure instead of a silent
-    // executor OOM; legitimate inputs are nowhere near it (the reference
-    // corpus' largest file is ~1.4k rows).
-    exploded.groupByKey(_.file).flatMapGroups { (f, it) =>
-      SeniorResolver.resolveFile(
-        guardFileRows(f, it.toVector).sortBy(r => (r.rowIdx, r.ord)))
-    }
-  }
-
-  /** Max assignment rows E5 will hold in one task for a single source
-    * file (~500 B/row → ~1 GB at the cap, well inside executor memory). */
+  /** Max grid rows the per-file resolution holds in one task for a single
+    * source file (~500 B/row → ~1 GB at the cap, well inside executor
+    * memory).
+    *
+    * MEMORY BOUND: the reference walks one document's rows in order with
+    * mutable context (okrug, gubernia, city, ditto and senior caches), so
+    * one file's grid rows are materialized in a single task. That is
+    * O(rows of the LARGEST file), not O(corpus) — parallelism is per-file
+    * and unaffected by corpus size. The guard turns a pathological single
+    * file (one multi-GB document) into a diagnosable failure instead of a
+    * silent executor OOM; legitimate inputs are nowhere near it (the
+    * reference corpus' largest file is ~1.4k rows). */
   private[graft] val MaxFileRows = 2000000
 
-  private[graft] def guardFileRows(file: String, rows: Vector[AsgRow]): Vector[AsgRow] = {
+  private[graft] def guardFileRows(file: String, rows: Vector[GridRow]): Vector[GridRow] = {
     require(rows.size <= MaxFileRows,
-      s"E5 senior resolution materializes one file's rows in a single task; " +
+      s"per-file resolution materializes one file's grid rows in a single task; " +
         s"'$file' has ${rows.size} rows (cap $MaxFileRows). Split the input " +
         s"document or raise MaxFileRows if the executor heap allows.")
     rows
@@ -450,67 +336,5 @@ object RoleClassifier {
       }
     }
     (role, uchId, uchDesc)
-  }
-}
-
-/** E5 senior-inspector resolution (:724-744): per-file sequential fold at
-  * canonical-name level (InspectorID equality ⇔ canonical-name equality).
-  */
-object SeniorResolver {
-
-  private def appendNote(notes: String, add: String): String =
-    RuText.lstripChars((if (notes == null) "" else notes) + add, "; ")
-
-  def resolveFile(rows: Vector[AsgRow]): Iterator[AsgResolved] = {
-    val out = ArrayBuffer[AsgResolved]()
-    var curSeg = -1L
-    var seniorCache: String = null
-    // (okrug, gub) → last emitted senior-role row with an inspector:
-    // (inspectorKey, stdRank, stdProf, stdEdu) — the as-of lookup target.
-    val lastSenior = scala.collection.mutable.HashMap[(String, String), (String, String, String, String)]()
-
-    for (r <- rows) {
-      if (r.segId != curSeg) { curSeg = r.segId; seniorCache = null }
-      var inspKey: String = null
-      var rankK = r.rankAbbr
-      var profK = r.profAbbr
-      var eduK = r.eduAbbr
-      var notes = r.notes
-      var emit = true
-
-      if (!r.isVacancy && (r.name != null || r.specialRole != null)) {
-        if (r.specialRole == "старший инспектор") {
-          if (seniorCache != null) inspKey = seniorCache // cache hit: no backfill (:726-728)
-          else lastSenior.get((r.okrug, r.gub)) match {
-            case Some((k, rk, pk, ek)) => // DB as-of hit: backfill (:730-741)
-              inspKey = k
-              if (rk != null) rankK = rk
-              if (pk != null) profK = pk
-              if (ek != null) eduK = ek
-            case None =>
-              notes = appendNote(notes, "; Обслуж. ст.инсп.(ID не найден)")
-          }
-        } else if (r.name != null) {
-          inspKey = RuText.canonicalInspectorName(r.name)
-        }
-        // :748 — named non-special non-vacancy rows that failed resolution
-        // are skipped entirely.
-        if (inspKey == null && !r.isVacancy && r.specialRole == null && r.name != null)
-          emit = false
-      }
-
-      if (emit && r.role == "Старший инспектор" && inspKey != null) {
-        seniorCache = inspKey // :751-752
-        lastSenior((r.okrug, r.gub)) = (inspKey,
-          RuText.standardizeText(rankK), RuText.standardizeText(profK), RuText.standardizeText(eduK))
-      }
-      out += AsgResolved(
-        r.file, r.fileIdx, r.year, r.rowIdx, r.ord,
-        r.okrug, r.gub, r.role, r.uchId, r.uchDesc, r.cityStd, r.persRaw,
-        inspKey, rankK, profK, eduK,
-        r.startDateRaw, r.endDateRaw, r.isVacancy, r.isActing, notes, r.specialRole,
-        r.estCount, r.workCount, r.boilCount, emit)
-    }
-    out.iterator
   }
 }

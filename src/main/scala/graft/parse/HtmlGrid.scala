@@ -30,9 +30,10 @@ final case class GridRow(
 /** HTML grid scan + stateful table-shape resolution (SURVEY.md S1-S4, S3,
   * T1, T3, T4, T7; populate_db_ru_v1.py:503-675). Pure per-file function:
   * one file's whole text → ordered classified rows with rowspan resolved —
-  * downstream Spark stages see a dense grid and only need window fills.
-  * Runs inside a flatMap, one task per file (the only genuinely sequential
-  * state — rowspan counters + header offsets — is file-scoped by design).
+  * downstream, graft.etl.FileResolver folds the dense grid in row order.
+  * Runs inside a flatMap; a file is never split across tasks (its
+  * sequential state — rowspan counters + header offsets — is file-scoped
+  * by design).
   */
 object HtmlGrid {
 

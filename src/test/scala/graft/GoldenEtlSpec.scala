@@ -29,10 +29,7 @@ class GoldenEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("E5 per-file guard: pathological single-file size fails fast, sane sizes pass") {
-    val row = graft.etl.AsgRow("f.html", 0, 1901, 0, 0L, 0,
-      null, null, null, null, null, null, null,
-      null, null, null, null, null, null, isVacancy = false, isActing = false,
-      null, null, null, null, null)
+    val row = graft.parse.GridRow("f.html", 0, 1901, 0, "data", null, null, Seq("", "", "", ""), null)
     val small = Vector.fill(3)(row)
     assert(graft.etl.ReferenceEtl.guardFileRows("f.html", small) eq small)
     val e = intercept[IllegalArgumentException] {

@@ -65,12 +65,41 @@ class ReferenceEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
       |</tbody></table></body></html>
       |""".stripMargin
 
-  private lazy val corpus: Path = {
+  // The context fills' scoping edges, in a file of its own (rowIdx from 0
+  // after the two consumed okrug headers): row 0 has no city and none
+  // before it, so it is dropped and its Гаринъ does not feed row 1's "»",
+  // which is dropped too; row 3 repeats row 2's city and record; the
+  // gubernia header at row 4 starts a segment, so row 5's "»" has no
+  // memory; the okrug header at row 7 resets the gubernia, while the city
+  // ditto (row 9) spans the whole file.
+  private val Fabric1902 =
+    """<html><body><table>
+      |<thead><tr><th>Участки</th><th>Заведеній</th><th>Рабочихъ</th><th>Котловъ</th><th>Мѣстопребываніе</th><th>Личный составъ</th></tr></thead>
+      |<tbody>
+      |<tr class="okrug-header"><td colspan="6">Московскій фабричный округъ.</td></tr>
+      |<tr class="okrug-header"><td colspan="6">Московскій фабричный округъ.</td></tr>
+      |<tr><td>1 участокъ.</td><td>1</td><td>2</td><td>3</td><td></td><td>Инж.-тех. Н. С. В. П. Гаринъ.</td></tr>
+      |<tr><td>2 участокъ.</td><td>4</td><td>5</td><td>6</td><td>Тверь.</td><td>»</td></tr>
+      |<tr><td>3 участокъ.</td><td>7</td><td>8</td><td>9</td><td>Тверь.</td><td>Тех. К. Асс. Ф. И. Алексѣевъ.</td></tr>
+      |<tr><td>4 участокъ.</td><td>1</td><td>1</td><td>1</td><td>»</td><td>»</td></tr>
+      |<tr class="gubernia-header"><td colspan="6">Тверская губернія.</td></tr>
+      |<tr><td>5 участокъ.</td><td>2</td><td>2</td><td>2</td><td>Кашинъ.</td><td>»</td></tr>
+      |<tr><td>6 участокъ.</td><td>3</td><td>3</td><td>3</td><td>Кашинъ.</td><td>Инж.-мех. Г. С. В. К. Славинъ.</td></tr>
+      |<tr class="okrug-header"><td colspan="6">Владимірскій фабричный округъ.</td></tr>
+      |<tr><td>1 участокъ.</td><td>4</td><td>4</td><td>4</td><td>Шуя.</td><td>Тех. К. Ск. Ф. Е. Цвернеръ.</td></tr>
+      |<tr><td>2 участокъ.</td><td>5</td><td>5</td><td>5</td><td>»</td><td>»</td></tr>
+      |</tbody></table></body></html>
+      |""".stripMargin
+
+  private def corpusOf(files: (String, String)*): Path = {
     val dir = Files.createTempDirectory("graft-mini-corpus")
-    Files.write(dir.resolve("fabric1901.html"), Fabric1901.getBytes(UTF_8))
-    Files.write(dir.resolve("fabric1910.html"), Fabric1910.getBytes(UTF_8))
+    for ((name, html) <- files) Files.write(dir.resolve(name), html.getBytes(UTF_8))
     dir
   }
+
+  private lazy val corpus: Path =
+    corpusOf("fabric1901.html" -> Fabric1901, "fabric1910.html" -> Fabric1910)
+  private lazy val edgeCorpus: Path = corpusOf("fabric1902.html" -> Fabric1902)
 
   private lazy val tables: EtlTables = ReferenceEtl.run(spark, corpus.toString)
 
@@ -81,7 +110,7 @@ class ReferenceEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     spark.stop()
-    org.apache.commons.io.FileUtils.deleteDirectory(corpus.toFile)
+    for (dir <- Seq(corpus, edgeCorpus)) org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("surrogate ids of all six tables are dense and unique") {
@@ -145,6 +174,27 @@ class ReferenceEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(facts(8) == (Some(4L), Some(4L), Some(4L))) // personnel "»" ditto
     assert(facts(10) == (Some(1L), Some(3L), None)) // back-reference
     assert(facts(12) == (Some(7L), Some(5L), Some(6L)))
+  }
+
+  test("context fills: segment-scoped personnel ditto, city-less rows dropped first, okrug header resets gubernia") {
+    val rows = ReferenceEtl.resolvedAssignments(spark, edgeCorpus.toString).collect()
+      .map(r => (r.rowIdx, r.ord, r.okrug, r.gub, r.cityStd, r.inspectorKey, r.emitted))
+      .sortBy(r => (r._1, r._2)).toSeq
+    val (unknown, vlad) = ("Неизвестно", "владимирский фабричный округ")
+    assert(rows == Seq(
+      (2, 0, unknown, unknown, "твер", "алексеев и.ф.", true),
+      (3, 0, unknown, unknown, "твер", "алексеев и.ф.", true), // city and personnel "»"
+      (6, 0, unknown, "тверская губерния", "кашин", "славин в.к.", true),
+      (8, 0, vlad, unknown, "шуя.", "цвернер е.ф.", true),
+      (9, 0, vlad, unknown, "шуя.", "цвернер е.ф.", true)))
+  }
+
+  test("resolvedAssignments runs as one narrow stage: no Window, no Exchange") {
+    val ds = ReferenceEtl.resolvedAssignments(spark, corpus.toString)
+    ds.collect()
+    val plan = ds.queryExecution.executedPlan.toString
+    assert(graft.tools.PlanAudit.countNode(plan, "Window") == 0, plan)
+    assert(graft.tools.PlanAudit.countNode(plan, "Exchange") == 0, plan)
   }
 
   test("no profession abbreviation is an education one, so parsed HTML cannot carry a refused profession") {
