@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import graft.parse.{GridRow, MiniDom, ParsedAssignment, Personnel}
 import graft.text.RuText
-import graft.text.RuText.pyStrip
+import graft.text.RuText.{pyStrip, stripChars}
 
 /** Stages T2, T5, T6, T8/T9, P1 and E5 as one in-order pass over one
   * file's grid rows (populate_db_ru_v1.py:520-755). The reference walks each
@@ -20,6 +20,10 @@ import graft.text.RuText.pyStrip
   * E5 works at canonical-name level (InspectorID equality ⇔ canonical-name
   * equality). Its senior cache is defined over emitted rows: a resolved
   * special row can itself become the cache source for later rows.
+  *
+  * Each output row carries its final E1–E4 keys, computed here once: the
+  * standardized rank, profession and education, the canonical name of a
+  * named row, the E3 location key and the location names stored with it.
   */
 object FileResolver {
 
@@ -27,6 +31,10 @@ object FileResolver {
     RuText.lstripChars((if (notes == null) "" else notes) + add, "; ")
 
   private def orUnknown(s: String): String = if (s == null) "Неизвестно" else s
+
+  // E3 stored names (:240-245): stripped, empty as NULL.
+  private def pyStripOrNull(s: String): String =
+    if (s == null || s.isEmpty) null else { val t = pyStrip(s); if (t.isEmpty) null else t }
 
   /** T6 ditto memory: a record a later `»` cell may repeat (:754 after the
     * :748 skip — named, non-vacancy, non-special, canonicalizable). */
@@ -82,6 +90,13 @@ object FileResolver {
         val (role, uchId, uchDesc) = RoleClassifier.classify(pyStrip(cells(descIdx)))
         def stat(i: Int): Integer = if (g.year == 1901) null else RuText.cleanNumber(cells(i))
         val (estCount, workCount, boilCount) = (stat(1), stat(2), stat(3))
+        // E3 location key, standardized with the city stripped of " .,:;"
+        // (:221-235), and the names a new location stores.
+        val cityKey = RuText.standardizeText(lastCity)
+        val locKeyCity = if (cityKey == null) null else stripChars(cityKey, " .,:;")
+        val locKeyGub = RuText.standardizeText(rowGub)
+        val locKeyOkrug = RuText.standardizeText(rowOkrug)
+        val (locCity, locGub, locOkrug) = (pyStripOrNull(lastCity), pyStripOrNull(rowGub), pyStripOrNull(rowOkrug))
 
         // P1 explode, then E5 per record in cell order (:724-744).
         records.zipWithIndex.map { case (r, ord) =>
@@ -113,15 +128,21 @@ object FileResolver {
               emit = false
           }
 
+          // E1/E2 keys (:757-762), after any backfill; the cache keeps them.
+          val stdRank = RuText.standardizeText(rankK)
+          val stdProf = RuText.standardizeText(profK)
+          val stdEdu = RuText.standardizeText(eduK)
           if (emit && role == "Старший инспектор" && inspKey != null) {
             seniorCache = inspKey // :751-752
-            lastSenior((rowOkrug, rowGub)) = (inspKey,
-              RuText.standardizeText(rankK), RuText.standardizeText(profK), RuText.standardizeText(eduK))
+            lastSenior((rowOkrug, rowGub)) = (inspKey, stdRank, stdProf, stdEdu)
           }
+          // Only emitted named rows create Inspectors entries (:745-746).
+          val canonName = if (emit && r.specialRole == null && !r.isVacancy) inspKey else null
           AsgResolved(
-            g.file, g.fileIdx, g.year, g.rowIdx, ord,
+            g.file, g.year, g.rowIdx, ord,
             rowOkrug, rowGub, role, uchId, uchDesc, lastCity, persRaw,
-            inspKey, rankK, profK, eduK,
+            inspKey, canonName, stdRank, stdProf, stdEdu,
+            locKeyCity, locKeyGub, locKeyOkrug, locCity, locGub, locOkrug,
             r.startDateRaw, r.endDateRaw, r.isVacancy, r.isActing, notes, r.specialRole,
             estCount, workCount, boilCount, emit)
         }

@@ -2,24 +2,28 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{LongType, StringType}
 import scala.jdk.CollectionConverters._
 
 import graft.ops.Ids
 import graft.parse.{GridRow, HtmlGrid}
 import graft.text.{Dictionaries => D, RuText}
-import graft.text.RuText.{pyStrip, stripChars}
+import graft.text.RuText.pyStrip
 
 /** One assignment row after E5: inspector resolved to a canonical-name key,
-  * senior backfill applied, reference skip rule applied. */
+  * senior backfill applied, reference skip rule applied. It carries its
+  * final dimension keys: `canonName` (named rows only), the standardized
+  * rank, profession and education, the E3 location key (`locKey*`) and the
+  * names a location first seen at this row stores (`loc*`). */
 final case class AsgResolved(
-    file: String, fileIdx: Int, year: Int, rowIdx: Int, ord: Int,
+    file: String, year: Int, rowIdx: Int, ord: Int,
     okrug: String, gub: String,
     role: String, uchId: String, uchDesc: String,
     cityStd: String, persRaw: String,
-    inspectorKey: String,
-    rankAbbr: String, profAbbr: String, eduAbbr: String,
+    inspectorKey: String, canonName: String,
+    stdRank: String, stdProf: String, stdEdu: String,
+    locKeyCity: String, locKeyGub: String, locKeyOkrug: String,
+    locCity: String, locGub: String, locOkrug: String,
     startDateRaw: String, endDateRaw: String,
     isVacancy: Boolean, isActing: Boolean, notes: String, specialRole: String,
     estCount: Integer, workCount: Integer, boilCount: Integer,
@@ -46,14 +50,19 @@ final case class EtlTables(
   *    in-order pass over the file's grid rows ([[FileResolver]]), in the
   *    same flatMap. All of this state is file-scoped: the reference walks
   *    each roster top to bottom, and the E5 senior cache is *recursively*
-  *    defined over emitted rows. Files are independent, so S1..E5 is one
-  *    narrow stage with no shuffle;
+  *    defined over emitted rows. The same pass computes each row's final
+  *    E1-E4 keys. Files are independent, so S1..E5 is one narrow stage
+  *    with no shuffle and no per-row UDF;
   *  - E1-E4 dims — one `groupBy(key).agg(min(orderKey))` per dimension,
-  *    collected once; the driver sorts by first-seen order and numbers
-  *    1..n ([[numberOnDriver]]), replacing SERIAL PKs. The numbered rows
-  *    come back as a local frame that feeds both the E6 join and the sink;
-  *  - E6 fact assembly — broadcast joins of the tiny dims; the fact table's
-  *    AssignmentID is the one fact-scale numbering (graft.ops.Ids.sequenceBy);
+  *    collected once in first-seen order (Spark's sort) and numbered 1..n
+  *    ([[numberOnDriver]]), replacing SERIAL PKs. The numbered rows come
+  *    back as a local frame that feeds both the E6 join and the sink. E2's
+  *    re-route of a profession found in the education dictionary
+  *    (:759-762) is omitted: parsed professions are profession-dictionary
+  *    keys, and no standardized one is an education key;
+  *  - E6 fact assembly — broadcast joins of the tiny dims on the keys the
+  *    fold computed; the fact table's AssignmentID is the one fact-scale
+  *    numbering (graft.ops.Ids.sequenceBy);
   *  - S5-S8 sinks — parquet, fact partitioned by Year (:160-169 indexes).
   *
   * At 100 TB the per-file stage scales with file count; a task holds one
@@ -65,13 +74,6 @@ final case class EtlTables(
   * there adds no new bound; it only stops collecting them twice.
   */
 object ReferenceEtl {
-
-  // ---- scalar UDF surface (all pure Scala, deterministic) -----------------
-  private val stdUdf = udf((s: String) => RuText.standardizeText(s))
-  private val stripCityKeyUdf = udf((s: String) =>
-    if (s == null) null else stripChars(s, " .,:;"))
-  private val pyStripOrNullUdf = udf((s: String) =>
-    if (s == null || s.isEmpty) null else { val t = pyStrip(s); if (t.isEmpty) null else t })
 
   /** Read + parse the corpus directory into classified grid rows.
     * File order (= surrogate-id order) follows the reference's HTML_FILES
@@ -101,11 +103,9 @@ object ReferenceEtl {
     files.flatMap { case (content, path) =>
       val base = path.substring(path.lastIndexOf('/') + 1)
       yearPat.findFirstMatchIn(base) match {
-        case Some(m) =>
-          val year = m.group(1).toInt
-          // fileIdx from the year rank is stable across listing order; the
-          // corpus years are distinct and filename-ordered (:16-21).
-          f(base, year, content)
+        // The year orders the files: the corpus years are distinct and
+        // filename-ordered (:16-21), whatever the listing order.
+        case Some(m) => f(base, m.group(1).toInt, content)
         case None => Iterator.empty
       }
     }
@@ -144,19 +144,7 @@ object ReferenceEtl {
     import spark.implicits._
 
     val resolved = resolvedAssignments(spark, dir).toDF()
-      .withColumn("orderKey", struct($"fileIdx", $"rowIdx", $"ord"))
-      // inspectorKey is already the canonical name (named rows) or the
-      // resolved senior's canonical name (special rows); only named rows
-      // create Inspectors entries (:745-746).
-      .withColumn("canonName",
-        when($"emitted" && $"specialRole".isNull && !$"isVacancy", $"inspectorKey"))
-      .withColumn("stdRank", stdUdf($"rankAbbr"))
-      .withColumn("stdProf", stdUdf($"profAbbr"))
-      .withColumn("stdEdu", stdUdf($"eduAbbr"))
-      .withColumn("profRefused", $"stdProf".isNotNull && $"stdProf".isin(D.knownEducationsMap.keys.toSeq: _*))
-      .withColumn("locKeyCity", stripCityKeyUdf(stdUdf($"cityStd")))
-      .withColumn("locKeyGub", stdUdf($"gub"))
-      .withColumn("locKeyOkrug", stdUdf($"okrug"))
+      .withColumn("orderKey", struct($"year", $"rowIdx", $"ord"))
       .cache()
 
     // First-seen surrogate keys of one single-key dimension.
@@ -169,59 +157,39 @@ object ReferenceEtl {
       "canonName", "InspectorID")
       .select($"InspectorID", $"canonName".as("FullName"), lit(null).cast(StringType).as("Notes"))
 
-    // E1: Ranks / Professions — dictionary-enriched first-seen dims.
-    def dotFlex(dict: Map[String, String]) =
-      udf((k: String) => if (k == null) None else D.dotFlexGet(dict, k))
-
-    val ranks = firstSeenIds(
-      resolved.where($"emitted" && $"stdRank".isNotNull).select($"stdRank", $"orderKey"),
-      "stdRank", "RankID")
-      .select($"RankID", $"stdRank".as("Abbreviation"),
-        dotFlex(D.knownRanksMap)($"stdRank").as("FullName_RU"),
-        lit(null).cast(StringType).as("RankType"))
-
-    val professions = firstSeenIds(
-      resolved.where($"emitted" && $"stdProf".isNotNull && !$"profRefused").select($"stdProf", $"orderKey"),
-      "stdProf", "ProfessionID")
-      .select($"ProfessionID", $"stdProf".as("Abbreviation"),
-        dotFlex(D.knownProfessionsMap)($"stdProf").as("FullName_RU"))
-
-    // E2: Educations — creation events from the edu slot AND the re-routed
-    // refused-profession slot, in that per-assignment order (:759-762).
-    val eduEvents = resolved.where($"emitted" && $"stdEdu".isNotNull)
-      .select($"stdEdu".as("k"), struct($"orderKey", lit(0).as("sub")).as("orderKey"))
-      .unionAll(resolved.where($"emitted" && $"profRefused")
-        .select($"stdProf".as("k"), struct($"orderKey", lit(1).as("sub")).as("orderKey")))
-    val educations = firstSeenIds(eduEvents, "k", "EducationID")
-      .select($"EducationID", $"k".as("Abbreviation"),
-        dotFlex(D.knownEducationsMap)($"k").as("FullName_RU"))
+    // E1/E2: Ranks / Professions / Educations — dictionary-enriched
+    // first-seen dims over emitted rows.
+    def dictDim(key: String, idCol: String, dict: Map[String, String]): DataFrame = {
+      val dotFlex = udf((k: String) => if (k == null) None else D.dotFlexGet(dict, k))
+      firstSeenIds(resolved.where($"emitted" && col(key).isNotNull).select(col(key), $"orderKey"), key, idCol)
+        .select(col(idCol), col(key).as("Abbreviation"), dotFlex(col(key)).as("FullName_RU"))
+    }
+    val ranks = dictDim("stdRank", "RankID", D.knownRanksMap)
+      .withColumn("RankType", lit(null).cast(StringType))
+    val professions = dictDim("stdProf", "ProfessionID", D.knownProfessionsMap)
+    val educations = dictDim("stdEdu", "EducationID", D.knownEducationsMap)
 
     // E3: Locations — null-safe composite key, first-seen per ROW (:717).
-    // The stored values come from the row that created the location
+    // The stored names come from the row that created the location
     // (:240-245): they ride in the same minimum, after the unique orderKey.
     val locations = numberOnDriver(
       resolved.where($"ord" === 0) // one location probe per surviving row
         .groupBy($"locKeyCity", $"locKeyGub", $"locKeyOkrug")
-        .agg(min(struct($"orderKey", $"cityStd", $"gub", $"okrug")).as("firstRow")),
+        .agg(min(struct($"orderKey", $"locCity", $"locGub", $"locOkrug")).as("firstRow")),
       "firstRow", "LocationID")
       .select($"LocationID",
-        pyStripOrNullUdf($"firstRow.cityStd").as("CityName"),
-        pyStripOrNullUdf($"firstRow.gub").as("GuberniaName"),
-        pyStripOrNullUdf($"firstRow.okrug").as("OkrugName"),
+        $"firstRow.locCity".as("CityName"),
+        $"firstRow.locGub".as("GuberniaName"),
+        $"firstRow.locOkrug".as("OkrugName"),
         lit("Город").as("LocationType"),
         $"locKeyCity", $"locKeyGub", $"locKeyOkrug")
 
     // E6: fact assembly — broadcast dim joins + scale-safe AssignmentID.
-    val fact0 = resolved.where($"emitted")
-      .withColumn("inspJoinKey", coalesce($"canonName", $"inspectorKey"))
-      .withColumn("finalEduKey", when($"profRefused", $"stdProf").otherwise($"stdEdu"))
-      .withColumn("finalProfKey", when($"profRefused", lit(null: String)).otherwise($"stdProf"))
-    val fact = fact0
-      .join(broadcast(inspectors.select($"InspectorID", $"FullName")),
-        $"inspJoinKey" === $"FullName", "left")
+    val fact = resolved.where($"emitted")
+      .join(broadcast(inspectors.select($"InspectorID", $"FullName")), $"inspectorKey" === $"FullName", "left")
       .join(broadcast(ranks.select($"RankID", $"Abbreviation".as("rkA"))), $"stdRank" === $"rkA", "left")
-      .join(broadcast(professions.select($"ProfessionID", $"Abbreviation".as("pfA"))), $"finalProfKey" === $"pfA", "left")
-      .join(broadcast(educations.select($"EducationID", $"Abbreviation".as("edA"))), $"finalEduKey" === $"edA", "left")
+      .join(broadcast(professions.select($"ProfessionID", $"Abbreviation".as("pfA"))), $"stdProf" === $"pfA", "left")
+      .join(broadcast(educations.select($"EducationID", $"Abbreviation".as("edA"))), $"stdEdu" === $"edA", "left")
       .join(broadcast(locations.select($"LocationID",
           $"locKeyCity".as("lkC"), $"locKeyGub".as("lkG"), $"locKeyOkrug".as("lkO"))),
         $"locKeyCity" <=> $"lkC" && $"locKeyGub" <=> $"lkG" && $"locKeyOkrug" <=> $"lkO", "left")
@@ -249,40 +217,17 @@ object ReferenceEtl {
       educations))
   }
 
-  /** E1-E4 numbering: collects `df`, sorts it on the driver by `orderCol`
-    * in Spark's ascending order (nulls first, struct fields left to right)
-    * and appends `idCol` = 1..n, returning a local frame. Same columns and
-    * ids as `graft.ops.Ids.sequenceBy(df, Seq(col(orderCol)), idCol)` for
-    * an `orderCol` that totally orders the rows. `df` must fit on the
-    * driver: it is meant for the dimensions, which E6 broadcasts anyway. */
+  /** E1-E4 numbering: collects `df` sorted by `orderCol` (Spark's sort, in
+    * one partition) and appends `idCol` = 1..n, returning a local frame.
+    * Same columns and ids as
+    * `graft.ops.Ids.sequenceBy(df, Seq(col(orderCol)), idCol)` for an
+    * `orderCol` that totally orders the rows. `df` must fit on the driver:
+    * it is meant for the dimensions, which E6 broadcasts anyway. */
   private[graft] def numberOnDriver(df: DataFrame, orderCol: String, idCol: String): DataFrame = {
-    val i = df.schema.fieldIndex(orderCol)
-    val rows = df.collect().sortBy(_.get(i))(ascending(df.schema(i).dataType))
+    val rows = df.coalesce(1).sortWithinPartitions(orderCol).collect()
     val numbered = rows.iterator.zipWithIndex
       .map { case (r, n) => Row.fromSeq(r.toSeq :+ (n + 1L)) }.toList
     df.sparkSession.createDataFrame(numbered.asJava, df.schema.add(idCol, LongType, nullable = false))
-  }
-
-  /** Spark's ascending sort order, nulls first, over collected values of
-    * the types order keys are built from. */
-  private def ascending(t: DataType): Ordering[Any] = {
-    val nonNull: Ordering[Any] = t match {
-      case IntegerType => Ordering.Int.on(_.asInstanceOf[Int])
-      case LongType => Ordering.Long.on(_.asInstanceOf[Long])
-      case StringType => Ordering.fromLessThan((a, b) =>
-        UTF8String.fromString(a.asInstanceOf[String]).compareTo(UTF8String.fromString(b.asInstanceOf[String])) < 0)
-      case s: StructType =>
-        val fields = s.fields.map(f => ascending(f.dataType))
-        (a, b) => {
-          val (x, y) = (a.asInstanceOf[Row], b.asInstanceOf[Row])
-          fields.indices.iterator.map(k => fields(k).compare(x.get(k), y.get(k))).find(_ != 0).getOrElse(0)
-        }
-      case other => throw new IllegalArgumentException(s"no driver-side order for $other")
-    }
-    (a, b) =>
-      if (a == null) { if (b == null) 0 else -1 }
-      else if (b == null) 1
-      else nonNull.compare(a, b)
   }
 
   /** S5-S8: parquet sinks; the fact table partitioned by Year (the

@@ -3,15 +3,23 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 import graft.etl.{EtlTables, ReferenceEtl}
 import graft.ops.Ids
-import graft.text.{Dictionaries => D}
+import graft.text.{Dictionaries => D, RuText}
 
 /** The reference ETL end to end on a two-file corpus written inline, so it
   * runs without the real corpus that [[GoldenEtlSpec]] is bound to.
@@ -198,10 +206,48 @@ class ReferenceEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("no profession abbreviation is an education one, so parsed HTML cannot carry a refused profession") {
-    // E2 re-routes a profession found in the education dictionary. The
-    // parser only yields profession keys, and the two key sets are
-    // disjoint, so that branch cannot be fed from HTML.
-    assert(D.knownProfessionsMap.keySet.intersect(D.knownEducationsMap.keySet).isEmpty)
+    // E2 re-routes a profession whose standardized key is an education key
+    // (reference :759-762). The parser only yields profession keys and a
+    // senior backfill repeats a standardized one; no such key is an
+    // education key, so ReferenceEtl omits that re-route.
+    val (prof, edu) = (D.knownProfessionsMap.keySet, D.knownEducationsMap.keySet)
+    val stdProf = prof.map(RuText.standardizeText)
+    assert(prof.intersect(edu).isEmpty)
+    assert(stdProf.intersect(edu).isEmpty)
+    assert(stdProf.map(RuText.standardizeText) == stdProf) // a re-standardized backfill stays in the set
+  }
+
+  test("the ETL's queries run no per-row UDF, cached rows included") {
+    // The fact frame's own plan ends at the RDD that Ids.sequenceBy
+    // numbers, so this walks the optimized plan of every query that
+    // building and counting the tables executes: the five dimension
+    // collects and the fact count, each reading the cached resolved rows
+    // through an InMemoryRelation.
+    def udfs(plan: QueryPlan[_]): Seq[String] =
+      plan.expressions.flatMap(_.collect { case u: ScalaUDF => u.toString }) ++
+        (plan.children ++ plan.innerChildren).flatMap {
+          case p: QueryPlan[_] => udfs(p)
+          case _ => Nil
+        } ++ (plan match {
+          case m: InMemoryRelation => udfs(m.cachedPlan)
+          case _ => Nil
+        })
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, LogicalPlan)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(funcName -> qe.optimizedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val t = ReferenceEtl.run(spark, corpus.toString)
+      assert(t.assignments.count() == 12)
+      // Listener events arrive in order, so the count's closes the set.
+      eventually(timeout(Span(60, Seconds))) { assert(plans.asScala.exists(_._1 == "count")) }
+      val walked = t.assignments.queryExecution.optimizedPlan +: plans.asScala.map(_._2).toSeq
+      assert(walked.exists(_.exists(_.isInstanceOf[InMemoryRelation])), walked.mkString("\n"))
+      for (plan <- walked) assert(udfs(plan).isEmpty, plan)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("writeAll writes run's six tables and releases its cached rows") {
@@ -221,8 +267,8 @@ class ReferenceEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("driver-side numbering equals Ids.sequenceBy (property)") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
-    // Order keys shaped like E2's struct(orderKey, sub), with nulls inside
-    // and strings whose UTF-8 and UTF-16 orders differ ("～" vs "😀").
+    // Nested struct order keys, with nulls inside and strings whose UTF-8
+    // and UTF-16 orders differ ("～" vs "😀").
     val str = Gen.oneOf[String](null, "", "a", "ab", "б", "～", "😀")
     val int = Gen.option(Gen.chooseNum(-2, 2)).map(_.map(Int.box).orNull)
     val orderKey = for (s <- str; a <- int; sub <- Gen.chooseNum(0L, 3L)) yield Row(Row(s, a), sub)
