@@ -36,11 +36,10 @@ object Sessions {
     spark
   }
 
-  /** Run `evict` when `s`'s SparkContext ends — used by the session-keyed
-    * memo caches (Similarity.pairCache, EtlQueries) so a long-lived
+  /** Run `evict` when `s`'s SparkContext ends, so that a long-lived
     * multi-session process doesn't hold strong refs to stopped sessions
-    * and their cached DataFrames forever. */
-  def onStop(s: SparkSession)(evict: () => Unit): Unit =
+    * and their cached DataFrames forever. Reached through [[onStopOnce]]. */
+  private def onStop(s: SparkSession)(evict: () => Unit): Unit =
     s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onApplicationEnd(
           end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = evict()

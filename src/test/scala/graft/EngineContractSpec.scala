@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import graft.etl.EtlQueries
 
 /** Cross-cutting engine contracts: driver smoke, filter/column pushdown
   * reaching the parquet scan, and batch/stream parity of the event
@@ -45,15 +46,28 @@ class EngineContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"benched but not registered: $unregistered")
   }
 
+  // e01–e06 read their HTML roster corpus from session conf: the gate
+  // points it at the committed roster corpus, so the ETL queries run end to
+  // end wherever the tests run, and unsets it afterwards. Where the
+  // reference corpus (the conf's default) is present, e01–e06 run once more
+  // on it with the conf unset.
   test("registration gate: every registered query executes at sf0.001") {
     val names = SparkEntry.registered.map(_.name)
     assert(names.distinct.size == names.size,
       s"duplicate query names: ${names.diff(names.distinct).distinct.mkString(", ")}")
-    val failures = SparkEntry.registered.flatMap { q =>
+    def failuresOf(qs: Seq[graft.ops.Q]): Seq[String] = qs.flatMap { q =>
       try { assert(q.fn(spark, sf).count() >= 0); None }
       catch { case e: Throwable =>
         Some(s"${q.name}: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}") }
     }
+    spark.conf.set(EtlQueries.CorpusConf, RosterCorpusSpec.Dir)
+    val onCommitted =
+      try failuresOf(SparkEntry.registered) finally spark.conf.unset(EtlQueries.CorpusConf)
+    val onDefault =
+      if (new java.io.File(EtlQueries.DefaultCorpus).isDirectory)
+        failuresOf(EtlQueries.queries).map(f => s"${EtlQueries.DefaultCorpus}: $f")
+      else Nil
+    val failures = onCommitted ++ onDefault
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
