@@ -118,7 +118,7 @@ object Bench {
     "linkage" -> graft.ops.Linkage.queries,
     "diagnostics" -> graft.ops.Diagnostics.queries,
     "retrieval" -> graft.ops.Retrieval.queries,
-    "pipeline" -> graft.api.PipelineQueries.queries,
+    "pipeline" -> graft.ops.PipelineQueries.queries,
     "sources" -> graft.sources.TextSources.queries)
 
   private[graft] def extendedSet: Seq[Q] = extendedRegistries.flatMap(_._2)
@@ -547,7 +547,7 @@ object Bench {
     // agreement of the d30 ANN classifier against the exact d28 baseline,
     // and the d08 candidate-count distribution — makes the rows-only ANN
     // entries auditable from driver artifacts alone (the finer-grained
-    // bounds live in SimilaritySpec / RecallCheck).
+    // bounds live in SimilaritySpec).
     val quality =
       try {
         import org.apache.spark.sql.functions.{col, countDistinct}

@@ -29,7 +29,7 @@ object SparkEntry {
       graft.ops.Linkage.queries ++
       graft.ops.Diagnostics.queries ++
       graft.ops.Retrieval.queries ++
-      graft.api.PipelineQueries.queries ++
+      graft.ops.PipelineQueries.queries ++
       graft.sources.TextSources.queries ++
       graft.etl.EtlQueries.queries
 

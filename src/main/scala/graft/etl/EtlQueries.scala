@@ -2,7 +2,7 @@ package graft.etl
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.SparkSession
-import graft.ops.Q
+import graft.ops.{Q, Tables}
 
 /** The §2A ingestion ETL surfaced through the driver contract: one entry
   * per star-schema output table, computed by the full Spark pipeline over
@@ -24,10 +24,9 @@ object EtlQueries {
 
   val CorpusConf = "spark.graft.etl.corpus"
   val DefaultCorpus = "/root/reference/diplom"
-  private val Golden = "/root/repo/tools/golden"
 
   private def goldenSql(table: String): String =
-    s"SELECT * FROM read_parquet('$Golden/$table.parquet')"
+    s"SELECT * FROM read_parquet('${Tables.GoldenDir}/$table.parquet')"
 
   // Keyed by corpus as well as session: a changed conf must never be
   // served another corpus's cached tables.

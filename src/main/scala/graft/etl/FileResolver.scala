@@ -96,7 +96,9 @@ object FileResolver {
         val locKeyCity = if (cityKey == null) null else stripChars(cityKey, " .,:;")
         val locKeyGub = RuText.standardizeText(rowGub)
         val locKeyOkrug = RuText.standardizeText(rowOkrug)
-        val (locCity, locGub, locOkrug) = (pyStripOrNull(lastCity), pyStripOrNull(rowGub), pyStripOrNull(rowOkrug))
+        // The city name a new location stores is `cityStd` (= `lastCity`):
+        // a standardizeText result is already stripped and never empty.
+        val (locGub, locOkrug) = (pyStripOrNull(rowGub), pyStripOrNull(rowOkrug))
 
         // P1 explode, then E5 per record in cell order (:724-744).
         records.zipWithIndex.map { case (r, ord) =>
@@ -142,7 +144,7 @@ object FileResolver {
             g.file, g.year, g.rowIdx, ord,
             rowOkrug, rowGub, role, uchId, uchDesc, lastCity, persRaw,
             inspKey, canonName, stdRank, stdProf, stdEdu,
-            locKeyCity, locKeyGub, locKeyOkrug, locCity, locGub, locOkrug,
+            locKeyCity, locKeyGub, locKeyOkrug, locGub, locOkrug,
             r.startDateRaw, r.endDateRaw, r.isVacancy, r.isActing, notes, r.specialRole,
             estCount, workCount, boilCount, emit)
         }

@@ -74,7 +74,7 @@ object GoldenCheck {
   }
 
   def main(args: Array[String]): Unit = {
-    val corpus = if (args.nonEmpty) args(0) else "/root/reference/diplom"
+    val corpus = if (args.nonEmpty) args(0) else EtlQueries.DefaultCorpus
     val spark = graft.Sessions.build("golden-check")
     val t = ReferenceEtl.run(spark, corpus)
     var bad = 0

@@ -14,7 +14,8 @@ import graft.text.RuText.pyStrip
   * senior backfill applied, reference skip rule applied. It carries its
   * final dimension keys: `canonName` (named rows only), the standardized
   * rank, profession and education, the E3 location key (`locKey*`) and the
-  * names a location first seen at this row stores (`loc*`). */
+  * names a location first seen at this row stores (`cityStd`, `locGub`,
+  * `locOkrug`). */
 final case class AsgResolved(
     file: String, year: Int, rowIdx: Int, ord: Int,
     okrug: String, gub: String,
@@ -23,7 +24,7 @@ final case class AsgResolved(
     inspectorKey: String, canonName: String,
     stdRank: String, stdProf: String, stdEdu: String,
     locKeyCity: String, locKeyGub: String, locKeyOkrug: String,
-    locCity: String, locGub: String, locOkrug: String,
+    locGub: String, locOkrug: String,
     startDateRaw: String, endDateRaw: String,
     isVacancy: Boolean, isActing: Boolean, notes: String, specialRole: String,
     estCount: Integer, workCount: Integer, boilCount: Integer,
@@ -175,10 +176,10 @@ object ReferenceEtl {
     val locations = numberOnDriver(
       resolved.where($"ord" === 0) // one location probe per surviving row
         .groupBy($"locKeyCity", $"locKeyGub", $"locKeyOkrug")
-        .agg(min(struct($"orderKey", $"locCity", $"locGub", $"locOkrug")).as("firstRow")),
+        .agg(min(struct($"orderKey", $"cityStd", $"locGub", $"locOkrug")).as("firstRow")),
       "firstRow", "LocationID")
       .select($"LocationID",
-        $"firstRow.locCity".as("CityName"),
+        $"firstRow.cityStd".as("CityName"),
         $"firstRow.locGub".as("GuberniaName"),
         $"firstRow.locOkrug".as("OkrugName"),
         lit("Город").as("LocationType"),

@@ -180,7 +180,7 @@ object Corpus {
     * runs map-side inside the join stage, so the dedupe shuffle carries
     * only true near-dup pairs, not every chunk collision.
     *
-    * Scale note (measured at 50k docs, graft.tools.ScaleSmoke): on
+    * Scale note (measured at 50k docs with the former ScaleSmoke harness): on
     * corpora with homogeneous token distributions, simhash signatures
     * cluster and hamming <= 3 matches a constant fraction of ALL pairs —
     * the OUTPUT itself is then quadratic (the operator streams it, but

@@ -1163,7 +1163,7 @@ object Curation {
     // so AQE broadcasts it and the position stream never shuffles; the
     // (doc_id, gram) equi-join formulation shuffled the full position
     // stream by a wide string key for the same row set (measured 16.6 s
-    // -> see ScaleSmoke — the df pass dominates d62).
+    // with the former ScaleSmoke harness — the df pass dominates d62).
     val dupGrams = pos.select(col("doc_id"), col("gram")).distinct()
       .groupBy(col("gram")).agg(count(lit(1)).as("n_docs"))
       .where(col("n_docs") >= 2)
@@ -1727,19 +1727,13 @@ object Curation {
     * near-copy of an existing doc lands it in the EXISTING doc's split.
     * In: (doc_id, text). Out: (doc_id, rep_id, bucket, split).
     *
+    * The (doc_id, cluster_id) frame is CALLER-SUPPLIED — the driver
+    * binding feeds it the memoized d14 components (and a production
+    * pipeline feeds it its already-computed clustering).
+    *
     * Scale: d14's cluster machinery (banded-LSH pairs, union-find
     * contraction) plus one id-keyed left join and a narrow coin
     * projection. */
-  def clusterSafeSplit(docs: DataFrame, valPct: Int = 10,
-      testPct: Int = 10): DataFrame =
-    clusterSafeSplitFrom(docs,
-      Similarity.nearDupClusters(docs).select(col("doc_id"), col("cluster_id")),
-      valPct, testPct)
-
-  /** [[clusterSafeSplit]] over a CALLER-SUPPLIED (doc_id, cluster_id)
-    * frame — the open seam the driver binding feeds with the memoized
-    * d14 components (and a production pipeline feeds with its already-
-    * computed clustering). */
   private[graft] def clusterSafeSplitFrom(docs: DataFrame, clusters: DataFrame,
       valPct: Int = 10, testPct: Int = 10): DataFrame = {
     require(valPct >= 0 && testPct >= 0 && valPct + testPct <= 100,
@@ -2101,6 +2095,144 @@ object Curation {
         when(col("bucket") < testPct, "test")
           .when(col("bucket") < testPct + valPct, "validation")
           .otherwise("train"))
+  }
+
+  /** The deduplicated corpus: one representative (min doc_id) per
+    * exact-duplicate group and per near-duplicate cluster. The two
+    * passes are complementary — identical docs always share LSH buckets
+    * (J = 1) so near-dup clustering subsumes most exact groups, but
+    * degenerate docs (under the 3-char gram floor) have empty sketches
+    * and only the content-hash pass can group them. Reads: doc_id, text,
+    * n_chars; returns the input rows of the kept representatives. */
+  def dedupedCorpus(docs: DataFrame): DataFrame = {
+    val exactKeep = TextOps.dedupExact(docs).select(col("keeper_doc_id").as("doc_id"))
+    val nearDrop = Similarity.nearDupClusters(docs)
+      .where(col("doc_id") =!= col("cluster_id")).select(col("doc_id"))
+    docs.join(exactKeep, "doc_id").join(nearDrop, Seq("doc_id"), "left_anti")
+  }
+
+  /** The whole curation pipeline in one call: optional PII scrub
+    * (in-place redaction BEFORE anything hashes or counts tokens, so
+    * placeholders are what dedup and packing see) → exact + near dedup
+    * ([[dedupedCorpus]]) → repetition-quality filter (drop docs under
+    * `minWords`, over `maxDupWordFrac` duplicate words, or over
+    * `maxTopBigramFrac` top-bigram mass) → optional inter-document
+    * duplicate-span filter (drop docs whose `dupSpanN`-gram positions
+    * are duplicated elsewhere in the corpus beyond `maxDupSpanFrac` —
+    * the RefinedWeb boilerplate signal; 1.0 disables) → benchmark
+    * optional CCNet LM filter (`dropPplTail` — drop each language's
+    * worst-perplexity tercile under the surviving corpus' own unigram
+    * model, [[pplBuckets]]; requires a `lang` column) → benchmark
+    * decontamination (drop docs sharing more than `maxSharedGrams`
+    * distinct `contaminationN`-grams with any single eval doc) →
+    * token-budget shard packing. `hashGrams` switches the two gram
+    * stages to 8-byte xxhash64 shuffles (the production mode). Returns
+    * (doc_id, n_tokens, shard_id) over the surviving docs — the
+    * corpus-to-training-shards recipe, each stage the already-tested
+    * operator. Reads: doc_id, text, n_chars on `docs` (plus lang when
+    * `dropPplTail`); doc_id, text on `evalDocs`.
+    *
+    * `checkpointDir` is the per-stage RESUME SEAM:
+    * every stage is a pure row FILTER of the (optionally scrubbed)
+    * input, so its full output reconstructs exactly as `base ⋉
+    * survivor-ids`. With a directory set, each enabled stage's survivor
+    * id-set is materialized under `<dir>/<stage>/ids` behind the
+    * [[IndexCommit]] marker (crash mid-write leaves the stage
+    * unmarked → recomputed; at 100 TB a failed stage-5 shard pack then
+    * resumes from the last COMMITTED stage instead of re-deriving five
+    * stages of lineage). A committed stage's computation is never even
+    * constructed (by-name seam). The id-sets encode the run's knobs
+    * implicitly, so the first run writes a `_graft_knobs` fingerprint
+    * of every survivor-affecting parameter into the checkpoint root and
+    * every resume REQUIRES it to match — a changed knob against an
+    * existing directory fails fast instead of silently serving id-sets
+    * computed under the old configuration. (`budget` is deliberately
+    * outside the fingerprint: shard packing runs fresh on every call
+    * and never persists, so re-packing surviving docs at a new budget
+    * is a legitimate resume.) Point a changed configuration at a fresh
+    * directory (the d54-gated default path, `checkpointDir = None`, is
+    * byte-identical to the seamless plan).
+    * TrainingShardsResumeSpec proves resumed == one-shot. */
+  def trainingShards(docs: DataFrame, evalDocs: DataFrame,
+      minWords: Long = 5, maxDupWordFrac: Double = 0.9,
+      maxTopBigramFrac: Double = 0.5, maxSharedGrams: Long = 10,
+      contaminationN: Int = 3, budget: Long = 2048,
+      scrubPii: Boolean = false, maxDupSpanFrac: Double = 1.0,
+      dupSpanN: Int = 5, hashGrams: Boolean = false,
+      dropPplTail: Boolean = false,
+      checkpointDir: Option[String] = None): DataFrame = {
+    val base =
+      if (scrubPii) docs.withColumn("text", scrubTextCol(col("text")))
+      else docs
+    checkpointDir.foreach { root =>
+      val spark = docs.sparkSession
+      val knobs = Seq(
+        s"minWords=$minWords", s"maxDupWordFrac=$maxDupWordFrac",
+        s"maxTopBigramFrac=$maxTopBigramFrac", s"maxSharedGrams=$maxSharedGrams",
+        s"contaminationN=$contaminationN", s"scrubPii=$scrubPii",
+        s"maxDupSpanFrac=$maxDupSpanFrac", s"dupSpanN=$dupSpanN",
+        s"hashGrams=$hashGrams", s"dropPplTail=$dropPplTail").mkString("\n")
+      val p = new org.apache.hadoop.fs.Path(root, "_graft_knobs")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) {
+        val in = fs.open(p)
+        val recorded =
+          try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+        require(recorded == knobs,
+          s"trainingShards checkpointDir $root was written under different " +
+          s"parameters — its stage id-sets would silently reflect the old " +
+          s"configuration.\nrecorded:\n$recorded\nrequested:\n$knobs\n" +
+          "Resume with the recorded parameters, or point the changed " +
+          "configuration at a fresh checkpointDir.")
+      } else {
+        val out = fs.create(p, true)
+        try out.write(knobs.getBytes("UTF-8")) finally out.close()
+      }
+    }
+    def stage(name: String)(out: => DataFrame): DataFrame = checkpointDir match {
+      case None => out
+      case Some(root) =>
+        val spark = docs.sparkSession
+        val d = s"$root/$name"
+        if (!IndexCommit.isCommitted(spark, d))
+          IndexCommit.withGuard(spark, d) {
+            out.select(col("doc_id")).write.mode("overwrite").parquet(s"$d/ids")
+          }
+        base.join(spark.read.parquet(s"$d/ids"), Seq("doc_id"), "left_semi")
+    }
+    val deduped = stage("s1_dedup")(dedupedCorpus(base))
+    val keepQuality = repetitionSignals(deduped)
+      .where(col("n_words") >= minWords &&
+        col("dup_word_count").cast("double") / col("n_words") <= maxDupWordFrac &&
+        when(col("n_bigrams") > 0,
+            col("top_bigram_count").cast("double") / col("n_bigrams"))
+          .otherwise(0.0) <= maxTopBigramFrac)
+      .select(col("doc_id"))
+    val afterQuality = stage("s2_quality")(deduped.join(keepQuality, "doc_id"))
+    val afterSpans =
+      if (maxDupSpanFrac >= 1.0) afterQuality
+      else stage("s3_spans")(afterQuality.join(
+        dupSpanStats(afterQuality, dupSpanN, hashGrams)
+          .where(when(col("n_spans") > 0,
+              col("dup_spans").cast("double") / col("n_spans"))
+            .otherwise(0.0) <= maxDupSpanFrac)
+          .select(col("doc_id")),
+        "doc_id"))
+    val afterPpl =
+      if (!dropPplTail) afterSpans
+      else stage("s4_ppl")(afterSpans.join(
+        pplBuckets(afterSpans).where(col("bucket") =!= "tail")
+          .select(col("doc_id")),
+        "doc_id"))
+    def contaminated = contaminationPairs(
+        afterPpl, evalDocs, contaminationN, hashGrams)
+      .groupBy(col("doc_id"))
+      .agg(max(col("n_shared")).as("worst"))
+      .where(col("worst") > maxSharedGrams)
+      .select(col("doc_id"))
+    packShards(
+      stage("s5_decontam")(afterPpl.join(contaminated, Seq("doc_id"), "left_anti")),
+      budget)
   }
 
   // ---- driver bindings -------------------------------------------------

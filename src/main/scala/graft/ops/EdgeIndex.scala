@@ -72,8 +72,8 @@ object EdgeIndex extends PersistedIndex {
   /** Lifecycle is [[PersistedIndex]]'s: per-batch basket-witnessed pair
     * counts (additive across BASKET-disjoint batches), the basket ids
     * enforcing that contract, and the raw distinct claims that make
-    * LATE-DATA reconciliation possible ([[appendLate]]/[[ingestLate]]
-    * recompute a straddling basket's prior facts from basketitems —
+    * LATE-DATA reconciliation possible ([[appendLate]]
+    * recomputes a straddling basket's prior facts from basketitems —
     * linear rows where pairfacts is quadratic per basket, so the row
     * envelope is unchanged in order). */
   protected def batchTables: Seq[BatchTable] = Seq(
@@ -247,23 +247,6 @@ object EdgeIndex extends PersistedIndex {
   def appendLate(docs: DataFrame, dir: String): Unit =
     writeLateBatch(docs, dir,
       IndexCommit.nextBatchId(docs.sparkSession, s"$dir/basketids"))
-
-  /** Watermark-TOLERANT streaming ingest: where [[PersistedIndex
-    * .ingest]] fails loudly on a basket straddling micro-batches, this
-    * mode reconciles stragglers via [[lateDelta]] — the final index
-    * state equals the in-order batch build no matter how the stream
-    * fragments or reorders baskets. Exactly-once per batch id like
-    * every ingest. */
-  def ingestLate(docs: DataFrame, dir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        if (!batch.isEmpty) writeLateBatch(batch.toDF(), dir, id)
-      }
-      .start()
 
   /** Compaction is a semantic MERGE (the [[LmIndex]] precedent):
     * per-batch pair counts SUM into one row per (src, dst) — correct

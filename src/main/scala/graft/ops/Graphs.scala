@@ -46,8 +46,7 @@ object Graphs {
     * TPC-H baskets hold ≤ 7 distinct parts, so the default cap leaves
     * every registered query's answer untouched. The drop is silent by
     * design in the edge build itself (a per-row warning would be its
-    * own scale problem) — [[copurchaseDropped]] is the one-row
-    * companion diagnostic a capping pipeline should log beside it. */
+    * own scale problem). */
   def copurchaseEdges(baskets: DataFrame, minSupport: Long = 2L,
                       maxBasketItems: Int = 1024): DataFrame =
     copurchaseCandidates(baskets, maxBasketItems)
@@ -58,8 +57,8 @@ object Graphs {
   /** The pre-aggregation candidate pair stream behind [[copurchaseEdges]]
     * — one (src, dst) row (src < dst) per basket witnessing the pair,
     * from baskets holding at most `maxBasketItems` distinct items.
-    * Public (the d130 `candidateFrame` precedent) so the scale harness
-    * can count pair volume directly: this frame's row count —
+    * Public (the d130 `candidateFrame` precedent) so a scale probe can
+    * count pair volume directly: this frame's row count —
     * Σ_baskets (n_items choose 2), which the cap bounds at
     * |baskets|·(cap choose 2) — IS the operator's scale story, and the
     * quantity a planted heavy-basket probe has to show is bounded.
@@ -86,29 +85,6 @@ object Graphs {
     a.join(b, Seq("basket_id"))
       .where(col("src") < col("dst"))
       .select(col("src"), col("dst"))
-  }
-
-  /** Companion observability frame for [[copurchaseEdges]]'s
-    * runaway-basket gate: ONE row (n_dropped_baskets, n_dropped_rows,
-    * max_basket_items) counting the baskets (and their distinct-item
-    * rows) the gate would DROP at this cap — so the silent-by-design
-    * data loss of the cap is one cheap query away from being observed
-    * and alerted on. A pipeline that caps should log this beside the
-    * edge build; a nonzero count on data believed well-behaved is the
-    * bot-basket signal the cap exists for.
-    *
-    * Scale: the same single basket-keyed aggregation the gate itself
-    * costs — nothing quadratic, no join with the edge build. */
-  def copurchaseDropped(baskets: DataFrame,
-                        maxBasketItems: Int = 1024): DataFrame = {
-    require(maxBasketItems >= 2, "a co-occurrence basket needs >= 2 items")
-    baskets.toDF("basket_id", "item_id").distinct()
-      .groupBy(col("basket_id")).agg(count(lit(1)).as("n"))
-      .where(col("n") > maxBasketItems)
-      .agg(count(lit(1)).as("n_dropped_baskets"),
-        coalesce(sum(col("n")), lit(0L)).as("n_dropped_rows"))
-      .select(col("n_dropped_baskets"), col("n_dropped_rows"),
-        lit(maxBasketItems.toLong).as("max_basket_items"))
   }
 
   /** Time-decayed co-purchase edges (d174): [[copurchaseEdges]] where
@@ -1814,10 +1790,10 @@ object Graphs {
     * gracefully (unreachable pairs contribute 0, no infinite-distance
     * special case), computed EXACTLY from `nSources` deterministically
     * sampled sources with per-source BFS bounded to `maxHops`. This is
-    * the hash-gateable exact adjudicator of [[hyperBallCloseness]]'s
-    * sketched estimate, the same role [[neighborhoodExact]] plays for
-    * [[hyperBall]]: the sketch serves at 1e9 nodes, this pins its
-    * ordering on gated corpora.
+    * the hash-gateable exact counterpart of a closeness estimate read
+    * off [[hyperBall]], the same role [[neighborhoodExact]] plays for
+    * [[hyperBall]] itself: the sketch serves at 1e9 nodes, this pins
+    * its ordering on gated corpora.
     *
     * Sampling is the d157 md5-addressing trick: the nSources nodes
     * smallest by md5(node-as-decimal-string) — a pure function of the
@@ -2079,8 +2055,7 @@ object Graphs {
     * sketched — per round ONE edge-keyed join and one node-keyed
     * hll_union_agg, the d128 plan shape with a 2-4 KB payload column.
     * Closeness/harmonic centrality falls out of the output: ball(t) −
-    * ball(t−1) estimates the count of nodes at distance exactly t (see
-    * [[hyperBallCloseness]]).
+    * ball(t−1) estimates the count of nodes at distance exactly t.
     *
     * Out: (node, radius, est_ball) — est_ball a long. DETERMINISTIC:
     * DataSketches HLL is a pure function of the value SET (register max
@@ -2112,26 +2087,6 @@ object Graphs {
         expr("hll_sketch_estimate(sk)").as("est_ball")))
     }
     out
-  }
-
-  /** Closeness-style centrality from the [[hyperBall]] neighborhood
-    * function: sum_t t·(ball(t) − ball(t−1)) estimates Σ_m d(n,m) over
-    * the radius-bounded ball (HLL ball estimates are monotone in t —
-    * the sketch only gains registers — so the per-shell differences are
-    * non-negative). Out: (node, reach = est ball(radius), dist_sum);
-    * small dist_sum at large reach = central. */
-  def hyperBallCloseness(edges: DataFrame, radius: Int = 3,
-                         lgK: Int = 14): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val nf = hyperBall(edges, radius, lgK)
-    val shell = nf.withColumn("prev", lag(col("est_ball"), 1).over(
-        Window.partitionBy(col("node")).orderBy(col("radius"))))
-      .where(col("radius") > 0)
-      .select(col("node"), col("radius"), col("est_ball"),
-        (col("est_ball") - col("prev")).as("shell"))
-    shell.groupBy(col("node")).agg(
-      max(col("est_ball")).as("reach"),
-      sum(col("radius") * col("shell")).as("dist_sum"))
   }
 
   /** The d36-pattern gate for [[hyperBall]] (d152): the EXACT
@@ -3551,7 +3506,7 @@ object Graphs {
     // the estimator within bound of the exact closure.
     Q("d148_hyperball",
       (s, d) => hyperBall(copurchaseFrame(s, d), radius = 3),
-      Some("SELECT * FROM read_parquet('/root/repo/tools/golden/d148_hyperball.parquet')")),
+      Some(s"SELECT * FROM read_parquet('${Tables.GoldenDir}/d148_hyperball.parquet')")),
 
     // d152: the d148 gate — exact radius-0..2 neighborhood function
     // (oracle = recursive-CTE closure with min-hop dedup) beside a
@@ -3611,7 +3566,7 @@ object Graphs {
 
     // d159: effective diameter at 90% over the exact radius-0..2
     // neighborhood function (the estimator-fed production path is the
-    // facade composition with d148's hyperBall; GraphsSpec proves the
+    // frame-in composition with d148's hyperBall; GraphsSpec proves the
     // two agree below sparse-mode scale) — the oracle replays the
     // closure, the per-radius pair sums, and the threshold pick.
     Q("d159_effective_diameter",
@@ -3725,7 +3680,7 @@ object Graphs {
             window = 2),
           dim = 4, iters = 2, lrNum = 1, lrDen = 10),
         k = 5),
-      Some("SELECT * FROM read_parquet('/root/repo/tools/golden/d187_embedding_related_ann.parquet')")),
+      Some(s"SELECT * FROM read_parquet('${Tables.GoldenDir}/d187_embedding_related_ann.parquet')")),
 
     // d189: the d187 SERVING PIPELINE under an exact-mode oracle (r15
     // verdict ask #2 — the family's own d33/d35 convention): at
@@ -4054,8 +4009,8 @@ object Graphs {
       Some(salsaSql(2))),
 
     // d176: exact harmonic centrality from 8 md5-sampled sources, BFS
-    // to 3 hops — the hash-green adjudicator of hyperBallCloseness's
-    // sketched estimate; the oracle replays seeds, frontiers, ppm sums.
+    // to 3 hops — the hash-green exact counterpart of a hyperBall
+    // closeness estimate; the oracle replays seeds, frontiers, ppm sums.
     Q("d176_harmonic_sampled",
       (s, d) => harmonicCentrality(copurchaseFrame(s, d),
         nSources = 8, maxHops = 3),

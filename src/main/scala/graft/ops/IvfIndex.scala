@@ -74,7 +74,7 @@ object IvfIndex {
     * unclustered data, concentrated far better on clustered corpora); at
     * fixed probes, larger k means faster queries but lower recall. Tune
     * probes to the recall target first, then k to the latency target
-    * (measured sweep: graft.tools.AnnTune). */
+    * (measured sweep with the former AnnTune dev probe). */
   /** Largest centroid count whose collected table fits the byte budget
     * at width `dim` — the single source of the budget arithmetic shared
     * by [[autoK]] and [[build]]'s explicit-k validation. */

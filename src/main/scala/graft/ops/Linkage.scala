@@ -72,11 +72,11 @@ object Linkage {
 
   /** The candidate frame the blocking discipline materializes BEFORE the
     * Levenshtein comparator runs — (rec_id, name, b_id, b_name), one row
-    * per surviving (probe, candidate) pair. Public so the scale harness
-    * can COUNT it directly: the cap bounds candidates per record at
+    * per surviving (probe, candidate) pair. Public so a scale probe can
+    * COUNT it directly: the cap bounds candidates per record at
     * 3·blockCap, so this frame's size is provably linear in the corpus
-    * (`ScaleSmoke`'s linkage probe measures exactly that on a 10×
-    * skewed-block name corpus). */
+    * (the former `ScaleSmoke` harness's linkage probe measured exactly
+    * that on a 10× skewed-block name corpus). */
   def candidateFrame(records: DataFrame, maxDist: Int = 3,
                      blockCap: Int = 1024): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -1,12 +1,10 @@
-package graft.api
+package graft.ops
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Q, Tables}
-
 /** Driver registration for the composed end-to-end curation pipeline.
   *
-  * d54 runs [[Graft.trainingShards]] — exact + near-dup dedup →
+  * d54 runs [[Curation.trainingShards]] — exact + near-dup dedup →
   * Gopher-style quality filter → CCNet perplexity tail-drop →
   * benchmark decontamination → token-budget shard packing — as ONE
   * registered query, hash-gated by the literal SQL composition of its
@@ -16,10 +14,6 @@ import graft.ops.{Q, Tables}
   * terciles (computed over the post-quality corpus, not the raw one),
   * the anti-join semantics, and the final prefix-sum packing over the
   * surviving docs, end to end.
-  *
-  * Lives in `graft.api` (not `graft.ops`) because the pipeline under
-  * test IS the facade composition — registering it in an ops object
-  * would invert the package dependency.
   *
   * ORACLE SHAPE LESSONS (both measured at sf0.1, where the un-fixed
   * oracle spilled > 78 GB of DuckDB temp and never finished; 20 s
@@ -50,7 +44,7 @@ object PipelineQueries {
     Q("d54_training_shards",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        Graft.trainingShards(
+        Curation.trainingShards(
           docs.where(not(expr(EvalPred))),
           docs.where(expr(EvalPred)),
           dropPplTail = true)

@@ -106,9 +106,10 @@ object Pq {
     * "compress my embeddings" gets, and what the bench's quality block
     * measures. r08 measured the previous default (m=8, k=16; 64x) at
     * recall@3 = 0.113 on the bench embeddings — a compression ratio
-    * nothing could use — so the default is now chosen from the measured
-    * `PqTune` ladder on the 64-dim bench vectors (recall@3 vs exact
-    * cosine top-3, 2000 vectors, 3 Lloyd iters):
+    * nothing could use — so the default is now chosen from the ladder
+    * measured with the former `PqTune` dev probe on the 64-dim bench
+    * vectors (recall@3 vs exact cosine top-3, 2000 vectors, 3 Lloyd
+    * iters):
     *
     *   raw ADC:  m=8 k=16 → 64x: 0.113   m=4 k=64  → 85x: 0.100
     *             m=4 k=256 → 64x: 0.189  m=8 k=64  → 43x: 0.215

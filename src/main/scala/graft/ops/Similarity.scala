@@ -287,7 +287,7 @@ object Similarity {
     * the recall lever at high widths, not fewer bits). Occupancy 64 with
     * the default 8 tables x 16 probe signatures bounds candidates at
     * ~8k/query — constant in N, and the measured sf0.1 recall@1 vs the
-    * exact baseline is 0.93 (graft.tools.AnnTune sweep). */
+    * exact baseline is 0.93 (a sweep with the former AnnTune dev probe). */
   private[graft] def annBitsFor(n: Long, targetOccupancy: Long = 64L): Int = {
     val cells = math.max(1L, n / math.max(1L, targetOccupancy))
     val bits = 64 - java.lang.Long.numberOfLeadingZeros(math.max(0L, cells - 1))
@@ -468,7 +468,7 @@ object Similarity {
     * corpus scale the shared bucket is a catastrophic skew hot spot
     * (10^6 empty docs -> 10^12 candidate pairs). Exact content-hash
     * dedup (d01) is the operator that groups degenerate docs — the
-    * documented complementarity in Graft.dedupedCorpus. The streaming
+    * documented complementarity in Curation.dedupedCorpus. The streaming
     * detector (NearDupStream) applies the same guard. */
   private[ops] def bandBuckets(sk: DataFrame): DataFrame =
     sk.where(col("n") > 0)
@@ -620,7 +620,7 @@ object Similarity {
     * before returning: connectedComponents materializes eagerly (its
     * first step localCheckpoints the contracted edge set), so the
     * returned labels no longer reference the sketch lineage — repeated
-    * invocations (e.g. via Graft.dedupedCorpus) accumulate no cached
+    * invocations (e.g. via Curation.dedupedCorpus) accumulate no cached
     * tables. */
   def nearDupClusters(docs: DataFrame): DataFrame = {
     val sk = sketchTable(docs).cache()
@@ -632,19 +632,14 @@ object Similarity {
     } finally sk.unpersist()
   }
 
-  /** Quality-aware dedup keepers (d93): per near-dup cluster, the
-    * HIGHEST-quality member (d04's stopword_ratio, ties to the smaller
-    * doc_id) — the production dedup policy, vs the arbitrary min-id
-    * keeper d01/d14 default to. Out: (cluster_id, keeper_id,
-    * best_score, cluster_size). Reads: doc_id, text. */
-  def dedupBestKeepers(docs: DataFrame): DataFrame =
-    bestKeepersFrom(
-      nearDupClusters(docs).select(col("doc_id"), col("cluster_id")), docs)
-
-  /** The keeper selection alone: one struct-max aggregate over the
-    * clustered docs — field-lexicographic (score, −id) max is an exact
-    * double ordering with deterministic ties, and the only shuffle is
-    * clusters-sized. */
+  /** Quality-aware dedup keepers (d93): per near-dup cluster of the
+    * caller-supplied (doc_id, cluster_id) frame, the HIGHEST-quality
+    * member (d04's stopword_ratio, ties to the smaller doc_id) — the
+    * production dedup policy, vs the arbitrary min-id keeper d01/d14
+    * default to. Out: (cluster_id, keeper_id, best_score, cluster_size).
+    * One struct-max aggregate over the clustered docs —
+    * field-lexicographic (score, −id) max is an exact double ordering
+    * with deterministic ties, and the only shuffle is clusters-sized. */
   private[graft] def bestKeepersFrom(comp: DataFrame, docs: DataFrame): DataFrame =
     comp.join(TextOps.qualityScore(docs).select(col("doc_id"), col("stopword_ratio")),
         Seq("doc_id"))
@@ -834,7 +829,7 @@ object Similarity {
     // den*min >= num*max): cross-size candidates die before the dedupe
     // shuffle — the same placement as the band join's ratio prune. This
     // is what bounds candidate growth as the corpus densifies (measured
-    // at 100k docs: see graft.tools.ScaleSmoke).
+    // at 100k docs with the former ScaleSmoke harness).
     val cand = prefix.as("x").join(prefix.as("y"),
         col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id") &&
           least(col("x.n"), col("y.n")) * den >= greatest(col("x.n"), col("y.n")) * num)
@@ -1492,8 +1487,9 @@ object Similarity {
     * hyperplane tables: the index side holds each vector's EXACT
     * signature per table; the probe side fans each query out to its
     * exact + `probeFlips` lowest-margin perturbed signatures. The bucket
-    * join carries ids only. Exposed for scale instrumentation
-    * (ScaleSmoke tracks candidate growth across corpus sizes). */
+    * join carries ids only. Exposed for scale instrumentation (the
+    * former ScaleSmoke harness tracked candidate growth across corpus
+    * sizes with it). */
   private[graft] def annCandidatePairs(e: DataFrame, tables: Int, bits: Int,
       probeFlips: Int): DataFrame = {
     val sig = e.select(col("vec_id"),
@@ -2152,7 +2148,7 @@ object Similarity {
     // RECALL-tuned for this unclustered test table (>= 0.95 recall@1 vs
     // the exact baseline, emitted with both knobs into bench.json
     // "quality") — clustered production corpora run probes<<K; both knobs
-    // are caller-set on the IvfIndex/Graft surface. The build is now
+    // are caller-set on the IvfIndex surface. The build is now
     // BIT-DETERMINISTIC under any partitioning (IvfIndex.build trains
     // with fixed-point Lloyd accumulators — integer addition is
     // order-independent where double addition is not; spec-pinned

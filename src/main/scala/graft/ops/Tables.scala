@@ -15,6 +15,10 @@ import org.apache.spark.sql.types._
   */
 object Tables {
 
+  /** The committed parquet goldens that oracle SQL reads back through
+    * DuckDB's read_parquet (e01–e06, d148, d187). */
+  val GoldenDir = "/root/repo/tools/golden"
+
   // NOTE: reading `events` requires spark.sql.legacy.parquet.nanosAsLong=true
   // set at session build time (graft.Sessions.build / the test harness) —
   // a conf flip inside a table loader would be an ordering hazard.

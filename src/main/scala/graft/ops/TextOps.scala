@@ -12,8 +12,7 @@ import Tables._
   *
   * Every operator is DataFrame-in / DataFrame-out (see each method's
   * column contract); the `queries` entries bind them to the driver's
-  * `documents` test table. `graft.api.Graft` re-exports the lot as the
-  * public library surface.
+  * `documents` test table.
   */
 object TextOps {
 

@@ -1089,7 +1089,7 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
       2L -> "SITE HEADER\nunique three\nshared pair",
       3L -> "SITE HEADER",
       4L -> "SITE HEADER\nunique four")
-    val got = graft.api.Graft.boilerplateScrub(d, maxDocFreq = 2)
+    val got = Curation.boilerplateScrub(d, maxDocFreq = 2)
       .as[(Long, String, Long, Long)].collect().sortBy(_._1).toSeq
     assert(got == Seq(
       (1L, "unique one\n\nshared pair\nunique two", 4L, 1L),
@@ -1102,7 +1102,7 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
       1L -> "intra\nintra\nbody a",
       2L -> "intra\nbody b",
       3L -> "body c")
-    val got2 = graft.api.Graft.boilerplateScrub(d2, maxDocFreq = 2)
+    val got2 = Curation.boilerplateScrub(d2, maxDocFreq = 2)
       .as[(Long, String, Long, Long)].collect().sortBy(_._1).toSeq
     assert(got2 == Seq(
       (1L, "intra\nintra\nbody a", 3L, 0L),
@@ -1119,7 +1119,7 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = docs(
       1L -> "caf\u00e9 paragraph\nmine one",  // precomposed e-acute
       2L -> "cafe\u0301 paragraph\nmine two") // e + combining acute
-    val got = graft.api.Graft.cleanPipeline(d, maxDocFreq = 2, sep = "\n")
+    val got = Curation.cleanPipeline(d, maxDocFreq = 2, sep = "\n")
       .as[(Long, String, Long, Long)].collect().sortBy(_._1).toSeq
     assert(got == Seq(
       (1L, "caf\u00e9 paragraph\nmine one", 2L, 0L),
@@ -1129,7 +1129,7 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
         graft.ops.Curation.unicodeNormalize(d)
           .select(col("doc_id"), col("norm_text").as("text")), 2)
         .select(col("doc_id"), col("clean_text").as("text")), "\n")
-    val piped = graft.api.Graft.cleanPipeline(d)
+    val piped = Curation.cleanPipeline(d)
     assert(piped.exceptAll(manual).isEmpty && manual.exceptAll(piped).isEmpty)
   }
 
@@ -1144,7 +1144,7 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
       2L -> "repeat\n\nmine two",
       3L -> "repeat",
       4L -> "mine three")
-    val got = graft.api.Graft.paragraphDedup(d, sep = "\n")
+    val got = Curation.paragraphDedup(d, sep = "\n")
       .as[(Long, String, Long, Long)].collect().sortBy(_._1).toSeq
     assert(got == Seq(
       (1L, "repeat\nmine one", 2L, 1L),
@@ -1156,7 +1156,7 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = docs(
       1L -> "para one\nstill para one\n\npara two",
       2L -> "para one\nstill para one\n\nmine")
-    val got2 = graft.api.Graft.paragraphDedup(p)
+    val got2 = Curation.paragraphDedup(p)
       .as[(Long, String, Long, Long)].collect().sortBy(_._1).toSeq
     assert(got2 == Seq(
       (1L, "para one\nstill para one\n\npara two", 2L, 0L),

@@ -5,12 +5,18 @@ import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.Graft
+import graft.ops.{Corpus, Curation, Diagnostics, EdgeIndex, GramIndex, Graphs,
+  HashIndex, IndexCommit, IvfIndex, LexIndex, Lexical, Linkage, Pq, Retrieval,
+  Similarity, TemporalEdgeIndex, TextOps}
+import graft.streaming.{MediaRow, Multimodal}
 
-/** The public DataFrame-in / DataFrame-out surface: every facade operator
-  * must work on a user-supplied in-memory DataFrame (no fixed paths), and
-  * the dir-bound driver queries must be exactly the same operators (spot
-  * -checked by set-equality against the facade fed with the same table).
+/** The public DataFrame-in / DataFrame-out surface, the `graft.ops`
+  * objects: every operator must work on a user-supplied in-memory
+  * DataFrame (no fixed paths), and the dir-bound driver queries must
+  * return exactly what the same operators return on the loaded table
+  * (spot-checked by set-equality). A "facade" in a test name means
+  * these frame-in operators; the names predate the removal of the
+  * forwarding layer that once re-exported them.
   */
 class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -30,6 +36,11 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("n_chars", length(col("text")).cast("long"))
   }
 
+  /** d93's keeper rule over the near-dup clusters of `docs`. */
+  private def bestKeepers(docs: DataFrame): DataFrame =
+    Similarity.bestKeepersFrom(
+      Similarity.nearDupClusters(docs).select(col("doc_id"), col("cluster_id")), docs)
+
   private def vecsDf: DataFrame = {
     import spark.implicits._
     val rng = new scala.util.Random(5)
@@ -40,35 +51,35 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dedup family works on in-memory documents") {
-    val exact = Graft.dedupExact(docsDf).collect()
+    val exact = TextOps.dedupExact(docsDf).collect()
     // docs 1 and 4 are byte-identical -> one group with 2 copies, keeper 1
     val dupGroup = exact.filter(_.getAs[Long]("n_copies") == 2L)
     assert(dupGroup.length == 1 && dupGroup.head.getAs[Long]("keeper_doc_id") == 1L)
 
-    val near = Graft.nearDupPairs(docsDf).collect()
+    val near = Similarity.nearDupPairs(docsDf).collect()
     // 1-2 differ by one char, 1-4 identical, 2-4 same as 1-2
     val pairs = near.map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(pairs.contains((1L, 4L)) && pairs.contains((1L, 2L)) && pairs.contains((2L, 4L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L || p._1 == 5L || p._2 == 5L))
 
-    val clusters = Graft.nearDupClusters(docsDf).collect()
+    val clusters = Similarity.nearDupClusters(docsDf).collect()
     assert(clusters.forall(_.getAs[Long]("cluster_id") == 1L))
     assert(clusters.map(_.getAs[Long]("doc_id")).toSet == Set(1L, 2L, 4L))
     assert(clusters.forall(_.getAs[Long]("cluster_size") == 3L))
 
-    val sim = Graft.simhashPairs(docsDf).collect()
+    val sim = Corpus.simhashPairs(docsDf).collect()
     assert(sim.map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
       .contains((1L, 4L)))
 
     // end-to-end: docs 1/2/4 are one near-dup cluster (keep 1); 3 and 5
     // are unique -> deduplicated corpus = {1, 3, 5} with original rows
-    val kept = Graft.dedupedCorpus(docsDf).collect()
+    val kept = Curation.dedupedCorpus(docsDf).collect()
     assert(kept.map(_.getAs[Long]("doc_id")).toSet == Set(1L, 3L, 5L))
     assert(kept.head.schema.fieldNames.contains("text"))
 
     // quality-aware keeper: all three cluster members tie at ratio
     // 3/12, so the tie breaks to the smallest doc_id
-    val keepBest = Graft.dedupBestKeepers(docsDf).collect()
+    val keepBest = bestKeepers(docsDf).collect()
     assert(keepBest.length == 1)
     assert(keepBest.head.getAs[Long]("cluster_id") == 1L)
     assert(keepBest.head.getAs[Long]("keeper_id") == 1L)
@@ -85,7 +96,7 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       (10L, "the quick brown fox jumps over lazy dog again and again"),
       (11L, "the quick brown fox jumps over lazy dog again and again the"))
       .toDF("doc_id", "text")
-    val out = Graft.dedupBestKeepers(docs).collect()
+    val out = bestKeepers(docs).collect()
     assert(out.length == 1)
     assert(out.head.getAs[Long]("keeper_id") == 11L)
     assert(out.head.getAs[Double]("best_score") == 0.25)
@@ -106,55 +117,55 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       (4L, "the quick brown fox jumps over the lazy dog"),
       (5L, "the quick brown fox jumps over the lazy dog!")
     ).toDF("doc_id", "text")
-    val pairs = Graft.nearDupPairs(docs)
+    val pairs = Similarity.nearDupPairs(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((4L, 5L)), s"got $pairs")
     // exact content-hash dedup is the operator that groups degenerate
     // docs (the documented complementarity): "" and "" group, nulls group
     val withDupEmpties = docs.unionAll(Seq((6L, "")).toDF("doc_id", "text"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val exact = Graft.dedupExact(withDupEmpties)
+    val exact = TextOps.dedupExact(withDupEmpties)
       .where(col("n_copies") > 1).collect()
     assert(exact.exists(r => r.getAs[Long]("keeper_doc_id") == 2L &&
       r.getAs[Long]("n_copies") == 2L)) // docs 2 and 6 ("")
   }
 
   test("text-analysis family works on in-memory documents") {
-    assert(Graft.tokenStats(docsDf).count() == 5)
-    val freq = Graft.wordFreq(docsDf, k = 3).collect()
+    assert(TextOps.tokenStats(docsDf).count() == 5)
+    val freq = TextOps.wordFreq(docsDf, k = 3).collect()
     assert(freq.head.getAs[String]("word") == "the") // 2 docs x2 + 1 doc x2
-    val qual = Graft.qualityScore(docsDf).where(col("doc_id") === 5).head()
+    val qual = TextOps.qualityScore(docsDf).where(col("doc_id") === 5).head()
     assert(qual.getAs[Long]("n_tokens") == 1L)
-    assert(Graft.composition(docsDf).count() == 3) // (en,web),(de,books),(en,crawl)
-    val lid = Graft.langId(docsDf).where(col("doc_id") === 3).head()
+    assert(TextOps.composition(docsDf).count() == 3) // (en,web),(de,books),(en,crawl)
+    val lid = Corpus.langId(docsDf).where(col("doc_id") === 3).head()
     assert(lid.getAs[String]("predicted_lang") == "de")
     // doc 5 ("short") is under the 8-char gram width -> no fingerprints
-    assert(Graft.fingerprints(docsDf).groupBy(col("doc_id")).count().count() == 4)
-    assert(Graft.bpeTokenCounts(docsDf).count() == 5)
-    assert(Graft.lengthQuantiles(docsDf).count() == 2)
-    assert(Graft.distinctTokenSketch(docsDf).count() == 2)
+    assert(Corpus.fingerprints(docsDf).groupBy(col("doc_id")).count().count() == 4)
+    assert(Corpus.bpeTokenCounts(docsDf).count() == 5)
+    assert(Corpus.lengthQuantiles(docsDf).count() == 2)
+    assert(Corpus.distinctTokenSketch(docsDf).count() == 2)
   }
 
   test("curation family works on in-memory documents") {
-    val rep = Graft.repetitionSignals(docsDf).where(col("doc_id") === 1).head()
+    val rep = Curation.repetitionSignals(docsDf).where(col("doc_id") === 1).head()
     assert(rep.getAs[Long]("n_words") == 12L)
     assert(rep.getAs[Long]("dup_word_count") == 2L) // the x2, again x2
     assert(rep.getAs[Long]("n_bigrams") == 11L)
-    val samp = Graft.stratifiedSample(docsDf, "lang", k = 2).collect()
+    val samp = Curation.stratifiedSample(docsDf, "lang", k = 2).collect()
     assert(samp.count(_.getAs[String]("lang") == "en") == 2)
     assert(samp.count(_.getAs[String]("lang") == "de") == 1)
     // docs 1/4 are identical and share every 3-gram with each other
-    val cont = Graft.contaminationPairs(
+    val cont = Curation.contaminationPairs(
       docsDf.where(col("doc_id") =!= 1), docsDf.where(col("doc_id") === 1))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(cont(4L) == 10L) // 12 words -> 10 distinct 3-grams, all shared
     assert(cont.contains(2L) && !cont.contains(3L) && !cont.contains(5L))
-    val mix = Graft.mixWeights(docsDf).collect()
+    val mix = Curation.mixWeights(docsDf).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(4)).toMap
     assert(mix.size == 3) // en×web (docs 1,2,5), en×crawl, de×books
     // the (en, web) cell holds the most tokens -> downweighted below 1
     assert(mix(("en", "web")) < 1.0 && mix(("de", "books")) > 1.0)
-    val pii = Graft.piiScrub(docsDf.where(col("doc_id") === 1)).head()
+    val pii = Curation.piiScrub(docsDf.where(col("doc_id") === 1)).head()
     assert(pii.getAs[String]("scrubbed").startsWith("the quick"))
     assert(pii.getAs[Long]("n_emails") == 0L)
   }
@@ -163,37 +174,37 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // novelty: direct, and served from a persisted vocabulary index
     val base = docsDf.where(col("doc_id") === 1)
     val probe = docsDf.where(col("doc_id") === 3)
-    val nov = Graft.noveltyScore(base, probe).head()
+    val nov = Corpus.noveltyScore(base, probe).head()
     assert(nov.getAs[Long]("n_novel") == nov.getAs[Long]("n_grams")) // disjoint langs
     val gdir = java.nio.file.Files.createTempDirectory("graft-api-gram").toString
-    Graft.gramIndexSave(base, gdir)
-    val served = Graft.noveltyAgainstIndex(spark, probe, gdir).head()
+    GramIndex.save(base, gdir)
+    val served = GramIndex.noveltyAgainst(spark, probe, gdir).head()
     assert(served.getAs[Long]("n_novel") == nov.getAs[Long]("n_novel"))
 
     // bloom-served exact dedup equals the plain index probe
     val hdir = java.nio.file.Files.createTempDirectory("graft-api-hash").toString
-    Graft.hashIndexSave(base.select(col("doc_id"), col("text")), hdir)
-    val viaBloom = Graft.dedupAgainstIndexBloom(spark,
+    HashIndex.save(base.select(col("doc_id"), col("text")), hdir)
+    val viaBloom = HashIndex.dedupAgainstBloom(spark,
         docsDf.select(col("doc_id"), col("text")), hdir)
       .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
     assert(viaBloom(4L) == false && viaBloom(3L) == true) // 4 duplicates 1
 
     // JS divergence: identical-content sources diverge by 0
-    val div = Graft.sourceDivergence(docsDf.where(col("doc_id").isin(1L, 4L)))
+    val div = TextOps.sourceDivergence(docsDf.where(col("doc_id").isin(1L, 4L)))
       .head()
     assert(div.getAs[Double]("js_div") == 0.0) // web vs crawl, same text
 
     // budget selections and the quantile sketch gate
-    assert(Graft.budgetSelect(docsDf, budget = 1000L).count() == 5)
-    val perSrc = Graft.sourceBudgetSelect(docsDf, budget = 1000L).collect()
+    assert(Curation.budgetSelect(docsDf, budget = 1000L).count() == 5)
+    val perSrc = Curation.sourceBudgetSelect(docsDf, budget = 1000L).collect()
     assert(perSrc.length == 5 && perSrc.map(_.getString(1)).distinct.length == 3)
-    assert(Graft.quantileSketchBound(docsDf).collect()
+    assert(Corpus.quantileSketchBound(docsDf).collect()
       .forall(_.getAs[Boolean]("within_bound")))
 
     // MMR: pos-1 picks are the plain nearest neighbors
-    val mmr = Graft.mmrRerank(vecsDf).where(col("pos") === 1)
+    val mmr = Similarity.mmrRerank(vecsDf).where(col("pos") === 1)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val top1 = Graft.cosineTopK(vecsDf, 1).collect()
+    val top1 = Similarity.cosineTopK(vecsDf, 1).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(mmr == top1)
   }
@@ -204,54 +215,54 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val baskets = Seq((100L, 1L), (100L, 2L), (100L, 3L),
       (200L, 1L), (200L, 2L), (300L, 4L), (300L, 5L))
       .toDF("basket_id", "item_id")
-    assert(Graft.copurchaseEdges(baskets).as[(Long, Long, Long)]
+    assert(Graphs.copurchaseEdges(baskets).as[(Long, Long, Long)]
       .collect().toSet == Set((1L, 2L, 2L)))
-    assert(Graft.copurchaseCommunities(spark, baskets).count() == 2L)
-    assert(Graft.relatedItems(baskets).count() == 2L)
-    assert(Graft.basketRules(baskets).count() == 2L)
+    assert(Graphs.copurchaseCommunities(spark, baskets).count() == 2L)
+    assert(Graphs.relatedItems(baskets).count() == 2L)
+    assert(Graphs.basketRules(baskets).count() == 2L)
 
     val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
-    assert(Graft.triangleStats(tri).head().getAs[Long]("n_triangles") == 1L)
-    assert(Graft.kCore(tri, k = 2, rounds = 2).as[(Long, Long)]
+    assert(Graphs.triangleStats(tri).head().getAs[Long]("n_triangles") == 1L)
+    assert(Graphs.kCore(tri, k = 2, rounds = 2).as[(Long, Long)]
       .collect().toMap == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
-    val hops = Graft.hopDistance(tri, Seq(1L).toDF("node"))
+    val hops = Graphs.hopDistance(tri, Seq(1L).toDF("node"))
       .as[(Long, Long)].collect().toMap
     assert(hops == Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 2L))
 
     // ranks: every edge-incident node gets one; PPR anchors at sources
-    val pr = Graft.pageRank(tri).as[(Long, Long)].collect().toMap
+    val pr = Graphs.pageRank(tri).as[(Long, Long)].collect().toMap
     assert(pr.keySet == Set(1L, 2L, 3L, 4L))
-    val ppr = Graft.personalizedPageRank(tri, Seq(1L).toDF("node"))
+    val ppr = Graphs.personalizedPageRank(tri, Seq(1L).toDF("node"))
       .as[(Long, Long)].collect().toMap
     assert(ppr(1L) > ppr(4L))
-    assert(Graft.labelPropagation(tri).count() == 4L)
+    assert(Graphs.labelPropagation(tri).count() == 4L)
     // HITS on the directed triangle+spoke: every node scored
-    val hs = Graft.hits(tri).collect()
+    val hs = Graphs.hits(tri).collect()
     assert(hs.length == 4 && hs.forall(_.getAs[Long]("hub") >= 0L))
 
     val recs = Seq((1L, "acme corp"), (2L, "acmex corp"), (3L, "zzz"))
       .toDF("rec_id", "name")
-    val lm = Graft.bestMatches(recs).collect()
+    val lm = Linkage.bestMatches(recs).collect()
       .map(r => r.getLong(0) -> Option(r.get(2)).map(_.asInstanceOf[Long])).toMap
     // 1 and 2 share the 'corp' block and sit one edit apart; 3 is alone
     assert(lm == Map(1L -> Some(2L), 2L -> Some(1L), 3L -> None))
 
-    val skew = Graft.keySkewReport(baskets, "item_id").head()
+    val skew = Diagnostics.keySkewReport(baskets, "item_id").head()
     assert(skew.getAs[Long]("n_rows") == 7L && skew.getAs[Long]("n_keys") == 5L)
-    assert(Graft.tableProfile(docsDf, Seq("lang", "n_chars")).count() == 2L)
+    assert(Diagnostics.tableProfile(docsDf, Seq("lang", "n_chars")).count() == 2L)
 
     // retrieval: fuse bm25+ql; every fused doc must appear in a source list
     val corpus = docsDf.select(col("doc_id"), col("text"))
-    val bm = Graft.bm25TopK(corpus, nQueryTerms = 2, k = 3)
-    val ql = Graft.qlTopK(corpus, nQueryTerms = 2, k = 3)
-    val fused = Graft.rrfFuse(Seq(bm, ql), k = 3)
+    val bm = Retrieval.bm25TopK(corpus, nQueryTerms = 2, k = 3)
+    val ql = Retrieval.qlTopK(corpus, nQueryTerms = 2, k = 3)
+    val fused = Retrieval.rrfFuse(Seq(bm, ql), k = 3)
     val srcDocs = (bm.select("doc_id").collect() ++ ql.select("doc_id").collect())
       .map(_.getLong(0)).toSet
     assert(fused.count() > 0)
     assert(fused.select("doc_id").collect().map(_.getLong(0)).forall(srcDocs))
-    assert(Graft.tfidfKeywords(corpus, k = 2)
+    assert(Retrieval.tfidfKeywords(corpus, k = 2)
       .groupBy("doc_id").count().collect().forall(_.getLong(1) <= 2))
-    val prf = Graft.prfExpansion(corpus, nQueryTerms = 2, kDocs = 2, kTerms = 3).collect()
+    val prf = Retrieval.prfExpansion(corpus, nQueryTerms = 2, kDocs = 2, kTerms = 3).collect()
     assert(prf.forall(r => r.getString(0) != r.getString(1)))
   }
 
@@ -261,40 +272,39 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val wtri = Seq((1L, 2L, 5L), (2L, 3L, 1L), (1L, 3L, 1L), (3L, 4L, 1L))
       .toDF("src", "dst", "weight")
     val sym = wtri.union(wtri.select(col("dst"), col("src"), col("weight")))
-    val wpr = Graft.weightedPageRank(sym).as[(Long, Long)].collect().toMap
+    val wpr = Graphs.weightedPageRank(sym).as[(Long, Long)].collect().toMap
     assert(wpr.keySet == Set(1L, 2L, 3L, 4L))
-    val sp = Graft.shortestPaths(
+    val sp = Graphs.shortestPaths(
       Seq((1L, 2L, 4L), (2L, 3L, 4L)).toDF("src", "dst", "cost"),
       Seq(1L).toDF("node")).as[(Long, Long)].collect().toMap
     assert(sp == Map(1L -> 0L, 2L -> 4L, 3L -> 8L))
     // tiny balls: the sketch estimates equal the exact closure counts
-    val hb = Graft.hyperBall(tri, radius = 1).as[(Long, Long, Long)].collect().toSet
-    val ne = Graft.neighborhoodExact(tri, radius = 1).as[(Long, Long, Long)].collect().toSet
+    val hb = Graphs.hyperBall(tri, radius = 1).as[(Long, Long, Long)].collect().toSet
+    val ne = Graphs.neighborhoodExact(tri, radius = 1).as[(Long, Long, Long)].collect().toSet
     assert(hb == ne)
-    assert(Graft.hyperBallCloseness(tri, radius = 2).count() == 4L)
 
     val corpus = docsDf.select(col("doc_id"), col("text"))
     val dir = java.nio.file.Files.createTempDirectory("graft-api-lexq").toString
     try {
-      Graft.lexIndexSave(corpus, dir)
-      val served = Graft.searchQl(spark, dir, Seq("the", "fox"), k = 3).collect().toSet
-      val direct = Graft.qlRank(corpus, Seq("the", "fox"), k = 3).collect().toSet
+      LexIndex.save(corpus, dir)
+      val served = LexIndex.searchQl(spark, dir, Seq("the", "fox"), k = 3).collect().toSet
+      val direct = Retrieval.qlRank(corpus, Seq("the", "fox"), k = 3).collect().toSet
       assert(served == direct && served.nonEmpty)
-      assert(Graft.lexPostings(spark, dir).count() > 0L)
+      assert(LexIndex.postings(spark, dir).count() > 0L)
     } finally graft.ops.Corpus.deleteRecursively(dir)
   }
 
   test("driver-round-16 facades: late-data edge indexes reconcile fragmented baskets") {
     import spark.implicits._
-    // basket 100 arrives SPLIT across the two late appends — the facade
-    // path must net to the one-shot build (delegation of d190/d191)
+    // basket 100 arrives SPLIT across the two late appends — the
+    // frame-in path must net to the one-shot build (d190/d191's writes)
     val dir = java.nio.file.Files.createTempDirectory("graft-api-late").toString
     try {
-      Graft.edgeIndexAppendLate(
+      EdgeIndex.appendLate(
         Seq((100L, 1L), (200L, 1L), (200L, 2L)).toDF("basket_id", "item_id"), dir)
-      Graft.edgeIndexAppendLate(
+      EdgeIndex.appendLate(
         Seq((100L, 2L)).toDF("basket_id", "item_id"), dir)
-      assert(Graft.edgeIndexEdges(spark, dir).as[(Long, Long, Long)]
+      assert(EdgeIndex.edgesOf(spark, dir).as[(Long, Long, Long)]
         .collect().toSet == Set((1L, 2L, 2L)))
     } finally graft.ops.Corpus.deleteRecursively(dir)
     val tdir = java.nio.file.Files.createTempDirectory("graft-api-tlate").toString
@@ -302,12 +312,12 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       def b(rows: (Long, Long, String)*) = rows.toSeq
         .toDF("basket_id", "item_id", "bday")
         .withColumn("bday", col("bday").cast("date"))
-      Graft.temporalEdgeIndexAppendLate(
+      TemporalEdgeIndex.appendLate(
         b((100L, 1L, "2024-12-31"), (200L, 1L, "2024-07-01"),
           (200L, 2L, "2024-07-01")), tdir)
-      Graft.temporalEdgeIndexAppendLate(b((100L, 2L, "2024-12-31")), tdir)
+      TemporalEdgeIndex.appendLate(b((100L, 2L, "2024-12-31")), tdir)
       val anchor = Seq("2024-12-31").toDF("mx").select(col("mx").cast("date"))
-      assert(Graft.temporalEdgeIndexEdges(spark, tdir, anchor,
+      assert(TemporalEdgeIndex.decayedEdgesOf(spark, tdir, anchor,
           minWeightPpm = 0L).as[(Long, Long, Long)].collect().toSet ==
         Set((1L, 2L, 1500000L)))
     } finally graft.ops.Corpus.deleteRecursively(tdir)
@@ -318,46 +328,43 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val baskets = Seq((100L, 1L), (100L, 2L), (200L, 1L), (200L, 2L),
       (300L, 4L), (300L, 5L), (400L, 4L), (400L, 5L))
       .toDF("basket_id", "item_id")
-    // edge index lifecycle + served consumers through the facade
+    // edge index lifecycle + served consumers through the ops surface
     val dir = java.nio.file.Files.createTempDirectory("graft-api-edge").toString
     try {
-      Graft.edgeIndexSave(baskets.where(col("basket_id") <= 200L), dir)
-      Graft.edgeIndexAppend(baskets.where(col("basket_id") > 200L), dir,
+      EdgeIndex.save(baskets.where(col("basket_id") <= 200L), dir)
+      EdgeIndex.append(baskets.where(col("basket_id") > 200L), dir,
         checkDisjoint = true)
-      val served = Graft.edgeIndexEdges(spark, dir)
+      val served = EdgeIndex.edgesOf(spark, dir)
       assert(served.as[(Long, Long, Long)].collect().toSet ==
         Set((1L, 2L, 2L), (4L, 5L, 2L)))
-      assert(Graft.relatedItemsFrom(baskets.distinct(), served).count() == 4L)
-      assert(Graft.basketRulesFrom(baskets.distinct(), served).count() == 4L)
+      assert(Graphs.relatedItemsFrom(baskets.distinct(), served).count() == 4L)
+      assert(Graphs.basketRulesFrom(baskets.distinct(), served).count() == 4L)
     } finally graft.ops.Corpus.deleteRecursively(dir)
-    // dropped-basket observability
-    val drop = Graft.copurchaseDropped(baskets, maxBasketItems = 1024).head()
-    assert(drop.getAs[Long]("n_dropped_baskets") == 0L)
     // modularity: the two-pair split is denser than chance
     val edges = Seq((1L, 2L, 2L), (4L, 5L, 2L)).toDF("src", "dst", "weight")
     val assign = Seq((1L, 1L), (2L, 1L), (4L, 4L), (5L, 4L)).toDF("node", "community")
-    assert(Graft.modularity(edges, assign).head().getAs[Double]("modularity") > 0)
+    assert(Graphs.modularity(edges, assign).head().getAs[Double]("modularity") > 0)
     // biased walks + embeddings over the walk corpus
     val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
-    val walks = Graft.biasedWalks(tri, walksPerNode = 2, steps = 3,
+    val walks = Graphs.biasedWalks(tri, walksPerNode = 2, steps = 3,
       wReturn = 1, wIn = 2, wOut = 2)
     assert(walks.where(col("step") === 3L).count() == 8L) // no dead ends
-    val emb = Graft.walkEmbeddings(Graft.walkSkipGrams(walks), dim = 2, iters = 1)
+    val emb = Graphs.walkEmbeddings(Graphs.walkSkipGrams(walks), dim = 2, iters = 1)
     assert(emb.columns.toSeq == Seq("node", "e0", "e1") && emb.count() == 4L)
     // embedding retrieval consumer: every node gets k ranked neighbors
-    val rel = Graft.embeddingRelated(emb, k = 2)
+    val rel = Graphs.embeddingRelated(emb, k = 2)
     assert(rel.columns.toSeq == Seq("node", "rel_id", "cosine", "rank"))
     assert(rel.count() == 8L)
     // local-move refinement: an optimal split is a fixed point
-    val refined = Graft.refineCommunities(edges, assign, rounds = 2)
+    val refined = Graphs.refineCommunities(edges, assign, rounds = 2)
     assert(refined.as[(Long, Long)].collect().toMap ==
       Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L))
     // warm-start PR from its own output is bit-stable on a fixed point
     val symE = edges.union(edges.select(col("dst"), col("src"), col("weight")))
       .toDF("src", "dst", "weight")
-    val cold = Graft.weightedPageRank(symE, iterations = 8, checkpointEvery = 1)
+    val cold = Graphs.weightedPageRank(symE, iterations = 8, checkpointEvery = 1)
       .localCheckpoint()
-    val warm = Graft.weightedPageRankFrom(symE, cold, iterations = 1)
+    val warm = Graphs.weightedPageRankFrom(symE, cold, iterations = 1)
     // two disjoint symmetric pairs: uniform is the exact fixed point,
     // so cold(8) == warm(1 more) == uniform
     assert(warm.as[(Long, Long)].collect().toMap ==
@@ -371,19 +378,19 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("graft-api-upto").toString
     val dst = java.nio.file.Files.createTempDirectory("graft-api-uptoc").toString
     try {
-      Graft.edgeIndexSave(baskets.where(col("basket_id") <= 2L), dir)   // batch -1
-      Graft.edgeIndexAppend(baskets.where(col("basket_id") > 2L), dir)  // batch 0
+      EdgeIndex.save(baskets.where(col("basket_id") <= 2L), dir)   // batch -1
+      EdgeIndex.append(baskets.where(col("basket_id") > 2L), dir)  // batch 0
       // historical read: only the first generation's pair
-      assert(Graft.edgeIndexEdgesUpTo(spark, dir, maxBatch = -1L)
+      assert(EdgeIndex.edgesUpTo(spark, dir, maxBatch = -1L)
         .as[(Long, Long, Long)].collect().toSet == Set((1L, 2L, 2L)))
-      assert(Graft.edgeIndexEdges(spark, dir)
+      assert(EdgeIndex.edgesOf(spark, dir)
         .as[(Long, Long, Long)].collect().toSet ==
         Set((1L, 2L, 2L), (4L, 5L, 2L)))
       // compact -> source is marked superseded -> retire removes it
-      Graft.edgeIndexCompactTo(spark, dir, dst)
-      Graft.indexRetire(spark, dir)
+      EdgeIndex.compactTo(spark, dir, dst)
+      IndexCommit.retire(spark, dir)
       assert(!new java.io.File(dir).exists())
-      assert(Graft.edgeIndexEdges(spark, dst).count() == 2L)
+      assert(EdgeIndex.edgesOf(spark, dst).count() == 2L)
     } finally {
       graft.ops.Corpus.deleteRecursively(dst)
       if (new java.io.File(dir).exists()) graft.ops.Corpus.deleteRecursively(dir)
@@ -404,7 +411,7 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val evalSet = Seq(
       (100L, "ein ganz anderes dokument mit der die und das wörtern"))
       .toDF("doc_id", "text")
-    val shards = Graft.trainingShards(corpus, evalSet, maxSharedGrams = 3)
+    val shards = Curation.trainingShards(corpus, evalSet, maxSharedGrams = 3)
       .as[(Long, Long, Long)].collect().sortBy(_._1)
     assert(shards.map(_._1).toSeq == Seq(1L, 7L))
     assert(shards.map(_._2).toSeq == Seq(12L, 9L))
@@ -431,9 +438,9 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("lang", lit("en"))
     val evalSet = Seq((100L, "nothing shared here at all")).toDF("doc_id", "text")
 
-    val without = Graft.trainingShards(corpus, evalSet)
+    val without = Curation.trainingShards(corpus, evalSet)
       .as[(Long, Long, Long)].collect().map(_._1).sorted.toSeq
-    val withPpl = Graft.trainingShards(corpus, evalSet, dropPplTail = true)
+    val withPpl = Curation.trainingShards(corpus, evalSet, dropPplTail = true)
       .as[(Long, Long, Long)].collect().map(_._1).sorted.toSeq
     assert(without == Seq(1L, 2L, 3L, 4L, 5L, 6L))
     assert(withPpl == Seq(1L, 2L, 3L, 4L))
@@ -446,10 +453,10 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, "a b c d e"),                              // 5 toks  -> chunks at 0,2
       (2L, "x y")                                     // 2 toks  -> one chunk
     ).toDF("doc_id", "text")
-    val packed = Graft.packChunkShards(docs, window = 4, stride = 2, budget = 8)
+    val packed = Curation.packChunkShards(docs, window = 4, stride = 2, budget = 8)
       .as[(Long, Long, Long, Long)].collect().sortBy(r => (r._1, r._2))
 
-    val chunks = Graft.chunkWindows(docs, window = 4, stride = 2)
+    val chunks = Corpus.chunkWindows(docs, window = 4, stride = 2)
       .select(col("doc_id"), col("chunk_id"), col("n_tokens"))
       .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._2))
     // every chunk is packed exactly once with its token count intact
@@ -478,7 +485,7 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // span filter at n=3: docs 1/2 are exact dups -> dedup keeps 1; after
     // dedup doc 1's grams appear in no OTHER doc, so it survives; the
     // scrub turns doc 4's email into <EMAIL> (token count preserved: 8)
-    val shards = Graft.trainingShards(corpus, evalSet,
+    val shards = Curation.trainingShards(corpus, evalSet,
         scrubPii = true, maxDupSpanFrac = 0.5, dupSpanN = 3, hashGrams = true)
       .as[(Long, Long, Long)].collect().sortBy(_._1)
     assert(shards.map(_._1).toSeq == Seq(1L, 3L, 4L))
@@ -493,7 +500,7 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       (3L, "completely different text about mountains rivers and oceans"),
       (4L, "write to someone@example.com about mountains and several rivers")
     ).toDF("doc_id", "text").withColumn("n_chars", length(col("text")).cast("long"))
-    val shards2 = Graft.trainingShards(corpus2, evalSet,
+    val shards2 = Curation.trainingShards(corpus2, evalSet,
         scrubPii = true, maxDupSpanFrac = 0.5, dupSpanN = 3)
       .as[(Long, Long, Long)].collect().sortBy(_._1)
     assert(shards2.map(_._1).toSeq == Seq(3L, 4L))
@@ -503,28 +510,28 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val withZero = vecsDf.unionAll(
       Seq((99L, Array.fill(8)(0.0f))).toDF("vec_id", "embedding"))
-    val ann = Graft.annBestNeighbor(withZero).collect()
+    val ann = Similarity.annBestNeighbor(withZero).collect()
     assert(!ann.exists(r => r.getAs[Long]("vec_id") == 99L ||
       r.getAs[Long]("neighbor_id") == 99L))
     assert(ann.forall(r => !r.getAs[Double]("sim").isNaN))
     val vd = withZero.select(col("vec_id"),
       expr("transform(embedding, x -> cast(x AS double))").as("v"))
-    val model = Graft.ivfBuild(spark, vd, k = 4, iters = 2)
-    val found = Graft.ivfSearch(spark, model, vd, probes = 2).collect()
+    val model = IvfIndex.build(spark, vd, k = 4, iters = 2)
+    val found = IvfIndex.search(spark, model, vd, probes = 2).collect()
     assert(!found.exists(r => r.getAs[Long]("vec_id") == 99L ||
       r.getAs[Long]("neighbor_id") == 99L))
     assert(found.forall(r => !r.getAs[Double]("sim").isNaN))
   }
 
   test("similarity-search family works on in-memory embeddings") {
-    val topk = Graft.cosineTopK(vecsDf, k = 2)
+    val topk = Similarity.cosineTopK(vecsDf, k = 2)
     assert(topk.count() == 80) // 40 vecs x 2 ranks
-    val ann = Graft.annBestNeighbor(vecsDf)
+    val ann = Similarity.annBestNeighbor(vecsDf)
     assert(ann.count() <= 40 && ann.count() > 0)
-    val model = Graft.ivfBuild(spark,
+    val model = IvfIndex.build(spark,
       vecsDf.select(col("vec_id"), expr("transform(embedding, x -> cast(x AS double))").as("v")),
       k = 4, iters = 2)
-    val found = Graft.ivfSearch(spark, model,
+    val found = IvfIndex.search(spark, model,
       vecsDf.select(col("vec_id"), expr("transform(embedding, x -> cast(x AS double))").as("v")),
       probes = 2)
     assert(found.count() == 40)
@@ -538,7 +545,7 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, Array(0.98f, 0.15f), 2),
       (3L, Array(0.0f, 1.0f), 9))
       .toDF("vec_id", "embedding", "label")
-    val out = Graft.knnClassify(vecs, k = 3).collect()
+    val out = Similarity.knnClassify(vecs, k = 3).collect()
       .map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
     // vec 0's neighbors carry labels {1, 2, 9} -> three-way tie, smallest wins
     assert(out(0L) == ((1, 1L)))
@@ -552,7 +559,7 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, Array(0.98f, 0.15f), Integer.valueOf(5)),
       (3L, Array(0.97f, 0.2f), null.asInstanceOf[Integer]))
       .toDF("vec_id", "embedding", "label")
-    val sparseOut = Graft.knnClassify(sparse, k = 3).collect()
+    val sparseOut = Similarity.knnClassify(sparse, k = 3).collect()
       .map(r => r.getLong(0) ->
         ((if (r.isNullAt(1)) None else Some(r.getInt(1))), r.getLong(2))).toMap
     // one row per INPUT vector: vec 2's whole neighborhood is unlabeled,
@@ -574,9 +581,9 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("vec_id", "embedding", "label")
     // plugging the exact top-k stream into the open seam reproduces
     // knnClassify row-for-row
-    val viaSeam = Graft.knnClassifyFrom(vecs, Graft.cosineTopK(vecs, k = 3))
+    val viaSeam = Similarity.knnClassifyFrom(vecs, Similarity.cosineTopK(vecs, k = 3))
       .collect().map(_.toSeq).toSet
-    val direct = Graft.knnClassify(vecs, k = 3).collect().map(_.toSeq).toSet
+    val direct = Similarity.knnClassify(vecs, k = 3).collect().map(_.toSeq).toSet
     assert(viaSeam == direct)
     // IVF-backed kNN classification is a two-call composition:
     // ivfSearchTopK emits (vec_id, rank, neighbor_id) — the same shape
@@ -585,9 +592,9 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // so the predictions must match knnClassify exactly.
     val vd = vecs.select(col("vec_id"),
       expr("transform(embedding, x -> cast(x AS double))").as("v"))
-    val model = Graft.ivfBuild(spark, vd, k = 2, iters = 2)
-    val ivfCls = Graft.knnClassifyFrom(vecs,
-        Graft.ivfSearchTopK(spark, model, vd, k = 3, probes = 2))
+    val model = IvfIndex.build(spark, vd, k = 2, iters = 2)
+    val ivfCls = Similarity.knnClassifyFrom(vecs,
+        IvfIndex.searchTopK(spark, model, vd, k = 3, probes = 2))
       .collect().map(_.toSeq).toSet
     assert(ivfCls == direct)
   }
@@ -595,38 +602,41 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("multimodal metadata works on in-memory binary payloads") {
     val media = docsDf.select(col("doc_id"),
       encode(col("text"), "UTF-8").cast("binary").as("payload"))
-    val meta = Graft.mediaMeta(media, modality = "text").collect()
+    val meta = Corpus.mediaMeta(media, modality = "text").collect()
     assert(meta.length == 5 && meta.forall(_.getAs[String]("modality") == "text"))
-    val feats = Graft.mediaFeatures(media.withColumn("modality", lit("audio"))).collect()
+    import spark.implicits._
+    val feats = Multimodal.extractFeatures(spark,
+      media.select(col("doc_id").as("docId"), lit("audio").as("modality"), col("payload"))
+        .as[MediaRow]).toDF().collect()
     assert(feats.length == 5)
     assert(feats.forall(_.getAs[Long]("nBytes") > 0L)) // text bytes -> audio stub path
   }
 
   test("narrow facade operators run unchanged on a streaming DataFrame") {
     // batch/stream unification: per-document operators are narrow
-    // (no shuffle), so the SAME Graft functions drive readStream
-    // pipelines — nothing in the facade is batch-only where semantics
-    // allow streaming.
+    // (no shuffle), so the SAME ops functions drive readStream
+    // pipelines — none of them is batch-only where semantics allow
+    // streaming.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, String)]
     val stream = in.toDF().toDF("doc_id", "text", "lang")
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val q = Graft.tokenStats(stream)
+    val q = TextOps.tokenStats(stream)
       .writeStream.format("memory").queryName("tok_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-    val q2 = Graft.langId(stream)
+    val q2 = Corpus.langId(stream)
       .writeStream.format("memory").queryName("lid_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-    val q3 = Graft.repetitionSignals(stream)
+    val q3 = Curation.repetitionSignals(stream)
       .writeStream.format("memory").queryName("rep_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
     // d25's narrow half (per-doc gram counts) is likewise streaming-safe —
     // only the cross-document join half of dupSpanStats is batch
-    val q4 = Graft.docGramCounts(stream, n = 2)
+    val q4 = Curation.docGramCounts(stream, n = 2)
       .writeStream.format("memory").queryName("gram_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-    val q5 = Graft.piiScrub(stream)
+    val q5 = Curation.piiScrub(stream)
       .writeStream.format("memory").queryName("pii_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
     // the mix APPLICATION half is streaming-safe too: weights are a
@@ -634,12 +644,12 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // join) and the explode is narrow — resample arriving docs against a
     // fixed mix plan micro-batch by micro-batch
     val mixW = Seq(("en", 2.0), ("de", 0.0)).toDF("lang", "weight")
-    val q6 = Graft.materializeMix(stream, mixW, dims = Seq("lang"))
+    val q6 = Curation.materializeMix(stream, mixW, dims = Seq("lang"))
       .writeStream.format("memory").queryName("mix_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
     // chunking is a narrow explode, so it streams too (window 3/stride 2
     // to exercise multi-chunk docs at this size)
-    val q7 = Graft.chunkWindows(stream, window = 3, stride = 2)
+    val q7 = Corpus.chunkWindows(stream, window = 3, stride = 2)
       .writeStream.format("memory").queryName("chunk_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
     // semantic decontamination is a stream-static broadcast join plus a
@@ -648,7 +658,7 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val inV = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Float])]
     val vstream = inV.toDF().toDF("vec_id", "embedding")
     val evalVecs = Seq((100L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
-    val q8 = Graft.semanticContaminationPairs(vstream, evalVecs, threshold = 0.9)
+    val q8 = Corpus.semanticContaminationPairs(vstream, evalVecs, threshold = 0.9)
       .writeStream.format("memory").queryName("decon_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
     // the frozen LR scorer is a narrow projection + 4-row static model
@@ -656,24 +666,24 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // retraining (the train half stays batch-side by design)
     val lrW = Seq(("b", -0.5), ("s", 4.0), ("a", 0.0), ("t", 0.0))
       .toDF("feature", "weight")
-    val q9 = Graft.lrScoreAgainst(stream, lrW)
+    val q9 = Curation.lrScoreAgainst(stream, lrW)
       .writeStream.format("memory").queryName("lr_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
     // PQ encoding against a FROZEN codebook is a narrow broadcast map —
     // arriving vectors get codes micro-batch by micro-batch (the
     // index-maintenance path; training stays batch-side, like LR/LM)
-    val cbS = Graft.pqTrainExact(spark,
+    val cbS = Pq.trainExact(spark,
       Seq((10L, Seq(1.0f, 0.0f)), (11L, Seq(0.0f, 1.0f))).toDF("vec_id", "embedding"),
       m = 2)
-    val q10 = Graft.pqEncode(spark, vstream, cbS)
+    val q10 = Pq.encode(spark, vstream, cbS)
       .writeStream.format("memory").queryName("pq_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
     // char entropy / lexical diversity are narrow per-doc projections —
     // the d78/d79 quality signals score arriving docs unchanged
-    val q11 = Graft.charEntropy(stream)
+    val q11 = Lexical.charEntropy(stream)
       .writeStream.format("memory").queryName("ent_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-    val q12 = Graft.lexicalDiversity(stream)
+    val q12 = Lexical.lexicalDiversity(stream)
       .writeStream.format("memory").queryName("lex_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
     try {
@@ -754,98 +764,98 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("driver queries are the facade operators (delegation equivalence)") {
     val docs = graft.ops.Tables.documents(spark, sf)
     val viaQuery = SparkEntry.queries("d06_minhash_lsh")(spark, sf).collect().toSet
-    val viaApi = Graft.nearDupPairs(docs).collect().toSet
+    val viaApi = Similarity.nearDupPairs(docs).collect().toSet
     assert(viaQuery.map(_.toSeq) == viaApi.map(_.toSeq))
 
     val vecs = graft.ops.Tables.embeddings(spark, sf)
     val q07 = SparkEntry.queries("d07_cosine_topk")(spark, sf).collect().toSet
-    val a07 = Graft.cosineTopK(vecs, k = 3).collect().toSet
+    val a07 = Similarity.cosineTopK(vecs, k = 3).collect().toSet
     assert(q07.map(_.toSeq) == a07.map(_.toSeq))
 
     val q37 = SparkEntry.queries("d37_tfidf_topterms")(spark, sf).collect().toSet
-    val a37 = Graft.tfidfTopTerms(docs).collect().toSet
+    val a37 = Corpus.tfidfTopTerms(docs).collect().toSet
     assert(q37.map(_.toSeq) == a37.map(_.toSeq))
 
     val q38 = SparkEntry.queries("d38_bm25_rank")(spark, sf).collect().toSet
-    val a38 = Graft.bm25Rank(docs, graft.ops.Corpus.Bm25Query).collect().toSet
+    val a38 = Corpus.bm25Rank(docs, graft.ops.Corpus.Bm25Query).collect().toSet
     assert(q38.map(_.toSeq) == a38.map(_.toSeq))
 
     val q36 = SparkEntry.queries("d36_sketch_bound")(spark, sf).collect().toSet
-    val a36 = Graft.sketchWithinBound(docs).collect().toSet
+    val a36 = Corpus.sketchWithinBound(docs).collect().toSet
     assert(q36.map(_.toSeq) == a36.map(_.toSeq))
 
     val q50 = SparkEntry.queries("d50_bigram_ppl")(spark, sf).collect().toSet
-    val a50 = Graft.bigramPpl(docs).collect().toSet
+    val a50 = Curation.bigramPpl(docs).collect().toSet
     assert(q50.map(_.toSeq) == a50.map(_.toSeq))
 
     val q51 = SparkEntry.queries("d51_bpe_train")(spark, sf).collect().toSet
-    val a51 = Graft.bpeTrain(docs).collect().toSet
+    val a51 = Corpus.bpeTrain(docs).collect().toSet
     assert(q51.map(_.toSeq) == a51.map(_.toSeq))
 
     val q52 = SparkEntry.queries("d52_bpe_segment")(spark, sf).collect().toSet
-    val a52 = Graft.bpeSegment(docs).collect().toSet
+    val a52 = Corpus.bpeSegment(docs).collect().toSet
     assert(q52.map(_.toSeq) == a52.map(_.toSeq))
 
     val en = docs.where(org.apache.spark.sql.functions.col("lang") === "en")
     val q47 = SparkEntry.queries("d47_dsir_weights")(spark, sf).collect().toSet
-    val a47 = Graft.dsirWeights(docs, en).collect().toSet
+    val a47 = Curation.dsirWeights(docs, en).collect().toSet
     assert(q47.map(_.toSeq) == a47.map(_.toSeq))
 
     val q48 = SparkEntry.queries("d48_dsir_select")(spark, sf).collect().toSet
-    val a48 = Graft.dsirSelect(docs, en).collect().toSet
+    val a48 = Curation.dsirSelect(docs, en).collect().toSet
     assert(q48.map(_.toSeq) == a48.map(_.toSeq))
 
     val q57 = SparkEntry.queries("d57_semdedup_keep")(spark, sf).collect().toSet
-    val a57 = Graft.semDedupKeep(vecs).collect().toSet
+    val a57 = Corpus.semDedupKeep(vecs).collect().toSet
     assert(q57.map(_.toSeq) == a57.map(_.toSeq))
 
     val q58 = SparkEntry.queries("d58_semdedup_clusters")(spark, sf).collect().toSet
-    val a58 = Graft.semanticDupClusters(spark, vecs).collect().toSet
+    val a58 = Corpus.semanticDupClusters(spark, vecs).collect().toSet
     assert(q58.map(_.toSeq) == a58.map(_.toSeq))
 
     val q59 = SparkEntry.queries("d59_hard_negatives")(spark, sf).collect().toSet
-    val a59 = Graft.hardNegativeTopK(vecs).collect().toSet
+    val a59 = Similarity.hardNegativeTopK(vecs).collect().toSet
     assert(q59.map(_.toSeq) == a59.map(_.toSeq))
 
     val q60 = SparkEntry.queries("d60_containment_prefix")(spark, sf).collect().toSet
-    val a60 = Graft.containmentPairs(docs).collect().toSet
+    val a60 = Similarity.containmentPairs(docs).collect().toSet
     assert(q60.map(_.toSeq) == a60.map(_.toSeq))
 
     val q62 = SparkEntry.queries("d62_dup_span_intervals")(spark, sf).collect().toSet
-    val a62 = Graft.dupSpanIntervals(docs).collect().toSet
+    val a62 = Curation.dupSpanIntervals(docs).collect().toSet
     assert(q62.map(_.toSeq) == a62.map(_.toSeq))
 
     val q63 = SparkEntry.queries("d63_dedup_scrub")(spark, sf).collect().toSet
-    val a63 = Graft.dedupScrub(docs).collect().toSet
+    val a63 = Curation.dedupScrub(docs).collect().toSet
     assert(q63.map(_.toSeq) == a63.map(_.toSeq))
 
     val q73 = SparkEntry.queries("d73_pq_topk_exact")(spark, sf).collect().toSet
-    val cb = Graft.pqTrainExact(spark, vecs, m = 8)
-    val a73 = Graft.pqTopK(vecs, Graft.pqEncode(spark, vecs, cb), cb).collect().toSet
+    val cb = Pq.trainExact(spark, vecs, m = 8)
+    val a73 = Pq.topKAdc(vecs, Pq.encode(spark, vecs, cb), cb).collect().toSet
     assert(q73.map(_.toSeq) == a73.map(_.toSeq))
 
     val q87 = SparkEntry.queries("d87_shuffle_order")(spark, sf).collect().toSet
-    val a87 = Graft.shuffleOrder(docs).collect().toSet
+    val a87 = Curation.shuffleOrder(docs).collect().toSet
     assert(q87.map(_.toSeq) == a87.map(_.toSeq))
 
     val q88 = SparkEntry.queries("d88_interleave_order")(spark, sf).collect().toSet
-    val a88 = Graft.interleaveOrder(docs).collect().toSet
+    val a88 = Curation.interleaveOrder(docs).collect().toSet
     assert(q88.map(_.toSeq) == a88.map(_.toSeq))
 
     val q89 = SparkEntry.queries("d89_temperature_mix")(spark, sf).collect().toSet
-    val a89 = Graft.temperatureWeights(docs).collect().toSet
+    val a89 = Curation.temperatureWeights(docs).collect().toSet
     assert(q89.map(_.toSeq) == a89.map(_.toSeq))
 
     val q90 = SparkEntry.queries("d90_length_batches")(spark, sf).collect().toSet
-    val a90 = Graft.lengthBatches(docs).collect().toSet
+    val a90 = Curation.lengthBatches(docs).collect().toSet
     assert(q90.map(_.toSeq) == a90.map(_.toSeq))
 
     val q91 = SparkEntry.queries("d91_epoch_plan")(spark, sf).collect().toSet
-    val a91 = Graft.epochPlan(docs).collect().toSet
+    val a91 = Curation.epochPlan(docs).collect().toSet
     assert(q91.map(_.toSeq) == a91.map(_.toSeq))
 
     val q92 = SparkEntry.queries("d92_curriculum_order")(spark, sf).collect().toSet
-    val a92 = Graft.curriculumOrder(
+    val a92 = Curation.curriculumOrder(
       graft.ops.TextOps.qualityScore(docs)
         .select(org.apache.spark.sql.functions.col("doc_id"),
           org.apache.spark.sql.functions.col("stopword_ratio").as("score"))).collect().toSet

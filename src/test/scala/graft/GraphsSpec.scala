@@ -685,17 +685,6 @@ class GraphsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(est == row)
   }
 
-  test("hyperBallCloseness: the star center is closer than its leaves") {
-    import spark.implicits._
-    val es = (2L to 9L).map(l => (1L, l))
-    val got = Graphs.hyperBallCloseness(edgesDf(es), radius = 2)
-      .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    // center: 8 nodes at distance 1 -> dist_sum 8, reach 9
-    assert(got(1L) == ((9L, 8L)))
-    // each leaf: 1 at distance 1, 7 at distance 2 -> dist_sum 15
-    assert(got(2L) == ((9L, 15L)))
-  }
-
   test("biasedWalks: p=q=1 reproduces randomWalks bit-for-bit") {
     // K4 plus a tail — mixed degrees so several pick ranges exercise
     val es = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
@@ -1102,22 +1091,6 @@ class GraphsSpec extends AnyFunSuite with BeforeAndAfterAll {
       edgesDf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L)))).collect()(0)
     assert(row.isNullAt(row.fieldIndex("assortativity")))
     assert(row.getLong(row.fieldIndex("m")) == 8L)
-  }
-
-  test("copurchaseDropped: counts gated baskets; zero row when none fire") {
-    import spark.implicits._
-    val baskets = (Seq.tabulate(5)(i => (1L, i.toLong)) ++ // 5-item basket
-      Seq((2L, 1L), (2L, 2L), (3L, 7L))).toDF("basket_id", "item_id")
-    val hit = Graphs.copurchaseDropped(baskets, maxBasketItems = 4)
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(hit == Seq((1L, 5L, 4L)))
-    val clean = Graphs.copurchaseDropped(baskets, maxBasketItems = 1024)
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(clean == Seq((0L, 0L, 1024L)))
-    // and the gate it observes actually drops that basket's pairs
-    val edges = Graphs.copurchaseEdges(baskets, minSupport = 1L,
-      maxBasketItems = 4).collect()
-    assert(edges.forall(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
   }
 
   test("kTruss: clique survives, pendant triangle pruned, hostile input canonicalized") {

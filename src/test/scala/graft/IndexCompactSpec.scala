@@ -30,7 +30,7 @@ class IndexCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     LexIndex.save(docs.filter(col("doc_id") % 3 === 0), src)
     LexIndex.append(docs.filter(col("doc_id") % 3 === 1), src)
     assert(batchDirs(src, "postings").size == 2)
-    graft.api.Graft.lexIndexCompactTo(spark, src, dst)
+    LexIndex.compactTo(spark, src, dst)
 
     assert(batchDirs(dst, "postings") == Seq("ingest_batch=-1"))
     assert(batchDirs(dst, "docstats") == Seq("ingest_batch=-1"))
@@ -55,7 +55,7 @@ class IndexCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     val src = tmp("graft-skc-src"); val dst = tmp("graft-skc-dst")
     SketchIndex.save(docs.filter(col("doc_id") % 2 === 0), src)
     SketchIndex.append(docs.filter(col("doc_id") % 2 === 1), src)
-    graft.api.Graft.sketchIndexCompactTo(spark, src, dst)
+    SketchIndex.compactTo(spark, src, dst)
 
     assert(batchDirs(dst, "sketches") == Seq("ingest_batch=-1"))
     assert(batchDirs(dst, "buckets") == Seq("ingest_batch=-1"))
@@ -72,7 +72,7 @@ class IndexCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     val src = tmp("graft-ivfc-src"); val dst = tmp("graft-ivfc-dst")
     IvfIndex.save(IvfIndex.build(spark, e.filter(col("vec_id") % 2 === 0), k = 8, iters = 2), src)
     IvfIndex.appendSaved(spark, src, e.filter(col("vec_id") % 2 === 1))
-    graft.api.Graft.ivfCompactTo(spark, src, dst)
+    IvfIndex.compactTo(spark, src, dst)
 
     assert(batchDirs(dst, "cells") == Seq("ingest_batch=-1"))
     val mSrc = IvfIndex.load(spark, src)
@@ -109,7 +109,7 @@ class IndexCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a CURRENT (never-compacted) generation must refuse retire — there
     // is no successor, deleting it would destroy live data
     val current = intercept[IllegalArgumentException] {
-      graft.api.Graft.indexRetire(spark, src)
+      IndexCommit.retire(spark, src)
     }
     assert(current.getMessage.contains(IndexCommit.SupersededMarker))
     assert(new java.io.File(src, "_graft_commit").exists())
@@ -124,7 +124,7 @@ class IndexCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dstMarker = new java.io.File(dst, "_graft_commit")
     assert(dstMarker.delete())
     val unmarked = intercept[IllegalArgumentException] {
-      graft.api.Graft.indexRetire(spark, src)
+      IndexCommit.retire(spark, src)
     }
     assert(unmarked.getMessage.contains("not committed"))
     assert(new java.io.File(src, "_graft_commit").exists()) // src untouched
@@ -132,7 +132,7 @@ class IndexCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     // successor restored -> retire removes the superseded generation
     // and ONLY it (dst keeps serving)
     dstMarker.createNewFile()
-    graft.api.Graft.indexRetire(spark, src)
+    IndexCommit.retire(spark, src)
     assert(!new java.io.File(src).exists())
     assert(LexIndex.searchBm25(spark, dst, Corpus.Bm25Query).count() > 0)
   }

@@ -198,7 +198,7 @@ class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     IvfIndex.save(IvfIndex.build(spark, half, k = 8, iters = 2), dir)
 
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Double])]
-    val q = graft.api.Graft.ivfIngest(spark, in.toDF().toDF("vec_id", "v"), dir, ckpt)
+    val q = IvfIndex.ingest(spark, in.toDF().toDF("vec_id", "v"), dir, ckpt)
     try {
       val (b1, b2) = rest.partition(_._1 % 4 == 1)
       in.addData(b1.toIndexedSeq); q.processAllAvailable()

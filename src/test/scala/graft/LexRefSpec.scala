@@ -64,7 +64,10 @@ class LexRefSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("tfidfTopTerms agrees with a sequential reference on random corpora (property)") {
     import spark.implicits._
-    val prop = Prop.forAll(corpusGen) { docsWords =>
+    // no shrinking: the default shrinker leaves the generator's domain
+    // (it reaches List(List()), a corpus with an empty document), so a
+    // failure would report that instead of the corpus that failed
+    val prop = Prop.forAllNoShrink(corpusGen) { docsWords =>
       val docs = docsWords.zipWithIndex
         .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
       val df = docs.toDF("doc_id", "text")

@@ -72,12 +72,11 @@ class ManifestLeakageSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("cluster-safe splits put every near-dup cluster in one split; audit reads zero") {
     val docs = graft.ops.Tables.documents(spark, "/root/testdata/sf0.01")
-    val assigned = Curation.clusterSafeSplit(docs)
+    val clusterFrame = graft.ops.Similarity.nearDupClusters(docs)
+      .select(col("doc_id"), col("cluster_id"))
+    val assigned = Curation.clusterSafeSplitFrom(docs, clusterFrame)
     // every member of a cluster carries the representative's split
-    val clusters = graft.ops.Similarity.nearDupClusters(docs)
-      .select(org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.col("cluster_id"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val clusters = clusterFrame.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val splits = assigned.collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getString(3)))).toMap
     assert(splits.nonEmpty && clusters.nonEmpty)

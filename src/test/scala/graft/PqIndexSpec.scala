@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
-import graft.api.Graft
 import graft.ops.{IndexCommit, Pq, PqIndex, Tables}
 
 /** The persisted PQ index must honor the shared index-family contract:
@@ -31,14 +30,14 @@ class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def hits(dir: String) =
-    Graft.pqIndexSearch(spark, dir, vecs).collect()
+    PqIndex.searchSaved(spark, dir, vecs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("saved index serves exactly the direct ADC computation") {
     val dir = tmp("graft-pqi")
-    val cb = Graft.pqTrainExact(spark, vecs, m = 8)
-    Graft.pqIndexSave(spark, cb, vecs, dir)
-    val direct = Graft.pqTopK(vecs, Graft.pqEncode(spark, vecs, cb), cb).collect()
+    val cb = Pq.trainExact(spark, vecs, m = 8)
+    PqIndex.save(spark, cb, vecs, dir)
+    val direct = Pq.topKAdc(vecs, Pq.encode(spark, vecs, cb), cb).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(hits(dir) == direct)
     // the loaded codebook is bit-identical to the trained one
@@ -50,26 +49,26 @@ class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("append lands only the batch; replaying a batch does not double-count") {
     val dir = tmp("graft-pqi-app")
-    val cb = Graft.pqTrain(spark, vecs, m = 8, k = 16, iters = 2)
-    Graft.pqIndexSave(spark, cb, vecs.where(col("vec_id") % 2 === 0), dir)
+    val cb = Pq.train(spark, vecs, m = 8, k = 16, iters = 2)
+    PqIndex.save(spark, cb, vecs.where(col("vec_id") % 2 === 0), dir)
     val batch = vecs.where(col("vec_id") % 2 === 1)
-    Graft.pqIndexAppend(spark, dir, batch)
+    PqIndex.appendSaved(spark, dir, batch)
     assert(batchDirs(dir) == Seq("ingest_batch=-1", "ingest_batch=0"))
     val full = PqIndex.loadCodes(spark, dir)
     assert(full.count() == vecs.count())
     // replay batch 0 (a failed-write re-run): same ids, same count
-    IndexCommit.stamped(Graft.pqEncode(spark, batch, cb), 0L)
+    IndexCommit.stamped(Pq.encode(spark, batch, cb), 0L)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(IndexCommit.BatchCol).parquet(s"$dir/codes")
     assert(PqIndex.loadCodes(spark, dir).count() == vecs.count())
     // the served search equals direct over the union
-    val direct = Graft.pqTopK(vecs, Graft.pqEncode(spark, vecs, cb), cb).collect()
+    val direct = Pq.topKAdc(vecs, Pq.encode(spark, vecs, cb), cb).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(hits(dir) == direct)
     // a disjointness-checked append of already-indexed ids refuses
     intercept[IllegalArgumentException] {
-      Graft.pqIndexAppend(spark, dir, batch, checkDisjoint = true)
+      PqIndex.appendSaved(spark, dir, batch, checkDisjoint = true)
     }
   }
 
@@ -77,10 +76,10 @@ class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = tmp("graft-pqi-ing"); val cp = tmp("graft-pqi-cp")
-    val cb = Graft.pqTrain(spark, vecs, m = 8, k = 16, iters = 2)
-    Graft.pqIndexSave(spark, cb, vecs.where(col("vec_id") < 100), dir)
+    val cb = Pq.train(spark, vecs, m = 8, k = 16, iters = 2)
+    PqIndex.save(spark, cb, vecs.where(col("vec_id") < 100), dir)
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Float])]
-    val q = Graft.pqIndexIngest(spark, in.toDF().toDF("vec_id", "embedding"), dir, cp)
+    val q = PqIndex.ingest(spark, in.toDF().toDF("vec_id", "embedding"), dir, cp)
     try {
       val late = vecs.where(col("vec_id") >= 100)
         .as[(Long, Array[Float])].collect().map { case (i, v) => (i, v.toSeq) }
@@ -89,7 +88,7 @@ class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       in.addData(late.drop(50).toSeq)
       q.processAllAvailable()
       assert(PqIndex.loadCodes(spark, dir).count() == vecs.count())
-      val direct = Graft.pqTopK(vecs, Graft.pqEncode(spark, vecs, cb), cb).collect()
+      val direct = Pq.topKAdc(vecs, Pq.encode(spark, vecs, cb), cb).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(hits(dir) == direct)
     } finally q.stop()
@@ -97,31 +96,31 @@ class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("compacted snapshot serves identically from one generation; source untouched") {
     val src = tmp("graft-pqi-src"); val dst = tmp("graft-pqi-dst")
-    val cb = Graft.pqTrain(spark, vecs, m = 8, k = 16, iters = 2)
-    Graft.pqIndexSave(spark, cb, vecs.where(col("vec_id") % 3 === 0), src)
-    Graft.pqIndexAppend(spark, src, vecs.where(col("vec_id") % 3 === 1))
+    val cb = Pq.train(spark, vecs, m = 8, k = 16, iters = 2)
+    PqIndex.save(spark, cb, vecs.where(col("vec_id") % 3 === 0), src)
+    PqIndex.appendSaved(spark, src, vecs.where(col("vec_id") % 3 === 1))
     assert(batchDirs(src).size == 2)
-    Graft.pqIndexCompactTo(spark, src, dst)
+    PqIndex.compactTo(spark, src, dst)
     assert(batchDirs(dst) == Seq("ingest_batch=-1"))
     assert(hits(dst) == hits(src))
     assert(batchDirs(src).size == 2)
     // the snapshot accepts fresh appends from batch 0
-    Graft.pqIndexAppend(spark, dst, vecs.where(col("vec_id") % 3 === 2),
+    PqIndex.appendSaved(spark, dst, vecs.where(col("vec_id") % 3 === 2),
       checkDisjoint = true)
     assert(batchDirs(dst).toSet == Set("ingest_batch=-1", "ingest_batch=0"))
-    val direct = Graft.pqTopK(vecs, Graft.pqEncode(spark, vecs, cb), cb).collect()
+    val direct = Pq.topKAdc(vecs, Pq.encode(spark, vecs, cb), cb).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(hits(dst) == direct)
   }
 
   test("readers fail closed on an uncommitted index") {
     val dir = tmp("graft-pqi-bad")
-    val cb = Graft.pqTrain(spark, vecs, m = 8, k = 16, iters = 1)
-    Graft.pqIndexSave(spark, cb, vecs, dir)
+    val cb = Pq.train(spark, vecs, m = 8, k = 16, iters = 1)
+    PqIndex.save(spark, cb, vecs, dir)
     // simulate an interrupted multi-table write: marker missing
     java.nio.file.Files.delete(java.nio.file.Path.of(dir, "_graft_commit"))
     intercept[IllegalArgumentException] { PqIndex.loadCodebook(spark, dir) }
     intercept[IllegalArgumentException] { PqIndex.loadCodes(spark, dir) }
-    intercept[IllegalArgumentException] { Graft.pqIndexSearch(spark, dir, vecs) }
+    intercept[IllegalArgumentException] { PqIndex.searchSaved(spark, dir, vecs) }
   }
 }

@@ -3,8 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
-import graft.api.Graft
-import graft.ops.{Pq, Similarity, Tables}
+import graft.ops.{IvfIndex, Pq, Similarity, Tables}
 
 /** Product quantization: d72/d73 hash-gate the exact-mode path
   * (lossless codebook) against DuckDB; this spec covers what the oracle
@@ -47,8 +46,8 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("exact-mode codebook round-trips bit-for-bit") {
     import spark.implicits._
-    val cb = Graft.pqTrainExact(spark, vecs, m = 8)
-    val recon = Graft.pqDecode(Graft.pqEncode(spark, vecs, cb), cb)
+    val cb = Pq.trainExact(spark, vecs, m = 8)
+    val recon = Pq.decode(Pq.encode(spark, vecs, cb), cb)
       .as[(Long, Array[Double])].collect().toMap
     val orig = vecs
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x AS double))"))
@@ -58,28 +57,28 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("exact-mode ADC ranking equals float exact top-k") {
-    val cb = Graft.pqTrainExact(spark, vecs, m = 8)
-    val adc = Graft.pqTopK(vecs, Graft.pqEncode(spark, vecs, cb), cb)
+    val cb = Pq.trainExact(spark, vecs, m = 8)
+    val adc = Pq.topKAdc(vecs, Pq.encode(spark, vecs, cb), cb)
     val exact = Similarity.cosineTopK(vecs)
     assert(adc.exceptAll(exact).isEmpty && exact.exceptAll(adc).isEmpty)
   }
 
   test("lossy training is deterministic and codes are bounded by k") {
-    val a = Graft.pqTrain(spark, vecs, m = 8, k = 16, iters = 3)
-    val b = Graft.pqTrain(spark, vecs, m = 8, k = 16, iters = 3)
+    val a = Pq.train(spark, vecs, m = 8, k = 16, iters = 3)
+    val b = Pq.train(spark, vecs, m = 8, k = 16, iters = 3)
     assert(a.centroids.flatten.map(_.toSeq).toSeq == b.centroids.flatten.map(_.toSeq).toSeq)
     // ...and bit-identical under any PARTITIONING or row order (the
     // IvfIndex.build determinism contract, extended to the codebook
     // trainer: fixed-point Lloyd sums make the fold order immaterial)
     def flat(cb: graft.ops.Pq.PqCodebook) =
       cb.centroids.flatten.map(_.toSeq).toSeq
-    assert(flat(Graft.pqTrain(spark, vecs.repartition(3), m = 8, k = 16,
+    assert(flat(Pq.train(spark, vecs.repartition(3), m = 8, k = 16,
       iters = 3)) == flat(a), "3-partition codebook differs")
-    assert(flat(Graft.pqTrain(spark, vecs.repartition(13), m = 8, k = 16,
+    assert(flat(Pq.train(spark, vecs.repartition(13), m = 8, k = 16,
       iters = 3)) == flat(a), "13-partition codebook differs")
-    assert(flat(Graft.pqTrain(spark, vecs.orderBy(col("vec_id").desc),
+    assert(flat(Pq.train(spark, vecs.orderBy(col("vec_id").desc),
       m = 8, k = 16, iters = 3)) == flat(a), "reversed row order differs")
-    val codes = Graft.pqEncode(spark, vecs, a)
+    val codes = Pq.encode(spark, vecs, a)
     val hi = codes.select(max(array_max(col("codes")))).head().getInt(0)
     val lo = codes.select(min(array_min(col("codes")))).head().getInt(0)
     assert(lo >= 0 && hi < 16, s"codes out of range [$lo, $hi]")
@@ -88,8 +87,8 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("more Lloyd iterations do not increase reconstruction error") {
     def mse(iters: Int): Double = {
-      val cb = Graft.pqTrain(spark, vecs, m = 8, k = 16, iters = iters)
-      Graft.pqDecode(Graft.pqEncode(spark, vecs, cb), cb)
+      val cb = Pq.train(spark, vecs, m = 8, k = 16, iters = iters)
+      Pq.decode(Pq.encode(spark, vecs, cb), cb)
         .withColumnRenamed("embedding", "r")
         .join(vecs.select(col("vec_id"),
           expr("transform(embedding, x -> cast(x AS double))").as("v")), "vec_id")
@@ -103,8 +102,8 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("lossy ADC recovers planted cluster structure (top-1 recall vs float exact)") {
     val p = planted(clusters = 4, perCluster = 25, dim = 16)
-    val cb = Graft.pqTrain(spark, p, m = 4, k = 8, iters = 3)
-    val adc1 = Graft.pqTopK(p, Graft.pqEncode(spark, p, cb), cb, k = 1)
+    val cb = Pq.train(spark, p, m = 4, k = 8, iters = 3)
+    val adc1 = Pq.topKAdc(p, Pq.encode(spark, p, cb), cb, k = 1)
       .select(col("vec_id"), col("neighbor_id").as("a"))
     val exact1 = Similarity.cosineTopK(p, k = 1)
       .select(col("vec_id"), col("neighbor_id").as("e"))
@@ -118,9 +117,9 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ADC scoring equals decode-then-score on the fixed corpus") {
-    val cb = Graft.pqTrain(spark, vecs, m = 8, k = 16, iters = 2)
-    val enc = Graft.pqEncode(spark, vecs, cb)
-    val adc = Graft.pqTopK(vecs, enc, cb)
+    val cb = Pq.train(spark, vecs, m = 8, k = 16, iters = 2)
+    val enc = Pq.encode(spark, vecs, cb)
+    val adc = Pq.topKAdc(vecs, enc, cb)
     // independent reference: reconstruct candidates from codes and score
     // with the same subspace-decomposed arithmetic (slice dots on the
     // DECODED array vs the engine's LUT lookups — same fold order, so
@@ -131,7 +130,7 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("vec_id").as("qid"),
         expr("transform(embedding, x -> cast(x AS double))").as("v"))
       .withColumn("qn", sqrt(expr(subSq("v"))))
-    val cd = Graft.pqDecode(enc, cb)
+    val cd = Pq.decode(enc, cb)
       .select(col("vec_id").as("cid"), col("embedding").as("r"))
       .withColumn("cn", sqrt(expr(subSq("r"))))
     val pairs = qd.join(cd, col("qid") =!= col("cid"))
@@ -146,30 +145,30 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("blocked fallback produces the same pairs as the broadcast path") {
-    val cb = Graft.pqTrainExact(spark, vecs, m = 8)
-    val enc = Graft.pqEncode(spark, vecs, cb)
-    val broad = Graft.pqTopK(vecs, enc, cb)
-    val blocked = Graft.pqTopK(vecs, enc, cb, maxBroadcastBytes = 1024)
+    val cb = Pq.trainExact(spark, vecs, m = 8)
+    val enc = Pq.encode(spark, vecs, cb)
+    val broad = Pq.topKAdc(vecs, enc, cb)
+    val blocked = Pq.topKAdc(vecs, enc, cb, maxBroadcastBytes = 1024)
     assert(broad.exceptAll(blocked).isEmpty && blocked.exceptAll(broad).isEmpty)
   }
 
   test("IVFPQ at full probes with an exact codebook equals the ADC kernel") {
-    val cb = Graft.pqTrainExact(spark, vecs, m = 8)
+    val cb = Pq.trainExact(spark, vecs, m = 8)
     val dv = vecs.select(col("vec_id"),
       expr("transform(embedding, x -> cast(x AS double))").as("v"))
-    val model = Graft.ivfBuild(spark, dv, k = 8)
-    val ivfpq = Graft.ivfPqTopK(spark, model, cb, vecs, k = 3, probes = 8)
-    val adc = Graft.pqTopK(vecs, Graft.pqEncode(spark, vecs, cb), cb)
+    val model = IvfIndex.build(spark, dv, k = 8)
+    val ivfpq = Pq.ivfPqTopK(spark, model, cb, vecs, k = 3, probes = 8)
+    val adc = Pq.topKAdc(vecs, Pq.encode(spark, vecs, cb), cb)
     assert(ivfpq.exceptAll(adc).isEmpty && adc.exceptAll(ivfpq).isEmpty)
   }
 
   test("lossy IVFPQ under pruned probes keeps planted cluster recall") {
     val p = planted(clusters = 4, perCluster = 25, dim = 16)
-    val cb = Graft.pqTrain(spark, p, m = 4, k = 8, iters = 3)
+    val cb = Pq.train(spark, p, m = 4, k = 8, iters = 3)
     val dv = p.select(col("vec_id"),
       expr("transform(embedding, x -> cast(x AS double))").as("v"))
-    val model = Graft.ivfBuild(spark, dv, k = 4)
-    val got = Graft.ivfPqTopK(spark, model, cb, p, k = 1, probes = 2)
+    val model = IvfIndex.build(spark, dv, k = 4)
+    val got = Pq.ivfPqTopK(spark, model, cb, p, k = 1, probes = 2)
       .select(col("vec_id"), col("neighbor_id").as("a"))
     val exact1 = graft.ops.Similarity.cosineTopK(p, k = 1)
       .select(col("vec_id"), col("neighbor_id").as("e"))
@@ -235,8 +234,8 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
     // at sf0.1 lives in the bench quality block (0.997 at r9's knobs).
     val v01 = Tables.embeddings(spark, "/root/testdata/sf0.01")
       .select(col("vec_id"), col("embedding"))
-    val cb = Graft.pqTrain(spark, v01, m = Pq.DefaultM, k = Pq.DefaultK, iters = 3)
-    val got = Graft.pqTopKRefined(v01, Graft.pqEncode(spark, v01, cb), v01, cb, k = 3)
+    val cb = Pq.train(spark, v01, m = Pq.DefaultM, k = Pq.DefaultK, iters = 3)
+    val got = Pq.topKAdcRefined(v01, Pq.encode(spark, v01, cb), v01, cb, k = 3)
       .select(col("vec_id"), col("neighbor_id"))
     val ex3 = Similarity.cosineTopK(v01, 3)
       .select(col("vec_id"), col("neighbor_id")).cache()
@@ -252,10 +251,10 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
     // lossless codes => ADC containment is exact, and the re-rank
     // recomputes the same subspace-decomposed sims — the d96 gate's
     // claim, asserted here against the un-refined exact path
-    val cb = Graft.pqTrainExact(spark, vecs, m = 8)
-    val enc = Graft.pqEncode(spark, vecs, cb)
-    val refined = Graft.pqTopKRefined(vecs, enc, vecs, cb, k = 3, rerank = 10)
-    val adc = Graft.pqTopK(vecs, enc, cb, k = 3)
+    val cb = Pq.trainExact(spark, vecs, m = 8)
+    val enc = Pq.encode(spark, vecs, cb)
+    val refined = Pq.topKAdcRefined(vecs, enc, vecs, cb, k = 3, rerank = 10)
+    val adc = Pq.topKAdc(vecs, enc, cb, k = 3)
     assert(refined.exceptAll(adc).isEmpty && adc.exceptAll(refined).isEmpty)
   }
 
@@ -284,7 +283,7 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(adc.exceptAll(blocked).isEmpty && blocked.exceptAll(adc).isEmpty)
     val dv = df.select(col("vec_id"),
       expr("transform(embedding, x -> cast(x AS double))").as("v"))
-    val model = Graft.ivfBuild(spark, dv, k = 3, iters = 1)
+    val model = IvfIndex.build(spark, dv, k = 3, iters = 1)
     val ivfpq = Pq.ivfPqTopK(spark, model, cb, df, k = 3, probes = 3)
     assert(adc.exceptAll(ivfpq).isEmpty && ivfpq.exceptAll(adc).isEmpty)
     val refined = Pq.topKAdcRefined(df, enc, df, cb, 3, rerank = 6)
@@ -293,7 +292,7 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("codebook budget and shape guards fail fast") {
     intercept[IllegalArgumentException] {
-      Graft.pqTrainExact(spark, vecs, m = 7) // 64 % 7 != 0
+      Pq.trainExact(spark, vecs, m = 7) // 64 % 7 != 0
     }
     intercept[IllegalArgumentException] {
       Pq.train(spark, vecs, m = 8, k = 1 << 24) // codebook over budget

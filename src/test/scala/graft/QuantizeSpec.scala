@@ -3,8 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
-import graft.api.Graft
-import graft.ops.Tables
+import graft.ops.{Quantize, Similarity, Tables}
 
 /** The quantizer's contract is arithmetic, so the spec checks the math:
   * codes live in 0..255, the round trip reconstructs within half a
@@ -21,7 +20,7 @@ class QuantizeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def vecs = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
 
   test("codes are bounded 0..255 and every vector round-trips within half a step") {
-    val q = Graft.quantizeInt8(vecs).cache()
+    val q = Quantize.quantizeInt8(vecs).cache()
     val codeBounds = q.select(
       min(array_min(col("codes"))).as("lo"), max(array_max(col("codes"))).as("hi"))
       .head()
@@ -29,7 +28,7 @@ class QuantizeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // worst per-element |x - recon| over the corpus, relative to each
     // vector's step size (hi - lo)/255: must be <= 1/2 everywhere
-    val recon = Graft.dequantize(q).withColumnRenamed("embedding", "r")
+    val recon = Quantize.dequantize(q).withColumnRenamed("embedding", "r")
     val worst = vecs
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x AS double))").as("v"))
       .join(recon, "vec_id")
@@ -44,16 +43,16 @@ class QuantizeSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val const = Seq((1L, Array(0.25f, 0.25f, 0.25f)), (2L, Array(-3f, -3f, -3f)))
       .toDF("vec_id", "embedding")
-    val q = Graft.quantizeInt8(const)
+    val q = Quantize.quantizeInt8(const)
     assert(q.select(array_max(col("codes"))).collect().forall(_.getInt(0) == 0))
-    val recon = Graft.dequantize(q).as[(Long, Array[Double])].collect().toMap
+    val recon = Quantize.dequantize(q).as[(Long, Array[Double])].collect().toMap
     assert(recon(1L).toSeq == Seq(0.25, 0.25, 0.25) && recon(2L).toSeq == Seq(-3.0, -3.0, -3.0))
   }
 
   test("quantized exact retrieval agrees with float retrieval on top-1") {
-    val exact = Graft.cosineTopK(vecs).where(col("rank") === 1)
+    val exact = Similarity.cosineTopK(vecs).where(col("rank") === 1)
       .select(col("vec_id"), col("neighbor_id").as("e"))
-    val quantized = Graft.cosineTopK(Graft.dequantize(Graft.quantizeInt8(vecs)))
+    val quantized = Similarity.cosineTopK(Quantize.dequantize(Quantize.quantizeInt8(vecs)))
       .where(col("rank") === 1)
       .select(col("vec_id"), col("neighbor_id").as("q"))
     val joined = exact.join(quantized, "vec_id").cache()

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
+import graft.ops.Similarity
 
 /** Unit coverage for the round-3 similarity primitives: the native
   * vec_dot expression, the bounded TopKAgg and TopKSlots, and the exact d19 prefix
@@ -333,7 +334,7 @@ class SimilarityPrimitivesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("jaccardPrefixPairs is exact at a lowered threshold (J >= 0.5)") {
     import spark.implicits._
     val docs = graft.ops.Tables.documents(spark, sf)
-    val got = graft.api.Graft.jaccardPrefixPairs(docs, thresholdNum = 1, thresholdDen = 2)
+    val got = Similarity.jaccardPrefixPairs(docs, thresholdNum = 1, thresholdDen = 2)
       .select($"doc_a", $"doc_b", $"inter_size", $"union_size")
       .as[(Long, Long, Long, Long)].collect().toSet
     val raw = docs.select($"doc_id", $"text").as[(Long, String)].collect()

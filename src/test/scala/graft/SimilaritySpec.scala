@@ -34,7 +34,7 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     val joined = ann.as("a").join(exact.as("e"), "vec_id")
     val agree = joined.where($"a.neighbor_id" === $"e.exact_nn").count()
     // multiprobe + corpus-width geometry: recall@1 is 0.93+ at sf0.1 and
-    // ~1.0 here (measured, graft.tools.AnnTune) — hold a 0.8 floor
+    // ~1.0 here (measured with the former AnnTune dev probe) — hold a 0.8 floor
     assert(agree.toDouble / annRows.length > 0.8, s"recall@1 = $agree/${annRows.length}")
   }
 
@@ -157,7 +157,7 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     val vecs = graft.ops.Tables.embeddings(spark, sf)
     val exact = graft.ops.Corpus.cosineNearDupPairs(vecs)
       .as[(Long, Long, Double)].collect().toSet
-    val ann = graft.api.Graft.cosineNearDupPairsAnn(vecs)
+    val ann = Similarity.cosineNearDupPairsAnn(vecs)
       .as[(Long, Long, Double)].collect().toSet
     // every emitted pair passes the exact threshold on the exact cosine:
     // the approximate path can only MISS pairs, never invent them

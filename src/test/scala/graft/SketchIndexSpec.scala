@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
+import graft.ops.{Similarity, SketchIndex}
 
-import graft.api.Graft
 
 /** Incremental near-dup via the persisted sketch index: cross pairs of
   * (new batch x indexed corpus) must equal the full-corpus operator's
@@ -24,11 +24,11 @@ class SketchIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val indexed = docs.where(col("doc_id") < mid)
     val batch = docs.where(col("doc_id") >= mid)
 
-    Graft.sketchIndexSave(indexed, dir)
-    val got = Graft.nearDupAgainstIndex(spark, batch, dir)
+    SketchIndex.save(indexed, dir)
+    val got = SketchIndex.nearDupAgainst(spark, batch, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
 
-    val full = Graft.nearDupPairs(docs)
+    val full = Similarity.nearDupPairs(docs)
       .where(col("doc_a") < mid && col("doc_b") >= mid)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == full, s"${got.size} cross pairs vs ${full.size} expected")
@@ -42,12 +42,12 @@ class SketchIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val indexed2 = docs.where(col("doc_id") >= 150 && col("doc_id") < 250)
     val batch = docs.where(col("doc_id") >= 250)
 
-    Graft.sketchIndexSave(indexed1, dir)
-    Graft.sketchIndexAppend(indexed2, dir, checkDisjoint = true)
-    def probe() = Graft.nearDupAgainstIndex(spark, batch, dir)
+    SketchIndex.save(indexed1, dir)
+    SketchIndex.append(indexed2, dir, checkDisjoint = true)
+    def probe() = SketchIndex.nearDupAgainst(spark, batch, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val got = probe()
-    val full = Graft.nearDupPairs(docs)
+    val full = Similarity.nearDupPairs(docs)
       .where(col("doc_a") < 250 && col("doc_b") >= 250)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == full, s"${got.size} cross pairs vs ${full.size} expected")
@@ -59,7 +59,7 @@ class SketchIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // overlapping append refused
     val e = intercept[IllegalArgumentException] {
-      Graft.sketchIndexAppend(indexed2, dir, checkDisjoint = true)
+      SketchIndex.append(indexed2, dir, checkDisjoint = true)
     }
     assert(e.getMessage.contains("double-count"))
 
@@ -81,16 +81,16 @@ class SketchIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batch = docs.where(col("doc_id") >= 250)
 
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = Graft.sketchIndexIngest(in.toDF().toDF("doc_id", "text"), dir, ckpt)
+    val q = SketchIndex.ingest(in.toDF().toDF("doc_id", "text"), dir, ckpt)
     try {
       val (b1, b2) = indexed.partition(_._1 % 2 == 0)
       in.addData(b1.toIndexedSeq); q.processAllAvailable()
       in.addData(b2.toIndexedSeq); q.processAllAvailable()
     } finally q.stop()
 
-    val got = Graft.nearDupAgainstIndex(spark, batch, dir)
+    val got = SketchIndex.nearDupAgainst(spark, batch, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val full = Graft.nearDupPairs(docs)
+    val full = Similarity.nearDupPairs(docs)
       .where(col("doc_a") < 250 && col("doc_b") >= 250)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == full, s"${got.size} cross pairs vs ${full.size} expected")
@@ -103,13 +103,13 @@ class SketchIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, "the quick brown fox jumps over the lazy dog again and again"),
       (2L, "a completely different document about spark and parquet files")
     ).toDF("doc_id", "text")
-    Graft.sketchIndexSave(corpus, dir)
+    SketchIndex.save(corpus, dir)
     val batch = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again"), // re-crawl, same id
       (9L, "the quick brown fox jumps over the lazy dog again and again!"), // near-dup of 1
       (10L, "nothing like anything indexed here at all whatsoever")
     ).toDF("doc_id", "text")
-    val pairs = Graft.nearDupAgainstIndex(spark, batch, dir)
+    val pairs = SketchIndex.nearDupAgainst(spark, batch, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 9L)), s"got $pairs")
   }

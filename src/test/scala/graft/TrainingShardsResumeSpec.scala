@@ -3,8 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
-import graft.api.Graft
-import graft.ops.IndexCommit
+import graft.ops.{Curation, IndexCommit}
 
 /** trainingShards' per-stage checkpoint seam (r09 ask #7): resumed runs
   * must equal one-shot output, committed stages must be SERVED (not
@@ -23,7 +22,7 @@ class TrainingShardsResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The d54 knobs (dropPplTail exercises the optional s4 stage). */
   private def run(dir: Option[String]): Set[(Long, Long, Long)] =
-    Graft.trainingShards(tr, ev, dropPplTail = true, checkpointDir = dir)
+    Curation.trainingShards(tr, ev, dropPplTail = true, checkpointDir = dir)
       .select(col("doc_id"), col("n_tokens"), col("shard_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
@@ -87,13 +86,13 @@ class TrainingShardsResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     run(Some(cp))
     // a survivor-affecting knob changed against the same directory
     val e = intercept[IllegalArgumentException] {
-      Graft.trainingShards(tr, ev, dropPplTail = true, minWords = 7,
+      Curation.trainingShards(tr, ev, dropPplTail = true, minWords = 7,
         checkpointDir = Some(cp)).collect()
     }
     assert(e.getMessage.contains("different"), e.getMessage)
     // budget is outside the fingerprint: re-packing at a new budget is a
     // legitimate resume of the same survivor sets
-    val repacked = Graft.trainingShards(tr, ev, dropPplTail = true,
+    val repacked = Curation.trainingShards(tr, ev, dropPplTail = true,
       budget = 512, checkpointDir = Some(cp))
     assert(repacked.count() > 0)
     // and the original parameters still resume cleanly
