@@ -16,8 +16,11 @@ import org.apache.spark.sql.types._
 object Tables {
 
   /** The committed parquet goldens that oracle SQL reads back through
-    * DuckDB's read_parquet (e01–e06, d148, d187). */
-  val GoldenDir = "/root/repo/tools/golden"
+    * DuckDB's read_parquet (e01–e06, d148, d187): `tools/golden` under
+    * the repository root, taken from `GRAFT_REPO` when set and otherwise
+    * the working directory (sbt and Verify run from the root). */
+  val GoldenDir: String =
+    new java.io.File(sys.env.getOrElse("GRAFT_REPO", "."), "tools/golden").getCanonicalPath
 
   // NOTE: reading `events` requires spark.sql.legacy.parquet.nanosAsLong=true
   // set at session build time (graft.Sessions.build / the test harness) —
