@@ -128,13 +128,6 @@ object Bench {
     * session startup; a registry larger than the cap gets its own JVM. */
   private val ExtGroupMax = 40
 
-  /** Queries timed MORE than the standard 2 runs this round — round-10
-    * triage of the r09 q08 wobble (0.181 → 0.347 s): 4 runs give the
-    * judge run-level evidence to separate host noise from regression
-    * (min-of-4 is strictly more steal-resistant than min-of-2, so the
-    * headline regime only tightens). */
-  private val TriageRuns: Map[String, Int] = Map("q08_distinct_pairs" -> 4)
-
   private def loadavg(): Double =
     try Files.readString(Paths.get("/proc/loadavg")).split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
@@ -227,7 +220,7 @@ object Bench {
           System.err.println(s"[bench] ${q.name} run FAILED: ${e.getMessage}")
           -1.0
       }
-    q.name -> Seq.fill(TriageRuns.getOrElse(q.name, 2))(once())
+    q.name -> Seq.fill(2)(once())
   }
 
   /** One canary sample: a FIXED, sfDir-independent workload (2M
@@ -702,12 +695,6 @@ object Bench {
         s""""stale_rounds":$stale},"""
     val canaryJson =
       s""""canary":{"workload":"range(2e6) -> groupBy(1000 keys) sum -> orderBy, noop write; sfDir-independent","samples":[${canarySamples.mkString(",")}]},"""
-    // adjudication notes riding in the artifact (the r09 verdict asked
-    // for in-artifact run-level evidence on q08)
-    val notes =
-      s""""notes":{"q08_distinct_pairs":"r09 wobble (0.181->0.347s) triage: timed """ +
-        s"""${TriageRuns("q08_distinct_pairs")} runs this round (see runs); plan """ +
-        s"""pinned by HeadlinePlanSpec (broadcast-free single-shuffle distinct)"},"""
     val gate =
       s""""load_gate":{"threshold":${f(LoadGateThreshold)},"attempts":$gateAttempts,""" +
         s""""met":$gateMet},"""
@@ -732,7 +719,7 @@ object Bench {
     val full =
       s"""{"metric":"total","value":${f(tot(base))},"unit":"sec","queries":${obj(base)},""" +
         s""""total_cold":${f(totCold(base))},"extended_total":${f(tot(ext))},""" +
-        s""""extended_total_cold":${f(totCold(ext))},"extended":${obj(ext)},$quality$tiers$canaryJson$extGroupsJson$notes""" +
+        s""""extended_total_cold":${f(totCold(ext))},"extended":${obj(ext)},$quality$tiers$canaryJson$extGroupsJson""" +
         s""""timing":"min_of_2; memoized headline cold run 1; -1 = all runs failed (per-run arrays use null); extended totals include carried values (see tiers)",""" +
         s""""runs":${runsObj(base ++ extTimed)},"warm":${warmObj(base ++ extTimed)},""" +
         s""""memoized":$memo,$phases$gate"loadavg_pre":${f(loadPre)},"loadavg":${f(loadPost)},""" +

@@ -1,8 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.etl.EtlQueries
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for a DuckDB compare (tools/check_oracle.py), and
+  * verify_failures.json naming each query that threw and why. An ETL
+  * query (e01–e06) whose corpus directory does not exist is recorded as
+  * `corpus_absent: <dir>`; it stays a failure. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -15,13 +19,20 @@ object Verify {
       "a typo here would otherwise exit 0 with an empty dump")
     val spark = Sessions.build("graft-verify")
     new java.io.File(outDir).mkdirs()
+    val etlNames = EtlQueries.queries.map(_.name).toSet
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          val corpus = EtlQueries.corpus(spark)
+          failed(name) =
+            if (etlNames(name) && !new java.io.File(corpus).isDirectory)
+              s"corpus_absent: $corpus"
+            else String.valueOf(e.getMessage)
+          System.err.println(s"[verify] $name failed: ${failed(name)}")
         }
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -40,6 +51,8 @@ object Verify {
       .filter { case (k, _) => only.isEmpty || only(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/verify_failures.json"),
+      failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     spark.stop()
   }
 }

@@ -32,9 +32,11 @@ object EtlQueries {
   // served another corpus's cached tables.
   private val cache = new ConcurrentHashMap[(SparkSession, String), EtlTables]()
 
-  private def tables(s: SparkSession): EtlTables = {
-    val corpus = s.conf.get(CorpusConf, DefaultCorpus)
-    cache.computeIfAbsent((s, corpus), key => {
+  /** The corpus directory the ETL queries read in session `s`. */
+  def corpus(s: SparkSession): String = s.conf.get(CorpusConf, DefaultCorpus)
+
+  private def tables(s: SparkSession): EtlTables =
+    cache.computeIfAbsent((s, corpus(s)), key => {
       val (sess, dir) = key
       // evict when the session stops — a long-lived multi-session process
       // must not pin stopped sessions' cached DataFrames forever; one
@@ -46,7 +48,6 @@ object EtlQueries {
         t.assignments.cache(), t.inspectors.cache(), t.locations.cache(),
         t.ranks.cache(), t.professions.cache(), t.educations.cache())
     })
-  }
 
   def queries: Seq[Q] = Seq(
     Q("e01_etl_assignments", (s, _) => tables(s).assignments, Some(goldenSql("assignments"))),

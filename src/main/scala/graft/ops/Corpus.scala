@@ -19,8 +19,8 @@ import Tables._
   *    probabilistic.
   *  - d10/d11 are narrow per-doc pipelines (explode + window) that
   *    partition by doc — no global state, no skew beyond document length.
-  *  - d12 keeps payloads as opaque binary and only ships metadata —
-  *    the decode stage itself is graft.streaming.Multimodal's stub.
+  *  - d12 keeps payloads as opaque binary and ships metadata only
+  *    (byte size, md5); nothing decodes them.
   */
 object Corpus {
 
@@ -778,8 +778,8 @@ object Corpus {
   }
 
   /** Multimodal metadata extraction (d12): payloads stay opaque binary,
-    * only typed metadata (byte size, md5) ships — the decode stage is
-    * graft.streaming.Multimodal's stub. In: (doc_id, payload BINARY). */
+    * only typed metadata (byte size, md5) ships — nothing decodes them.
+    * In: (doc_id, payload BINARY). */
   def mediaMeta(media: DataFrame, modality: String): DataFrame =
     media.select(col("doc_id"),
       lit(modality).as("modality"),
@@ -1316,8 +1316,8 @@ object Corpus {
              |FROM documents GROUP BY lang""".stripMargin)),
 
     // d12: multimodal metadata — payloads as opaque binary columns, only
-    // typed metadata extracted (the decode stage is the Multimodal stub;
-    // this query is the metadata/plumbing surface, exact via md5/length).
+    // typed metadata extracted (no decode stage; this query is the
+    // metadata/plumbing surface, exact via md5/length).
     Q("d12_media_meta",
       (s, d) =>
         mediaMeta(

@@ -219,7 +219,7 @@ object Curation {
     * the composed self-scoring case AQE's stage cache shares the
     * tokenize/aggregate work with the vocab pass where plans coincide
     * (measured: 8 scans in the initial plan, 2 — one per pass — at
-    * runtime; see tools/PlanAudit). */
+    * runtime; PlanInvariantSpec pins d44's plan shape). */
   def unigramPplAgainst(docs: DataFrame, vocab: DataFrame,
       headK: Int = 10000): DataFrame = {
     require(headK >= 0, "need headK >= 0")

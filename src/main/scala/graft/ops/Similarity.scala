@@ -264,13 +264,6 @@ object Similarity {
     GramSketch(g, minhashFromHashes(g))
   })
 
-  /** Count of agreeing minhash components (Jaccard estimate x128), pure. */
-  private[graft] def mhAgreement(a: Array[Long], b: Array[Long]): Int = {
-    var i = 0; var eq = 0
-    while (i < NumHashes) { if (a(i) == b(i)) eq += 1; i += 1 }
-    eq
-  }
-
   /** Native codegen'd dot product (graft.plans.VecDot, registered by
     * GraftExtensions) — the UDF-free hot path of the cosine family. */
   private def vecDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =

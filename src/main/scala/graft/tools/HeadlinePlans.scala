@@ -48,6 +48,20 @@ object HeadlinePlans {
     "SortAggregate", "Project", "Filter", "SortMergeJoin",
     "BroadcastHashJoin", "ShuffledHashJoin", "Window", "Expand", "Generate")
 
+  /** Count plan-tree lines whose OPERATOR NAME starts with `node` — the
+    * token must sit right after the tree-drawing prefix (`:  +- ` etc.)
+    * and the optional codegen marker (`*(3) `), so a column alias or
+    * file path that merely CONTAINS the token (e.g. a column named
+    * `window_end`, a path `.../Window/`) can never inflate the count.
+    * Multi-word nodes ("Exchange hashpartitioning(doc_id") match as
+    * prefixes of the operator line.
+    */
+  def countNode(plan: String, node: String): Int = {
+    val re = ("""^[\s:+\-|]*(?:\*\(\d+\)\s)?""" +
+      java.util.regex.Pattern.quote(node)).r
+    plan.split("\n").count(l => re.findPrefixOf(l).isDefined)
+  }
+
   /** Execute the frame so AQE finalizes, then fingerprint the final
     * plan section only (the printed tree repeats the initial plan below
     * a `== Initial Plan ==` divider — counting that would double every
@@ -57,7 +71,6 @@ object HeadlinePlans {
     val whole = df.queryExecution.executedPlan.toString
     val cut = whole.indexOf("== Initial Plan ==")
     val plan = if (cut >= 0) whole.substring(0, cut) else whole
-    import PlanAudit.countNode
     val uncodegened = plan.split("\n").count { l =>
       val t = l.dropWhile(c => " :+-|".indexOf(c.toInt) >= 0)
       ComputeOps.exists(op => t.startsWith(op))

@@ -80,7 +80,7 @@ class BudgetSelectSpec extends AnyFunSuite with BeforeAndAfterAll {
       .foreach { df =>
         df.write.format("noop").mode("overwrite").save()
         val plan = df.queryExecution.executedPlan.toString
-        assert(graft.tools.PlanAudit.countNode(plan, "Exchange SinglePartition") == 0,
+        assert(graft.tools.HeadlinePlans.countNode(plan, "Exchange SinglePartition") == 0,
           plan)
       }
   }

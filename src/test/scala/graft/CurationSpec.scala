@@ -183,7 +183,7 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("docTokens is a narrow projection: no token-stream shuffle") {
     val plan = Curation.docTokens(docs(1L -> "a b a", 2L -> "c"))
       .queryExecution.executedPlan.toString
-    assert(graft.tools.PlanAudit.countNode(plan, "Exchange") == 0, plan)
+    assert(graft.tools.HeadlinePlans.countNode(plan, "Exchange") == 0, plan)
   }
 
   // shared fixture for the DSIR tests: raw corpus + small trusted target
@@ -279,9 +279,9 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = Curation.dsirSelect(docs(dsirRaw: _*), docs(dsirTgt: _*),
       k = 2, headK = 2)
     val plan = df.queryExecution.executedPlan.toString
-    assert(graft.tools.PlanAudit.countNode(plan, "TakeOrderedAndProject") >= 1, plan)
+    assert(graft.tools.HeadlinePlans.countNode(plan, "TakeOrderedAndProject") >= 1, plan)
     // the only Window is the rank pass over the k selected rows
-    assert(graft.tools.PlanAudit.countNode(plan, "Window") <= 1, plan)
+    assert(graft.tools.HeadlinePlans.countNode(plan, "Window") <= 1, plan)
   }
 
   test("pplBuckets: per-lang terciles are ordered and near-balanced") {
@@ -530,7 +530,7 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
     // every cell (and the "No Partition Defined for Window" warning that
     // used to sit in every bench tail is gone with the window)
     val plan = Curation.mixWeights(df).queryExecution.executedPlan.toString
-    assert(graft.tools.PlanAudit.countNode(plan, "Window") == 0, plan)
+    assert(graft.tools.HeadlinePlans.countNode(plan, "Window") == 0, plan)
   }
 
   test("mixWeights: explicit target fractions override the uniform share") {

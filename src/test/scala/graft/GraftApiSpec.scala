@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import graft.ops.{Corpus, Curation, Diagnostics, EdgeIndex, GramIndex, Graphs,
   HashIndex, IndexCommit, IvfIndex, LexIndex, Lexical, Linkage, Pq, Retrieval,
   Similarity, TemporalEdgeIndex, TextOps}
-import graft.streaming.{MediaRow, Multimodal}
 
 /** The public DataFrame-in / DataFrame-out surface, the `graft.ops`
   * objects: every operator must work on a user-supplied in-memory
@@ -604,12 +603,6 @@ class GraftApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       encode(col("text"), "UTF-8").cast("binary").as("payload"))
     val meta = Corpus.mediaMeta(media, modality = "text").collect()
     assert(meta.length == 5 && meta.forall(_.getAs[String]("modality") == "text"))
-    import spark.implicits._
-    val feats = Multimodal.extractFeatures(spark,
-      media.select(col("doc_id").as("docId"), lit("audio").as("modality"), col("payload"))
-        .as[MediaRow]).toDF().collect()
-    assert(feats.length == 5)
-    assert(feats.forall(_.getAs[Long]("nBytes") > 0L)) // text bytes -> audio stub path
   }
 
   test("narrow facade operators run unchanged on a streaming DataFrame") {

@@ -42,7 +42,7 @@ class PhraseMatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = Corpus.phraseMatch(docs, "a b")
     df.write.format("noop").mode("overwrite").save()
     val plan = df.queryExecution.executedPlan.toString
-    assert(graft.tools.PlanAudit.countNode(plan, "Exchange") == 0, plan)
+    assert(graft.tools.HeadlinePlans.countNode(plan, "Exchange") == 0, plan)
   }
 
   test("registered d111 binding: matches exist and reconcile with a contains scan") {

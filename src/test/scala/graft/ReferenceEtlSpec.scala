@@ -201,8 +201,8 @@ class ReferenceEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ds = ReferenceEtl.resolvedAssignments(spark, corpus.toString)
     ds.collect()
     val plan = ds.queryExecution.executedPlan.toString
-    assert(graft.tools.PlanAudit.countNode(plan, "Window") == 0, plan)
-    assert(graft.tools.PlanAudit.countNode(plan, "Exchange") == 0, plan)
+    assert(graft.tools.HeadlinePlans.countNode(plan, "Window") == 0, plan)
+    assert(graft.tools.HeadlinePlans.countNode(plan, "Exchange") == 0, plan)
   }
 
   test("no profession abbreviation is an education one, so parsed HTML cannot carry a refused profession") {

@@ -55,7 +55,7 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = graft.ops.Corpus.semanticContaminationPairs(train, ev)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert(graft.tools.PlanAudit.countNode(plan, "Exchange hashpartitioning") == 0, plan)
+    assert(graft.tools.HeadlinePlans.countNode(plan, "Exchange hashpartitioning") == 0, plan)
   }
 
   test("blocked NLJ fallback emits exactly the broadcast baseline's pairs") {

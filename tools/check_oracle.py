@@ -8,13 +8,17 @@ name, rows sorted), and compares values exactly.
 
 Usage: python3 tools/check_oracle.py SFDIR OUTDIR
 
+A query that graft.Verify recorded in OUTDIR/verify_failures.json fails
+with Verify's reason (e.g. `corpus_absent: DIR` for an ETL query whose
+corpus directory does not exist) instead of a DuckDB read error.
+
 In addition to the value compare, result-column ARROW TYPES are compared
 (with small equivalences: timestamp timezone variants unify; everything
 else must match exactly). This is what catches the round-1 q23 failure
 mode locally: DuckDB sum(INTEGER) yields HUGEINT/int128, which str()-based
 value comparison masks but the driver's typed hash does not.
 """
-import json, math, sys
+import json, math, os, sys
 
 import duckdb
 
@@ -64,8 +68,17 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
     oracles = json.load(open(f"{outdir}/oracle_sql.json"))
+    failures_path = f"{outdir}/verify_failures.json"
+    failed = (json.load(open(failures_path))
+              if os.path.exists(failures_path) else {})
     n_pass = n_fail = 0
     for name, sql in sorted(oracles.items()):
+        if name in failed:
+            reason = failed[name][:200]
+            print(f"FAIL {name}: {reason}")
+            record(name, err=reason)
+            n_fail += 1
+            continue
         try:
             got_tbl = con.execute(
                 f"SELECT * FROM read_parquet('{outdir}/{name}/*.parquet')").arrow()
@@ -117,7 +130,6 @@ def main():
     # queries dumped WITHOUT oracle SQL: record them the way the
     # driver's artifact does (err=no_oracle, rows-only), so the local
     # replica's counts line up with CORRECTNESS_r{N}.json's
-    import os
     for d in sorted(os.listdir(outdir)):
         if d in oracles or not os.path.isdir(f"{outdir}/{d}"):
             continue

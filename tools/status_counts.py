@@ -18,7 +18,8 @@ run was not the last one.
 
 Exits 1 when a test canceled although its input is present: a plan pin
 (HeadlinePlanSpec, ExtendedPlanSpec) while the spec's `SfDir` holds
-lineitem.parquet, or a real-corpus golden (GoldenEtlSpec, JdbcSinkSpec)
+lineitem.parquet, a plan invariant (PlanInvariantSpec) while its `SfDir`
+holds documents.parquet, or a real-corpus golden (GoldenEtlSpec, JdbcSinkSpec)
 while the spec's `corpus` directory exists. Each input path is read from
 the spec's source, so the gate follows the spec.
 """
@@ -37,6 +38,7 @@ SBT_LOGS = ["target/streams/test/test/_global/streams/out",
 INPUT_GATED = {
     "HeadlinePlanSpec": ("SfDir", "lineitem.parquet"),
     "ExtendedPlanSpec": ("SfDir", "lineitem.parquet"),
+    "PlanInvariantSpec": ("SfDir", "documents.parquet"),
     "GoldenEtlSpec": ("corpus", None),
     "JdbcSinkSpec": ("corpus", None),
 }
