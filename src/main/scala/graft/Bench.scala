@@ -4,57 +4,38 @@ import java.nio.file.{Files, Paths}
 import java.util.Locale
 import graft.ops.Q
 
-/** Benchmark main. Runs registered queries on SPARK_GRAFT_SF_DIR and emits
-  * ONE COMPACT JSON line on stdout (driver contract — totals, the baseline
-  * per-query map, quality, load; small enough that log interleaving can't
-  * truncate it) plus the FULL artifact to bench.json (per-run times, the
-  * extended per-query map, memoization markers — everything adjudication
-  * needs). The compact line is ALSO written to bench_summary.json and
-  * echoed on stderr: BENCH_r06–r08 recorded "parsed": null because the
-  * stdout line arrived through sbt's logger; build.sbt now sets
-  * `run / outputStrategy := StdoutOutput` so the forked JVM's stdout
-  * reaches the driver raw, and the two side channels make the line
-  * recoverable even if that regresses.
+/** Benchmark main. Times every registered query except the corpus-ETL
+  * e* set (which reads the roster corpus, not sfDir) on
+  * SPARK_GRAFT_SF_DIR, writes the full artifact to bench.json (per-run
+  * times, the headline and extended per-query maps, memoization markers,
+  * per-group load) and prints ONE compact JSON trailer as the last stdout
+  * line (headline numbers and totals, ≤ 2 KB so a tail-window capture
+  * keeps it whole). build.sbt forks `run` with
+  * `run / outputStrategy := StdoutOutput`, so the line reaches the
+  * caller raw.
   *
   * "value" totals the SAME query set BENCH_r01's 66.2 s baseline measured
-  * (the §2B relational + TextOps surface — 30 queries: q01–q25 and
-  * d01–d05; the Functions-bound q26–q30 are extended), so round-over-round
-  * ratios stay apples-to-apples; operators added later (UDF/sampling,
-  * similarity, corpus ops) are timed in "extended" and totalled separately
-  * — new operators register OUTSIDE TextOps/Relational so this set stays
-  * frozen. (Rounds 10–12 had d68 registered in TextOps, drifting the r08
-  * headline to 31 queries — the registration now lives in Corpus and the
-  * set is back to r01's 30.) The corpus-ETL e* queries run on the fixed
-  * reference corpus, not sfDir, so they are excluded from scaling
-  * benchmarks.
+  * (`SparkEntry.headline`: q01–q25 and d01–d05), so round-over-round
+  * ratios stay apples-to-apples; every other family is timed in
+  * "extended" and totalled separately.
   *
-  * HEADLINE ISOLATION: the r07→r08 comparison showed a uniform ~25% drift
-  * across every headline query with no outlier — the signature of suite
-  * growth (130 queries + quality probes in one JVM: code-cache/GC
-  * pressure), not of any plan change. The headline set therefore now runs
-  * in a FRESH CHILD JVM (same flags, same classpath, same warmups — the
-  * environment r01's baseline measured) before the parent creates its own
-  * session for the extended set; "headline_jvm" records "fresh", or
-  * "in_process" when forking isn't possible (classpath unavailable) and
-  * the old single-JVM path ran. The EXTENDED timed tier gets the same
-  * treatment per FAMILY (r15 verdict ask #6): whole registries pack into
-  * child JVMs of <= ExtGroupMax timed queries ("ext_groups" records the
-  * boundaries and per-child loadavg; "extended_jvm" the regime), so one
-  * long-lived JVM can no longer age across the whole 190+-query suite.
-  * "load_phases" records the 1-min loadavg
-  * around each timed phase so self-contention is visible per phase, not
-  * just at process start.
+  * FRESH JVMs: the headline set runs in one fresh child JVM, and the
+  * extended families pack into child JVMs of <= ExtGroupMax queries
+  * ([[packGroups]]; "ext_groups" records each group's boundaries, sums
+  * and loadavg), so no long-lived JVM ages across the whole suite (the
+  * r07→r08 headline drift was 130 queries in one JVM, not plan changes).
+  * The parent only forks, merges, and runs the untimed quality block.
+  * A child that fails to start, exits non-zero or omits a query leaves
+  * those queries failed.
   *
   * Each query is executed with a noop-format write so the full plan runs
   * (a bare .count() lets Catalyst prune computed projections and
   * under-measures select-heavy queries). Failures are NOT swallowed into
   * fast timings: a failed query records -1 in the headline maps, null in
-  * the per-run arrays, and is listed in "errors".
+  * the per-run arrays, is listed in "errors", and the run exits 1.
   *
-  * The artifact is SELF-ADJUDICATING — three rounds running, a
-  * host-contention-contaminated driver run needed a judge rerun to
-  * separate co-tenant CPU steal from regression, so the JSON now carries
-  * what that adjudication needs:
+  * The artifact is SELF-ADJUDICATING — it carries what separating
+  * co-tenant CPU steal from regression needs:
   *   - "runs": BOTH raw run times per query (null = that run failed).
   *     Steal hits runs at random, so a query whose two runs diverge
   *     wildly was contended; a query whose runs agree was not.
@@ -67,10 +48,6 @@ import graft.ops.Q
   *     to touch the shared cache is truly cold — d06's run 1 builds the
   *     pair memo d14 then reads — which is exactly what the driver's
   *     whole-round wall clock experiences.)
-  *   - "tiers": which extended queries were timed fresh this round vs
-  *     carried forward from the per-sf carry file (see the tiering
-  *     block below) — a carried number is never silently presented as
-  *     a fresh measurement.
   *   - "load_gate": the bench REFUSES to start while the 1-min loadavg
   *     shows co-tenant steal (pre-warmup, the bench itself is idle),
   *     retrying a bounded number of times; "met" records whether it got
@@ -78,113 +55,44 @@ import graft.ops.Q
   *     of adjudicated after the fact.
   *   - "loadavg_pre": the 1-min loadavg the timed runs actually started
   *     under (post-gate); "loadavg" at bench end mostly measures the
-  *     bench's own footprint decaying.
+  *     bench's own footprint decaying. "load_phases" and each group's
+  *     loadavg_pre/loadavg_post record host drift per timed phase.
   */
 object Bench {
   private val LoadGateThreshold = 2.0
   private val LoadGateAttempts = 3
   private val LoadGateWaitMs = 60000L
 
-  /** The frozen headline set — exactly the queries BENCH_r01's recorded
-    * baseline measured. Binding registries: Relational (q01–q25) and
-    * TextOps (d01–d05). */
-  private[graft] def baselineSet: Seq[Q] =
-    graft.ops.Relational.queries ++ graft.ops.TextOps.queries
-
-  /** The extended surface in registration order, tagged by FAMILY
-    * registry — the fresh-JVM grouping unit (r15 verdict ask #6:
-    * per-family JVM boundaries pre-empt suite-growth drift before the
-    * registry passes 200; registries are never split across JVMs, so
-    * every per-(session, dir) memo family stays inside one session
-    * exactly like the old single-JVM order). */
-  private[graft] def extendedRegistries: Seq[(String, Seq[Q])] = Seq(
-    "functions" -> graft.ops.Functions.queries,
-    "similarity" -> graft.ops.Similarity.queries,
-    "corpus" -> graft.ops.Corpus.queries,
-    "curation" -> graft.ops.Curation.queries,
-    "zorder" -> graft.ops.ZOrder.queries,
-    "quantize" -> graft.ops.Quantize.queries,
-    "pq" -> graft.ops.Pq.queries,
-    "lexical" -> graft.ops.Lexical.queries,
-    "hash_index" -> graft.ops.HashIndex.queries,
-    "line_index" -> graft.ops.LineIndex.queries,
-    "edge_index" -> graft.ops.EdgeIndex.queries,
-    "temporal_edge_index" -> graft.ops.TemporalEdgeIndex.queries,
-    "gram_index" -> graft.ops.GramIndex.queries,
-    "phrase_index" -> graft.ops.PhraseIndex.queries,
-    "simhash_index" -> graft.ops.SimHashIndex.queries,
-    "events" -> graft.ops.Events.queries,
-    "graphs" -> graft.ops.Graphs.queries,
-    "linkage" -> graft.ops.Linkage.queries,
-    "diagnostics" -> graft.ops.Diagnostics.queries,
-    "retrieval" -> graft.ops.Retrieval.queries,
-    "pipeline" -> graft.ops.PipelineQueries.queries,
-    "sources" -> graft.sources.TextSources.queries)
+  /** The extended surface: every registered family except the headline
+    * families and `etl`, in registration order, tagged by family. */
+  private[graft] def extendedRegistries: Seq[(String, Seq[Q])] =
+    SparkEntry.families.filterNot { case (tag, _) =>
+      SparkEntry.HeadlineFamilies(tag) || tag == "etl"
+    }
 
   private[graft] def extendedSet: Seq[Q] = extendedRegistries.flatMap(_._2)
 
-  /** Cap on timed queries per extended child JVM: consecutive (whole)
-    * registries pack together up to this size to amortize the ~10 s
-    * session startup; a registry larger than the cap gets its own JVM. */
-  private val ExtGroupMax = 40
+  /** Cap on queries per extended child JVM: consecutive (whole)
+    * families pack together up to this size to amortize the ~10 s
+    * session startup; a family larger than the cap gets its own JVM. */
+  private[graft] val ExtGroupMax = 40
+
+  /** Pack consecutive whole families, in order, into groups of at most
+    * `max` queries; a family larger than `max` gets a group of its own.
+    * A family is never split, so each per-(session, dir) memo family
+    * keeps its cold/warm order inside one session. A group's tag joins
+    * its families' tags with "+". */
+  private[graft] def packGroups(families: Seq[(String, Seq[Q])],
+      max: Int): Seq[(String, Seq[Q])] =
+    families.filter(_._2.nonEmpty).foldLeft(Vector.empty[(String, Seq[Q])]) {
+      case (done :+ ((tag, qs)), (t, fqs)) if qs.size + fqs.size <= max =>
+        done :+ (s"$tag+$t" -> (qs ++ fqs))
+      case (done, f) => done :+ f
+    }
 
   private def loadavg(): Double =
     try Files.readString(Paths.get("/proc/loadavg")).split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
-
-  // ---- extended-set tiering -------------------------------------------
-  //
-  // The extended suite grew ~10 s of wall time per round with the
-  // surface (112 queries, cold 135.6 s at r09) and min-of-2 fidelity
-  // erodes as the suite self-contends. Correctness still covers EVERY
-  // query every round (Verify, not Bench, is the correctness gate); the
-  // bench now TIMES a tier per round — queries never measured before
-  // (new this round, or whose last runs all failed) plus a rotating
-  // third of the stable set — and carries the rest forward from
-  // `bench_carry_<sf>.tsv` at their last-measured values, marked with
-  // `stale_rounds` in the artifact's "tiers" block so a carried number
-  // is never mistaken for a fresh one. Rotation is by name hash, not
-  // set position, so membership is stable as the set grows; every query
-  // is re-measured at least every 3 rounds. The carry file is per-sf
-  // (a dev run at sf0.01 must not pollute the driver's sf0.1 carry) and
-  // SPARK_GRAFT_BENCH_FULL=1 forces timing the whole set. The headline
-  // set is NEVER tiered — all 30 frozen queries time fresh every round.
-
-  private def carryPath(sfDir: String): java.nio.file.Path =
-    Paths.get(s"bench_carry_${Paths.get(sfDir).getFileName}.tsv")
-
-  /** name -> (round last measured, that round's raw runs). */
-  private def readCarry(sfDir: String): (Int, Map[String, (Int, Seq[Double])]) =
-    try {
-      val lines = Files.readAllLines(carryPath(sfDir))
-      var round = -1
-      val m = scala.collection.mutable.Map.empty[String, (Int, Seq[Double])]
-      lines.forEach { ln =>
-        val ps = ln.split("\t")
-        if (ps.length >= 2 && ps(0) == "#round") round = ps(1).toInt
-        else if (ps.length >= 3 && !ps(0).startsWith("#"))
-          m(ps(0)) = (ps(1).toInt, ps.drop(2).toSeq.map(_.toDouble))
-      }
-      if (round < 0) (-1, Map.empty) else (round, m.toMap)
-    } catch { case _: Throwable => (-1, Map.empty) }
-
-  private def writeCarry(sfDir: String, round: Int,
-      entries: Map[String, (Int, Seq[Double])]): Unit =
-    try {
-      val sb = new StringBuilder(s"#round\t$round\n")
-      entries.toSeq.sortBy(_._1).foreach { case (k, (r, runs)) =>
-        sb.append(s"$k\t$r\t${runs.mkString("\t")}\n")
-      }
-      Files.writeString(carryPath(sfDir), sb.toString)
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] carry write failed: ${e.getMessage}")
-    }
-
-  /** Tier membership: a stable-named query is timed this round when its
-    * name-hash bucket matches the rotation slot. */
-  private def inRotation(name: String, round: Int): Boolean =
-    math.floorMod(name.hashCode, 3) == math.floorMod(round, 3)
 
   /** Warm a session the way every timed phase expects: similarity-family
     * codegen/UDF/aggregator classes on SYNTHETIC rows (never sfDir, so the
@@ -197,7 +105,7 @@ object Bench {
   private def warm(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
     try graft.ops.Similarity.warm(spark)
     catch { case e: Throwable => System.err.println(s"[bench] sim warmup failed: ${e.getMessage}") }
-    try baselineSet.find(_.name == "q01_pricing_summary")
+    try SparkEntry.headline.find(_.name == "q01_pricing_summary")
       .foreach(q => q.fn(spark, sfDir).write.format("noop").mode("overwrite").save())
     catch { case e: Throwable => System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
   }
@@ -223,52 +131,16 @@ object Bench {
     q.name -> Seq.fill(2)(once())
   }
 
-  /** One canary sample: a FIXED, sfDir-independent workload (2M
-    * synthetic rows through two shuffles and an order-by, noop-written —
-    * codegen + exchange + sort, the machinery every extended query
-    * uses) timed in the extended JVM, plus the two mechanical aging
-    * gauges (persistent-RDD block count — every localCheckpoint parks
-    * blocks in the BlockManager for the session's lifetime — and used
-    * heap). The r13 verdict's ask #2: the carried extended queries
-    * crept ~1.28× over two rounds on a QUIET host while the
-    * fresh-JVM headline stayed flat; interleaving this canary through
-    * the extended run makes JVM aging directly measurable — a canary
-    * that inflates in step with the carried queries attributes the
-    * creep to the shared JVM (GC/code-cache/block-manager growth), a
-    * flat canary pushes it back onto the operators. */
-  private def canarySample(spark: org.apache.spark.sql.SparkSession,
-      afterN: Int): String = {
-    val t0 = System.nanoTime()
-    try spark.range(0, 2000000L, 1, 8)
-      .selectExpr("id % 1000 AS k", "id")
-      .groupBy("k").agg(org.apache.spark.sql.functions.sum("id").as("s"))
-      .orderBy("k")
-      .write.format("noop").mode("overwrite").save()
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] canary failed: ${e.getMessage}") }
-    val sec = (System.nanoTime() - t0) / 1e9
-    val rdds = spark.sparkContext.getPersistentRDDs.size
-    val rt = Runtime.getRuntime
-    val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024L * 1024L)
-    f"""{"after_n":$afterN,"sec":${"%.3f".formatLocal(Locale.ROOT, sec)},"persistent_rdds":$rdds,"heap_mb":$heapMb}"""
-  }
-
-  /** Child-JVM entry: time ONE query set in this fresh process — the
-    * headline set by default, or the names in SPARK_GRAFT_BENCH_SET (an
-    * extended family group) — and write a line-oriented result file
+  /** Child-JVM entry: time the query set named in SPARK_GRAFT_BENCH_SET
+    * in this fresh process and write a line-oriented result file
     * (tab-separated `name r1 r2`, plus `#loadavg_pre`/`#loadavg_post`
     * comment lines) for the parent to merge. Exit 0 even when queries
     * fail — the -1 markers carry the failures and the parent owns the
     * error contract. */
   private def childMain(sfDir: String, outPath: String): Unit = {
-    val names = sys.env.get("SPARK_GRAFT_BENCH_SET")
-      .map(_.split(",").filter(_.nonEmpty).toSet)
-    val qs = names match {
-      case None => baselineSet
-      case Some(ns) => (baselineSet ++ extendedSet).filter(q => ns(q.name))
-    }
-    val spark = Sessions.build(
-      if (names.isEmpty) "graft-bench-headline" else "graft-bench-family")
+    val names = sys.env.getOrElse("SPARK_GRAFT_BENCH_SET", "").split(",").toSet
+    val qs = SparkEntry.registered.filter(q => names(q.name))
+    val spark = Sessions.build("graft-bench-set")
     val pre = loadavg()
     warm(spark, sfDir)
     val rs = time(spark, sfDir, qs)
@@ -280,74 +152,53 @@ object Bench {
     spark.stop()
   }
 
-  /** Fork a fresh JVM running [[childMain]] over the headline set —
-    * see [[forkSet]]. */
-  private def forkHeadline(sfDir: String): Option[(Seq[(String, Seq[Double])], Double, Double)] =
-    forkSet(sfDir, None)
-
-  /** Fork a fresh JVM running [[childMain]] over an extended family
-    * group (r15 verdict ask #6) — see [[forkSet]]. */
-  private def forkFamily(sfDir: String, qs: Seq[Q]): Option[(Seq[(String, Seq[Double])], Double, Double)] =
-    forkSet(sfDir, Some(qs))
-
-  /** Fork a fresh JVM running [[childMain]] over a query set (None =
-    * the headline set): same java binary, same JVM args (the --add-opens
-    * set, -Xmx, system props — taken from this JVM's own input
-    * arguments), same classpath (real, because build.sbt forks `run`).
-    * Returns the set's timings plus the child's own phase loadavg
-    * samples, or None if forking isn't possible or the child failed —
-    * caller falls back to in-process timing. */
+  /** Fork a fresh JVM running [[childMain]] over `qs`: same java binary,
+    * same JVM args (the --add-opens set, -Xmx, system props — taken from
+    * this JVM's own input arguments), same classpath (real, because
+    * build.sbt forks `run`). Returns the set's timings in `qs` order plus
+    * the child's own phase loadavg samples (-1 when unknown). A query the
+    * child did not report — it failed to start, exited non-zero or
+    * omitted the query — gets two failed runs. */
   private def forkSet(sfDir: String,
-      setQs: Option[Seq[Q]]): Option[(Seq[(String, Seq[Double])], Double, Double)] = {
-    val expected = setQs.getOrElse(baselineSet)
-    val cp = sys.props.getOrElse("java.class.path", "")
-    // under a non-forked launcher the classpath is the launcher jar, not
-    // the app — detect by our own classes' presence being impossible to
-    // guarantee; cheap proxy: Spark must be on it
-    if (!cp.contains("spark-core")) return None
+      qs: Seq[Q]): (Seq[(String, Seq[Double])], Double, Double) = {
+    var pre = -1.0; var post = -1.0
+    val got = scala.collection.mutable.Map.empty[String, Seq[Double]]
     try {
       val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
       val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
         .getInputArguments.toArray(Array.empty[String])
         .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xdebug"))
-      val out = Files.createTempFile("bench_headline", ".tsv").toString
+      val out = Files.createTempFile("bench_set", ".tsv")
       val cmd: java.util.List[String] = {
         val l = new java.util.ArrayList[String]()
         l.add(javaBin); jvmArgs.foreach(l.add)
-        l.add("-cp"); l.add(cp); l.add("graft.Bench"); l
+        l.add("-cp"); l.add(sys.props.getOrElse("java.class.path", ""))
+        l.add("graft.Bench"); l
       }
       val pb = new ProcessBuilder(cmd)
       pb.environment().put("SPARK_GRAFT_BENCH_CHILD", "1")
-      pb.environment().put("SPARK_GRAFT_BENCH_OUT", out)
+      pb.environment().put("SPARK_GRAFT_BENCH_OUT", out.toString)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      setQs.foreach(qs => pb.environment()
-        .put("SPARK_GRAFT_BENCH_SET", qs.map(_.name).mkString(",")))
+      pb.environment().put("SPARK_GRAFT_BENCH_SET", qs.map(_.name).mkString(","))
       // child stdout (Spark logs) must NOT pollute the parent's stdout —
-      // the driver parses our stdout tail; send both streams to stderr
+      // the caller parses our stdout tail; both streams go to a log file
       pb.redirectErrorStream(true)
       pb.redirectOutput(ProcessBuilder.Redirect.appendTo(new java.io.File("bench_child.log")))
-      val p = pb.start()
-      val code = p.waitFor()
-      if (code != 0) { System.err.println(s"[bench] headline child exited $code"); return None }
-      val lines = Files.readAllLines(Paths.get(out))
-      var pre = -1.0; var post = -1.0
-      val rs = scala.collection.mutable.ListBuffer.empty[(String, Seq[Double])]
-      lines.forEach { ln =>
+      val code = pb.start().waitFor()
+      if (code != 0) System.err.println(s"[bench] child exited $code")
+      else Files.readAllLines(out).forEach { ln =>
         val ps = ln.split("\t")
         if (ps.length >= 2 && ps(0) == "#loadavg_pre") pre = ps(1).toDouble
         else if (ps.length >= 2 && ps(0) == "#loadavg_post") post = ps(1).toDouble
-        else if (ps.length >= 3) rs += (ps(0) -> ps.drop(1).toSeq.map(_.toDouble))
+        else if (ps.length >= 3) got(ps(0)) = ps.drop(1).toSeq.map(_.toDouble)
       }
-      Files.deleteIfExists(Paths.get(out))
-      // sanity: every requested query must be present, else fall back
-      if (rs.size == expected.size) Some((rs.toList, pre, post)) else {
-        System.err.println(s"[bench] child returned ${rs.size}/${expected.size} queries")
-        None
-      }
+      Files.deleteIfExists(out)
     } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] child fork failed: ${e.getMessage}"); None
+      case e: Throwable => System.err.println(s"[bench] child fork failed: ${e.getMessage}")
     }
+    val missing = qs.count(q => !got.contains(q.name))
+    if (missing > 0) System.err.println(s"[bench] child did not report $missing/${qs.size} queries")
+    (qs.map(q => q.name -> got.getOrElse(q.name, Seq(-1.0, -1.0))), pre, post)
   }
 
   def main(args: Array[String]): Unit = {
@@ -376,80 +227,15 @@ object Bench {
     }
     val gateMet = loadPre <= LoadGateThreshold
 
-    // Phase 1 — headline, in a FRESH JVM (see scaladoc). The parent's own
-    // SparkSession is created only after the child exits so the child
-    // times against an idle host, not against a second local[32] session.
-    val headlineFresh = forkHeadline(sfDir)
-    val headlineJvm = if (headlineFresh.isDefined) "fresh" else "in_process"
+    // Phase 1 — headline, in a FRESH JVM (see scaladoc).
+    val (base, loadHeadPre, loadHeadPost) = forkSet(sfDir, SparkEntry.headline)
 
-    val spark = Sessions.build("graft-bench")
-    warm(spark, sfDir)
-    val (base, loadHeadPre, loadHeadPost) = headlineFresh match {
-      case Some((rs, pre, post)) => (rs, pre, post)
-      case None =>
-        val pre = loadavg()
-        val rs = time(spark, sfDir, baselineSet)
-        (rs, pre, loadavg())
-    }
-
-    // Phase 2 — extended, TIERED (see the tiering block above):
-    // new/never-successfully-measured queries + a rotating third time
-    // fresh, the rest carried at last-measured values — with the timed
-    // tier split into per-FAMILY fresh child JVMs (packing below); the
-    // parent only merges, canaries, and runs the untimed quality block.
-    val (carryRound, carry) = readCarry(sfDir)
-    val round = carryRound + 1
-    val fullRun = sys.env.get("SPARK_GRAFT_BENCH_FULL").contains("1") || carry.isEmpty
-    val (timedExtQs, carriedQs) =
-      if (fullRun) (extendedSet, Seq.empty[Q])
-      else extendedSet.partition(q =>
-        !carry.contains(q.name) || inRotation(q.name, round))
-
-    val loadExtPre = loadavg()
-    def f2(d: Double): String = "%.3f".formatLocal(Locale.ROOT, d)
-    // family-group packing (r15 verdict ask #6): consecutive WHOLE
-    // registries up to ExtGroupMax timed queries per fresh child JVM —
-    // a registry is never split, so per-(session, dir) memo families
-    // keep the old single-JVM cold/warm order inside their own session;
-    // suite growth can no longer age one long-lived JVM across 190+
-    // queries (the r13 carried-creep mechanism).
-    val timedNames = timedExtQs.map(_.name).toSet
-    val extGroups: Seq[(String, Seq[Q])] = {
-      val regs = extendedRegistries
-        .map { case (tag, qs) => tag -> qs.filter(q => timedNames(q.name)) }
-        .filter(_._2.nonEmpty)
-      val packed = scala.collection.mutable.ListBuffer.empty[(String, Seq[Q])]
-      var tags = List.empty[String]
-      var cur = Vector.empty[Q]
-      regs.foreach { case (tag, qs) =>
-        if (cur.nonEmpty && cur.size + qs.size > ExtGroupMax) {
-          packed += (tags.reverse.mkString("+") -> cur)
-          tags = Nil; cur = Vector.empty
-        }
-        tags = tag :: tags; cur = cur ++ qs
-      }
-      if (cur.nonEmpty) packed += (tags.reverse.mkString("+") -> cur)
-      packed.toList
-    }
-    // the canary brackets the extended phase in the PARENT JVM (idle
-    // while each family child runs): with per-family fresh JVMs the
-    // extended-JVM aging it used to expose is bounded by design, so the
-    // canary now tracks the remaining confounder — HOST drift between
-    // groups. Warmed once first so its own one-time codegen doesn't
-    // masquerade as a baseline reading.
-    canarySample(spark, -1)
-    val canarySamples = scala.collection.mutable.ListBuffer.empty[String]
-    canarySamples += canarySample(spark, 0)
-    val extGroupMeta = scala.collection.mutable.ListBuffer.empty[String]
-    var extFresh = 0
-    var extDone = 0
-    // per-group sums ride in ext_groups (r16 verdict ask #4: with
-    // per-family fresh JVMs the suite TOTAL is regime-dependent — the
-    // per-family rows are the longitudinal comparison unit, so emit
-    // them instead of leaving the judge to re-derive them from "runs").
-    // "sec" uses the headline rule (memoized queries count their cold
-    // first run, others min-of-runs); "sec_cold" the first successful
-    // run of every query.
+    // Phase 2 — extended, one fresh child JVM per family group. Per-group
+    // sums ride in ext_groups (with per-family fresh JVMs the suite TOTAL
+    // is regime-dependent — the per-family rows are the longitudinal
+    // comparison unit). "sec" uses the headline rule (memoized queries
+    // count their cold first run, others min-of-runs); "sec_cold" the
+    // first successful run of every query.
     val memoized: Set[String] =
       graft.ops.Similarity.MemoizedQueries ++ graft.ops.Curation.MemoizedQueries ++
         graft.ops.Corpus.MemoizedQueries ++ graft.ops.Pq.MemoizedQueries ++
@@ -462,66 +248,6 @@ object Bench {
         graft.ops.PhraseIndex.MemoizedQueries ++
         graft.ops.SimHashIndex.MemoizedQueries ++
         graft.ops.Retrieval.MemoizedQueries
-    def groupSums(rs: Seq[(String, Seq[Double])]): String = {
-      val sec = rs.map { case (k, v) =>
-        val ok = v.filter(_ >= 0)
-        if (ok.isEmpty) -1.0
-        else if (memoized(k)) ok.head else ok.min
-      }.filter(_ >= 0).sum
-      val cold = rs.map(_._2.find(_ >= 0).getOrElse(-1.0)).filter(_ >= 0).sum
-      s""""sec":${f2(sec)},"sec_cold":${f2(cold)}"""
-    }
-    val extTimed: Seq[(String, Seq[Double])] = extGroups.flatMap { case (tag, qs) =>
-      val rs = forkFamily(sfDir, qs) match {
-        case Some((r, pre, post)) =>
-          extFresh += 1
-          extGroupMeta += s"""{"tag":"$tag","n":${qs.size},"jvm":"fresh",""" +
-            s"""${groupSums(r)},""" +
-            s""""loadavg_pre":${f2(pre)},"loadavg_post":${f2(post)}}"""
-          r
-        case None =>
-          val pre = loadavg()
-          val r = time(spark, sfDir, qs)
-          extGroupMeta += s"""{"tag":"$tag","n":${qs.size},"jvm":"in_process",""" +
-            s"""${groupSums(r)},""" +
-            s""""loadavg_pre":${f2(pre)},"loadavg_post":${f2(loadavg())}}"""
-          r
-      }
-      extDone += qs.size
-      canarySamples += canarySample(spark, extDone)
-      rs
-    }
-    val extendedJvm =
-      if (extGroups.isEmpty) "none"
-      else if (extFresh == extGroups.size) "fresh_per_family"
-      else if (extFresh == 0) "in_process"
-      else "mixed"
-    val loadExtPost = loadavg()
-    // merged per-query runs in registration order: fresh where timed,
-    // last-measured where carried
-    val extTimedMap = extTimed.toMap
-    val ext: Seq[(String, Seq[Double])] = extendedSet.map { q =>
-      q.name -> extTimedMap.getOrElse(q.name, carry(q.name)._2)
-    }
-    // carry forward: fresh successful runs stamp this round; carried
-    // entries keep their stamp. A query whose fresh runs ALL failed
-    // keeps its previous good carry entry (old stamp) when one exists —
-    // the failure is still reported via `ext`/`errors`, but the last
-    // known-good measurement survives instead of being re-timed as
-    // "new" next round; a never-measured failure stays uncarried.
-    writeCarry(sfDir, round,
-      ext.flatMap { case (k, v) =>
-        if (v.exists(_ >= 0))
-          Some(k -> (if (extTimedMap.contains(k)) (round, v) else (carry(k)._1, v)))
-        else carry.get(k).filter(_._2.exists(_ >= 0)).map(k -> _)
-      }.toMap)
-    val staleRounds: Seq[(String, Int)] = carriedQs
-      .flatMap(q => carry.get(q.name).map { case (r, _) => q.name -> (round - r) })
-      .filter(_._2 > 0)
-
-    val errors: Seq[String] =
-      (base ++ extTimed).collect { case (k, v) if !v.exists(_ >= 0) => k }
-
     def f(d: Double): String = "%.3f".formatLocal(Locale.ROOT, d)
     def minOf(runs: Seq[Double]): Double = {
       val ok = runs.filter(_ >= 0)
@@ -534,6 +260,29 @@ object Bench {
     // cold total: first successful run of every query — the whole-set
     // cost a fresh session pays, immune to warmed plan/memo caches
     def coldOf(runs: Seq[Double]): Double = runs.find(_ >= 0).getOrElse(-1.0)
+    def tot(rs: Seq[(String, Seq[Double])]): Double =
+      rs.map { case (k, v) => headline(k, v) }.filter(_ >= 0).sum
+    def totCold(rs: Seq[(String, Seq[Double])]): Double =
+      rs.map { case (_, v) => coldOf(v) }.filter(_ >= 0).sum
+
+    val loadExtPre = loadavg()
+    val extGroupMeta = scala.collection.mutable.ListBuffer.empty[String]
+    val ext: Seq[(String, Seq[Double])] =
+      packGroups(extendedRegistries, ExtGroupMax).flatMap { case (tag, qs) =>
+        val (rs, pre, post) = forkSet(sfDir, qs)
+        extGroupMeta += s"""{"tag":"$tag","n":${qs.size},""" +
+          s""""sec":${f(tot(rs))},"sec_cold":${f(totCold(rs))},""" +
+          s""""loadavg_pre":${f(pre)},"loadavg_post":${f(post)}}"""
+        rs
+      }
+    val loadExtPost = loadavg()
+
+    val errors: Seq[String] =
+      (base ++ ext).collect { case (k, v) if !v.exists(_ >= 0) => k }
+
+    // The parent's own session is built only now, so every timed child
+    // ran against an idle parent.
+    val spark = Sessions.build("graft-bench")
 
     // ANN quality, UNTIMED (runs after the timed sets): recall of the
     // d08 LSH and d17 IVF paths against the exact d07 baseline, label
@@ -682,63 +431,27 @@ object Bench {
       rs.filter { case (k, _) => memoized(k) }
         .map { case (k, v) => s""""$k":${f(if (v(1) >= 0) v(1) else -1.0)}""" }
         .mkString("{", ",", "}")
-    def tot(rs: Seq[(String, Seq[Double])]): Double =
-      rs.map { case (k, v) => headline(k, v) }.filter(_ >= 0).sum
-    def totCold(rs: Seq[(String, Seq[Double])]): Double =
-      rs.map { case (_, v) => coldOf(v) }.filter(_ >= 0).sum
     val errs = errors.map(e => s""""$e"""").mkString("[", ",", "]")
     val memo = memoized.toSeq.sorted.map(m => s""""$m"""").mkString("[", ",", "]")
-    val stale = staleRounds.map { case (k, r) => s""""$k":$r""" }.mkString("{", ",", "}")
-    val tiers =
-      s""""tiers":{"mode":"${if (fullRun) "full" else "rotating_third"}","round":$round,""" +
-        s""""timed_extended":${timedExtQs.size},"carried":${carriedQs.size},""" +
-        s""""stale_rounds":$stale},"""
-    val canaryJson =
-      s""""canary":{"workload":"range(2e6) -> groupBy(1000 keys) sum -> orderBy, noop write; sfDir-independent","samples":[${canarySamples.mkString(",")}]},"""
-    val gate =
-      s""""load_gate":{"threshold":${f(LoadGateThreshold)},"attempts":$gateAttempts,""" +
-        s""""met":$gateMet},"""
-    val phases =
-      s""""headline_jvm":"$headlineJvm","extended_jvm":"$extendedJvm","load_phases":{""" +
-        s""""headline_pre":${f(loadHeadPre)},"headline_post":${f(loadHeadPost)},""" +
-        s""""extended_pre":${f(loadExtPre)},"extended_post":${f(loadExtPost)}},"""
-    val extGroupsJson = s""""ext_groups":[${extGroupMeta.mkString(",")}],"""
-
-    // compact summary — the driver-parsed stdout line
-    val summary =
-      s"""{"metric":"total","value":${f(tot(base))},"unit":"sec","queries":${obj(base)},""" +
-        s""""total_cold":${f(totCold(base))},"extended_total":${f(tot(ext))},""" +
-        s""""extended_total_cold":${f(totCold(ext))},$quality$tiers""" +
-        s""""timing":"min_of_2; memoized headline cold run 1; -1 = all runs failed (per-run arrays use null); extended totals include carried values (see tiers)",""" +
-        s"""$phases$gate"loadavg_pre":${f(loadPre)},"loadavg":${f(loadPost)},""" +
-        s""""errors":$errs,"sf":"$sfDir"}"""
-    // full artifact — everything above plus per-run detail ("runs" and
-    // "warm" hold only queries actually timed THIS round; carried
-    // queries appear in "extended" at their last-measured value and in
-    // tiers.stale_rounds)
     val full =
       s"""{"metric":"total","value":${f(tot(base))},"unit":"sec","queries":${obj(base)},""" +
         s""""total_cold":${f(totCold(base))},"extended_total":${f(tot(ext))},""" +
-        s""""extended_total_cold":${f(totCold(ext))},"extended":${obj(ext)},$quality$tiers$canaryJson$extGroupsJson""" +
-        s""""timing":"min_of_2; memoized headline cold run 1; -1 = all runs failed (per-run arrays use null); extended totals include carried values (see tiers)",""" +
-        s""""runs":${runsObj(base ++ extTimed)},"warm":${warmObj(base ++ extTimed)},""" +
-        s""""memoized":$memo,$phases$gate"loadavg_pre":${f(loadPre)},"loadavg":${f(loadPost)},""" +
+        s""""extended_total_cold":${f(totCold(ext))},"extended":${obj(ext)},$quality""" +
+        s""""ext_groups":[${extGroupMeta.mkString(",")}],""" +
+        s""""timing":"min_of_2; memoized headline cold run 1; -1 = all runs failed (per-run arrays use null)",""" +
+        s""""runs":${runsObj(base ++ ext)},"warm":${warmObj(base ++ ext)},""" +
+        s""""memoized":$memo,""" +
+        s""""load_gate":{"threshold":${f(LoadGateThreshold)},"attempts":$gateAttempts,"met":$gateMet},""" +
+        s""""load_phases":{"headline_pre":${f(loadHeadPre)},"headline_post":${f(loadHeadPost)},""" +
+        s""""extended_pre":${f(loadExtPre)},"extended_post":${f(loadExtPost)}},""" +
+        s""""loadavg_pre":${f(loadPre)},"loadavg":${f(loadPost)},""" +
         s""""errors":$errs,"sf":"$sfDir"}"""
     Files.writeString(Paths.get("bench.json"), full + "\n")
-    // the compact line, recoverable three ways: a fixed small file the
-    // tail can't truncate, stderr, and a single atomic stdout write as
-    // the LAST line of the run (raw — build.sbt's StdoutOutput strategy
-    // keeps sbt's logger out of the forked JVM's stdout)
-    Files.writeString(Paths.get("bench_summary.json"), summary + "\n")
-    System.err.println(summary)
-    System.out.println(summary)
-    // Tail-window-safe trailer: the consumer captures only the last ~2000
-    // characters of stdout, and the full summary line outgrew that window
-    // once the extended tier list did (its start — `{"metric":…` — falls
-    // outside the capture, so no complete JSON line survives). The LAST
-    // stdout line is therefore a compact restatement of the headline
-    // numbers, guaranteed to fit: 30 headline queries + totals ≈ 1.1 KB,
-    // errors capped at 3 entries (the count rides alongside).
+    // Tail-window-safe trailer, the one stdout line: the consumer
+    // captures only the last ~2000 characters of stdout, so the line is a
+    // compact restatement of the headline numbers, guaranteed to fit: 30
+    // headline queries + totals ≈ 1.1 KB, errors capped at 3 entries (the
+    // count rides alongside).
     // truncate BEFORE escaping — cutting after could split a trailing
     // \\ or \" escape in half and break the line's JSON
     val errsCompact = errors.take(3).map(e =>

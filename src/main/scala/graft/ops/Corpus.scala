@@ -283,9 +283,12 @@ object Corpus {
       explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
 
   /** Per-document TF-IDF top-`k` terms (d37) — keyword extraction for
-    * corpus triage. tfidf = tf · ln(N / df); ties broken by term so the
-    * ranking is total and cross-engine deterministic (tf and df are
-    * exact longs, the ln and product are identical IEEE ops both sides).
+    * corpus triage. tfidf = tf · ln(N / df); ties broken by term. tf and
+    * df are exact longs, but the score is NOT the same IEEE value on
+    * both sides: Spark's `log` is `StrictMath.log`, so scores equal in
+    * exact arithmetic can differ in the last ulp (2·ln 3 ≠ ln 9 here,
+    * equal in DuckDB), and such a tie can rank differently from the
+    * DuckDB oracle — open defect, ROADMAP item 1 (d37 tie order).
     *
     * Scale: tf is a (doc, term) partial-aggregated shuffle; df reuses tf
     * (one extra term-keyed agg over distinct pairs); the df join is
@@ -1007,9 +1010,10 @@ object Corpus {
              |GROUP BY 1""".stripMargin)),
 
     // d37: per-document TF-IDF top terms — keyword extraction. tf/df/N
-    // are exact longs; tfidf = tf·ln(N/df) is the identical IEEE
-    // expression both sides, so the per-doc ranking (score desc, term) is
-    // cross-engine total.
+    // are exact longs, but tfidf = tf·ln(N/df) is not the same IEEE value
+    // both sides: Spark's log is StrictMath.log, so 2·ln 3 ≠ ln 9 in the
+    // last ulp while DuckDB computes them equal, and a mathematical tie can
+    // rank (score desc, term) differently — open defect, ROADMAP item 1.
     Q("d37_tfidf_topterms",
       (s, d) => tfidfTopTerms(documents(s, d)),
       Some(s"""WITH toks AS (

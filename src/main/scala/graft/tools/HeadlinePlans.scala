@@ -38,12 +38,6 @@ object HeadlinePlans {
   case class PlanSig(bhj: Int, smj: Int, shj: Int, bnlj: Int,
       cartesian: Int, exchanges: Int, uncodegened: Int)
 
-  /** The frozen headline registries — must stay Bench.baselineSet's
-    * definition (Bench keeps its own copy private; both are two fixed
-    * registry references, drift-proof by inspection). */
-  def headlineSet: Seq[graft.ops.Q] =
-    graft.ops.Relational.queries ++ graft.ops.TextOps.queries
-
   private val ComputeOps = Seq("HashAggregate", "ObjectHashAggregate",
     "SortAggregate", "Project", "Filter", "SortMergeJoin",
     "BroadcastHashJoin", "ShuffledHashJoin", "Window", "Expand", "Generate")
@@ -88,7 +82,7 @@ object HeadlinePlans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val spark = graft.Sessions.build("headline-plans")
-    headlineSet.foreach { q =>
+    graft.SparkEntry.headline.foreach { q =>
       val s = signature(q.fn(spark, sfDir))
       println(s"""    "${q.name}" -> PlanSig(${s.bhj}, ${s.smj}, ${s.shj}, ${s.bnlj}, ${s.cartesian}, ${s.exchanges}, ${s.uncodegened}),""")
     }

@@ -27,20 +27,20 @@ class EngineContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   // bench on first contact): a query cannot reach `registered` and stay
   // unrunnable past `sbt test`. Names are also checked unique, since a
   // duplicate silently shadows its sibling in SparkEntry.queries' map.
-  // Bench's registry lists are maintained by hand (the headline set is
-  // frozen by name; extended grows per family). A family registered in
-  // SparkEntry but missing from Bench's extended list is silently never
-  // timed — exactly how d182–d184 shipped unmeasured in one r14 run —
-  // so the partition is asserted structurally: headline ∪ extended ∪
-  // the fixed-corpus e* set must equal the registered surface, disjoint.
+  // Bench derives its headline and extended sets from SparkEntry.families
+  // (the headline families; everything else but `etl`), so a registered
+  // family can no longer be left out of Bench by a second hand-kept list —
+  // how d182–d184 once shipped unmeasured. The partition is still asserted
+  // structurally: headline ∪ extended ∪ the fixed-corpus e* set must equal
+  // the registered surface, disjoint.
   test("bench coverage gate: baseline+extended+etl partition the registered surface") {
-    val bench = (Bench.baselineSet ++ Bench.extendedSet).map(_.name)
+    val bench = (SparkEntry.headline ++ Bench.extendedSet).map(_.name)
     assert(bench.distinct.size == bench.size,
       "a query is timed in two bench sets")
     val etl = graft.etl.EtlQueries.queries.map(_.name).toSet
     val uncovered = SparkEntry.registered.map(_.name).toSet -- bench.toSet -- etl
     assert(uncovered.isEmpty,
-      s"registered but never benched (add the family to Bench.extendedSet): $uncovered")
+      s"registered but never benched: $uncovered")
     val unregistered = bench.toSet -- SparkEntry.registered.map(_.name).toSet
     assert(unregistered.isEmpty,
       s"benched but not registered: $unregistered")

@@ -91,7 +91,7 @@ class HeadlinePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   )
 
   test("the frozen headline set is exactly the 30 recorded queries") {
-    assert(HeadlinePlans.headlineSet.map(_.name).toSet == Expected.keySet)
+    assert(SparkEntry.headline.map(_.name).toSet == Expected.keySet)
   }
 
   test("q02: filter and projection reach the parquet scan") {
@@ -101,7 +101,7 @@ class HeadlinePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // columns (a scan reading l_comment for this query is wrong).
     assume(new java.io.File(s"$SfDir/lineitem.parquet").exists(),
       s"$SfDir absent on this machine")
-    val q = HeadlinePlans.headlineSet.find(_.name == "q02_filter_projection").get
+    val q = SparkEntry.headline.find(_.name == "q02_filter_projection").get
     val plan = q.fn(spark, SfDir).queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters:"), plan)
     assert(plan.contains("l_discount"),
@@ -113,7 +113,7 @@ class HeadlinePlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"scan not column-pruned: $readSchema")
   }
 
-  HeadlinePlans.headlineSet.foreach { q =>
+  SparkEntry.headline.foreach { q =>
     test(s"${q.name}: final plan signature unchanged") {
       assume(envMismatch.isEmpty,
         s"plan signatures are environment-pinned: ${envMismatch.getOrElse("")}")

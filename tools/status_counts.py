@@ -4,7 +4,10 @@ verdict ask #7: the hand-written counts drifted from the measured test
 reports — derive them from artifacts instead).
 
 Reads:
-  - target/test-reports/*.xml   (scalatest JUnit XML: suites, tests)
+  - target/test-reports/*.xml   (scalatest JUnit XML: suites, tests; a
+                                 report whose suite has no source under
+                                 src/test/scala is a leftover of a deleted
+                                 suite and is not counted)
   - the sbt test log            (canceled tests by name: the JUnit XML
                                  lists `assume`-canceled tests as passes)
   - CORRECTNESS_r{N}.json       (newest: registered/hash-green/no_oracle)
@@ -85,20 +88,39 @@ def gated_input(suite):
     return os.path.join(m.group(1), inside) if inside else m.group(1)
 
 
+def source_suites():
+    """Fully qualified names of the classes declared under src/test/scala."""
+    names = set()
+    for path in glob.glob("src/test/scala/**/*.scala", recursive=True):
+        src = open(path, encoding="utf-8").read()
+        m = re.search(r"^package ([\w.]+)", src, re.M)
+        pkg = m.group(1) + "." if m else ""
+        names.update(pkg + c for c in re.findall(r"^(?:final |abstract )*class (\w+)", src, re.M))
+    return names
+
+
 def main():
     unexpected = []
+    live = source_suites()
     xmls = glob.glob("target/test-reports/*.xml")
     suites = tests = failures = errors = 0
+    stale = []
     for p in xmls:
         root = ET.parse(p).getroot()
         nodes = [root] if root.tag == "testsuite" else root.findall("testsuite")
         for s in nodes:
+            if s.get("name") not in live:
+                stale.append(s.get("name"))
+                continue
             suites += 1
             tests += int(s.get("tests", 0))
             failures += int(s.get("failures", 0))
             errors += int(s.get("errors", 0))
     print(f"tests: {tests} across {suites} suites "
           f"({failures} failures, {errors} errors)")
+    if stale:
+        print(f"skipped {len(stale)} stale reports (suite has no source): "
+              f"{', '.join(sorted(stale))}")
 
     logs = sys.argv[1:] or [p for p in SBT_LOGS if os.path.exists(p)]
     if logs:
