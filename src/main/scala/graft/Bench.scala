@@ -63,12 +63,16 @@ object Bench {
   private val LoadGateAttempts = 3
   private val LoadGateWaitMs = 60000L
 
+  /** Child JVMs' Spark logs: emptied once when a run starts, then every
+    * child appends, so the file holds exactly the latest run. */
+  private val ChildLog = "bench_child.log"
+
   /** The extended surface: every registered family except the headline
     * families and `etl`, in registration order, tagged by family. */
   private[graft] def extendedRegistries: Seq[(String, Seq[Q])] =
-    SparkEntry.families.filterNot { case (tag, _) =>
-      SparkEntry.HeadlineFamilies(tag) || tag == "etl"
-    }
+    SparkEntry.families
+      .filterNot(f => SparkEntry.HeadlineFamilies(f.tag) || f.tag == "etl")
+      .map(f => f.tag -> f.queries)
 
   private[graft] def extendedSet: Seq[Q] = extendedRegistries.flatMap(_._2)
 
@@ -183,7 +187,7 @@ object Bench {
       // child stdout (Spark logs) must NOT pollute the parent's stdout —
       // the caller parses our stdout tail; both streams go to a log file
       pb.redirectErrorStream(true)
-      pb.redirectOutput(ProcessBuilder.Redirect.appendTo(new java.io.File("bench_child.log")))
+      pb.redirectOutput(ProcessBuilder.Redirect.appendTo(new java.io.File(ChildLog)))
       val code = pb.start().waitFor()
       if (code != 0) System.err.println(s"[bench] child exited $code")
       else Files.readAllLines(out).forEach { ln =>
@@ -207,6 +211,7 @@ object Bench {
       childMain(sfDir, sys.env("SPARK_GRAFT_BENCH_OUT"))
       return
     }
+    Files.write(Paths.get(ChildLog), Array.emptyByteArray)
 
     // Load gate: sampled BEFORE anything heavy — at this point the bench
     // has done driver-side JVM setup only (near-zero runnable threads), so
@@ -236,18 +241,7 @@ object Bench {
     // comparison unit). "sec" uses the headline rule (memoized queries
     // count their cold first run, others min-of-runs); "sec_cold" the
     // first successful run of every query.
-    val memoized: Set[String] =
-      graft.ops.Similarity.MemoizedQueries ++ graft.ops.Curation.MemoizedQueries ++
-        graft.ops.Corpus.MemoizedQueries ++ graft.ops.Pq.MemoizedQueries ++
-        graft.sources.TextSources.MemoizedQueries ++
-        graft.ops.HashIndex.MemoizedQueries ++
-        graft.ops.LineIndex.MemoizedQueries ++
-        graft.ops.EdgeIndex.MemoizedQueries ++
-        graft.ops.TemporalEdgeIndex.MemoizedQueries ++
-        graft.ops.GramIndex.MemoizedQueries ++
-        graft.ops.PhraseIndex.MemoizedQueries ++
-        graft.ops.SimHashIndex.MemoizedQueries ++
-        graft.ops.Retrieval.MemoizedQueries
+    val memoized: Set[String] = SparkEntry.families.flatMap(_.memoized).toSet
     def f(d: Double): String = "%.3f".formatLocal(Locale.ROOT, d)
     def minOf(runs: Seq[Double]): Double = {
       val ok = runs.filter(_ >= 0)

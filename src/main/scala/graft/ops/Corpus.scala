@@ -282,13 +282,17 @@ object Corpus {
     docs.select(col("doc_id"),
       explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
 
+  /** Natural log by `java.lang.Math.log` — the function DuckDB's `ln`
+    * agrees with on the d37 ratios (see [[tfidfTopTerms]]). */
+  private val lnUdf = udf((x: Double) => math.log(x))
+
   /** Per-document TF-IDF top-`k` terms (d37) — keyword extraction for
     * corpus triage. tfidf = tf · ln(N / df); ties broken by term. tf and
-    * df are exact longs, but the score is NOT the same IEEE value on
-    * both sides: Spark's `log` is `StrictMath.log`, so scores equal in
-    * exact arithmetic can differ in the last ulp (2·ln 3 ≠ ln 9 here,
-    * equal in DuckDB), and such a tie can rank differently from the
-    * DuckDB oracle — open defect, ROADMAP item 1 (d37 tie order).
+    * df are exact longs; ln goes through [[lnUdf]] (`math.log`), not
+    * Spark's `log`, which is `StrictMath.log`: the two differ in the last
+    * ulp on some ratios (StrictMath gives 2·ln 3 < ln 9, `math.log`,
+    * glibc and DuckDB give them equal), so a mathematical tie ranked by
+    * Spark's `log` could break the other way from the DuckDB oracle.
     *
     * Scale: tf is a (doc, term) partial-aggregated shuffle; df reuses tf
     * (one extra term-keyed agg over distinct pairs); the df join is
@@ -304,7 +308,7 @@ object Corpus {
     tf.join(dfreq, "term")
       .crossJoin(broadcast(nDocs))
       .withColumn("tfidf",
-        col("tf") * log(col("n_docs").cast(DoubleType) / col("df")))
+        col("tf") * lnUdf(col("n_docs").cast(DoubleType) / col("df")))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("doc_id"))
           .orderBy(col("tfidf").desc, col("term"))))
@@ -443,7 +447,7 @@ object Corpus {
 
   /** The d57 keep rule over a CALLER-SUPPLIED near-duplicate pair
     * stream (vec_a < vec_b) — the open seam for sub-quadratic candidate
-    * sources (IVF cell products, LSH buckets, a persisted SketchIndex):
+    * sources (IVF cell products, LSH buckets, a persisted SimHashIndex):
     * a vector is dropped iff it appears as the LARGER id of any pair. */
   def semDedupKeepFrom(vecs: DataFrame, pairs: DataFrame): DataFrame = {
     val dropped = pairs.select(col("vec_b").as("vec_id")).distinct()
@@ -1010,10 +1014,9 @@ object Corpus {
              |GROUP BY 1""".stripMargin)),
 
     // d37: per-document TF-IDF top terms — keyword extraction. tf/df/N
-    // are exact longs, but tfidf = tf·ln(N/df) is not the same IEEE value
-    // both sides: Spark's log is StrictMath.log, so 2·ln 3 ≠ ln 9 in the
-    // last ulp while DuckDB computes them equal, and a mathematical tie can
-    // rank (score desc, term) differently — open defect, ROADMAP item 1.
+    // are exact longs; the engine takes ln with math.log (not Spark's
+    // StrictMath-based log), which matches DuckDB's ln on ties such as
+    // 2·ln 3 = ln 9, so (score desc, term) ranks the same on both sides.
     Q("d37_tfidf_topterms",
       (s, d) => tfidfTopTerms(documents(s, d)),
       Some(s"""WITH toks AS (

@@ -88,34 +88,6 @@ object EdgeIndex extends PersistedIndex {
   override protected def disjointIdCol: Option[String] = Some("basket_id")
   override protected def disjointTable: String = "basketids"
 
-  /** Streaming-ingest admission check (r13 advice): micro-batch
-    * boundaries are TIME-sliced and can split one basket's rows across
-    * batches — a straddling basket misses its cross-fragment pairs and
-    * double-counts none-the-wiser, the exact corruption the append-path
-    * `checkDisjoint` exists to refuse. Ingest therefore ALWAYS probes
-    * the arriving batch's basket ids against the already-indexed
-    * basketids table and fails the stream loudly on overlap. Rows of
-    * the SAME batch id are excluded from the probe — a replayed
-    * micro-batch (failure recovery) legitimately re-sees its own ids
-    * and dynamic overwrite replaces its partitions idempotently. The
-    * upstream contract this enforces: deliver COMPLETE baskets per
-    * micro-batch (sessionize/buffer before the sink — the d142
-    * watermark machinery is the natural upstream). Cost: one
-    * batch-sized semi-join against the narrow basketids table per
-    * micro-batch — the same scan append's checkDisjoint pays. */
-  override protected def ingestGuard(batch: DataFrame, dir: String,
-      batchId: Long): Unit = {
-    // torn-write admission on the NORMAL ingest path too (the late
-    // path checks inside writeLateBatch): a checkpointed replay of the
-    // crashed batch id passes and scrubs its own partials, but a
-    // stream RESTARTED WITH A FRESH CHECKPOINT would re-number from 0
-    // and silently absorb the torn batch — refuse that like append.
-    IndexCommit.requireReplaySafe(batch.sparkSession, dir, batchId,
-      claimTables = Seq("basketids", "basketitems"), factTable = "pairfacts")
-    requireNoStraddle(batch.toDF("basket_id", "item_id")
-      .select(col("basket_id")), dir, batchId, "basket")
-  }
-
   /** The full co-purchase edge set across all indexed batches —
     * (src, dst, weight) with src < dst, weight = #distinct baskets
     * witnessing the pair corpus-wide, pruned to `minSupport`. When the

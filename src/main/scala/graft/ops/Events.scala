@@ -214,13 +214,11 @@ object Events {
     * first step of behavioral analysis (session length/depth feed
     * engagement metrics, bot filters, and the d117 funnel's upstream).
     * The per-SESSION detail table — q23 is its per-USER rollup
-    * (session/event counts only) and [[graft.streaming.Streams
-    * .sessionize]] its live counterpart (same gap rule, watermark
-    * -closed). In: (user_id, event_id, event_type, ts_us). Out: (user_id,
-    * session_idx, session_start_us, session_end_us, duration_us,
-    * n_events, n_event_types) — session_idx is 1-based in first-event
-    * order; every value an exact long, so the oracle replays the
-    * identical lag/running-sum/rollup.
+    * (session/event counts only). In: (user_id, event_id, event_type,
+    * ts_us). Out: (user_id, session_idx, session_start_us,
+    * session_end_us, duration_us, n_events, n_event_types) —
+    * session_idx is 1-based in first-event order; every value an exact
+    * long, so the oracle replays the identical lag/running-sum/rollup.
     *
     * Semantics: a session BOUNDARY is a strict gap (ts − prev >
     * gap µs); ties within a user order by (ts_us, event_id) — the

@@ -6,13 +6,12 @@ import org.apache.spark.sql.types._
 import Tables._
 
 /** Persisted content-hash index — the incremental EXACT-dedup
-  * counterpart of the one-shot [[TextOps.dedupExact]] batch operator
-  * (the [[SketchIndex]] of the exact family): hash the corpus once,
-  * persist (hash, keeper id) facts, then answer "have I seen this text
-  * before, and who owns it" for each arriving batch without re-reading
-  * corpus text. The hash is the same md5-of-text d01 groups by, so
-  * index answers and the one-shot operator agree exactly (and a DuckDB
-  * oracle can adjudicate them).
+  * counterpart of the one-shot [[TextOps.dedupExact]] batch operator:
+  * hash the corpus once, persist (hash, keeper id) facts, then answer
+  * "have I seen this text before, and who owns it" for each arriving
+  * batch without re-reading corpus text. The hash is the same
+  * md5-of-text d01 groups by, so index answers and the one-shot
+  * operator agree exactly (and a DuckDB oracle can adjudicate them).
   *
   * On-disk layout (parquet):
   *   <dir>/hashes/ingest_batch=B/  (content_hash STRING, doc_id BIGINT)

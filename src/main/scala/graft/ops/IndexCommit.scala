@@ -3,25 +3,24 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
-/** Shared write protocol for the persisted index families ([[LexIndex]],
-  * [[SketchIndex]], [[IvfIndex]]): each index is a SET of parquet tables
-  * that must describe the same corpus, but parquet gives one-table
-  * commits only. Two pieces close the gap:
+/** Shared write protocol for the persisted index families (the nine
+  * [[PersistedIndex]] families, [[IvfIndex]], [[PqIndex]]): each index
+  * is a SET of parquet tables that must describe the same corpus, but
+  * parquet gives one-table commits only. Two pieces close the gap:
   *
   *  1. A `_graft_commit` marker bracketing every multi-table write
   *     (dropped first, recreated after the last table lands). Readers
   *     call [[requireCommitted]] and FAIL CLOSED on a missing marker —
   *     an index whose tables disagree (e.g. postings without their
-  *     docstats, sketches without their buckets) would silently return
-  *     wrong scores or miss duplicates.
+  *     docstats, pair facts without their basket ids) would silently
+  *     return wrong scores or miss facts.
   *
   *  2. Batch-id partitioning: every write lands under its own
   *     `ingest_batch=B` partition via DYNAMIC partition overwrite, so
   *     re-running a batch id replaces that batch's partial output
   *     instead of appending a second copy. This is what makes failure
-  *     recovery safe: re-run the same batch (or replay the streaming
-  *     micro-batch — the checkpoint preserves its id) and the index
-  *     holds each document exactly once. A full rebuild uses STATIC
+  *     recovery safe: re-run the same batch under its own id and the
+  *     index holds each document exactly once. A full rebuild uses STATIC
   *     overwrite (batch id -1), replacing the whole table.
   */
 private[graft] object IndexCommit {
@@ -144,8 +143,7 @@ private[graft] object IndexCommit {
         "Writing a new batch would absorb the torn batch's partial claims " +
         "as committed prior state (wrong retraction deltas) and restore " +
         "the marker over them. Replay the interrupted batch under its own " +
-        "id (streaming replays do this from the checkpoint) or rebuild " +
-        "with save().")
+        "id or rebuild with save().")
     (factTable +: claimTables).foreach { t =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$t/$BatchCol=$batchId"),
         true)
@@ -181,7 +179,7 @@ private[graft] object IndexCommit {
   val AtomicRenameSchemes: Set[String] = Set("file", "hdfs", "viewfs")
 
   /** Atomically publish `df` as the new serving snapshot under `root`
-    * (r15 advice: the streaming trending consumer refreshed its serving
+    * (r15 advice: the trending serving refresh used to rewrite its
     * table with a plain SaveMode.Overwrite — Spark deletes the
     * directory before rewriting, so a concurrent reader or a crash
     * mid-refresh saw a missing/partial table until another batch
@@ -198,7 +196,7 @@ private[graft] object IndexCommit {
     *     are deleted — the immediately-previous ALWAYS survives until
     *     the NEXT publish so in-flight readers keep their files, and
     *     `retainMillis > 0` additionally keeps any generation younger
-    *     than that age (r16 advice: with fast micro-batches and a slow
+    *     than that age (r16 advice: with fast appends and a slow
     *     downstream scan, two publishes could complete inside one read
     *     — the age floor bounds the reader-staleness window instead:
     *     a reader that resolves the pointer and finishes its scan

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *   <dir>/cells/ingest_batch=B/cell=N/  (vec_id LONG, v ARRAY<DOUBLE>)
   * Writes follow the [[IndexCommit]] protocol: incremental batches land
   * idempotently under their own `ingest_batch` partitions (replaying a
-  * failed [[appendSaved]]/[[ingest]] batch replaces its partial output),
+  * failed [[appendSaved]] batch replaces its partial output),
   * the centroid+cells pair is bracketed by a commit marker, and [[load]]
   * fails closed on an interrupted write.
   *
@@ -210,27 +210,6 @@ object IvfIndex {
       IndexCommit.nextBatchId(spark, s"$dir/cells"), overwriteAll = false)
   }
 
-  /** Continuously index a streaming (vec_id, v) frame against the SAVED
-    * quantizer (centroids are loaded once; they only move under a retrain
-    * [[build]] + [[save]]). A replayed micro-batch overwrites its own
-    * partitions (exactly-once per batch). Don't mix concurrent
-    * [[appendSaved]] and [[ingest]] on one index: both allocate batch ids
-    * and could collide. */
-  def ingest(spark: SparkSession, vectors: DataFrame, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val centroids = load(spark, dir).centroids
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        if (!batch.isEmpty)
-          writeCells(spark, assign(spark, centroids, batch.toDF()), dir, id,
-            overwriteAll = false)
-      }
-      .start()
-  }
-
   private def writeCells(spark: SparkSession, assigned: DataFrame, dir: String,
       batchId: Long, overwriteAll: Boolean): Unit =
     IndexCommit.withGuard(spark, dir) {
@@ -260,7 +239,7 @@ object IvfIndex {
   }
 
   /** Rewrite a fragmented index (one `ingest_batch=B` partition per past
-    * [[appendSaved]]/[[ingest]] batch) as a single-generation snapshot
+    * [[appendSaved]] batch) as a single-generation snapshot
     * under `dst` — see [[IndexCommit.compactTo]] for the crash-safety and
     * serving model. Cells stay cell-partitioned, so probes prune
     * identically; centroids are copied verbatim (the quantizer is

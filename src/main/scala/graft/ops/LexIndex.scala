@@ -2,12 +2,11 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Persisted inverted index for BM25 lexical retrieval — the lexical
-  * analog of [[IvfIndex]] (vectors) and SketchIndex (MinHash): tokenize
-  * and aggregate the corpus ONCE, then serve arbitrary bag-of-words
-  * queries without re-reading the documents.
+  * analog of [[IvfIndex]] (vectors): tokenize and aggregate the corpus
+  * ONCE, then serve arbitrary bag-of-words queries without re-reading
+  * the documents.
   *
   * Layout under `dir`:
   *   - `postings/ingest_batch=B/bucket=N/` — (term, doc_id, tf),
@@ -31,17 +30,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     aggregates for n_docs/avgdl); a deployment serving many queries
   *     would cache it.
   *
-  * [[append]] ingests additional documents incrementally under the next
-  * free batch id; [[ingest]] attaches a Structured Streaming source and
-  * indexes every micro-batch under its checkpointed batch id — a replayed
-  * batch (failure recovery) overwrites its own partitions, so the index
-  * holds each batch's documents exactly once. Precondition for both:
+  * [[append]] adds documents incrementally under the next free batch
+  * id; re-running a failed batch id overwrites its own partitions, so
+  * the index holds each batch's documents exactly once. Precondition:
   * arriving doc_ids are disjoint from what's already indexed —
   * postings/docstats are keyed facts per doc, so re-adding a doc would
   * double-count it (same contract as `IvfIndex.appendSaved`;
   * `append(checkDisjoint = true)` verifies at the cost of a docstats
-  * semi-join). Don't mix concurrent [[append]] and [[ingest]] on one
-  * index: both allocate batch ids and could collide.
+  * semi-join). Don't run concurrent appends on one index: each
+  * allocates a batch id and they could collide.
   *
   * The two tables are two separate parquet commits, so a crash between
   * them would leave postings and docstats describing DIFFERENT corpora —
@@ -50,9 +47,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * marker protocol: drop `_graft_commit`, write both tables, recreate it.
   * [[searchBm25]] refuses (fails closed) when the marker is missing — an
   * interrupted write must be redone (re-run the same batch/append, or
-  * rebuild via [[save]]). Under continuous [[ingest]] the marker is
-  * absent during each batch's write window; serve queries from a
-  * snapshot, not the live ingest directory.
+  * rebuild via [[save]]). The marker is absent during each batch's
+  * write window; serve queries from a compacted snapshot
+  * ([[compactTo]]), not a directory that is being appended to.
   *
   * Search reuses [[Corpus.bm25ScoreFrom]], the exact scoring core of the
   * direct-path d38 query, so indexed results equal the direct computation
@@ -126,7 +123,7 @@ object LexIndex extends PersistedIndex {
     * to [[Retrieval.qlTopKFrom]]/[[Retrieval.prfExpansionFrom]]): one
     * compact columnar scan of pre-aggregated counts instead of
     * re-tokenizing the corpus, and the scan stays current as [[append]]
-    * / [[ingest]] add batches. */
+    * adds batches. */
   def postings(spark: SparkSession, dir: String): DataFrame = {
     IndexCommit.requireCommitted(spark, dir, "postings")
     spark.read.parquet(s"$dir/postings")

@@ -59,7 +59,7 @@ object LmIndex extends PersistedIndex {
     Curation.vocabFromCounts(counts(spark, dir))
 
   /** Compact a fragmented model (one `ingest_batch=B` partition per past
-    * [[append]]/[[ingest]]) into a fresh single-generation snapshot at
+    * [[append]]) into a fresh single-generation snapshot at
     * `dst`. Unlike the other families' pure-restamp compaction, counts
     * MERGE (sum per token) — correct because addition is associative,
     * and strictly smaller than restamping. Crash-safe by the marker

@@ -3,15 +3,15 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared lifecycle of the persisted document-keyed index families
-  * (Sketch/Lex/Lm/Hash/Line/Gram/Phrase/SimHash — r09 verdict ask #8).
-  * Before this trait each family re-declared save/append/ingest/
-  * writeBatch/compactTo around [[IndexCommit]] (~40 near-identical
-  * methods repo-wide), so a lifecycle fix (the r10 qualified-path
-  * compaction guard) had to be found and applied once per family. Now
-  * the behavior is written once and each family declares only its DATA:
-  * an ordered [[BatchTable]] layout — table spec, per-batch fact
-  * builder, write shaping — plus optional hooks.
+/** Shared lifecycle of the persisted index families: the document-keyed
+  * Lex/Lm/Hash/Line/Gram/Phrase/SimHash and the basket-keyed Edge and
+  * TemporalEdge (r09 verdict ask #8). Before this trait each family
+  * re-declared save/append/writeBatch/compactTo around [[IndexCommit]]
+  * (~40 near-identical methods repo-wide), so a lifecycle fix (the r10
+  * qualified-path compaction guard) had to be found and applied once
+  * per family. Now the behavior is written once and each family
+  * declares only its DATA: an ordered [[BatchTable]] layout — table
+  * spec, per-batch fact builder, write shaping — plus optional hooks.
   *
   * The protocol (unchanged — PersistedIndexSpec gates it once for all
   * families, the per-family specs keep gating their serving paths):
@@ -20,8 +20,6 @@ import org.apache.spark.sql.functions._
   *    listing; optional disjointness check of the arriving ids against
   *    the lead table; dynamic overwrite = replaying a failed batch id
   *    replaces its own partitions idempotently.
-  *  - [[ingest]]: foreachBatch streaming of the same write path (don't
-  *    mix with concurrent append — both allocate batch ids).
   *  - every multi-table write is bracketed by the [[IndexCommit]]
   *    marker: readers fail closed on an interrupted write.
   *  - [[compactTo]]: generation rewrite into a DIFFERENT directory
@@ -36,12 +34,13 @@ trait PersistedIndex {
   /** One persisted table: its [[IndexCommit.TableSpec]] (name +
     * partition columns, reused verbatim by compaction), how to build a
     * batch's rows — `build(docs, dir, batchId)` may read BACK a table
-    * written earlier in the same guard (Sketch derives buckets, Lex
-    * docstats, Hash its bloom from the just-written parquet, so the
-    * expensive doc pass runs once) — and write shaping:
+    * written earlier in the same guard (Lex derives docstats, Hash its
+    * bloom from the just-written parquet, so the expensive doc pass
+    * runs once) — and write shaping:
     * `clusterWrite` repartitions by the partition columns so each
     * write task hits one directory (64-bucket posting layouts);
-    * `singleFile` coalesces to one file (driver-built sketch rows). */
+    * `singleFile` coalesces to one file (HashIndex's driver-built bloom
+    * rows). */
   protected final case class BatchTable(
       spec: IndexCommit.TableSpec,
       build: (DataFrame, String, Long) => DataFrame,
@@ -87,8 +86,8 @@ trait PersistedIndex {
     // crashed between table commits; appending a NEW batch id on top
     // would absorb the torn batch's partial tables and then re-create
     // the marker over them. Only a same-id replay can repair that
-    // (streaming does, from its checkpoint) — batch-mode append always
-    // allocates a fresh id, so it must fail closed here. The probe
+    // (a [[writeBatch]] of the torn batch id) — append always allocates
+    // a fresh id, so it must fail closed here. The probe
     // checks EVERY batch table, not just the disjoint table (r17
     // advice, medium): tables commit in [[batchTables]] order, so a
     // crash after the lead fact table but before the disjoint table
@@ -107,64 +106,6 @@ trait PersistedIndex {
     writeBatch(docs, dir,
       IndexCommit.nextBatchId(docs.sparkSession, s"$dir/$disjointTable"),
       overwriteAll = false)
-  }
-
-  /** Continuously index a streaming frame; a replayed micro-batch
-    * overwrites its own partitions (exactly-once per batch). Each
-    * micro-batch passes [[ingestGuard]] first — families whose facts
-    * are only correct over COMPLETE per-id groups (EdgeIndex baskets)
-    * fail the stream loudly there instead of silently corrupting. */
-  def ingest(docs: DataFrame, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        if (!batch.isEmpty) {
-          ingestGuard(batch.toDF(), dir, id)
-          writeBatch(batch.toDF(), dir, id, overwriteAll = false)
-        }
-      }
-      .start()
-
-  /** Per-micro-batch admission check run before [[ingest]]'s write —
-    * no-op by default. A throw fails the streaming query loudly (the
-    * batch is NOT written; fixing the input and restarting from the
-    * checkpoint replays the same batch id through the guard again). */
-  protected def ingestGuard(batch: DataFrame, dir: String, batchId: Long): Unit = ()
-
-  /** Shared straddle probe for group-keyed families (the edge
-    * families' baskets): micro-batch boundaries are TIME-sliced and
-    * can split one group's rows across batches — facts computed
-    * within a batch would then silently miss the cross-fragment part.
-    * Probes the arriving batch's `ids` (one column, named
-    * [[disjointIdCol]]) against the already-indexed [[disjointTable]];
-    * rows of the SAME batch id are excluded (a replayed micro-batch
-    * legitimately re-sees its own ids — dynamic overwrite replaces its
-    * partitions idempotently). Cost: one batch-sized semi-join against
-    * the narrow id table — the same scan append's checkDisjoint pays.
-    * `what` names the split unit in the error ("basket"). */
-  protected final def requireNoStraddle(ids: DataFrame, dir: String,
-      batchId: Long, what: String): Unit = {
-    val spark = ids.sparkSession
-    val idCol = disjointIdCol.getOrElse(
-      throw new IllegalStateException("requireNoStraddle needs disjointIdCol"))
-    val table = new org.apache.hadoop.fs.Path(s"$dir/$disjointTable")
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(table)) return // first batch of a fresh index
-    val prior = spark.read.parquet(s"$dir/$disjointTable")
-      .where(col(IndexCommit.BatchCol) =!= batchId)
-      .select(col(idCol))
-    val overlap = ids.toDF(idCol).distinct()
-      .join(prior, Seq(idCol), "left_semi")
-      .limit(1).count()
-    require(overlap == 0L,
-      s"ingest: micro-batch contains $idCol values already indexed by an " +
-        s"EARLIER batch — the micro-batch boundary split a $what (its " +
-        s"cross-fragment facts would be missed and duplicate rows " +
-        s"double-counted). Deliver complete ${what}s per micro-batch: " +
-        s"sessionize/buffer upstream so a $what's rows arrive together.")
   }
 
   /** One write batch under the [[IndexCommit]] protocol. */

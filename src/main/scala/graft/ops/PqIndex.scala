@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** Persisted PQ index — [[Pq]]'s codebook + code table on disk, closing
   * the same lifecycle as the other persisted families ([[LexIndex]],
-  * [[SketchIndex]], [[IvfIndex]], LmIndex): crash-safe multi-table
-  * writes under the [[IndexCommit]] marker, per-batch replayable
-  * appends, streaming ingestion, and snapshot compaction. This is the
-  * at-rest form PQ exists for: the corpus persists as m ints per vector
-  * (16-64x smaller than the float column), new vectors encode against
-  * the FROZEN codebook (which only moves under a retrain + [[save]]),
-  * and retrieval reads codes + the tiny codebook — never raw vectors.
+  * [[IvfIndex]], LmIndex): crash-safe multi-table writes under the
+  * [[IndexCommit]] marker, per-batch replayable appends, and snapshot
+  * compaction. This is the at-rest form PQ exists for: the corpus
+  * persists as m ints per vector (16-64x smaller than the float
+  * column), new vectors encode against the FROZEN codebook (which only
+  * moves under a retrain + [[save]]), and retrieval reads codes + the
+  * tiny codebook — never raw vectors.
   *
   * Layout:
   *   dir/codebook  (s, c, cent ARRAY<DOUBLE>, sub_dim) — one row per
@@ -85,26 +85,6 @@ object PqIndex {
     val cb = loadCodebook(spark, dir)
     writeCodes(spark, Pq.encode(spark, vectors, cb), dir,
       IndexCommit.nextBatchId(spark, s"$dir/codes"), overwriteAll = false)
-  }
-
-  /** Continuously encode a streaming (vec_id, embedding) frame against
-    * the SAVED codebook. A replayed micro-batch overwrites its own
-    * partitions (exactly-once per batch). Don't mix concurrent
-    * [[appendSaved]] and [[ingest]] on one index: both allocate batch
-    * ids and could collide. */
-  def ingest(spark: SparkSession, vectors: DataFrame, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val cb = loadCodebook(spark, dir)
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        if (!batch.isEmpty)
-          writeCodes(spark, Pq.encode(spark, batch.toDF(), cb), dir, id,
-            overwriteAll = false)
-      }
-      .start()
   }
 
   /** Rewrite accumulated per-batch partitions as a single-generation

@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions._
 import Tables._
 
 /** Persisted SimHash signature index — the incremental serving form of
-  * d09's hamming near-dup detection (the [[SketchIndex]] of the simhash
-  * family): sketch the corpus once into 60-bit signatures, persist them
-  * (16 bytes/doc — the cheapest of the index families), then answer
+  * d09's hamming near-dup detection: sketch the corpus once into
+  * 60-bit signatures, persist them (16 bytes/doc — the cheapest of the
+  * index families), then answer
   * "which indexed docs sit within hamming ≤ 3 of this arriving batch"
-  * without re-reading corpus text. MinHash ([[SketchIndex]]) serves the
-  * Jaccard-threshold question; this serves the bit-flip/near-template
-  * question the simhash sketch is built for.
+  * without re-reading corpus text. MinHash ([[Similarity.nearDupPairs]])
+  * serves the Jaccard-threshold question; this serves the
+  * bit-flip/near-template question the simhash sketch is built for.
   *
   * On-disk layout (parquet):
   *   <dir>/signatures/ingest_batch=B/  (doc_id BIGINT, simhash BIGINT)

@@ -231,9 +231,8 @@ object Similarity {
 
   /** 128 min-hashes over a doc's gram-hash set in one compiled pass: per
     * gram 128 independent splitmix finalizer mixes (xor-seeded). Pure —
-    * shared by the batch sketch UDF (one call per document; the gram
-    * array never leaves its task, so the sketch build needs NO shuffle at
-    * all) and the streaming detector (NearDupStream). */
+    * called by the sketch UDF once per document; the gram array never
+    * leaves its task, so the sketch build needs NO shuffle at all. */
   private[graft] def minhashFromHashes(gramHashes: Array[Long]): Array[Long] = {
     val out = new Array[Long](NumHashes)
     java.util.Arrays.fill(out, Long.MaxValue)
@@ -441,7 +440,7 @@ object Similarity {
     * per-document bound every shingling engine has. */
   /** (doc_id, grams, n, mh) from any (doc_id, text) corpus — the uncached
     * pure sketch table ([[docSketches]] adds per-(session, dir)
-    * memoization; [[SketchIndex]] persists it). */
+    * memoization). */
   private[ops] def sketchTable(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), gramSketchUdf(lower(col("text"))).as("gs"))
@@ -461,8 +460,7 @@ object Similarity {
     * corpus scale the shared bucket is a catastrophic skew hot spot
     * (10^6 empty docs -> 10^12 candidate pairs). Exact content-hash
     * dedup (d01) is the operator that groups degenerate docs — the
-    * documented complementarity in Curation.dedupedCorpus. The streaming
-    * detector (NearDupStream) applies the same guard. */
+    * documented complementarity in Curation.dedupedCorpus. */
   private[ops] def bandBuckets(sk: DataFrame): DataFrame =
     sk.where(col("n") > 0)
       .select(col("doc_id"), col("n"), explode(expr(

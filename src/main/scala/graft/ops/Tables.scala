@@ -89,8 +89,7 @@ object Tables {
     raw.withColumn("ts_us", tsToMicros(raw.schema("ts").dataType)).drop("ts")
   }
 
-  /** The `ts` → epoch-µs Long conversion shared by the batch and
-    * streaming event loaders. */
+  /** The `ts` → epoch-µs Long conversion of the events loader. */
   private[graft] def tsToMicros(dt: DataType): org.apache.spark.sql.Column = dt match {
     case LongType         => expr("(ts - pmod(ts, 1000)) div 1000")
     case TimestampNTZType => expr("unix_micros(cast(ts as timestamp))")

@@ -32,13 +32,12 @@ import Tables._
   *   <dir>/basketitems/ingest_batch=B/ (basket_id, item_id, bday —
   *     the distinct raw claims; linear in the input, what late-data
   *     reconciliation and the sliding anchor read)
-  * Disjointness, the per-batch runaway-basket cap, the streaming
-  * straddle guard, and the crash-safe marker protocol are all
-  * [[EdgeIndex]]'s, restated over the 3-column basket input
-  * (basket_id, item_id, bday); feeds that cannot deliver complete
-  * baskets per micro-batch use [[ingestLate]]/[[appendLate]], which
-  * reconcile stragglers as additive (possibly negative) fact deltas
-  * instead of aborting. The d182 gate proves the split-ingest
+  * Disjointness, the per-batch runaway-basket cap and the crash-safe
+  * marker protocol are all [[EdgeIndex]]'s, restated over the 3-column
+  * basket input (basket_id, item_id, bday); feeds that cannot deliver
+  * complete baskets per batch use [[appendLate]], which reconciles
+  * stragglers as additive (possibly negative) fact deltas instead of
+  * refusing them. The d182 gate proves the split-ingest
   * round trip reproduces [[Graphs.decayedCopurchase]] on the same
   * corpus under d174's oracle VERBATIM; d183 proves a consumer
   * ([[Graphs.trendingRelated]]) fed from the index under d179's.
@@ -83,8 +82,8 @@ object TemporalEdgeIndex extends PersistedIndex {
       docs.toDF("basket_id", "item_id", "bday")
         .select(col("basket_id")).distinct()),
     // the raw distinct (basket, item, date) claims — what makes
-    // LATE-DATA reconciliation possible ([[appendLate]]/[[ingestLate]]
-    // recompute a straddling basket's prior facts from here) and what
+    // LATE-DATA reconciliation possible ([[appendLate]] recomputes a
+    // straddling basket's prior facts from here) and what
     // the sliding anchor reads (EVERY ingested basket's date lands
     // here, singleton and over-cap baskets included — pairfacts only
     // witnesses pairs). Footprint: one row per distinct claim — LINEAR
@@ -95,24 +94,6 @@ object TemporalEdgeIndex extends PersistedIndex {
 
   override protected def disjointIdCol: Option[String] = Some("basket_id")
   override protected def disjointTable: String = "basketids"
-
-  /** [[EdgeIndex]]'s straddle probe (the shared
-    * [[PersistedIndex.requireNoStraddle]]) over the 3-column basket
-    * input: a micro-batch boundary splitting a basket would silently
-    * miss cross-fragment pairs — fail the stream instead. This guard
-    * is the DEFAULT contract ([[PersistedIndex.ingest]]); feeds that
-    * cannot deliver complete baskets per micro-batch run
-    * [[ingestLate]], which reconciles stragglers instead of aborting. */
-  override protected def ingestGuard(batch: DataFrame, dir: String,
-      batchId: Long): Unit = {
-    // torn-write admission on the NORMAL ingest path too — see
-    // [[EdgeIndex.ingestGuard]]: a fresh-checkpoint restart re-numbers
-    // from 0 and would otherwise absorb a torn batch's partials.
-    IndexCommit.requireReplaySafe(batch.sparkSession, dir, batchId,
-      claimTables = Seq("basketids", "basketitems"), factTable = "pairfacts")
-    requireNoStraddle(batch.toDF("basket_id", "item_id", "bday")
-      .select(col("basket_id")), dir, batchId, "basket")
-  }
 
   // ---- late-data ingest (r15 verdict forward item #2) -------------------
 
@@ -141,11 +122,11 @@ object TemporalEdgeIndex extends PersistedIndex {
     * No watermark horizon is needed: reconciliation is exact at ANY
     * lateness, so there is nothing a buffer-and-seal mode would add
     * except dropped stragglers. Cost per batch: one basketids probe
-    * (the straddle guard's own scan) and, only when stragglers exist,
-    * one semi-joined read of the straddlers' prior claims. Replay-safe:
-    * prior state is read with the arriving batch id EXCLUDED, so a
-    * replayed micro-batch recomputes the identical delta and dynamic
-    * overwrite replaces its own partitions idempotently. */
+    * and, only when stragglers exist, one semi-joined read of the
+    * straddlers' prior claims. Replay-safe: prior state is read with
+    * the arriving batch id EXCLUDED, so a replayed batch recomputes the
+    * identical delta and dynamic overwrite replaces its own partitions
+    * idempotently. */
   private[graft] def lateDelta(b: DataFrame, dir: String, batchId: Long): DataFrame = {
     val spark = b.sparkSession
     val idsPath = new org.apache.hadoop.fs.Path(s"$dir/basketids")
@@ -234,25 +215,6 @@ object TemporalEdgeIndex extends PersistedIndex {
     writeLateBatch(docs, dir,
       IndexCommit.nextBatchId(docs.sparkSession, s"$dir/basketids"))
 
-  /** Watermark-TOLERANT streaming ingest (r15 verdict ask #3): where
-    * [[PersistedIndex.ingest]] fails loudly on a basket straddling
-    * micro-batches, this mode reconciles stragglers by appending their
-    * [[lateDelta]] — the final index state equals the in-order batch
-    * build no matter how the stream fragments or reorders baskets
-    * (TemporalEdgeIndexSpec replays out-of-order fragments against the
-    * one-shot build). Exactly-once per batch id like every ingest:
-    * replays rewrite their own partitions with the identical delta. */
-  def ingestLate(docs: DataFrame, dir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        if (!batch.isEmpty) writeLateBatch(batch.toDF(), dir, id)
-      }
-      .start()
-
   /** The decayed edge set across all indexed batches, relative to the
     * 1-row `anchor` frame (one DATE column — the caller's "now";
     * broadcast, never collected): (src, dst, weight_ppm) with
@@ -329,94 +291,20 @@ object TemporalEdgeIndex extends PersistedIndex {
       .select(col("src"), col("dst"), col("weight_ppm"))
   }
 
-  /** Streaming CONSUMER over the index (r14 verdict forward item #2 —
-    * the composed gate the temporal family was missing): each
-    * micro-batch passes the straddle guard, appends its (pair, date, n)
-    * facts exactly-once, and then PUBLISHES the served trending-related
-    * snapshot — [[Graphs.trendingRelated]] over [[decayedEdgesOf]] at
-    * the caller's anchor — as a fresh generation under `outDir` via
-    * [[IndexCommit.publishSnapshot]] (atomic pointer swap; the snapshot
-    * is a pure function of the index state, so a replayed micro-batch
-    * publishes the identical table under a new generation; a crash
-    * between the append and the publish leaves the previous complete
-    * generation serving until the next batch's refresh catches up).
-    * The snapshot after batch B therefore EQUALS the one-shot batch
-    * computation over every basket ingested so far — the
-    * TemporalEdgeIndexSpec gate. Read it with [[trendingSnapshot]].
-    *
-    * Scale: the per-batch refresh reads INDEX rows (≤ one per pair per
-    * date per batch), never the raw basket history; the anchor is a
-    * parameter, not state — decay is read-time by design, so a
-    * deployment advances it with the processing-time clock (or derives
-    * it per refresh) without touching persisted facts. */
-  def ingestServingTrending(docs: DataFrame, dir: String, checkpoint: String,
-      anchorDay: java.sql.Date, outDir: String, k: Int = 10,
-      halflifeDays: Int = 180, maxShift: Int = 30,
-      minWeightPpm: Long = 1000000L, late: Boolean = false,
-      snapshotRetainMillis: Long = 0L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    ingestServing(docs, dir, checkpoint, Some(anchorDay), outDir, k,
-      halflifeDays, maxShift, minWeightPpm, late, snapshotRetainMillis)
-
-  /** [[ingestServingTrending]] with a SLIDING anchor: each refresh
-    * anchors the decay at the newest basket date across the ENTIRE
-    * ingested history — one max over the narrow basketitems claims
-    * table, which records EVERY basket's date (singleton and over-cap
-    * baskets included — r15 advice: the previous pairfacts-side max
-    * only saw pair-witnessing baskets, so a newest batch of singleton
-    * baskets failed to advance "now"). A corpus property, the d174
-    * anchor convention: "now" advances with the data and yesterday's
-    * trending table re-weights itself without any rewrite — the
-    * property the read-time-decay layout exists for. Decay is
-    * read-time, so the advancing anchor is a parameter change per
-    * refresh, never an index change; the gate proves each snapshot
-    * equals the one-shot recompute anchored at that batch's own
-    * corpus max. */
-  def ingestServingTrendingSliding(docs: DataFrame, dir: String,
-      checkpoint: String, outDir: String, k: Int = 10,
-      halflifeDays: Int = 180, maxShift: Int = 30,
-      minWeightPpm: Long = 1000000L, late: Boolean = false,
-      snapshotRetainMillis: Long = 0L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    ingestServing(docs, dir, checkpoint, None, outDir, k,
-      halflifeDays, maxShift, minWeightPpm, late, snapshotRetainMillis)
-
-  /** `late = true` swaps the fail-loudly straddle guard for the
-    * [[lateDelta]] reconciliation (the [[ingestLate]] write path), so a
-    * feed that fragments baskets across micro-batches still maintains a
-    * correct serving snapshot — the snapshot stays a pure function of
-    * everything ingested so far because the index nets to the one-shot
-    * build after every batch. */
-  private def ingestServing(docs: DataFrame, dir: String, checkpoint: String,
-      anchorDay: Option[java.sql.Date], outDir: String, k: Int,
-      halflifeDays: Int, maxShift: Int, minWeightPpm: Long,
-      late: Boolean, snapshotRetainMillis: Long)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          if (late) writeLateBatch(batch.toDF(), dir, id)
-          else {
-            ingestGuard(batch.toDF(), dir, id)
-            writeBatch(batch.toDF(), dir, id, overwriteAll = false)
-          }
-          refreshTrendingSnapshot(s, dir, anchorDay, outDir, k,
-            halflifeDays, maxShift, minWeightPpm, id, snapshotRetainMillis)
-        }
-      }
-      .start()
-
   /** One serving refresh — the pure function of (index state, anchor)
-    * the streaming consumers publish after every micro-batch, factored
-    * out so the registered d192 gate drives the EXACT refresh path in
-    * batch form (sliding anchor read, decayed serve, trendingRelated,
-    * atomic publish). `retainMillis` is [[IndexCommit.publishSnapshot]]'s
-    * GC age floor — raise it when downstream scans of the snapshot can
-    * outlive two publish intervals. */
+    * a serving consumer publishes after each appended batch, and the
+    * path the registered d192 gate drives (sliding anchor read, decayed
+    * serve, trendingRelated, atomic publish). `anchorDay = None` is the
+    * SLIDING anchor: the newest basket date across everything indexed,
+    * so "now" advances with the data and decay re-weights without any
+    * index rewrite. The snapshot is a pure function of the index state,
+    * so a refresh after a replayed batch publishes the identical table
+    * under a new generation. Read it with [[trendingSnapshot]]. Scale:
+    * a refresh reads INDEX rows (≤ one per pair per date per batch),
+    * never the raw basket history.
+    * `retainMillis` is [[IndexCommit.publishSnapshot]]'s GC age floor —
+    * raise it when downstream scans of the snapshot can outlive two
+    * publish intervals. */
   private[graft] def refreshTrendingSnapshot(s: SparkSession, dir: String,
       anchorDay: Option[java.sql.Date], outDir: String, k: Int,
       halflifeDays: Int, maxShift: Int, minWeightPpm: Long, batchId: Long,
@@ -430,11 +318,10 @@ object TemporalEdgeIndex extends PersistedIndex {
         // migration probe (r16 advice): a pre-late-data index has no
         // claims table — the sliding anchor cannot be derived from it
         IndexCommit.requireTable(s, dir, "basketitems",
-          "ingestServingTrendingSliding",
+          "refreshTrendingSnapshot",
           "the index was written by a version that did not persist raw " +
             "claims, which the sliding anchor reads; rebuild it with " +
-            "save()/append() under this version, or use the fixed-anchor " +
-            "ingestServingTrending")
+            "save()/append() under this version, or pass a fixed anchorDay")
         s.read.parquet(s"$dir/basketitems")
           .agg(max(col("bday")).as("mx"))
     }
@@ -450,7 +337,7 @@ object TemporalEdgeIndex extends PersistedIndex {
     ()
   }
 
-  /** The live trending snapshot the serving consumers publish — the
+  /** The live trending snapshot [[refreshTrendingSnapshot]] publishes — the
     * [[IndexCommit.publishSnapshot]] generation the pointer names;
     * fails closed before the first completed publish, and never
     * observes a half-written generation (the pointer swap is an atomic
@@ -591,8 +478,8 @@ object TemporalEdgeIndex extends PersistedIndex {
   }
 
   /** Per-(session, sfDir) SERVED snapshot root (the d192 gate): one
-    * [[refreshTrendingSnapshot]] — the streaming consumers' exact
-    * per-batch refresh, sliding anchor included — published over the
+    * [[refreshTrendingSnapshot]] — the per-batch serving refresh,
+    * sliding anchor included — published over the
     * LATE-built index, read back through the snapshot pointer. */
   private val servedDirMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), String]()
@@ -658,8 +545,8 @@ object TemporalEdgeIndex extends PersistedIndex {
 
     // d192: the SERVING-SNAPSHOT read path under d179's oracle VERBATIM
     // (r16 verdict ask #1) — the snapshot is published over the
-    // LATE-built index by refreshTrendingSnapshot (the streaming
-    // consumers' exact per-batch refresh), with the SLIDING anchor
+    // LATE-built index by refreshTrendingSnapshot (the per-batch
+    // serving refresh), with the SLIDING anchor
     // derived from the basketitems claims (= the corpus max order date
     // here, so the fixed-anchor oracle applies verbatim), and read back
     // through the atomic snapshot pointer. One gate covers the whole

@@ -84,31 +84,6 @@ class EdgeIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(s"$dst/pairfacts").count() == 1L)
   }
 
-  test("streaming ingest accumulates the same edges as batch saves") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val all = Seq(
-      (1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L),   // (1,2) x2
-      (3L, 5L), (3L, 6L), (4L, 5L), (4L, 6L))   // (5,6) x2
-    val dir = java.nio.file.Files.createTempDirectory("graft-edge-ing").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-edge-ck").toString
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long)]
-    val q = EdgeIndex.ingest(in.toDF().toDF("basket_id", "item_id"), dir, ckpt)
-    try {
-      in.addData(all.take(4): _*)
-      q.processAllAvailable()
-      in.addData(all.drop(4): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val batch = java.nio.file.Files.createTempDirectory("graft-edge-b").toString
-    EdgeIndex.save(baskets(all), batch)
-    val a = EdgeIndex.edgesOf(spark, dir)
-    val b = EdgeIndex.edgesOf(spark, batch)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    assert(edgeSet(a) == Set((1L, 2L, 2L), (5L, 6L, 2L)))
-  }
-
   test("appendLate: fragmented and re-delivered baskets net to the one-shot build") {
     val dir = tmp()
     // fragment 1: partial baskets (basket 1 missing item 3; basket 6 absent)
@@ -293,66 +268,6 @@ class EdgeIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(e.getMessage.contains("basketitems") &&
       e.getMessage.contains("rebuild"))
-  }
-
-  test("streaming ingest fails loudly on a basket straddling micro-batches") {
-    // r13 advice: micro-batch boundaries are time-sliced — basket 3's
-    // rows arriving across TWO addData calls would miss the (5,6) pair
-    // silently; the ingest guard must fail the stream instead
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-edge-str").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-edge-sck").toString
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long)]
-    val q = EdgeIndex.ingest(in.toDF().toDF("basket_id", "item_id"), dir, ckpt)
-    try {
-      in.addData((1L, 1L), (1L, 2L), (3L, 5L)) // basket 3 starts here...
-      q.processAllAvailable()
-      in.addData((3L, 6L), (4L, 7L))           // ...and straddles into batch 2
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
-      }
-      assert(e.getMessage.contains("split a") ||
-        Option(e.getCause).exists(_.getMessage.contains("split a")))
-      // the offending batch was NOT written: the index still serves
-      // exactly the first batch's facts and stays committed
-      assert(spark.read.parquet(s"$dir/basketids")
-        .select(col("basket_id")).distinct().count() == 2L)
-      assert(IndexCommit.isCommitted(spark, dir))
-    } finally q.stop()
-  }
-
-  test("streaming ingest restarted with a FRESH checkpoint refuses a torn index") {
-    // the normal-path twin of the appendLate torn-write refusal: a
-    // checkpointed replay of the crashed batch id is safe, but a
-    // restart with a NEW checkpoint re-numbers micro-batches from 0 —
-    // its batch 0 would absorb the torn batch's partial claims and
-    // restore the marker over them. ingestGuard must fail the stream.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = tmp()
-    EdgeIndex.appendLate(baskets(Seq((1L, 1L), (1L, 2L))), dir)
-    EdgeIndex.appendLate(baskets(Seq((2L, 1L), (2L, 2L))), dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "_graft_commit"), false)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$dir/basketitems/ingest_batch=1"), true)
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long)]
-    val q = EdgeIndex.ingest(in.toDF().toDF("basket_id", "item_id"),
-      dir, tmp()) // fresh checkpoint => batch ids restart at 0
-    try {
-      in.addData((9L, 1L), (9L, 2L))
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
-      }
-      assert(e.getMessage.contains("PARTIAL") ||
-        Option(e.getCause).exists(_.getMessage.contains("PARTIAL")))
-      // still fail-closed for readers — the marker was NOT restored
-      assert(!IndexCommit.isCommitted(spark, dir))
-    } finally q.stop()
   }
 
   test("the per-batch cap gates a planted runaway basket at write time") {

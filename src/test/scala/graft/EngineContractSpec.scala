@@ -3,12 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import graft.etl.EtlQueries
 
-/** Cross-cutting engine contracts: driver smoke, filter/column pushdown
-  * reaching the parquet scan, and batch/stream parity of the event
-  * pipeline over the real test parquet.
+/** Cross-cutting engine contracts: driver smoke, the registration and
+  * bench coverage gates, and filter/column pushdown reaching the parquet
+  * scan.
   */
 class EngineContractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -44,6 +43,16 @@ class EngineContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val unregistered = bench.toSet -- SparkEntry.registered.map(_.name).toSet
     assert(unregistered.isEmpty,
       s"benched but not registered: $unregistered")
+  }
+
+  // Bench headlines a memoized query by its cold first run; it reads the
+  // memo sets from the families, so each set must name queries of the
+  // family that registers it (a stray name would silently fall back to
+  // min-of-2).
+  test("every memoized query is a registered query of its own family") {
+    val stray = SparkEntry.families.flatMap(f =>
+      (f.memoized -- f.queries.map(_.name)).map(n => s"${f.tag}: $n"))
+    assert(stray.isEmpty, s"memoized but not registered in its family: $stray")
   }
 
   // e01–e06 read their HTML roster corpus from session conf: the gate
@@ -131,33 +140,5 @@ class EngineContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val many = graft.ops.Tables.documents(spark, dir)
     assert(many.queryExecution.analyzed.collect { case r: Repartition => r }.isEmpty,
       "many-split scan should stay split-governed, not shuffle")
-  }
-
-  test("streaming hourly counts over the real events parquet match batch") {
-    // file-stream sources need a directory; stage the real file into one
-    val dir = java.nio.file.Files.createTempDirectory("graft-events-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/events.parquet"),
-      dir.resolve("events.parquet"))
-    val stream = graft.streaming.Streams.eventStream(spark, dir.toString)
-    val q = graft.streaming.Streams.hourlyCounts(stream)
-      .writeStream.format("memory").queryName("hourly_real")
-      .outputMode(OutputMode.Update).start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("hourly_real")
-        .groupBy(col("hour_start"), col("event_type"))
-        .agg(max(col("n_events")).as("n_events")) // update mode: latest value
-        .collect()
-        .map(r => (r.getTimestamp(0).getTime, r.getString(1), r.getLong(2))).toSet
-      val batch = graft.ops.Tables.events(spark, sf)
-        .withColumn("ts", timestamp_micros(col("ts_us")))
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("w.start").as("hour_start"), col("event_type"), col("n_events"))
-        .collect()
-        .map(r => (r.getTimestamp(0).getTime, r.getString(1), r.getLong(2))).toSet
-      assert(streamed == batch)
-    } finally q.stop()
   }
 }

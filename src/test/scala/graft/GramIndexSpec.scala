@@ -44,41 +44,23 @@ class GramIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got == Map(10L -> 0L, 11L -> 0L, 12L -> 1L))
 
+    // compaction merges the overlapping batches into one deduped
+    // generation with the same vocabulary
+    val dst = java.nio.file.Files.createTempDirectory("graft-gram-c").toString
+    GramIndex.compactTo(spark, dir, dst)
+    val (a, c) = (GramIndex.vocab(spark, dir), GramIndex.vocab(spark, dst))
+    assert(a.exceptAll(c).isEmpty && c.exceptAll(a).isEmpty)
+    val rows = spark.read.parquet(s"$dst/grams")
+    assert(rows.select(col("ingest_batch").cast("long")).distinct()
+      .collect().map(_.getLong(0)).toSet == Set(-1L))
+    assert(rows.count() == rows.select("gram_hash").distinct().count())
+
     // a missing commit marker fails the read closed
     val p = new org.apache.hadoop.fs.Path(dir, "_graft_commit")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
     intercept[IllegalArgumentException] {
       GramIndex.noveltyAgainst(spark, probe, dir)
     }
-  }
-
-  test("streaming ingest accumulates the same vocabulary as batch saves") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-gram-ing").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-gram-ck").toString
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = GramIndex.ingest(in.toDF().toDF("doc_id", "text"), dir, ckpt)
-    try {
-      in.addData((1L, "a b c"))
-      q.processAllAvailable()
-      in.addData((2L, "x y"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val batch = java.nio.file.Files.createTempDirectory("graft-gram-b").toString
-    GramIndex.save(docsOf((1L, "a b c"), (2L, "x y")), batch)
-    val a = GramIndex.vocab(spark, dir)
-    val b = GramIndex.vocab(spark, batch)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-
-    // compaction: one deduped generation, same vocabulary
-    val dst = java.nio.file.Files.createTempDirectory("graft-gram-c").toString
-    GramIndex.compactTo(spark, dir, dst)
-    val c = GramIndex.vocab(spark, dst)
-    assert(c.exceptAll(b).isEmpty && b.exceptAll(c).isEmpty)
-    val rows = spark.read.parquet(s"$dst/grams")
-    assert(rows.select("ingest_batch").distinct().as[Long].collect().toSet == Set(-1L))
-    assert(rows.count() == rows.select("gram_hash").distinct().count())
   }
 
   test("d106 binding reproduces d102's direct result on the driver corpus") {

@@ -86,37 +86,6 @@ class HashIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("streaming ingest builds the same index as batch save; compaction preserves answers") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-hash-ingest").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-hash-ckpt").toString
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = HashIndex.ingest(in.toDF().toDF("doc_id", "text"), dir, ckpt)
-    try {
-      in.addData((1L, "alpha"), (2L, "beta"))
-      q.processAllAvailable()
-      in.addData((3L, "alpha"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val probe = docsOf(Seq((100L, "alpha"), (101L, "zeta")))
-    def ans(d: String) = HashIndex.dedupAgainst(spark, probe, d)
-      .collect().map(r => r.getLong(0) -> Option(r.get(2))).toMap
-    assert(ans(dir) == Map(100L -> Some(1L), 101L -> None))
-
-    val dst = java.nio.file.Files.createTempDirectory("graft-hash-compact").toString
-    HashIndex.compactTo(spark, dir, dst)
-    assert(ans(dst) == Map(100L -> Some(1L), 101L -> None))
-    // compacted index is one generation, bloom rows folded to one
-    val batches = spark.read.parquet(s"$dst/hashes")
-      .select(col("ingest_batch")).distinct().as[Long].collect().toSet
-    assert(batches == Set(-1L))
-    assert(spark.read.parquet(s"$dst/bloom").count() == 1L)
-    assert(HashIndex.dedupAgainstBloom(spark, probe, dst)
-      .collect().map(r => r.getLong(0) -> Option(r.get(2))).toMap
-      == Map(100L -> Some(1L), 101L -> None))
-  }
-
   test("bloom probe equals the exact probe and prunes proven-novel rows") {
     val dir = java.nio.file.Files.createTempDirectory("graft-hash-bloom").toString
     HashIndex.save(docsOf(Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha"))), dir)
@@ -145,6 +114,18 @@ class HashIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.sql.Encoders.scalaLong).collect()
     val fps = novelHashes.count(bloom.mightContainLong)
     assert(fps < 50, s"bloom passed $fps of 200 novel texts — not pruning")
+
+    // compaction: one generation, the per-batch bloom rows folded into
+    // one, and both probes answer as before
+    val dst = java.nio.file.Files.createTempDirectory("graft-hash-compact").toString
+    HashIndex.compactTo(spark, dir, dst)
+    assert(spark.read.parquet(s"$dst/hashes").select(col("ingest_batch").cast("long"))
+      .distinct().collect().map(_.getLong(0)).toSet == Set(-1L))
+    assert(spark.read.parquet(s"$dst/bloom").count() == 1L)
+    assert(HashIndex.dedupAgainstBloom(spark, probe, dst)
+      .collect().map(r => (r.getLong(0), Option(r.get(2)), r.getBoolean(3))).toSet == exact)
+    assert(HashIndex.dedupAgainst(spark, probe, dst)
+      .collect().map(r => (r.getLong(0), Option(r.get(2)), r.getBoolean(3))).toSet == exact)
   }
 
   test("registered d101 binding: bloom answers over the mod-3 split") {

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
-import graft.ops.{Corpus, IndexCommit, IvfIndex, LexIndex, SketchIndex, Tables}
+import graft.ops.{Corpus, IndexCommit, IvfIndex, LexIndex, Tables}
 
 /** Compaction is a pure LAYOUT change: a compacted snapshot must serve
   * byte-identical results from a single `ingest_batch=-1` generation,
@@ -48,22 +48,6 @@ class IndexCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hits(dst) ==
       Corpus.bm25Rank(docs, Corpus.Bm25Query).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq)
-  }
-
-  test("sketch: compacted snapshot finds identical near-duplicates") {
-    val docs = Tables.documents(spark, sf)
-    val src = tmp("graft-skc-src"); val dst = tmp("graft-skc-dst")
-    SketchIndex.save(docs.filter(col("doc_id") % 2 === 0), src)
-    SketchIndex.append(docs.filter(col("doc_id") % 2 === 1), src)
-    SketchIndex.compactTo(spark, src, dst)
-
-    assert(batchDirs(dst, "sketches") == Seq("ingest_batch=-1"))
-    assert(batchDirs(dst, "buckets") == Seq("ingest_batch=-1"))
-    def pairs(dir: String) =
-      SketchIndex.nearDupAgainst(spark, docs, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val expected = pairs(src)
-    assert(pairs(dst) == expected && expected.nonEmpty)
   }
 
   test("ivf: compacted snapshot searches identically, quantizer preserved") {

@@ -185,43 +185,6 @@ class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("streaming ingest assigns micro-batches to the saved quantizer (exactly-once)") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val e = graft.ops.Tables.embeddings(spark, sf)
-      .select(col("vec_id"), expr("transform(embedding, x -> cast(x AS double))").as("v"))
-    val half = e.where(col("vec_id") % 2 === 0)
-    val rest = e.where(col("vec_id") % 2 === 1)
-      .as[(Long, Array[Double])].collect()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ivf-ckpt").toString
-    IvfIndex.save(IvfIndex.build(spark, half, k = 8, iters = 2), dir)
-
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Double])]
-    val q = IvfIndex.ingest(spark, in.toDF().toDF("vec_id", "v"), dir, ckpt)
-    try {
-      val (b1, b2) = rest.partition(_._1 % 4 == 1)
-      in.addData(b1.toIndexedSeq); q.processAllAvailable()
-      in.addData(b2.toIndexedSeq); q.processAllAvailable()
-    } finally q.stop()
-
-    val loaded = IvfIndex.load(spark, dir)
-    assert(loaded.cells.count() == e.count())
-    // streamed rows were assigned with the same fixed quantizer -> search
-    // equals the batch-appended index's answers
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-ivf-batch").toString
-    IvfIndex.save(IvfIndex.build(spark, half, k = 8, iters = 2), dir2)
-    IvfIndex.appendSaved(spark, dir2,
-      e.where(col("vec_id") % 2 === 1))
-    val viaStream = IvfIndex.search(spark, loaded, e, probes = 3)
-      .as[(Long, Long, Double)].collect().toSet
-    val viaBatch = IvfIndex.search(spark, IvfIndex.load(spark, dir2), e, probes = 3)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(viaStream == viaBatch)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir2))
-  }
-
   test("centroid cap is byte-budgeted by dimensionality, not a flat row count") {
     import graft.ops.IvfIndex.{autoK, CentroidBudgetBytes}
     val huge = 1L << 40

@@ -69,28 +69,6 @@ class LexIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(LexIndex.searchBm25(spark, dir, Corpus.Bm25Query)) == once)
   }
 
-  test("streaming ingest: micro-batched corpus equals the direct computation") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lex-stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-lex-ckpt").toString
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = LexIndex.ingest(
-      in.toDF().toDF("doc_id", "text"), dir, ckpt)
-    try {
-      val all = docs.select(col("doc_id"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      val (b1, b2) = all.partition(_._1 % 3 == 0)
-      in.addData(b1.toIndexedSeq)
-      q.processAllAvailable()
-      in.addData(b2.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(rows(LexIndex.searchBm25(spark, dir, Corpus.Bm25Query)) ==
-      rows(Corpus.bm25Rank(docs, Corpus.Bm25Query)))
-  }
-
   test("search fails closed on an index missing its commit marker") {
     val docs = Tables.documents(spark, sf)
     val dir = java.nio.file.Files.createTempDirectory("graft-lex-mark").toString

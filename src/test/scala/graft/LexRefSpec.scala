@@ -90,4 +90,31 @@ class LexRefSpec extends AnyFunSuite with BeforeAndAfterAll {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25), prop)
     assert(res.passed, res.status.toString)
   }
+
+  test("tfidfTopTerms ranks ln 9 and 2·ln 3 as a tie, broken by term (fixed 9-doc corpus)") {
+    import spark.implicits._
+    // N = 9. Doc 0: col (tf 1, df 1) scores ln 9 and join (tf 2, df 3)
+    // scores 2·ln 3 for rank 3. Doc 1 swaps the roles: row (tf 1, df 1)
+    // = ln 9 against agg (tf 2, df 3) = 2·ln 3. The two are equal in
+    // exact arithmetic, under math.log and under DuckDB's ln, so the
+    // term breaks the tie; StrictMath.log gives 2·ln 3 one ulp below
+    // ln 9, which would put row ahead of agg in doc 1.
+    val docs = Seq(
+      "hash hash scan scan col join join",
+      "agg agg row",
+      "join agg",
+      "join agg") ++ Seq.fill(5)("the")
+    val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val got = Corpus.tfidfTopTerms(df).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3)))
+      .sortBy(r => (r._1, r._2)).toSeq
+    val expect = Seq(
+      (0L, 1, "hash", 4.3944), (0L, 2, "scan", 4.3944), (0L, 3, "col", 2.1972),
+      (1L, 1, "agg", 2.1972), (1L, 2, "row", 2.1972),
+      (2L, 1, "agg", 1.0986), (2L, 2, "join", 1.0986),
+      (3L, 1, "agg", 1.0986), (3L, 2, "join", 1.0986)) ++
+      (4L to 8L).map(i => (i, 1, "the", 0.5878))
+    assert(got == expect)
+  }
 }

@@ -86,26 +86,6 @@ class LineIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(served.exceptAll(direct).isEmpty && direct.exceptAll(served).isEmpty)
   }
 
-  test("streaming ingest accumulates the same counts as batch saves") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-linedf-ing").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-linedf-ck").toString
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = LineIndex.ingest(in.toDF().toDF("doc_id", "text"), dir, ckpt)
-    try {
-      in.addData(corpus.take(2): _*)
-      q.processAllAvailable()
-      in.addData(corpus.drop(2): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val batch = java.nio.file.Files.createTempDirectory("graft-linedf-b").toString
-    LineIndex.save(docsOf(corpus: _*), batch)
-    val a = LineIndex.lineDocFreq(spark, dir)
-    val b = LineIndex.lineDocFreq(spark, batch)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-  }
-
   test("d97 binding reproduces d95's direct result on the fixture corpus") {
     val sf = "/root/testdata/sf0.001"
     val got = SparkEntry.queries("d97_boilerplate_indexed")(spark, sf)

@@ -83,26 +83,6 @@ class LmIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(vocabRows(LmIndex.vocab(spark, dir)) == once)
   }
 
-  test("streaming ingest: micro-batched corpus equals the one-shot model") {
-    import spark.implicits._
-    val dir = tmp("stream")
-    val ckpt = tmp("ckpt")
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = LmIndex.ingest(in.toDF().toDF("doc_id", "text"), dir, ckpt)
-    try {
-      val all = docs.select(col("doc_id"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
-      val (b1, b2) = all.partition(_._1 % 3 == 0)
-      in.addData(b1.toIndexedSeq)
-      q.processAllAvailable()
-      in.addData(b2.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(vocabRows(LmIndex.vocab(spark, dir)) ==
-      vocabRows(Curation.unigramVocab(docs)))
-  }
-
   test("reads fail closed on a model missing its commit marker") {
     val dir = tmp("mark")
     LmIndex.save(docs, dir)

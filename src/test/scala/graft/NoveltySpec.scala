@@ -58,4 +58,27 @@ class NoveltySpec extends AnyFunSuite with BeforeAndAfterAll {
           .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }
   }
+
+  test("noveltyScoreFrom scores a document stream against a frozen vocabulary") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // the d102/d106 scoring half is a stream-static join + aggregation,
+    // so an arriving snapshot can be novelty-scored as it lands
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    val vocab = Corpus.bigramVocab(Seq((1L, "a b c")).toDF("doc_id", "text"))
+    val q = Corpus
+      .noveltyScoreFrom(in.toDF().toDF("doc_id", "text"), vocab)
+      .writeStream.format("memory").queryName("novelty_stream")
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete).start()
+    try {
+      in.addData((10L, "a b x"), (11L, "a b c"))
+      q.processAllAvailable()
+      val rows = spark.table("novelty_stream").collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
+        .toMap
+      assert(rows == Map(
+        10L -> ((2L, 1L, 0.5)),  // {a b} seen, {b x} novel
+        11L -> ((2L, 0L, 0.0))))
+    } finally q.stop()
+  }
 }

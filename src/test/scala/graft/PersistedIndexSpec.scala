@@ -60,7 +60,6 @@ class PersistedIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
         df.drop(IndexCommit.BatchCol).collect().map(_.mkString("|")).toSet)
 
   private lazy val families = Seq(
-    Fam("sketch", SketchIndex, "sketches"),
     Fam("lex", LexIndex, "postings"),
     Fam("lm", LmIndex, "counts",
       normalize = df => df.groupBy(col("token")).agg(sum(col("cnt")).as("c"))

@@ -46,35 +46,18 @@ class PhraseIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException] {
       PhraseIndex.append(docsOf((1L, "x")), dir, checkDisjoint = true)
     }
+    // compaction: one generation serving the same answers
+    val dst = java.nio.file.Files.createTempDirectory("graft-phrase-c").toString
+    PhraseIndex.compactTo(spark, dir, dst)
+    assert(answers(PhraseIndex.searchPhrase(spark, dst, "a b"))
+      == Map(1L -> 2L, 2L -> 1L))
+    assert(spark.read.parquet(s"$dst/postings").select(col("ingest_batch").cast("long"))
+      .distinct().collect().map(_.getLong(0)).toSet == Set(-1L))
     val p = new org.apache.hadoop.fs.Path(dir, "_graft_commit")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
     intercept[IllegalArgumentException] {
       PhraseIndex.searchPhrase(spark, dir, "a b")
     }
-  }
-
-  test("streaming ingest matches batch; compaction preserves answers") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-phrase-ing").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-phrase-ck").toString
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = PhraseIndex.ingest(in.toDF().toDF("doc_id", "text"), dir, ckpt)
-    try {
-      in.addData((1L, "x y x y z"))
-      q.processAllAvailable()
-      in.addData((2L, "x y"))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(answers(PhraseIndex.searchPhrase(spark, dir, "x y"))
-      == Map(1L -> 2L, 2L -> 1L))
-    val dst = java.nio.file.Files.createTempDirectory("graft-phrase-c").toString
-    PhraseIndex.compactTo(spark, dir, dst)
-    assert(answers(PhraseIndex.searchPhrase(spark, dst, "x y"))
-      == Map(1L -> 2L, 2L -> 1L))
-    val batches = spark.read.parquet(s"$dst/postings")
-      .select(col("ingest_batch")).distinct().as[Long].collect().toSet
-    assert(batches == Set(-1L))
   }
 
   test("d112 binding reproduces d111's direct result") {

@@ -72,28 +72,6 @@ class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("streaming ingest indexes micro-batches exactly-once") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = tmp("graft-pqi-ing"); val cp = tmp("graft-pqi-cp")
-    val cb = Pq.train(spark, vecs, m = 8, k = 16, iters = 2)
-    PqIndex.save(spark, cb, vecs.where(col("vec_id") < 100), dir)
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Float])]
-    val q = PqIndex.ingest(spark, in.toDF().toDF("vec_id", "embedding"), dir, cp)
-    try {
-      val late = vecs.where(col("vec_id") >= 100)
-        .as[(Long, Array[Float])].collect().map { case (i, v) => (i, v.toSeq) }
-      in.addData(late.take(50).toSeq)
-      q.processAllAvailable()
-      in.addData(late.drop(50).toSeq)
-      q.processAllAvailable()
-      assert(PqIndex.loadCodes(spark, dir).count() == vecs.count())
-      val direct = Pq.topKAdc(vecs, Pq.encode(spark, vecs, cb), cb).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(hits(dir) == direct)
-    } finally q.stop()
-  }
-
   test("compacted snapshot serves identically from one generation; source untouched") {
     val src = tmp("graft-pqi-src"); val dst = tmp("graft-pqi-dst")
     val cb = Pq.train(spark, vecs, m = 8, k = 16, iters = 2)

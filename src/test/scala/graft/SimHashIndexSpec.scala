@@ -54,36 +54,16 @@ class SimHashIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException] {
       SimHashIndex.append(docsOf((1L, "x y z")), dir, checkDisjoint = true)
     }
+    // compaction: one generation serving the same pairs
+    val dst = java.nio.file.Files.createTempDirectory("graft-sh-c").toString
+    SimHashIndex.compactTo(spark, dir, dst)
+    assert(pairs(SimHashIndex.nearDupAgainst(spark, docsOf((100L, t)), dst)) == got)
+    assert(spark.read.parquet(s"$dst/signatures").select(col("ingest_batch").cast("long"))
+      .distinct().collect().map(_.getLong(0)).toSet == Set(-1L))
     val p = new org.apache.hadoop.fs.Path(dir, "_graft_commit")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
     intercept[IllegalArgumentException] {
       SimHashIndex.nearDupAgainst(spark, docsOf((100L, t)), dir)
     }
-  }
-
-  test("streaming ingest matches batch; compaction preserves answers") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-sh-ing").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sh-ck").toString
-    val t = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = SimHashIndex.ingest(in.toDF().toDF("doc_id", "text"), dir, ckpt)
-    try {
-      in.addData((1L, t))
-      q.processAllAvailable()
-      in.addData((2L, "zz qq ww"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val probe = docsOf((100L, t))
-    assert(pairs(SimHashIndex.nearDupAgainst(spark, probe, dir))
-      .map(p => (p._1, p._2)) == Set((1L, 100L)))
-    val dst = java.nio.file.Files.createTempDirectory("graft-sh-c").toString
-    SimHashIndex.compactTo(spark, dir, dst)
-    assert(pairs(SimHashIndex.nearDupAgainst(spark, probe, dst))
-      .map(p => (p._1, p._2)) == Set((1L, 100L)))
-    val batches = spark.read.parquet(s"$dst/signatures")
-      .select(col("ingest_batch")).distinct().as[Long].collect().toSet
-    assert(batches == Set(-1L))
   }
 }

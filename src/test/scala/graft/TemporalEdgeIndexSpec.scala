@@ -129,43 +129,12 @@ class TemporalEdgeIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows == 0L)
   }
 
-  test("streaming ingest equals the batch save at every anchor") {
+  test("trending refresh: snapshot after every appended batch equals the batch recompute") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = tmp()
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String)]
-    val q = TemporalEdgeIndex.ingest(
-      mem.toDF().toDF("basket_id", "item_id", "bday")
-        .withColumn("bday", col("bday").cast("date")),
-      dir, tmp())
-    try {
-      mem.addData(all.filter(_._1 % 2 == 0): _*)
-      q.processAllAvailable()
-      mem.addData(all.filter(_._1 % 2 == 1): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val batch = tmp()
-    TemporalEdgeIndex.save(baskets(all), batch)
-    for (day <- Seq("2024-12-31", "2025-07-02")) {
-      assert(edgeSet(TemporalEdgeIndex.decayedEdgesOf(spark, dir,
-          anchor(day), minWeightPpm = 0L)) ==
-        edgeSet(TemporalEdgeIndex.decayedEdgesOf(spark, batch,
-          anchor(day), minWeightPpm = 0L)), s"anchor $day")
-    }
-  }
-
-  test("streaming trending consumer: snapshot after every micro-batch equals the batch recompute") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val dir = tmp(); val out = tmp() + "/trending"
     val day = java.sql.Date.valueOf("2024-12-31")
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String)]
-    val q = TemporalEdgeIndex.ingestServingTrending(
-      mem.toDF().toDF("basket_id", "item_id", "bday")
-        .withColumn("bday", col("bday").cast("date")),
-      dir, tmp(), day, out, k = 10, minWeightPpm = 0L)
+    def add(rows: Seq[(Long, Long, String)], batchId: Long): Unit =
+      appendAndRefresh(rows, dir, Some(day), out, batchId)
     def snapshot(): Set[(Long, Long, Long, Long)] =
       TemporalEdgeIndex.trendingSnapshot(spark, out)
         .select(col("item_id"), col("rel_id"), col("weight_ppm"), col("rank"))
@@ -182,44 +151,34 @@ class TemporalEdgeIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
         .select(col("item_id"), col("rel_id"), col("weight_ppm"), col("rank"))
         .as[(Long, Long, Long, Long)].collect().toSet
     }
-    try {
-      // batch 1: the even baskets — the maintained snapshot must match
-      // the one-shot computation over exactly what has arrived
-      mem.addData(all.filter(_._1 % 2 == 0): _*)
-      q.processAllAvailable()
-      assert(snapshot() == direct(all.filter(_._1 % 2 == 0)))
-      // batch 2: the odd baskets append; the refreshed snapshot must
-      // now equal the recompute over the FULL ingested history (decayed
-      // cross-batch sums included — basket 1 re-weights pair (1,2))
-      mem.addData(all.filter(_._1 % 2 == 1): _*)
-      q.processAllAvailable()
-      assert(snapshot() == direct(all))
-      // the publish protocol (r15 advice): an atomic pointer names the
-      // live generation; at most the immediately-previous one is
-      // retained for in-flight readers, older ones are GC'd
-      val root = new java.io.File(out)
-      assert(new java.io.File(root, "_graft_current").exists())
-      val gens = root.listFiles().filter(f =>
-        f.isDirectory && f.getName.startsWith("gen-"))
-      assert(gens.length >= 1 && gens.length <= 2,
-        s"expected current (+ previous) generations, got ${gens.length}")
-    } finally q.stop()
+    // batch 1: the even baskets — the maintained snapshot must match
+    // the one-shot computation over exactly what has arrived
+    add(all.filter(_._1 % 2 == 0), 0L)
+    assert(snapshot() == direct(all.filter(_._1 % 2 == 0)))
+    // batch 2: the odd baskets append; the refreshed snapshot must
+    // now equal the recompute over the FULL indexed history (decayed
+    // cross-batch sums included — basket 1 re-weights pair (1,2))
+    add(all.filter(_._1 % 2 == 1), 1L)
+    assert(snapshot() == direct(all))
+    // the publish protocol (r15 advice): an atomic pointer names the
+    // live generation; at most the immediately-previous one is
+    // retained for in-flight readers, older ones are GC'd
+    val root = new java.io.File(out)
+    assert(new java.io.File(root, "_graft_current").exists())
+    val gens = root.listFiles().filter(f =>
+      f.isDirectory && f.getName.startsWith("gen-"))
+    assert(gens.length >= 1 && gens.length <= 2,
+      s"expected current (+ previous) generations, got ${gens.length}")
     // and the gated serving read agrees with d183's composition
     assert(snapshot() ==
       edgeSet4(Graphs.trendingRelated(TemporalEdgeIndex.decayedEdgesOf(
         spark, dir, anchor("2024-12-31"), minWeightPpm = 0L), k = 10)))
   }
 
-  test("sliding-anchor streaming trending: each snapshot anchors at its own corpus max") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
+  test("sliding-anchor trending: each snapshot anchors at its own corpus max") {
     val dir = tmp(); val out = tmp() + "/trending"
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String)]
-    val q = TemporalEdgeIndex.ingestServingTrendingSliding(
-      mem.toDF().toDF("basket_id", "item_id", "bday")
-        .withColumn("bday", col("bday").cast("date")),
-      dir, tmp(), out, k = 10, minWeightPpm = 0L)
+    def add(rows: Seq[(Long, Long, String)], batchId: Long): Unit =
+      appendAndRefresh(rows, dir, None, out, batchId)
     def snapshot(): Set[(Long, Long, Long, Long)] =
       edgeSet4(TemporalEdgeIndex.trendingSnapshot(spark, out))
     def direct(rows: Seq[(Long, Long, String)], day: String): Set[(Long, Long, Long, Long)] = {
@@ -233,28 +192,36 @@ class TemporalEdgeIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
         minWeightPpm = 0L), k = 10))
     }
     val odd = all.filter(_._1 % 2 == 1)
-    try {
-      // batch 1: only the stale-dated baskets — "now" is their own max
-      // (2024-07-01), so nothing has decayed yet and both pairs weigh
-      // a full 1e6
-      mem.addData(odd: _*)
-      q.processAllAvailable()
-      assert(snapshot() == direct(odd, "2024-07-01"))
-      // batch 2: the fresh baskets arrive and the anchor ADVANCES to
-      // 2024-12-31 — the same persisted facts re-weight (the July
-      // baskets now sit one half-life back) without any rewrite
-      mem.addData(all.filter(_._1 % 2 == 0): _*)
-      q.processAllAvailable()
-      assert(snapshot() == direct(all, "2024-12-31"))
-      // batch 3: ONE singleton basket with a newer date — no new pairs,
-      // but the anchor must still advance (r15 advice: a pairfacts-side
-      // max never saw singleton/over-cap baskets; the anchor now reads
-      // basketitems, where EVERY claim lands) and the whole served
-      // table re-weights against the new "now"
-      mem.addData((9L, 9L, "2025-06-30"))
-      q.processAllAvailable()
-      assert(snapshot() == direct(all, "2025-06-30"))
-    } finally q.stop()
+    // batch 1: only the stale-dated baskets — "now" is their own max
+    // (2024-07-01), so nothing has decayed yet and both pairs weigh
+    // a full 1e6
+    add(odd, 0L)
+    assert(snapshot() == direct(odd, "2024-07-01"))
+    // batch 2: the fresh baskets arrive and the anchor ADVANCES to
+    // 2024-12-31 — the same persisted facts re-weight (the July
+    // baskets now sit one half-life back) without any rewrite
+    add(all.filter(_._1 % 2 == 0), 1L)
+    assert(snapshot() == direct(all, "2024-12-31"))
+    // batch 3: ONE singleton basket with a newer date — no new pairs,
+    // but the anchor must still advance (r15 advice: a pairfacts-side
+    // max never saw singleton/over-cap baskets; the anchor now reads
+    // basketitems, where EVERY claim lands) and the whole served
+    // table re-weights against the new "now"
+    add(Seq((9L, 9L, "2025-06-30")), 2L)
+    assert(snapshot() == direct(all, "2025-06-30"))
+  }
+
+  /** One serving step as a deployment runs it: append the batch
+    * (reconciling late fragments with `late`), then publish the
+    * refreshed trending snapshot — anchored at `anchorDay`, or sliding
+    * (the newest indexed basket date) when None. */
+  private def appendAndRefresh(rows: Seq[(Long, Long, String)], dir: String,
+      anchorDay: Option[java.sql.Date], out: String, batchId: Long,
+      late: Boolean = false): Unit = {
+    if (late) TemporalEdgeIndex.appendLate(baskets(rows), dir)
+    else TemporalEdgeIndex.append(baskets(rows), dir)
+    TemporalEdgeIndex.refreshTrendingSnapshot(spark, dir, anchorDay, out,
+      k = 10, halflifeDays = 180, maxShift = 30, minWeightPpm = 0L, batchId)
   }
 
   private def edgeSet4(df: DataFrame): Set[(Long, Long, Long, Long)] = {
@@ -263,16 +230,8 @@ class TemporalEdgeIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .as[(Long, Long, Long, Long)].collect().toSet
   }
 
-  test("late-data streaming ingest: out-of-order fragments reconcile to the in-order batch build") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
+  test("late-data appends: out-of-order fragments reconcile to the in-order batch build") {
     val dir = tmp()
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String)]
-    val q = TemporalEdgeIndex.ingestLate(
-      mem.toDF().toDF("basket_id", "item_id", "bday")
-        .withColumn("bday", col("bday").cast("date")),
-      dir, tmp())
     // the corpus a well-behaved feed would have delivered in order:
     // basket 1 = {1,2,3,4} dated 2024-12-31 (its LATEST claim — a late
     // fragment advances the basket's date), basket 2 = {1,2} fresh,
@@ -282,22 +241,20 @@ class TemporalEdgeIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, 3L, "2024-12-31"), (1L, 4L, "2024-12-31"),
       (2L, 1L, "2024-12-31"), (2L, 2L, "2024-12-31"),
       (3L, 3L, "2024-07-01"), (3L, 4L, "2024-07-01"))
-    try {
-      // batch 1: a FRAGMENT of basket 1 plus complete basket 3
-      mem.addData((1L, 1L, "2024-07-01"), (1L, 2L, "2024-07-01"),
-        (3L, 3L, "2024-07-01"), (3L, 4L, "2024-07-01"))
-      q.processAllAvailable()
-      // batch 2: complete basket 2 plus a LATE fragment of basket 1
-      // whose date ADVANCES the basket — the old-date pair (1,2) must
-      // retract and reappear at the new date
-      mem.addData((2L, 1L, "2024-12-31"), (2L, 2L, "2024-12-31"),
-        (1L, 3L, "2024-12-31"))
-      q.processAllAvailable()
-      // batch 3: a re-delivered claim (must be a no-op) plus one more
-      // late item for basket 1
-      mem.addData((1L, 2L, "2024-07-01"), (1L, 4L, "2024-12-31"))
-      q.processAllAvailable()
-    } finally q.stop()
+    // batch 1: a FRAGMENT of basket 1 plus complete basket 3
+    TemporalEdgeIndex.appendLate(baskets(Seq(
+      (1L, 1L, "2024-07-01"), (1L, 2L, "2024-07-01"),
+      (3L, 3L, "2024-07-01"), (3L, 4L, "2024-07-01"))), dir)
+    // batch 2: complete basket 2 plus a LATE fragment of basket 1
+    // whose date ADVANCES the basket — the old-date pair (1,2) must
+    // retract and reappear at the new date
+    TemporalEdgeIndex.appendLate(baskets(Seq(
+      (2L, 1L, "2024-12-31"), (2L, 2L, "2024-12-31"),
+      (1L, 3L, "2024-12-31"))), dir)
+    // batch 3: a re-delivered claim (must be a no-op) plus one more
+    // late item for basket 1
+    TemporalEdgeIndex.appendLate(baskets(Seq(
+      (1L, 2L, "2024-07-01"), (1L, 4L, "2024-12-31"))), dir)
     val batch = tmp()
     TemporalEdgeIndex.save(baskets(merged), batch)
     for (day <- Seq("2024-12-31", "2025-07-02")) {
@@ -344,15 +301,7 @@ class TemporalEdgeIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sliding-anchor trending with late = true: fragmented baskets still serve the one-shot answer") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val dir = tmp(); val out = tmp() + "/trending"
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String)]
-    val q = TemporalEdgeIndex.ingestServingTrendingSliding(
-      mem.toDF().toDF("basket_id", "item_id", "bday")
-        .withColumn("bday", col("bday").cast("date")),
-      dir, tmp(), out, k = 10, minWeightPpm = 0L, late = true)
     def direct(rows: Seq[(Long, Long, String)], day: String): Set[(Long, Long, Long, Long)] = {
       val shifts = baskets(rows).groupBy(col("basket_id"))
         .agg(max(col("bday")).as("bday"))
@@ -363,24 +312,22 @@ class TemporalEdgeIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
         baskets(rows).select(col("basket_id"), col("item_id")), shifts,
         minWeightPpm = 0L), k = 10))
     }
-    try {
-      // batch 1: a FRAGMENT of basket 1 plus complete basket 3
-      mem.addData((1L, 1L, "2024-07-01"), (1L, 2L, "2024-07-01"),
-        (3L, 3L, "2024-07-01"), (3L, 4L, "2024-07-01"))
-      q.processAllAvailable()
-      // batch 2: the late fragment ADVANCES basket 1's date — the
-      // default guard would have killed the stream here; late mode
-      // reconciles and the snapshot equals the one-shot recompute over
-      // the merged corpus at the advanced anchor
-      mem.addData((1L, 3L, "2024-12-31"))
-      q.processAllAvailable()
-      val merged = Seq(
-        (1L, 1L, "2024-07-01"), (1L, 2L, "2024-07-01"),
-        (1L, 3L, "2024-12-31"),
-        (3L, 3L, "2024-07-01"), (3L, 4L, "2024-07-01"))
-      assert(edgeSet4(TemporalEdgeIndex.trendingSnapshot(spark, out)) ==
-        direct(merged, "2024-12-31"))
-    } finally q.stop()
+    // batch 1: a FRAGMENT of basket 1 plus complete basket 3
+    appendAndRefresh(Seq((1L, 1L, "2024-07-01"), (1L, 2L, "2024-07-01"),
+      (3L, 3L, "2024-07-01"), (3L, 4L, "2024-07-01")), dir, None, out, 0L,
+      late = true)
+    // batch 2: the late fragment ADVANCES basket 1's date — a disjoint
+    // append would refuse it here; late mode reconciles and the
+    // snapshot equals the one-shot recompute over the merged corpus at
+    // the advanced anchor
+    appendAndRefresh(Seq((1L, 3L, "2024-12-31")), dir, None, out, 1L,
+      late = true)
+    val merged = Seq(
+      (1L, 1L, "2024-07-01"), (1L, 2L, "2024-07-01"),
+      (1L, 3L, "2024-12-31"),
+      (3L, 3L, "2024-07-01"), (3L, 4L, "2024-07-01"))
+    assert(edgeSet4(TemporalEdgeIndex.trendingSnapshot(spark, out)) ==
+      direct(merged, "2024-12-31"))
   }
 
   test("appendLate property: random fragmentation and reordering always nets to the one-shot build") {
@@ -429,35 +376,6 @@ class TemporalEdgeIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(keyed(nets.where(col("net") =!= 0L)) == keyed(oneShot),
         s"trial $trial per-(pair, date) nets diverge from the one-shot build")
     }
-  }
-
-  test("streaming ingest fails loudly on a basket straddling micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = tmp()
-    TemporalEdgeIndex.save(baskets(Seq((1L, 1L, "2024-01-01"),
-      (1L, 2L, "2024-01-01"))), dir)
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String)]
-    val q = TemporalEdgeIndex.ingest(
-      mem.toDF().toDF("basket_id", "item_id", "bday")
-        .withColumn("bday", col("bday").cast("date")),
-      dir, tmp())
-    try {
-      // basket 1 already indexed — the arriving fragment must kill the
-      // stream before it corrupts the per-date counts
-      mem.addData((1L, 3L, "2024-01-01"))
-      val err = intercept[
-          org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
-      }
-      assert(err.getMessage.contains("split a basket") ||
-        Option(err.getCause).exists(_.getMessage.contains("split a basket")))
-    } finally q.stop()
-    // and the index still serves its committed state
-    assert(edgeSet(TemporalEdgeIndex.decayedEdgesOf(spark, dir,
-        anchor("2024-01-01"), minWeightPpm = 0L)) ==
-      Set((1L, 2L, 1000000L)))
   }
 
   test("appendLate on a torn index fails closed; a same-id replay repairs it") {
