@@ -24,6 +24,8 @@ import graft.text.RuText.{pyStrip, stripChars}
   * Each output row carries its final E1–E4 keys, computed here once: the
   * standardized rank, profession and education, the canonical name of a
   * named row, the E3 location key and the location names stored with it.
+  * It also carries `seq`, its number among the file's emitted rows, from
+  * which the fact's AssignmentID follows without a global sort.
   */
 object FileResolver {
 
@@ -48,6 +50,7 @@ object FileResolver {
     // (okrug, gub) → last emitted senior-role row with an inspector:
     // (inspectorKey, stdRank, stdProf, stdEdu) — the as-of lookup target.
     val lastSenior = mutable.HashMap[(String, String), (String, String, String, String)]()
+    var emittedSoFar = 0 // rows come out in (rowIdx, ord) order
 
     grid.iterator.flatMap { g =>
       // T2: okrug fill; okrug headers reset gubernia to "Неизвестно" (:567);
@@ -140,13 +143,14 @@ object FileResolver {
           }
           // Only emitted named rows create Inspectors entries (:745-746).
           val canonName = if (emit && r.specialRole == null && !r.isVacancy) inspKey else null
+          if (emit) emittedSoFar += 1
           AsgResolved(
             g.file, g.year, g.rowIdx, ord,
             rowOkrug, rowGub, role, uchId, uchDesc, lastCity, persRaw,
             inspKey, canonName, stdRank, stdProf, stdEdu,
             locKeyCity, locKeyGub, locKeyOkrug, locGub, locOkrug,
             r.startDateRaw, r.endDateRaw, r.isVacancy, r.isActing, notes, r.specialRole,
-            estCount, workCount, boilCount, emit)
+            estCount, workCount, boilCount, emit, emittedSoFar)
         }
       }
     }

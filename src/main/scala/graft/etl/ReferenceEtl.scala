@@ -1,11 +1,11 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
 
-import graft.ops.Ids
 import graft.parse.{GridRow, HtmlGrid}
 import graft.text.{Dictionaries => D, RuText}
 import graft.text.RuText.pyStrip
@@ -15,7 +15,8 @@ import graft.text.RuText.pyStrip
   * final dimension keys: `canonName` (named rows only), the standardized
   * rank, profession and education, the E3 location key (`locKey*`) and the
   * names a location first seen at this row stores (`cityStd`, `locGub`,
-  * `locOkrug`). */
+  * `locOkrug`). `seq` numbers the file's emitted rows 1..n in file order;
+  * a row that is not emitted carries the count of emitted rows before it. */
 final case class AsgResolved(
     file: String, year: Int, rowIdx: Int, ord: Int,
     okrug: String, gub: String,
@@ -28,7 +29,7 @@ final case class AsgResolved(
     startDateRaw: String, endDateRaw: String,
     isVacancy: Boolean, isActing: Boolean, notes: String, specialRole: String,
     estCount: Integer, workCount: Integer, boilCount: Integer,
-    emitted: Boolean)
+    emitted: Boolean, seq: Int)
 
 /** The six output tables (star schema, reference DDL :160-169). */
 final case class EtlTables(
@@ -52,27 +53,36 @@ final case class EtlTables(
   *    same flatMap. All of this state is file-scoped: the reference walks
   *    each roster top to bottom, and the E5 senior cache is *recursively*
   *    defined over emitted rows. The same pass computes each row's final
-  *    E1-E4 keys. Files are independent, so S1..E5 is one narrow stage
-  *    with no shuffle and no per-row UDF;
-  *  - E1-E4 dims — one `groupBy(key).agg(min(orderKey))` per dimension,
-  *    collected once in first-seen order (Spark's sort) and numbered 1..n
-  *    ([[numberOnDriver]]), replacing SERIAL PKs. The numbered rows come
-  *    back as a local frame that feeds both the E6 join and the sink. E2's
-  *    re-route of a profession found in the education dictionary
-  *    (:759-762) is omitted: parsed professions are profession-dictionary
-  *    keys, and no standardized one is an education key;
-  *  - E6 fact assembly — broadcast joins of the tiny dims on the keys the
-  *    fold computed; the fact table's AssignmentID is the one fact-scale
-  *    numbering (graft.ops.Ids.sequenceBy);
+  *    E1-E4 keys and its number among the file's emitted rows. Files are
+  *    independent, so S1..E5 is one narrow stage with no shuffle and no
+  *    per-row UDF;
+  *  - E1-E4 dims — ONE aggregate for all five dimensions and the fact's
+  *    per-year row counts: each cached row contributes a tagged entry per
+  *    table it feeds, and `groupBy(tag, key).agg(min(firstRow), count)` is
+  *    collected once. The driver splits it by tag, sorts each tag by the
+  *    first-seen order key and numbers it 1..n, replacing SERIAL PKs; the
+  *    numbered rows become local frames for the sinks. E2's re-route of a
+  *    profession found in the education dictionary (:759-762) is omitted:
+  *    parsed professions are profession-dictionary keys, and no
+  *    standardized one is an education key;
+  *  - E6 fact assembly — a projection of the cached rows. Each dimension
+  *    id is an `element_at` lookup in a literal map of the collected ids
+  *    (a null key, or a null location-key field, matches like `<=>`), and
+  *    AssignmentID = the year's offset (the prefix sum of the per-year
+  *    counts, files ordered by year) + the row's in-file `seq`;
   *  - S5-S8 sinks — parquet, fact partitioned by Year (:160-169 indexes).
   *
+  * A `writeAll` therefore runs a fixed handful of Spark jobs whatever the
+  * corpus size: one cache build, the aggregate's shuffle and collect, and
+  * the six sinks.
+  *
   * At 100 TB the per-file stage scales with file count; a task holds one
-  * file's grid rows ([[MaxFileRows]]). The only wide exchanges are the
-  * dimension aggregates and the fact numbering. Driver memory bounds the
-  * dimensions: E6 joins every one of them through an explicit
-  * `broadcast()` hint, which bypasses `autoBroadcastJoinThreshold`, so
-  * each dimension has to fit on the driver in any case. Numbering them
-  * there adds no new bound; it only stops collecting them twice.
+  * file's grid rows ([[MaxFileRows]]). The only wide exchange is the fused
+  * aggregate. Driver memory bounds the dimensions: they are collected, and
+  * the fact plan carries each one as a literal map. A map lookup scans the
+  * map's keys, so the fact projection costs O(rows × dimension size).
+  * Per-year offsets need one roster file per year, which [[starSchema]]
+  * checks.
   */
 object ReferenceEtl {
 
@@ -93,14 +103,15 @@ object ReferenceEtl {
   }
 
   /** One flatMap over the corpus' `fabricYYYY.html` files, handing `f` each
-    * one's name, year and whole text; other files are skipped. */
+    * one's name, year and whole text; other files, `xfabric1905.html`
+    * included, are skipped. */
   private def perRoster[T: Encoder](spark: SparkSession, dir: String)(
       f: (String, Int, String) => Iterator[T]): Dataset[T] = {
     import spark.implicits._
     val files = spark.read.option("wholetext", "true").textFile(dir)
       .withColumn("path", input_file_name())
       .as[(String, String)]
-    val yearPat = "fabric(\\d{4})\\.html$".r
+    val yearPat = "^fabric(\\d{4})\\.html$".r
     files.flatMap { case (content, path) =>
       val base = path.substring(path.lastIndexOf('/') + 1)
       yearPat.findFirstMatchIn(base) match {
@@ -142,93 +153,117 @@ object ReferenceEtl {
   /** [[run]], also returning the cached resolved rows so that [[writeAll]]
     * can release them. */
   private def build(spark: SparkSession, dir: String): (DataFrame, EtlTables) = {
+    val resolved = resolvedAssignments(spark, dir).toDF().cache()
+    (resolved, starSchema(resolved))
+  }
+
+  /** E1-E4 and E6 over resolved rows (the columns of [[AsgResolved]]): one
+    * aggregate and one collect, then the dimensions as local frames and the
+    * fact table as a projection of `resolved`. */
+  private[graft] def starSchema(resolved: DataFrame): EtlTables = {
+    val spark = resolved.sparkSession
     import spark.implicits._
 
-    val resolved = resolvedAssignments(spark, dir).toDF()
-      .withColumn("orderKey", struct($"year", $"rowIdx", $"ord"))
-      .cache()
+    // E1-E4 and the per-year fact counts in one aggregate. Each row yields
+    // one tagged entry per table it feeds; a key's minimum `first` is its
+    // first-seen row (the orderKey is unique and leads), which also holds
+    // the names a location stores (:240-245). The entries come from an
+    // explode, not a union of six projections: each union branch would
+    // scan the cache in a stage (and a job) of its own.
+    val (inspT, rankT, profT, eduT, locT, yearT) = (0, 1, 2, 3, 4, 5)
+    val noKey = lit(null).cast(StringType)
+    val first = struct(struct($"year", $"rowIdx", $"ord").as("orderKey"), $"cityStd", $"locGub", $"locOkrug")
+    def entry(tag: Int, cond: Column, k1: Column, k2: Column = noKey, k3: Column = noKey,
+        fileStart: Column = lit(null).cast(IntegerType)): Column =
+      when(cond, struct(lit(tag).as("tag"), k1.as("k1"), k2.as("k2"), k3.as("k3"),
+        first.as("first"), fileStart.as("fileStart")))
+    val aggregated = resolved
+      .select(explode(filter(array(
+        // E4/E1: first-seen canonical names over emitted named rows.
+        entry(inspT, $"canonName".isNotNull, $"canonName"),
+        // E1/E2: dictionary-enriched first-seen dims over emitted rows.
+        entry(rankT, $"emitted" && $"stdRank".isNotNull, $"stdRank"),
+        entry(profT, $"emitted" && $"stdProf".isNotNull, $"stdProf"),
+        entry(eduT, $"emitted" && $"stdEdu".isNotNull, $"stdEdu"),
+        // E3: null-safe composite key, first-seen per ROW (:717), so one
+        // probe per surviving row.
+        entry(locT, $"ord" === 0, $"locKeyCity", $"locKeyGub", $"locKeyOkrug"),
+        // Emitted rows per year; each file's first emitted row counts it.
+        entry(yearT, $"emitted", $"year".cast(StringType), fileStart = when($"seq" === 1, 1))),
+        _.isNotNull)).as("e"))
+      .select("e.*")
+      .groupBy("tag", "k1", "k2", "k3")
+      .agg(min("first").as("first"), count(lit(1)).as("n"), count("fileStart").as("files"))
+      .collect()
 
-    // First-seen surrogate keys of one single-key dimension.
-    def firstSeenIds(keyed: DataFrame, key: String, idCol: String): DataFrame =
-      numberOnDriver(keyed.groupBy(key).agg(min($"orderKey").as("firstSeen")), "firstSeen", idCol)
+    // Per tag, the keys in first-seen order, numbered 1..n.
+    val byTag = aggregated.groupBy(_.getInt(0))
+    def numbered(tag: Int): Seq[(Row, Long)] =
+      byTag.getOrElse(tag, Array.empty[Row]).toSeq
+        .sortBy { r => val o = r.getStruct(4).getStruct(0); (o.getInt(0), o.getInt(1), o.getInt(2)) }
+        .zip(Iterator.from(1).map(_.toLong))
+    def local(rows: Seq[Row], schema: StructType): DataFrame = spark.createDataFrame(rows.asJava, schema)
+    def idSchema(idCol: String) = new StructType().add(idCol, LongType, nullable = false)
 
-    // E4/E1: Inspectors — first-seen canonical names over emitted named rows.
-    val inspectors = firstSeenIds(
-      resolved.where($"canonName".isNotNull).select($"canonName", $"orderKey"),
-      "canonName", "InspectorID")
-      .select($"InspectorID", $"canonName".as("FullName"), lit(null).cast(StringType).as("Notes"))
+    val inspectorIds = numbered(inspT).map { case (r, id) => r.getString(1) -> id }
+    val inspectors = local(inspectorIds.map { case (name, id) => Row(id, name, null) },
+      idSchema("InspectorID").add("FullName", StringType).add("Notes", StringType))
 
-    // E1/E2: Ranks / Professions / Educations — dictionary-enriched
-    // first-seen dims over emitted rows.
-    def dictDim(key: String, idCol: String, dict: Map[String, String]): DataFrame = {
-      val dotFlex = udf((k: String) => if (k == null) None else D.dotFlexGet(dict, k))
-      firstSeenIds(resolved.where($"emitted" && col(key).isNotNull).select(col(key), $"orderKey"), key, idCol)
-        .select(col(idCol), col(key).as("Abbreviation"), dotFlex(col(key)).as("FullName_RU"))
-    }
-    val ranks = dictDim("stdRank", "RankID", D.knownRanksMap)
+    def dictIds(tag: Int) = numbered(tag).map { case (r, id) => r.getString(1) -> id }
+    def dictDim(ids: Seq[(String, Long)], idCol: String, dict: Map[String, String]): DataFrame =
+      local(ids.map { case (k, id) => Row(id, k, D.dotFlexGet(dict, k).orNull) },
+        idSchema(idCol).add("Abbreviation", StringType).add("FullName_RU", StringType))
+    val (rankIds, profIds, eduIds) = (dictIds(rankT), dictIds(profT), dictIds(eduT))
+    val ranks = dictDim(rankIds, "RankID", D.knownRanksMap)
       .withColumn("RankType", lit(null).cast(StringType))
-    val professions = dictDim("stdProf", "ProfessionID", D.knownProfessionsMap)
-    val educations = dictDim("stdEdu", "EducationID", D.knownEducationsMap)
+    val professions = dictDim(profIds, "ProfessionID", D.knownProfessionsMap)
+    val educations = dictDim(eduIds, "EducationID", D.knownEducationsMap)
 
-    // E3: Locations — null-safe composite key, first-seen per ROW (:717).
-    // The stored names come from the row that created the location
-    // (:240-245): they ride in the same minimum, after the unique orderKey.
-    val locations = numberOnDriver(
-      resolved.where($"ord" === 0) // one location probe per surviving row
-        .groupBy($"locKeyCity", $"locKeyGub", $"locKeyOkrug")
-        .agg(min(struct($"orderKey", $"cityStd", $"locGub", $"locOkrug")).as("firstRow")),
-      "firstRow", "LocationID")
-      .select($"LocationID",
-        $"firstRow.cityStd".as("CityName"),
-        $"firstRow.locGub".as("GuberniaName"),
-        $"firstRow.locOkrug".as("OkrugName"),
-        lit("Город").as("LocationType"),
-        $"locKeyCity", $"locKeyGub", $"locKeyOkrug")
+    val locationRows = numbered(locT)
+    val locations = local(locationRows.map { case (r, id) =>
+        val f = r.getStruct(4)
+        Row(id, f.getString(1), f.getString(2), f.getString(3), "Город")
+      },
+      idSchema("LocationID").add("CityName", StringType).add("GuberniaName", StringType)
+        .add("OkrugName", StringType).add("LocationType", StringType, nullable = false))
+    val locationIds = locationRows.map { case (r, id) => (r.getString(1), r.getString(2), r.getString(3)) -> id }
 
-    // E6: fact assembly — broadcast dim joins + scale-safe AssignmentID.
-    val fact = resolved.where($"emitted")
-      .join(broadcast(inspectors.select($"InspectorID", $"FullName")), $"inspectorKey" === $"FullName", "left")
-      .join(broadcast(ranks.select($"RankID", $"Abbreviation".as("rkA"))), $"stdRank" === $"rkA", "left")
-      .join(broadcast(professions.select($"ProfessionID", $"Abbreviation".as("pfA"))), $"stdProf" === $"pfA", "left")
-      .join(broadcast(educations.select($"EducationID", $"Abbreviation".as("edA"))), $"stdEdu" === $"edA", "left")
-      .join(broadcast(locations.select($"LocationID",
-          $"locKeyCity".as("lkC"), $"locKeyGub".as("lkG"), $"locKeyOkrug".as("lkO"))),
-        $"locKeyCity" <=> $"lkC" && $"locKeyGub" <=> $"lkG" && $"locKeyOkrug" <=> $"lkO", "left")
+    // AssignmentID = offset(year) + seq, where offset(year) counts the
+    // emitted rows of every earlier year. That numbers a year's rows as one
+    // file's, so each year must come from one file.
+    val years = numbered(yearT).map { case (r, _) =>
+      (r.getStruct(4).getStruct(0).getInt(0), r.getLong(5), r.getLong(6)) } // (year, rows, files)
+    for ((year, _, files) <- years)
+      require(files == 1, s"$files roster files share the year $year; AssignmentID numbers " +
+        "each year's rows as one file's, so every roster year must come from one fabricYYYY.html")
+    val offsets = years.map(_._1).zip(years.scanLeft(0L)(_ + _._2))
+    // A CASE over the corpus' years whose last branch needs no test: every
+    // emitted row's year is one of them. Non-null, like the id it builds.
+    val offset = offsets.dropRight(1).foldRight(lit(offsets.lastOption.fold(0L)(_._2))) {
+      case ((year, off), rest) => when($"year" === year, off).otherwise(rest)
+    }
 
-    val assignments = Ids.sequenceBy(fact, Seq(col("orderKey")), "AssignmentID")
+    // E6: fact assembly — the dimension ids by lookup, no join.
+    def lookup[K: TypeTag](ids: Seq[(K, Long)], key: Column): Column =
+      element_at(typedLit(ids.toMap), key)
+    val locKey = struct($"locKeyCity".as("_1"), $"locKeyGub".as("_2"), $"locKeyOkrug".as("_3"))
+    val assignments = resolved.where($"emitted")
       .select(
-        $"AssignmentID", $"InspectorID", $"year".as("Year"), $"file".as("SourceFile"),
+        (offset + $"seq").as("AssignmentID"), lookup(inspectorIds, $"inspectorKey").as("InspectorID"),
+        $"year".as("Year"), $"file".as("SourceFile"),
         $"okrug".as("OkrugName"), $"gub".as("GuberniaName"),
         $"role".as("PositionRole"), $"uchId".as("UchastokIdentifier"),
-        $"uchDesc".as("UchastokDescription"), $"LocationID".as("InspectorLocationID"),
+        $"uchDesc".as("UchastokDescription"), lookup(locationIds, locKey).as("InspectorLocationID"),
         $"persRaw".as("PersonnelRawString"),
-        $"RankID", $"ProfessionID", $"EducationID",
+        lookup(rankIds, $"stdRank").as("RankID"), lookup(profIds, $"stdProf").as("ProfessionID"),
+        lookup(eduIds, $"stdEdu").as("EducationID"),
         $"startDateRaw".as("StartDateInYearRaw"), $"endDateRaw".as("EndDateInYearRaw"),
         $"isActing".as("IsActing"), $"isVacancy".as("IsVacancy"),
         $"notes".as("AssignmentNotes"),
         $"estCount".as("EstablishmentsCount"), $"workCount".as("WorkerCount"),
         $"boilCount".as("BoilerCount"))
 
-    (resolved, EtlTables(
-      assignments,
-      inspectors,
-      locations.drop("locKeyCity", "locKeyGub", "locKeyOkrug"),
-      ranks,
-      professions,
-      educations))
-  }
-
-  /** E1-E4 numbering: collects `df` sorted by `orderCol` (Spark's sort, in
-    * one partition) and appends `idCol` = 1..n, returning a local frame.
-    * Same columns and ids as
-    * `graft.ops.Ids.sequenceBy(df, Seq(col(orderCol)), idCol)` for an
-    * `orderCol` that totally orders the rows. `df` must fit on the driver:
-    * it is meant for the dimensions, which E6 broadcasts anyway. */
-  private[graft] def numberOnDriver(df: DataFrame, orderCol: String, idCol: String): DataFrame = {
-    val rows = df.coalesce(1).sortWithinPartitions(orderCol).collect()
-    val numbered = rows.iterator.zipWithIndex
-      .map { case (r, n) => Row.fromSeq(r.toSeq :+ (n + 1L)) }.toList
-    df.sparkSession.createDataFrame(numbered.asJava, df.schema.add(idCol, LongType, nullable = false))
+    EtlTables(assignments, inspectors, locations, ranks, professions, educations)
   }
 
   /** S5-S8: parquet sinks; the fact table partitioned by Year (the

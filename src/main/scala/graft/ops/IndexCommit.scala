@@ -315,12 +315,17 @@ private[graft] object IndexCommit {
 
   /** Refuse an incremental batch whose `idCol` values are already present
     * in the saved `table` — per-id keyed facts would double-count. Costs
-    * one narrow scan of the saved table's id column. */
+    * one narrow scan of the saved table's id column. An absent table (the
+    * first write into a fresh directory) holds no ids, so any batch is
+    * disjoint from it. */
   def requireDisjoint(batch: DataFrame, tablePath: String, idCol: String): Unit = {
     val spark = batch.sparkSession
-    val overlap = batch.select(col(idCol))
-      .join(spark.read.parquet(tablePath).select(col(idCol)), Seq(idCol), "left_semi")
-      .limit(1).count()
+    val p = new org.apache.hadoop.fs.Path(tablePath)
+    val overlap =
+      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) 0L
+      else batch.select(col(idCol))
+        .join(spark.read.parquet(tablePath).select(col(idCol)), Seq(idCol), "left_semi")
+        .limit(1).count()
     require(overlap == 0L,
       s"append: batch contains $idCol values already indexed — appending " +
       "would double-count them (index tables are per-id keyed facts)")

@@ -16,11 +16,10 @@ import org.apache.spark.sql.functions._
   * On-disk layout (parquet):
   *   <dir>/centroids   (cell INT, v ARRAY<DOUBLE>)   — K rows
   *   <dir>/cells/ingest_batch=B/cell=N/  (vec_id LONG, v ARRAY<DOUBLE>)
-  * Writes follow the [[IndexCommit]] protocol: incremental batches land
-  * idempotently under their own `ingest_batch` partitions (replaying a
-  * failed [[appendSaved]] batch replaces its partial output),
+  * Writes follow the [[IndexCommit]] protocol: [[save]] writes batch -1,
   * the centroid+cells pair is bracketed by a commit marker, and [[load]]
-  * fails closed on an interrupted write.
+  * fails closed on an interrupted write. Vectors added with [[add]] reach
+  * disk through a new [[save]] of the grown model.
   *
   * Scale notes:
   *  - training: deterministic init (K lowest vec_ids) + Lloyd iterations,
@@ -195,30 +194,6 @@ object IvfIndex {
       .toDF("vec_id", "cell", "v")
   }
 
-  /** [[add]] against an index on disk, writing ONLY the new rows to the
-    * cell-partitioned inverted file under the next free `ingest_batch`
-    * partition (existing directories are untouched, so the append cost is
-    * the batch, never the index; re-running a failed batch id replaces
-    * its partial output — [[IndexCommit]]). `checkDisjoint` refuses a
-    * batch whose vec_ids are already indexed. */
-  def appendSaved(spark: SparkSession, dir: String, vectors: DataFrame,
-      checkDisjoint: Boolean = false): Unit = {
-    if (checkDisjoint)
-      IndexCommit.requireDisjoint(vectors, s"$dir/cells", "vec_id")
-    val model = load(spark, dir)
-    writeCells(spark, assign(spark, model.centroids, vectors), dir,
-      IndexCommit.nextBatchId(spark, s"$dir/cells"), overwriteAll = false)
-  }
-
-  private def writeCells(spark: SparkSession, assigned: DataFrame, dir: String,
-      batchId: Long, overwriteAll: Boolean): Unit =
-    IndexCommit.withGuard(spark, dir) {
-      IndexCommit.stamped(assigned, batchId)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", IndexCommit.overwriteMode(overwriteAll))
-        .partitionBy(IndexCommit.BatchCol, "cell").parquet(s"$dir/cells")
-    }
-
   /** Persist the index: tiny centroid table + cell-partitioned inverted
     * file (probes prune to their partitions on read). The two tables are
     * bracketed by the [[IndexCommit]] marker — [[load]] fails closed on
@@ -238,8 +213,7 @@ object IvfIndex {
     }
   }
 
-  /** Rewrite a fragmented index (one `ingest_batch=B` partition per past
-    * [[appendSaved]] batch) as a single-generation snapshot
+  /** Rewrite an index as a single-generation snapshot
     * under `dst` — see [[IndexCommit.compactTo]] for the crash-safety and
     * serving model. Cells stay cell-partitioned, so probes prune
     * identically; centroids are copied verbatim (the quantizer is

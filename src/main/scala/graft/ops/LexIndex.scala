@@ -35,8 +35,7 @@ import org.apache.spark.sql.functions._
   * the index holds each batch's documents exactly once. Precondition:
   * arriving doc_ids are disjoint from what's already indexed —
   * postings/docstats are keyed facts per doc, so re-adding a doc would
-  * double-count it (same contract as `IvfIndex.appendSaved`;
-  * `append(checkDisjoint = true)` verifies at the cost of a docstats
+  * double-count it (`append(checkDisjoint = true)` verifies at the cost of a docstats
   * semi-join). Don't run concurrent appends on one index: each
   * allocates a batch id and they could collide.
   *

@@ -6,18 +6,17 @@ import org.apache.spark.sql.functions._
 /** Persisted PQ index — [[Pq]]'s codebook + code table on disk, closing
   * the same lifecycle as the other persisted families ([[LexIndex]],
   * [[IvfIndex]], LmIndex): crash-safe multi-table writes under the
-  * [[IndexCommit]] marker, per-batch replayable appends, and snapshot
-  * compaction. This is the at-rest form PQ exists for: the corpus
-  * persists as m ints per vector (16-64x smaller than the float
-  * column), new vectors encode against the FROZEN codebook (which only
-  * moves under a retrain + [[save]]), and retrieval reads codes + the
-  * tiny codebook — never raw vectors.
+  * [[IndexCommit]] marker and snapshot compaction. This is the at-rest
+  * form PQ exists for: the corpus persists as m ints per vector (16-64x
+  * smaller than the float column), vectors encode against the FROZEN
+  * codebook (which only moves under a retrain + [[save]]), and retrieval
+  * reads codes + the tiny codebook — never raw vectors.
   *
   * Layout:
   *   dir/codebook  (s, c, cent ARRAY<DOUBLE>, sub_dim) — one row per
   *                 (subspace, code), kilobytes; read whole.
-  *   dir/codes     (vec_id, codes ARRAY<INT>) under `ingest_batch=B`
-  *                 partitions — batch B re-runs replace only batch B.
+  *   dir/codes     (vec_id, codes ARRAY<INT>) under the `ingest_batch=-1`
+  *                 partition [[save]] writes.
   *
   * [[searchSaved]] is hash-gated end-to-end by d75: save -> load ->
   * ADC search over the parquet round trip must reproduce d73's oracle
@@ -74,33 +73,11 @@ object PqIndex {
     Pq.topKAdc(queries, loadCodes(spark, dir), loadCodebook(spark, dir),
       k, maxBroadcastBytes)
 
-  /** Encode a batch against the SAVED codebook and append it under the
-    * next free `ingest_batch` partition — cost tracks the batch, never
-    * the index; re-running a failed batch id replaces its partial
-    * output. `checkDisjoint` refuses vec_ids already indexed. */
-  def appendSaved(spark: SparkSession, dir: String, vectors: DataFrame,
-      checkDisjoint: Boolean = false): Unit = {
-    if (checkDisjoint)
-      IndexCommit.requireDisjoint(vectors, s"$dir/codes", "vec_id")
-    val cb = loadCodebook(spark, dir)
-    writeCodes(spark, Pq.encode(spark, vectors, cb), dir,
-      IndexCommit.nextBatchId(spark, s"$dir/codes"), overwriteAll = false)
-  }
-
-  /** Rewrite accumulated per-batch partitions as a single-generation
-    * snapshot under `dst` — [[IndexCommit.compactTo]]'s serving model
-    * (src untouched; dst fails closed until its marker lands). */
+  /** Rewrite the index as a single-generation snapshot under `dst` —
+    * [[IndexCommit.compactTo]]'s serving model (src untouched; dst fails
+    * closed until its marker lands). */
   def compactTo(spark: SparkSession, src: String, dst: String): Unit =
     IndexCommit.compactTo(spark, src, dst, Seq(
       IndexCommit.TableSpec("codebook", stamped = false),
       IndexCommit.TableSpec("codes")))
-
-  private def writeCodes(spark: SparkSession, encoded: DataFrame, dir: String,
-      batchId: Long, overwriteAll: Boolean): Unit =
-    IndexCommit.withGuard(spark, dir) {
-      IndexCommit.stamped(encoded, batchId)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", IndexCommit.overwriteMode(overwriteAll))
-        .partitionBy(IndexCommit.BatchCol).parquet(s"$dir/codes")
-    }
 }

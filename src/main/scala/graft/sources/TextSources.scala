@@ -10,10 +10,8 @@ import graft.ops.{Q, Tables}
   * formats corpus snapshots actually arrive in. Thin, deliberately-pinned
   * wrappers over Spark's native json/csv/orc data sources: explicit schema
   * always (schema inference re-reads the data and guesses — a corrupt
-  * line silently widens a column to string), FAILFAST by default (a
-  * malformed record is an error, not a silent null row), PERMISSIVE
-  * kept as an explicit opt-in that quarantines bad lines into a
-  * `_corrupt_record` column instead of dropping them.
+  * line silently widens a column to string) and FAILFAST (a malformed
+  * record is an error, not a silent null row).
   *
   * The registered queries d80/d81/d86 gate the WRITE → READ round trip
   * against the DuckDB oracle reading the ORIGINAL parquet: equality
@@ -36,18 +34,6 @@ object TextSources {
     * (FAILFAST) — the right default for data the pipeline itself wrote. */
   def readJsonl(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     spark.read.schema(schema).option("mode", "FAILFAST").json(dir)
-
-  /** Read JSONL permissively: malformed lines land in `_corrupt_record`
-    * (quarantine column appended to the schema), well-formed fields of
-    * partially-bad rows are kept — the ingest shape for UNTRUSTED
-    * corpus drops where a bad line must not kill a 100 TB read. */
-  def readJsonlQuarantine(spark: SparkSession, dir: String,
-      schema: StructType): DataFrame =
-    spark.read
-      .schema(schema.add("_corrupt_record", "string"))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(dir)
 
   /** CSV with header and RFC-style quoting (quote char doubled via the
     * escape option set to the quote itself — what external CSV

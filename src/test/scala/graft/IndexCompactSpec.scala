@@ -54,8 +54,8 @@ class IndexCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = Tables.embeddings(spark, sf)
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x AS double))").as("v"))
     val src = tmp("graft-ivfc-src"); val dst = tmp("graft-ivfc-dst")
-    IvfIndex.save(IvfIndex.build(spark, e.filter(col("vec_id") % 2 === 0), k = 8, iters = 2), src)
-    IvfIndex.appendSaved(spark, src, e.filter(col("vec_id") % 2 === 1))
+    val base = IvfIndex.build(spark, e.filter(col("vec_id") % 2 === 0), k = 8, iters = 2)
+    IvfIndex.save(IvfIndex.add(spark, base, e.filter(col("vec_id") % 2 === 1)), src)
     IvfIndex.compactTo(spark, src, dst)
 
     assert(batchDirs(dst, "cells") == Seq("ingest_batch=-1"))

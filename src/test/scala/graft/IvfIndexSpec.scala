@@ -140,7 +140,7 @@ class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(explicit.centroids.length == 5)
   }
 
-  test("incremental add: fixed quantizer, in-memory and on-disk appends answer identically") {
+  test("incremental add: fixed quantizer; a saved grown index answers alike") {
     import spark.implicits._
     val e = graft.ops.Tables.embeddings(spark, sf)
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x AS double))").as("v"))
@@ -158,25 +158,14 @@ class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(inMem.exists(_._2 % 2 == 1))
     assert(inMem.map(_._1).size == inMem.size)
 
-    // on-disk append path: only new rows land, existing partitions stay
+    // on disk: the grown model saved as one batch answers identically
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-add").toString
-    IvfIndex.save(base, dir)
-    IvfIndex.appendSaved(spark, dir, rest)
+    IvfIndex.save(grown, dir)
     val loaded = IvfIndex.load(spark, dir)
     assert(loaded.cells.count() == e.count())
     val viaDisk = IvfIndex.search(spark, loaded, e, probes = 3)
       .as[(Long, Long, Double)].collect().toSet
     assert(viaDisk == inMem)
-
-    // re-running the append's batch id (crash replay) must replace its
-    // partitions, not double them; disjointness guard refuses a re-add
-    IvfIndex.appendSaved(spark, dir, rest) // batch id 1 — a second append
-    val twice = IvfIndex.load(spark, dir)
-    assert(twice.cells.count() == e.count() + rest.count()) // contract: caller's burden
-    val refused = intercept[IllegalArgumentException] {
-      IvfIndex.appendSaved(spark, dir, rest, checkDisjoint = true)
-    }
-    assert(refused.getMessage.contains("double-count"))
 
     // interrupted write -> load fails closed
     java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "_graft_commit"))

@@ -116,6 +116,13 @@ class PersistedIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       else f.idx.append(f.inA(), dir, checkDisjoint = true) // must not throw
     }
 
+    test(s"${f.name}: checkDisjoint on a fresh directory admits the first batch") {
+      val dir = tmp(f.name)
+      f.idx.append(f.inA(), dir, checkDisjoint = true)
+      assert(IndexCommit.isCommitted(spark, dir))
+      assert(spark.read.parquet(s"$dir/${f.lead}").count() > 0)
+    }
+
     test(s"${f.name}: an interrupted write leaves the index uncommitted") {
       val dir = tmp(f.name)
       f.idx.save(f.inA(), dir)

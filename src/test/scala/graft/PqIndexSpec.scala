@@ -7,10 +7,8 @@ import graft.ops.{IndexCommit, Pq, PqIndex, Tables}
 
 /** The persisted PQ index must honor the shared index-family contract:
   * a saved index serves exactly the direct computation (parquet adds no
-  * tolerance — d75 hash-gates this against DuckDB too), appends are
-  * per-batch replayable facts that track the batch rather than the
-  * index, streaming ingestion is exactly-once per micro-batch, readers
-  * fail closed on an uncommitted write, and compaction is a pure layout
+  * tolerance — d75 hash-gates this against DuckDB too), readers fail
+  * closed on an uncommitted write, and compaction is a pure layout
   * change.
   */
 class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -47,45 +45,15 @@ class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       cb.centroids.flatten.map(_.toSeq).toSeq)
   }
 
-  test("append lands only the batch; replaying a batch does not double-count") {
-    val dir = tmp("graft-pqi-app")
-    val cb = Pq.train(spark, vecs, m = 8, k = 16, iters = 2)
-    PqIndex.save(spark, cb, vecs.where(col("vec_id") % 2 === 0), dir)
-    val batch = vecs.where(col("vec_id") % 2 === 1)
-    PqIndex.appendSaved(spark, dir, batch)
-    assert(batchDirs(dir) == Seq("ingest_batch=-1", "ingest_batch=0"))
-    val full = PqIndex.loadCodes(spark, dir)
-    assert(full.count() == vecs.count())
-    // replay batch 0 (a failed-write re-run): same ids, same count
-    IndexCommit.stamped(Pq.encode(spark, batch, cb), 0L)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(IndexCommit.BatchCol).parquet(s"$dir/codes")
-    assert(PqIndex.loadCodes(spark, dir).count() == vecs.count())
-    // the served search equals direct over the union
-    val direct = Pq.topKAdc(vecs, Pq.encode(spark, vecs, cb), cb).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(hits(dir) == direct)
-    // a disjointness-checked append of already-indexed ids refuses
-    intercept[IllegalArgumentException] {
-      PqIndex.appendSaved(spark, dir, batch, checkDisjoint = true)
-    }
-  }
-
   test("compacted snapshot serves identically from one generation; source untouched") {
     val src = tmp("graft-pqi-src"); val dst = tmp("graft-pqi-dst")
     val cb = Pq.train(spark, vecs, m = 8, k = 16, iters = 2)
-    PqIndex.save(spark, cb, vecs.where(col("vec_id") % 3 === 0), src)
-    PqIndex.appendSaved(spark, src, vecs.where(col("vec_id") % 3 === 1))
-    assert(batchDirs(src).size == 2)
+    PqIndex.save(spark, cb, vecs, src)
     PqIndex.compactTo(spark, src, dst)
     assert(batchDirs(dst) == Seq("ingest_batch=-1"))
     assert(hits(dst) == hits(src))
-    assert(batchDirs(src).size == 2)
-    // the snapshot accepts fresh appends from batch 0
-    PqIndex.appendSaved(spark, dst, vecs.where(col("vec_id") % 3 === 2),
-      checkDisjoint = true)
-    assert(batchDirs(dst).toSet == Set("ingest_batch=-1", "ingest_batch=0"))
+    assert(batchDirs(src) == Seq("ingest_batch=-1"))
+    assert(IndexCommit.isCommitted(spark, src))
     val direct = Pq.topKAdc(vecs, Pq.encode(spark, vecs, cb), cb).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(hits(dst) == direct)

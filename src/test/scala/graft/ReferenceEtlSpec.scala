@@ -5,19 +5,18 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.catalyst.plans.QueryPlan
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-import graft.etl.{EtlTables, ReferenceEtl}
+import graft.etl.{AsgResolved, EtlTables, ReferenceEtl}
 import graft.ops.Ids
 import graft.text.{Dictionaries => D, RuText}
 
@@ -218,11 +217,10 @@ class ReferenceEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("the ETL's queries run no per-row UDF, cached rows included") {
-    // The fact frame's own plan ends at the RDD that Ids.sequenceBy
-    // numbers, so this walks the optimized plan of every query that
-    // building and counting the tables executes: the five dimension
-    // collects and the fact count, each reading the cached resolved rows
-    // through an InMemoryRelation.
+    // The dimensions are local frames, so the fact table is the one query
+    // over the corpus. Its optimized plan reads the cached rows (the plan
+    // behind the InMemoryRelation holds the per-file parse), with no RDD
+    // scan and no join: the dimension ids are map lookups.
     def udfs(plan: QueryPlan[_]): Seq[String] =
       plan.expressions.flatMap(_.collect { case u: ScalaUDF => u.toString }) ++
         (plan.children ++ plan.innerChildren).flatMap {
@@ -232,22 +230,75 @@ class ReferenceEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
           case m: InMemoryRelation => udfs(m.cachedPlan)
           case _ => Nil
         })
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, LogicalPlan)]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(funcName -> qe.optimizedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    val plan = tables.assignments.queryExecution.optimizedPlan
+    assert(plan.exists(_.isInstanceOf[InMemoryRelation]), plan)
+    assert(!plan.exists(_.isInstanceOf[LogicalRDD]), plan)
+    assert(!plan.exists(_.isInstanceOf[Join]), plan)
+    assert(udfs(plan).isEmpty, plan)
+  }
+
+  test("a writeAll runs at most 10 Spark jobs") {
+    val out = Files.createTempDirectory("graft-mini-jobs")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
     }
-    spark.listenerManager.register(listener)
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
     try {
-      val t = ReferenceEtl.run(spark, corpus.toString)
-      assert(t.assignments.count() == 12)
-      // Listener events arrive in order, so the count's closes the set.
-      eventually(timeout(Span(60, Seconds))) { assert(plans.asScala.exists(_._1 == "count")) }
-      val walked = t.assignments.queryExecution.optimizedPlan +: plans.asScala.map(_._2).toSeq
-      assert(walked.exists(_.exists(_.isInstanceOf[InMemoryRelation])), walked.mkString("\n"))
-      for (plan <- walked) assert(udfs(plan).isEmpty, plan)
-    } finally spark.listenerManager.unregister(listener)
+      ReferenceEtl.writeAll(spark, corpus.toString, out.toString)
+      // Listener events arrive in order: once the marker job is seen,
+      // every writeAll job has been counted.
+      sc.setJobDescription("marker")
+      try spark.range(1).collect() finally sc.setJobDescription(null)
+      eventually(timeout(Span(60, Seconds))) { assert(jobs.contains("marker")) }
+      val n = jobs.asScala.count(_ != "marker")
+      assert(n > 0 && n <= 10, s"$n jobs")
+    } finally {
+      sc.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
+    }
+  }
+
+  test("the six tables keep their columns, types and nullability") {
+    // "!" marks a non-nullable column.
+    def sig(df: DataFrame) = df.schema.fields
+      .map(f => s"${f.name}:${f.dataType.simpleString}${if (f.nullable) "" else "!"}").mkString(",")
+    assert(named(tables).map { case (name, df, _) => name -> sig(df) } == Seq(
+      "assignments" -> ("AssignmentID:bigint!,InspectorID:bigint,Year:int!,SourceFile:string," +
+        "OkrugName:string,GuberniaName:string,PositionRole:string,UchastokIdentifier:string," +
+        "UchastokDescription:string,InspectorLocationID:bigint,PersonnelRawString:string," +
+        "RankID:bigint,ProfessionID:bigint,EducationID:bigint,StartDateInYearRaw:string," +
+        "EndDateInYearRaw:string,IsActing:boolean!,IsVacancy:boolean!,AssignmentNotes:string," +
+        "EstablishmentsCount:int,WorkerCount:int,BoilerCount:int"),
+      "inspectors" -> "InspectorID:bigint!,FullName:string,Notes:string",
+      "locations" -> "LocationID:bigint!,CityName:string,GuberniaName:string,OkrugName:string,LocationType:string!",
+      "ranks" -> "RankID:bigint!,Abbreviation:string,FullName_RU:string,RankType:string",
+      "professions" -> "ProfessionID:bigint!,Abbreviation:string,FullName_RU:string",
+      "educations" -> "EducationID:bigint!,Abbreviation:string,FullName_RU:string"))
+  }
+
+  test("only exact fabricYYYY.html names are rosters") {
+    val dir = corpusOf("fabric1901.html" -> Fabric1901, "xfabric1910.html" -> Fabric1910,
+      "fabric1910.html.bak" -> Fabric1910)
+    try {
+      val years = ReferenceEtl.resolvedAssignments(spark, dir.toString).collect().map(_.year).toSet
+      assert(years == Set(1901))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("two roster files of one year fail by name instead of sharing AssignmentIDs") {
+    val root = Files.createTempDirectory("graft-dup-year")
+    try {
+      for (sub <- Seq("a", "b")) {
+        Files.createDirectories(root.resolve(sub))
+        Files.write(root.resolve(sub).resolve("fabric1910.html"), Fabric1910.getBytes(UTF_8))
+      }
+      val e = intercept[IllegalArgumentException](ReferenceEtl.run(spark, s"$root/*"))
+      assert(e.getMessage.contains("2 roster files share the year 1910"), e.getMessage)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
   test("writeAll writes run's six tables and releases its cached rows") {
@@ -265,26 +316,67 @@ class ReferenceEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
   }
 
-  test("driver-side numbering equals Ids.sequenceBy (property)") {
+  test("driver ids and offset(year)+seq equal Ids.sequenceBy") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
-    // Nested struct order keys, with nulls inside and strings whose UTF-8
-    // and UTF-16 orders differ ("～" vs "😀").
-    val str = Gen.oneOf[String](null, "", "a", "ab", "б", "～", "😀")
-    val int = Gen.option(Gen.chooseNum(-2, 2)).map(_.map(Int.box).orNull)
-    val orderKey = for (s <- str; a <- int; sub <- Gen.chooseNum(0L, 3L)) yield Row(Row(s, a), sub)
-    val row = for (o <- orderKey; k <- str; n <- int) yield Row(k, n, o)
-    val rows = Gen.chooseNum(0, 40).flatMap(Gen.listOfN(_, row)).map(_.distinctBy(_.get(2)))
-    val schema = StructType(Seq(
-      StructField("k", StringType), StructField("n", IntegerType),
-      StructField("firstSeen", StructType(Seq(
-        StructField("p", StructType(Seq(StructField("s", StringType), StructField("a", IntegerType)))),
-        StructField("sub", LongType, nullable = false))), nullable = false)))
-    val prop = Prop.forAll(rows) { rs =>
-      val df = spark.createDataFrame(rs.asJava, schema)
-      val onDriver = ReferenceEtl.numberOnDriver(df, "firstSeen", "id")
-      val viaIds = Ids.sequenceBy(df, Seq(col("firstSeen")), "id")
-      def byId(d: DataFrame) = d.collect().sortBy(_.getLong(3)).toSeq
-      onDriver.schema == viaIds.schema && byId(onDriver) == byId(viaIds)
+    import spark.implicits._
+    // Random files: distinct years, gaps in rowIdx, 0-3 records per grid
+    // row, random emit flags, keys from small pools with nulls. `persRaw`
+    // names the row, and a location's stored names are its key.
+    val key = Gen.oneOf[String](null, "a", "b", "б", "～", "😀")
+    val record = Gen.zip(Gen.prob(0.7), key, key, key, key, key) // emit, canon, insp, rank, prof, edu
+    val gridRow = for {
+      gap <- Gen.chooseNum(1, 3); loc <- Gen.zip(key, key, key)
+      recs <- Gen.chooseNum(0, 3).flatMap(Gen.listOfN(_, record))
+    } yield (gap, loc, recs)
+    val file = for (n <- Gen.chooseNum(0, 6); rows <- Gen.listOfN(n, gridRow)) yield rows
+    val corpusGen = for {
+      years <- Gen.someOf(1900 to 1915); files <- Gen.listOfN(years.size, file)
+    } yield years.toSeq.zip(files)
+    // seq is derived here, so a shrunk corpus stays consistent.
+    def resolvedOf(c: Seq[(Int, List[(Int, (String, String, String),
+        List[(Boolean, String, String, String, String, String)])])]): Seq[AsgResolved] =
+      c.flatMap { case (year, rows) =>
+        var (rowIdx, seq) = (0, 0)
+        rows.flatMap { case (gap, (lc, lg, lo), recs) =>
+          rowIdx += gap
+          recs.zipWithIndex.map { case ((emit, canon, insp, rank, prof, edu), ord) =>
+            if (emit) seq += 1
+            AsgResolved(s"fabric$year.html", year, rowIdx, ord, "o", "g", "r", null, null,
+              lc, s"$year/$rowIdx/$ord", if (emit) Option(canon).getOrElse(insp) else insp,
+              if (emit) canon else null, rank, prof, edu, lc, lg, lo, lg, lo,
+              null, null, false, false, null, null, null, null, null, emit, seq)
+          }
+        }
+      }
+    def ids(df: DataFrame, idCol: String, keys: String*): Map[Seq[String], Long] =
+      df.collect().map(r => keys.map(r.getAs[String]) -> r.getAs[Long](idCol)).toMap
+    val prop = Prop.forAll(corpusGen) { c =>
+      val rs = spark.createDataset(resolvedOf(c)).toDF()
+        .withColumn("orderKey", struct(col("year"), col("rowIdx"), col("ord")))
+      val t = ReferenceEtl.starSchema(rs)
+      def viaIds(rows: DataFrame, keys: String*): Map[Seq[String], Long] =
+        ids(Ids.sequenceBy(rows.groupBy(keys.map(col): _*).agg(min("orderKey").as("firstSeen")),
+          Seq(col("firstSeen")), "id"), "id", keys: _*)
+      val emitted = rs.where(col("emitted"))
+      val inspectors = viaIds(rs.where(col("canonName").isNotNull), "canonName")
+      val locations = viaIds(rs.where(col("ord") === 0), "locKeyCity", "locKeyGub", "locKeyOkrug")
+      val facts = t.assignments.collect().map(r => r.getAs[String]("PersonnelRawString") -> r).toMap
+      val factIds = ids(Ids.sequenceBy(emitted, Seq(col("orderKey")), "id"), "id", "persRaw")
+      def fk(r: Row, c: String) = Option(r.getAs[java.lang.Long](c)).map(_.longValue)
+      val fksResolve = emitted.collect().forall { r =>
+        val f = facts(r.getAs[String]("persRaw"))
+        fk(f, "InspectorID") == inspectors.get(Seq(r.getAs[String]("inspectorKey"))) &&
+          fk(f, "InspectorLocationID") ==
+            locations.get(Seq("locKeyCity", "locKeyGub", "locKeyOkrug").map(r.getAs[String]))
+      }
+      def dictIds(key: String) = viaIds(emitted.where(col(key).isNotNull), key)
+      ids(t.inspectors, "InspectorID", "FullName") == inspectors &&
+        ids(t.ranks, "RankID", "Abbreviation") == dictIds("stdRank") &&
+        ids(t.professions, "ProfessionID", "Abbreviation") == dictIds("stdProf") &&
+        ids(t.educations, "EducationID", "Abbreviation") == dictIds("stdEdu") &&
+        ids(t.locations, "LocationID", "CityName", "GuberniaName", "OkrugName") == locations &&
+        facts.view.mapValues(_.getAs[Long]("AssignmentID")).toMap == factIds.map { case (k, v) => k.head -> v } &&
+        fksResolve
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
     assert(res.passed, res.status.toString)

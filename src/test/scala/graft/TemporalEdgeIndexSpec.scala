@@ -212,14 +212,15 @@ class TemporalEdgeIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** One serving step as a deployment runs it: append the batch
-    * (reconciling late fragments with `late`), then publish the
+    * (checked disjoint from the indexed baskets, or reconciling late
+    * fragments with `late`), then publish the
     * refreshed trending snapshot — anchored at `anchorDay`, or sliding
     * (the newest indexed basket date) when None. */
   private def appendAndRefresh(rows: Seq[(Long, Long, String)], dir: String,
       anchorDay: Option[java.sql.Date], out: String, batchId: Long,
       late: Boolean = false): Unit = {
     if (late) TemporalEdgeIndex.appendLate(baskets(rows), dir)
-    else TemporalEdgeIndex.append(baskets(rows), dir)
+    else TemporalEdgeIndex.append(baskets(rows), dir, checkDisjoint = true)
     TemporalEdgeIndex.refreshTrendingSnapshot(spark, dir, anchorDay, out,
       k = 10, halflifeDays = 180, maxShift = 30, minWeightPpm = 0L, batchId)
   }

@@ -10,7 +10,7 @@ import graft.sources.TextSources
   * round trip on the real corpus; this spec fuzzes the quoting and
   * escaping paths with the strings the corpus doesn't contain —
   * embedded quotes, commas, newlines, backslashes, unicode, empties,
-  * nulls — and pins the quarantine behavior on malformed input.
+  * nulls.
   */
 class TextSourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -94,27 +94,6 @@ class TextSourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
         .collect().map(r => r.getLong(0) -> r.get(1)).toMap
       assert(back(1L) == "")
       assert(back(2L) == null)
-    } finally graft.ops.Corpus.deleteRecursively(dir)
-  }
-
-  test("JSONL quarantine: malformed lines land in _corrupt_record, good rows survive") {
-    val dir = tmp()
-    try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, "part-00000.json"),
-        """{"id":1,"a":"ok","b":"fine"}
-          |{not json at all
-          |{"id":3,"a":"also ok","b":null}
-          |""".stripMargin)
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(StructField("id", LongType),
-        StructField("a", StringType), StructField("b", StringType)))
-      val got = TextSources.readJsonlQuarantine(spark, dir, schema).collect()
-      assert(got.length == 3)
-      val bad = got.filter(r => r.getAs[String]("_corrupt_record") != null)
-      assert(bad.length == 1 && bad.head.getAs[String]("_corrupt_record").contains("not json"))
-      assert(got.filter(_.getAs[String]("_corrupt_record") == null)
-        .map(_.getAs[Long]("id")).toSet == Set(1L, 3L))
     } finally graft.ops.Corpus.deleteRecursively(dir)
   }
 
