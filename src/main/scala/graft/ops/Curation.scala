@@ -2198,7 +2198,7 @@ object Curation {
           IndexCommit.withGuard(spark, d) {
             out.select(col("doc_id")).write.mode("overwrite").parquet(s"$d/ids")
           }
-        base.join(spark.read.parquet(s"$d/ids"), Seq("doc_id"), "left_semi")
+        base.join(Tables.parquet(spark, s"$d/ids"), Seq("doc_id"), "left_semi")
     }
     val deduped = stage("s1_dedup")(dedupedCorpus(base))
     val keepQuality = repetitionSignals(deduped)

@@ -100,7 +100,7 @@ object EdgeIndex extends PersistedIndex {
   def edgesOf(spark: SparkSession, dir: String,
       minSupport: Long = 2L): DataFrame = {
     IndexCommit.requireCommitted(spark, dir, "edgesOf")
-    spark.read.parquet(s"$dir/pairfacts")
+    Tables.parquet(spark, s"$dir/pairfacts")
       .groupBy(col("src"), col("dst"))
       .agg(sum(col("weight")).cast("long").as("weight"))
       .where(col("weight") >= minSupport && col("weight") > 0L)
@@ -116,7 +116,7 @@ object EdgeIndex extends PersistedIndex {
   def edgesUpTo(spark: SparkSession, dir: String, maxBatch: Long,
       minSupport: Long = 2L): DataFrame = {
     IndexCommit.requireCommitted(spark, dir, "edgesUpTo")
-    spark.read.parquet(s"$dir/pairfacts")
+    Tables.parquet(spark, s"$dir/pairfacts")
       .where(col(IndexCommit.BatchCol) <= maxBatch)
       .groupBy(col("src"), col("dst"))
       .agg(sum(col("weight")).cast("long").as("weight"))
@@ -153,14 +153,14 @@ object EdgeIndex extends PersistedIndex {
         "claims, so late fragments of its baskets cannot be reconciled; " +
         "rebuild it with save()/append() under this version (compaction " +
         "cannot recover claims that were never recorded)")
-    val priorIds = spark.read.parquet(s"$dir/basketids")
+    val priorIds = Tables.parquet(spark, s"$dir/basketids")
       .where(col(IndexCommit.BatchCol) =!= batchId)
       .select(col("basket_id"))
     val straddleIds = b.select(col("basket_id")).distinct()
       .join(priorIds, Seq("basket_id"), "left_semi")
       .localCheckpoint()
     if (straddleIds.isEmpty) return pairFactsOf(b)
-    val prior = spark.read.parquet(s"$dir/basketitems")
+    val prior = Tables.parquet(spark, s"$dir/basketitems")
       .where(col(IndexCommit.BatchCol) =!= batchId)
       .select(col("basket_id"), col("item_id"))
       .join(straddleIds, Seq("basket_id"), "left_semi")
@@ -234,7 +234,7 @@ object EdgeIndex extends PersistedIndex {
   override def compactTo(spark: SparkSession, src: String, dst: String): Unit =
     compactGuarded(spark, src, dst) {
       IndexCommit.stamped(
-          spark.read.parquet(s"$src/pairfacts")
+          Tables.parquet(spark, s"$src/pairfacts")
             .groupBy(col("src"), col("dst"))
             .agg(sum(col("weight")).cast("long").as("weight"))
             .where(col("weight") =!= 0L), -1L)
@@ -242,13 +242,13 @@ object EdgeIndex extends PersistedIndex {
         .option("partitionOverwriteMode", "static")
         .partitionBy(IndexCommit.BatchCol).parquet(s"$dst/pairfacts")
       IndexCommit.stamped(
-          spark.read.parquet(s"$src/basketids").drop(IndexCommit.BatchCol)
+          Tables.parquet(spark, s"$src/basketids").drop(IndexCommit.BatchCol)
             .distinct(), -1L)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("partitionOverwriteMode", "static")
         .partitionBy(IndexCommit.BatchCol).parquet(s"$dst/basketids")
       IndexCommit.stamped(
-          spark.read.parquet(s"$src/basketitems").drop(IndexCommit.BatchCol)
+          Tables.parquet(spark, s"$src/basketitems").drop(IndexCommit.BatchCol)
             .distinct(), -1L)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("partitionOverwriteMode", "static")

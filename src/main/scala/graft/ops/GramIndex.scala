@@ -51,7 +51,7 @@ object GramIndex extends PersistedIndex {
   override def compactTo(spark: SparkSession, src: String, dst: String): Unit =
     compactGuarded(spark, src, dst) {
       IndexCommit.stamped(
-          spark.read.parquet(s"$src/grams").select(col("gram_hash")).distinct(),
+          Tables.parquet(spark, s"$src/grams").select(col("gram_hash")).distinct(),
           -1L)
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "static")
@@ -62,7 +62,7 @@ object GramIndex extends PersistedIndex {
     * across however many batches accumulated. */
   def vocab(spark: SparkSession, dir: String): DataFrame = {
     IndexCommit.requireCommitted(spark, dir, "vocab")
-    spark.read.parquet(s"$dir/grams").select(col("gram_hash")).distinct()
+    Tables.parquet(spark, s"$dir/grams").select(col("gram_hash")).distinct()
   }
 
   /** Score an arriving batch's bigram novelty against the indexed

@@ -81,7 +81,7 @@ object HashIndex extends PersistedIndex {
     BatchTable(IndexCommit.TableSpec("bloom"),
       (docs, dir, batchId) => {
         val spark = docs.sparkSession
-        val bloom = buildBloom(spark.read.parquet(s"$dir/hashes")
+        val bloom = buildBloom(Tables.parquet(spark, s"$dir/hashes")
           .where(col(IndexCommit.BatchCol) === batchId))
         import spark.implicits._
         Seq((bloom, BloomCapacity, BloomFpp)).toDF("bloom", "capacity", "fpp")
@@ -111,7 +111,7 @@ object HashIndex extends PersistedIndex {
   private[graft] def mergedBloom(spark: SparkSession,
       dir: String): org.apache.spark.util.sketch.BloomFilter = {
     import org.apache.spark.util.sketch.BloomFilter
-    val rows = spark.read.parquet(s"$dir/bloom")
+    val rows = Tables.parquet(spark, s"$dir/bloom")
       .select(col("bloom"), col("capacity"), col("fpp")).collect()
     require(rows.nonEmpty, s"mergedBloom: $dir/bloom holds no batches")
     require(rows.length <= MaxBloomBatches,
@@ -137,7 +137,7 @@ object HashIndex extends PersistedIndex {
   override protected def compactExtra(spark: SparkSession, dst: String): Unit = {
     val folded = mergedBloom(spark, dst)
     // preserve the SOURCE config — the merged bitset has its width
-    val cfg = spark.read.parquet(s"$dst/bloom")
+    val cfg = Tables.parquet(spark, s"$dst/bloom")
       .select(col("capacity"), col("fpp")).head()
     val bos = new java.io.ByteArrayOutputStream()
     folded.writeTo(bos)
@@ -162,7 +162,7 @@ object HashIndex extends PersistedIndex {
     * to the indexed side, so an oracle over the split corpus gates it. */
   def dedupAgainst(spark: SparkSession, newDocs: DataFrame, dir: String): DataFrame = {
     IndexCommit.requireCommitted(spark, dir, "dedupAgainst")
-    val idx = spark.read.parquet(s"$dir/hashes")
+    val idx = Tables.parquet(spark, s"$dir/hashes")
       .select(col("content_hash"), col("doc_id"))
     val probe = hashed(newDocs)
     // candidate rows first (semi-join-sized), THEN the min rollup: the
@@ -211,7 +211,7 @@ object HashIndex extends PersistedIndex {
       .select(col("doc_id"), col("content_hash"),
         lit(null).cast(LongType).as("dup_of"), lit(true).as("is_new"))
     val candidates = probe.where(col("maybe_seen"))
-    val idx = spark.read.parquet(s"$dir/hashes")
+    val idx = Tables.parquet(spark, s"$dir/hashes")
       .select(col("content_hash"), col("doc_id"))
     val keepers = idx
       .join(candidates.select(col("content_hash")).distinct(), Seq("content_hash"),

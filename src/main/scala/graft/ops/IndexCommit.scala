@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Shared write protocol for the persisted index families (the nine
-  * [[PersistedIndex]] families, [[IvfIndex]], [[PqIndex]]): each index
+  * [[PersistedIndex]] families and [[PqIndex]]): each index
   * is a SET of parquet tables that must describe the same corpus, but
   * parquet gives one-table commits only. Two pieces close the gap:
   *
@@ -324,7 +324,7 @@ private[graft] object IndexCommit {
     val overlap =
       if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) 0L
       else batch.select(col(idCol))
-        .join(spark.read.parquet(tablePath).select(col(idCol)), Seq(idCol), "left_semi")
+        .join(Tables.parquet(spark, tablePath).select(col(idCol)), Seq(idCol), "left_semi")
         .limit(1).count()
     require(overlap == 0L,
       s"append: batch contains $idCol values already indexed — appending " +
@@ -433,7 +433,7 @@ private[graft] object IndexCommit {
       "would overwrite the files it is reading")
     withGuard(spark, dst) {
       tables.foreach { t =>
-        val df = spark.read.parquet(s"$src/${t.name}")
+        val df = Tables.parquet(spark, s"$src/${t.name}")
         val (out, parts) =
           if (t.stamped) (stamped(df.drop(BatchCol), -1L), BatchCol +: t.partitionCols)
           else (df, t.partitionCols)

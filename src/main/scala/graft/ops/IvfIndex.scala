@@ -1,40 +1,28 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** IVF (inverted-file) approximate-nearest-neighbor index as a
-  * first-class build / save / load / search surface.
+/** IVF (inverted-file) approximate-nearest-neighbor index: build and
+  * search, in memory.
   *
-  * d17 exposes the self-contained query form (build inline, search the
-  * same table); this object is the production path at scale: the coarse
-  * quantizer is trained ONCE, the inverted file is persisted partitioned
-  * by cell, and every later query batch probes a couple of cells —
-  * reading only those partitions, never the corpus.
-  *
-  * On-disk layout (parquet):
-  *   <dir>/centroids   (cell INT, v ARRAY<DOUBLE>)   — K rows
-  *   <dir>/cells/ingest_batch=B/cell=N/  (vec_id LONG, v ARRAY<DOUBLE>)
-  * Writes follow the [[IndexCommit]] protocol: [[save]] writes batch -1,
-  * the centroid+cells pair is bracketed by a commit marker, and [[load]]
-  * fails closed on an interrupted write. Vectors added with [[add]] reach
-  * disk through a new [[save]] of the grown model.
+  * d17 builds the index inline and searches the same table: the coarse
+  * quantizer is trained once, and every query batch probes a couple of
+  * cells instead of scoring the whole corpus.
   *
   * Scale notes:
   *  - training: deterministic init (K lowest vec_ids) + Lloyd iterations,
-  *    each one assign-shuffle plus a K-row aggregate; the only driver
+  *    each one narrow pass plus a K-row driver fold; the only driver
   *    materialization anywhere is the K centroid vectors;
-  *  - the inverted file is written `partitionBy(cell)`, so a probe of p
-  *    cells is p directory reads (partition pruning on the `cell IN (...)`
-  *    filter) — the index read cost is p/K of the corpus per query batch;
-  *  - search re-attaches vectors id-keyed and ranks with the same
-  *    (sim DESC, id ASC) total order as the exact baseline.
+  *  - search meets the probed (query, cell) pairs with the inverted file
+  *    on `cell`, so a query scores about probes·N/K candidates, not N;
+  *  - search ranks with the same (sim DESC, id ASC) total order as the
+  *    exact baseline.
   */
 object IvfIndex {
 
   /** Trained quantizer (K centroid vectors) + the assigned inverted file
-    * (vec_id, cell, v). `cells` is unpersisted lineage — save() writes it. */
+    * (vec_id, cell, v) as unpersisted lineage. */
   final case class Model(centroids: Array[Array[Double]], cells: DataFrame)
 
   private[ops] def dist2(a: Array[Double], b: Array[Double]): Double = {
@@ -170,66 +158,6 @@ object IvfIndex {
     val bc = spark.sparkContext.broadcast(centroids)
     val cells = e.map { case (id, v) => (id, nearest(bc.value, v), v) }
       .toDF("vec_id", "cell", "v")
-    Model(centroids, cells)
-  }
-
-  /** Assign a batch of vectors to an EXISTING quantizer — the index
-    * maintenance path: arriving vectors are quantized against the fixed
-    * centroids (one narrow map over the batch, broadcast centroids, no
-    * shuffle of existing cells) and unioned into the inverted file.
-    * Centroids only move under a retrain ([[build]]), so every previous
-    * cell assignment — and every persisted cell partition — stays valid.
-    * Recall decays only as far as the corpus distribution drifts from
-    * the trained quantizer; retrain on your re-shard cadence. */
-  def add(spark: SparkSession, model: Model, vectors: DataFrame): Model =
-    Model(model.centroids,
-      model.cells.unionByName(assign(spark, model.centroids, vectors)))
-
-  private def assign(spark: SparkSession, centroids: Array[Array[Double]],
-      vectors: DataFrame): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(centroids)
-    vectors.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
-      .map { case (id, v) => (id, nearest(bc.value, v), v) }
-      .toDF("vec_id", "cell", "v")
-  }
-
-  /** Persist the index: tiny centroid table + cell-partitioned inverted
-    * file (probes prune to their partitions on read). The two tables are
-    * bracketed by the [[IndexCommit]] marker — [[load]] fails closed on
-    * an interrupted save (centroids describing a different quantizer
-    * than the cells were assigned with would silently misprobe). */
-  def save(model: Model, dir: String): Unit = {
-    val spark = model.cells.sparkSession
-    import spark.implicits._
-    IndexCommit.withGuard(spark, dir) {
-      model.centroids.zipWithIndex
-        .map { case (v, c) => (c, v) }.toSeq.toDF("cell", "v")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-      IndexCommit.stamped(model.cells, batchId = -1L)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy(IndexCommit.BatchCol, "cell").parquet(s"$dir/cells")
-    }
-  }
-
-  /** Rewrite an index as a single-generation snapshot
-    * under `dst` — see [[IndexCommit.compactTo]] for the crash-safety and
-    * serving model. Cells stay cell-partitioned, so probes prune
-    * identically; centroids are copied verbatim (the quantizer is
-    * generation-invariant). */
-  def compactTo(spark: SparkSession, src: String, dst: String): Unit =
-    IndexCommit.compactTo(spark, src, dst, Seq(
-      IndexCommit.TableSpec("centroids", stamped = false),
-      IndexCommit.TableSpec("cells", Seq("cell"))))
-
-  def load(spark: SparkSession, dir: String): Model = {
-    import spark.implicits._
-    IndexCommit.requireCommitted(spark, dir, "IvfIndex.load")
-    val centroids = spark.read.parquet(s"$dir/centroids")
-      .select(col("cell"), col("v")).as[(Int, Array[Double])]
-      .collect().sortBy(_._1).map(_._2)
-    val cells = spark.read.parquet(s"$dir/cells").select(col("vec_id"), col("cell"), col("v"))
     Model(centroids, cells)
   }
 

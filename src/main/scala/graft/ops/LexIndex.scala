@@ -77,7 +77,7 @@ object LexIndex extends PersistedIndex {
       (docs, _, _) => postings(docs).withColumn("bucket", bucketCol),
       clusterWrite = true),
     BatchTable(IndexCommit.TableSpec("docstats"),
-      (docs, dir, batchId) => docs.sparkSession.read.parquet(s"$dir/postings")
+      (docs, dir, batchId) => Tables.parquet(docs.sparkSession, s"$dir/postings")
         .where(col(IndexCommit.BatchCol) === batchId)
         .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))))
 
@@ -91,7 +91,7 @@ object LexIndex extends PersistedIndex {
     require(terms.nonEmpty, "searchBm25: empty query")
     IndexCommit.requireCommitted(spark, dir, "searchBm25")
     val tf = prunedPostings(spark, dir, terms)
-    val dl = spark.read.parquet(s"$dir/docstats")
+    val dl = Tables.parquet(spark, s"$dir/docstats")
       .select(col("doc_id"), col("dl"))
     Corpus.bm25ScoreFrom(tf, dl, k, k1, b)
   }
@@ -112,7 +112,7 @@ object LexIndex extends PersistedIndex {
     require(terms.nonEmpty, "searchQl: empty query")
     IndexCommit.requireCommitted(spark, dir, "searchQl")
     val tf = prunedPostings(spark, dir, terms)
-    val dl = spark.read.parquet(s"$dir/docstats")
+    val dl = Tables.parquet(spark, s"$dir/docstats")
       .select(col("doc_id"), col("dl"))
     Retrieval.qlRankFrames(tf, dl, k)
   }
@@ -125,7 +125,7 @@ object LexIndex extends PersistedIndex {
     * adds batches. */
   def postings(spark: SparkSession, dir: String): DataFrame = {
     IndexCommit.requireCommitted(spark, dir, "postings")
-    spark.read.parquet(s"$dir/postings")
+    Tables.parquet(spark, s"$dir/postings")
       .select(col("doc_id"), col("term"), col("tf"))
   }
 
@@ -137,7 +137,7 @@ object LexIndex extends PersistedIndex {
     import spark.implicits._
     val buckets = terms.toDF("term")
       .select(bucketCol.as("bucket")).distinct().as[Long].collect()
-    spark.read.parquet(s"$dir/postings")
+    Tables.parquet(spark, s"$dir/postings")
       .filter(col("bucket").isin(buckets.toIndexedSeq: _*) && col("term").isin(terms: _*))
       .select(col("doc_id"), col("term"), col("tf"))
   }

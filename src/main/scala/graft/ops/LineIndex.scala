@@ -54,7 +54,7 @@ object LineIndex extends PersistedIndex {
     * serves from. */
   def lineDocFreq(spark: SparkSession, dir: String): DataFrame = {
     IndexCommit.requireCommitted(spark, dir, "lineDocFreq")
-    spark.read.parquet(s"$dir/linedf")
+    Tables.parquet(spark, s"$dir/linedf")
       .groupBy(col("line_hash")).agg(sum(col("df")).cast("long").as("df"))
   }
 

@@ -47,7 +47,7 @@ object LmIndex extends PersistedIndex {
   /** The merged (token, cnt) view of all ingested batches. */
   def counts(spark: SparkSession, dir: String): DataFrame = {
     IndexCommit.requireCommitted(spark, dir, "counts")
-    spark.read.parquet(s"$dir/counts")
+    Tables.parquet(spark, s"$dir/counts")
       .groupBy(col("token")).agg(sum(col("cnt")).as("cnt"))
   }
 
@@ -68,12 +68,12 @@ object LmIndex extends PersistedIndex {
   override def compactTo(spark: SparkSession, src: String, dst: String): Unit =
     compactGuarded(spark, src, dst) {
       IndexCommit.stamped(
-          spark.read.parquet(s"$src/counts")
+          Tables.parquet(spark, s"$src/counts")
             .groupBy(col("token")).agg(sum(col("cnt")).as("cnt")), -1L)
         .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "static")
         .partitionBy(IndexCommit.BatchCol).parquet(s"$dst/counts")
       IndexCommit.stamped(
-          spark.read.parquet(s"$src/docs").drop(IndexCommit.BatchCol), -1L)
+          Tables.parquet(spark, s"$src/docs").drop(IndexCommit.BatchCol), -1L)
         .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "static")
         .partitionBy(IndexCommit.BatchCol).parquet(s"$dst/docs")
     }

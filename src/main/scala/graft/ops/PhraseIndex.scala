@@ -75,7 +75,7 @@ object PhraseIndex extends PersistedIndex {
     val buckets = terms.distinct.toDF("term")
       .select(pmod(xxhash64(col("term")), lit(Buckets)).as("bucket"))
       .distinct().as[Long].collect()
-    val posts = spark.read.parquet(s"$dir/postings")
+    val posts = Tables.parquet(spark, s"$dir/postings")
       .where(col("bucket").isin(buckets.toIndexedSeq: _*))
     val frames = terms.zipWithIndex.map { case (t, j) =>
       posts.where(col("term") === t)

@@ -3,10 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persisted PQ index — [[Pq]]'s codebook + code table on disk, closing
-  * the same lifecycle as the other persisted families ([[LexIndex]],
-  * [[IvfIndex]], LmIndex): crash-safe multi-table writes under the
-  * [[IndexCommit]] marker and snapshot compaction. This is the at-rest
+/** Persisted PQ index — [[Pq]]'s codebook + code table on disk, written
+  * crash-safe under the [[IndexCommit]] marker like the other persisted
+  * families ([[LexIndex]], LmIndex). This is the at-rest
   * form PQ exists for: the corpus persists as m ints per vector (16-64x
   * smaller than the float column), vectors encode against the FROZEN
   * codebook (which only moves under a retrain + [[save]]), and retrieval
@@ -47,7 +46,7 @@ object PqIndex {
   def loadCodebook(spark: SparkSession, dir: String): Pq.PqCodebook = {
     import spark.implicits._
     IndexCommit.requireCommitted(spark, dir, "PqIndex.loadCodebook")
-    val rows = spark.read.parquet(s"$dir/codebook")
+    val rows = Tables.parquet(spark, s"$dir/codebook")
       .select(col("s"), col("c"), col("cent"), col("sub_dim"))
       .as[(Int, Int, Array[Double], Int)].collect()
     require(rows.nonEmpty, s"PqIndex.loadCodebook: $dir/codebook is empty")
@@ -63,7 +62,7 @@ object PqIndex {
     * index). */
   def loadCodes(spark: SparkSession, dir: String): DataFrame = {
     IndexCommit.requireCommitted(spark, dir, "PqIndex.loadCodes")
-    spark.read.parquet(s"$dir/codes").select(col("vec_id"), col("codes"))
+    Tables.parquet(spark, s"$dir/codes").select(col("vec_id"), col("codes"))
   }
 
   /** ADC top-k served from the saved index — the deployment read path
@@ -72,12 +71,4 @@ object PqIndex {
       k: Int = 3, maxBroadcastBytes: Long = 256L << 20): DataFrame =
     Pq.topKAdc(queries, loadCodes(spark, dir), loadCodebook(spark, dir),
       k, maxBroadcastBytes)
-
-  /** Rewrite the index as a single-generation snapshot under `dst` —
-    * [[IndexCommit.compactTo]]'s serving model (src untouched; dst fails
-    * closed until its marker lands). */
-  def compactTo(spark: SparkSession, src: String, dst: String): Unit =
-    IndexCommit.compactTo(spark, src, dst, Seq(
-      IndexCommit.TableSpec("codebook", stamped = false),
-      IndexCommit.TableSpec("codes")))
 }

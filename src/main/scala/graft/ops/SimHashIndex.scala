@@ -46,7 +46,7 @@ object SimHashIndex extends PersistedIndex {
       maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "chunk-equality candidates are exact only for hamming <= 3")
     IndexCommit.requireCommitted(spark, dir, "nearDupAgainst")
-    val idx = spark.read.parquet(s"$dir/signatures")
+    val idx = Tables.parquet(spark, s"$dir/signatures")
       .select(col("doc_id"), col("simhash"))
     val probe = Corpus.simhashSignatures(newDocs)
     Corpus.simhashChunks(idx).as("x")

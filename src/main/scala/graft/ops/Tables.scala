@@ -1,10 +1,18 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Loaders for the driver's test tables (TESTDATA.md).
+/** The library's one parquet reader ([[parquet]]) and the loaders for
+  * the driver's test tables (TESTDATA.md).
   *
   * All columns arrive with their parquet types; the one exception is
   * `events.ts`, which is nanosecond-precision parquet that Spark cannot
@@ -22,11 +30,73 @@ object Tables {
   val GoldenDir: String =
     new java.io.File(sys.env.getOrElse("GRAFT_REPO", "."), "tools/golden").getCanonicalPath
 
+  /** Read the parquet table at `path` (a file or a directory) with the
+    * schema `spark.read.parquet(path)` would infer, but without the Spark
+    * job that inference runs: Spark reads even one footer through
+    * `SchemaMergeUtils.mergeSchemasInParallel`, a one-task job with its
+    * own Hadoop-conf broadcast. Every parquet read in the library goes
+    * through here.
+    *
+    *  - The path is listed with Spark's own file index
+    *    (`InMemoryFileIndex`), so hidden files (`_SUCCESS`, `.crc`) are
+    *    skipped and `_common_metadata`/`_metadata` kept, as Spark does.
+    *  - The schema file is the one Spark's non-merging inference picks
+    *    (`ParquetUtils.inferSchema`): `_common_metadata`, else
+    *    `_metadata`, else the first data file by full path.
+    *  - Its footer is read on the driver and converted by
+    *    `ParquetFileFormat.readSchemaFromFooter` (the Spark schema the
+    *    writer stored, else the parquet schema). The converter takes the
+    *    session's `binaryAsString`, `int96AsTimestamp`,
+    *    `inferTimestampNTZ.enabled`, `legacy.parquet.nanosAsLong` and
+    *    `reader.respectUnknownTypeAnnotation`, and the defaults of the
+    *    rest, exactly as Spark's inference builds it.
+    *  - The frame is `spark.read.schema(dataSchema).parquet(path)`: Spark
+    *    still discovers the partition columns (e.g. `ingest_batch=`) and
+    *    appends them, and makes every field nullable, as before.
+    *
+    * `mergeSchema` is not honoured: the schema is always the one file's.
+    * `Sessions.build` never sets `spark.sql.parquet.mergeSchema`, and no
+    * caller passes the option. A path with more sibling directories than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` is listed
+    * by a Spark job, here and again in Spark's own read.
+    *
+    * When the listing finds no file (a missing path, an empty
+    * directory, a glob pattern) the read is plain `spark.read.parquet`,
+    * so the caller sees Spark's own error: `PATH_NOT_FOUND` for a missing
+    * path, `UNABLE_TO_INFER_SCHEMA` for an empty directory. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val files = new InMemoryFileIndex(spark,
+        Seq(root.getFileSystem(hadoopConf).makeQualified(root)), Map.empty, None)
+      .allFiles().sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val summary = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(files.find(f => !summary(f.getPath.getName))) match {
+      case None => spark.read.parquet(path)
+      case Some(f) =>
+        val conf = spark.sessionState.conf
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+        val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer, converter))
+          .parquet(path)
+    }
+  }
+
   // NOTE: reading `events` requires spark.sql.legacy.parquet.nanosAsLong=true
   // set at session build time (graft.Sessions.build / the test harness) —
   // a conf flip inside a table loader would be an ordering hazard.
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

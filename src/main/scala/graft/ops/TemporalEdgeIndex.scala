@@ -140,14 +140,14 @@ object TemporalEdgeIndex extends PersistedIndex {
         "claims, so late fragments of its baskets cannot be reconciled; " +
         "rebuild it with save()/append() under this version (compaction " +
         "cannot recover claims that were never recorded)")
-    val priorIds = spark.read.parquet(s"$dir/basketids")
+    val priorIds = Tables.parquet(spark, s"$dir/basketids")
       .where(col(IndexCommit.BatchCol) =!= batchId)
       .select(col("basket_id"))
     val straddleIds = b.select(col("basket_id")).distinct()
       .join(priorIds, Seq("basket_id"), "left_semi")
       .localCheckpoint()
     if (straddleIds.isEmpty) return pairFactsOf(b)
-    val prior = spark.read.parquet(s"$dir/basketitems")
+    val prior = Tables.parquet(spark, s"$dir/basketitems")
       .where(col(IndexCommit.BatchCol) =!= batchId)
       .select(col("basket_id"), col("item_id"), col("bday"))
       .join(straddleIds, Seq("basket_id"), "left_semi")
@@ -271,7 +271,7 @@ object TemporalEdgeIndex extends PersistedIndex {
         "(one DATE column — the query-time 'now')")
     val shift = s"least(greatest(least(datediff(mx, bday) div $halflifeDays," +
       s" $maxShift), 0), 62)"
-    val facts = spark.read.parquet(s"$dir/pairfacts")
+    val facts = Tables.parquet(spark, s"$dir/pairfacts")
     maxBatch.fold(facts)(b => facts.where(col(IndexCommit.BatchCol) <= b))
       .crossJoin(broadcast(mx))
       .select(col("src"), col("dst"), col("n"),
@@ -322,7 +322,7 @@ object TemporalEdgeIndex extends PersistedIndex {
           "the index was written by a version that did not persist raw " +
             "claims, which the sliding anchor reads; rebuild it with " +
             "save()/append() under this version, or pass a fixed anchorDay")
-        s.read.parquet(s"$dir/basketitems")
+        Tables.parquet(s, s"$dir/basketitems")
           .agg(max(col("bday")).as("mx"))
     }
     // atomic generation publish (r15 advice: a plain overwrite
@@ -348,7 +348,7 @@ object TemporalEdgeIndex extends PersistedIndex {
     * outlive that window must re-resolve and retry on
     * FileNotFoundException. */
   def trendingSnapshot(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(IndexCommit.currentSnapshotDir(spark, outDir))
+    Tables.parquet(spark, IndexCommit.currentSnapshotDir(spark, outDir))
 
   /** Compaction is a semantic MERGE (the [[EdgeIndex]] precedent): the
     * per-batch (src, dst, bday) counts SUM into one row per key —
@@ -361,7 +361,7 @@ object TemporalEdgeIndex extends PersistedIndex {
   override def compactTo(spark: SparkSession, src: String, dst: String): Unit =
     compactGuarded(spark, src, dst) {
       IndexCommit.stamped(
-          spark.read.parquet(s"$src/pairfacts")
+          Tables.parquet(spark, s"$src/pairfacts")
             .groupBy(col("src"), col("dst"), col("bday"))
             .agg(sum(col("n")).cast("long").as("n"))
             .where(col("n") =!= 0L), -1L)
@@ -369,13 +369,13 @@ object TemporalEdgeIndex extends PersistedIndex {
         .option("partitionOverwriteMode", "static")
         .partitionBy(IndexCommit.BatchCol).parquet(s"$dst/pairfacts")
       IndexCommit.stamped(
-          spark.read.parquet(s"$src/basketids").drop(IndexCommit.BatchCol)
+          Tables.parquet(spark, s"$src/basketids").drop(IndexCommit.BatchCol)
             .distinct(), -1L)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("partitionOverwriteMode", "static")
         .partitionBy(IndexCommit.BatchCol).parquet(s"$dst/basketids")
       IndexCommit.stamped(
-          spark.read.parquet(s"$src/basketitems").drop(IndexCommit.BatchCol)
+          Tables.parquet(spark, s"$src/basketitems").drop(IndexCommit.BatchCol)
             .distinct(), -1L)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("partitionOverwriteMode", "static")

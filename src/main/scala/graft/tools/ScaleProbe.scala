@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Tables
 
 /** One-rung-up scale probe (r13 verdict ask #6): run the round's five
   * heaviest registered queries at sf≈1 — ten key-shifted copies of the
@@ -81,17 +82,17 @@ object ScaleProbe {
         d.withColumn(c, col(c) + lit(k * off)) }
     def union(frames: Seq[DataFrame]): DataFrame = frames.reduce(_ union _)
 
-    val li = spark.read.parquet(s"$src/lineitem.parquet")
+    val li = Tables.parquet(spark, s"$src/lineitem.parquet")
     union((0 until copies).map(k => shifted(li, k,
         "l_orderkey" -> ORD, "l_partkey" -> KEY, "l_suppkey" -> KEY)))
       .write.mode(SaveMode.Overwrite).parquet(s"$out/lineitem.parquet")
 
-    val ord = spark.read.parquet(s"$src/orders.parquet")
+    val ord = Tables.parquet(spark, s"$src/orders.parquet")
     union((0 until copies).map(k => shifted(ord, k,
         "o_orderkey" -> ORD, "o_custkey" -> KEY)))
       .write.mode(SaveMode.Overwrite).parquet(s"$out/orders.parquet")
 
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = Tables.parquet(spark, s"$src/documents.parquet")
     union((0 until copies).map { k =>
       val rot = Letters.drop(k % Letters.length) + Letters.take(k % Letters.length)
       shifted(docs, k, "doc_id" -> DOC)
@@ -105,7 +106,7 @@ object ScaleProbe {
     // duplicates change WHICH neighbors win, not how many pairs are
     // scored) and keeps the generator a pure key-shift like the
     // relational tables.
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = Tables.parquet(spark, s"$src/embeddings.parquet")
     union((0 until copies).map(k => shifted(emb, k, "vec_id" -> DOC)))
       .write.mode(SaveMode.Overwrite).parquet(s"$out/embeddings.parquet")
 

@@ -80,6 +80,22 @@ class EngineContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  // Tables.parquet is the library's one parquet reader: it reads the schema
+  // from a footer on the driver, where spark.read.parquet runs a Spark job
+  // for it. A second direct reader would bring that job back unnoticed.
+  test("no library file but ops/Tables.scala calls .read.parquet(") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val readers = files(root).filter(_.getName.endsWith(".scala"))
+      .filterNot(_.getPath.endsWith("graft/ops/Tables.scala"))
+      .filter(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .contains(".read.parquet("))
+      .map(_.getPath)
+    assert(readers.isEmpty, s"read parquet through Tables.parquet instead: ${readers.mkString(", ")}")
+  }
+
   test("filters and column selection are pushed down to the parquet scan") {
     val df = graft.ops.Tables.lineitem(spark, sf)
       .where(col("l_quantity") > 30.0)

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
-import graft.ops.{Corpus, IndexCommit, IvfIndex, LexIndex, Tables}
+import graft.ops.{Corpus, IndexCommit, LexIndex, Tables}
 
 /** Compaction is a pure LAYOUT change: a compacted snapshot must serve
   * byte-identical results from a single `ingest_batch=-1` generation,
@@ -48,24 +48,6 @@ class IndexCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hits(dst) ==
       Corpus.bm25Rank(docs, Corpus.Bm25Query).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq)
-  }
-
-  test("ivf: compacted snapshot searches identically, quantizer preserved") {
-    val e = Tables.embeddings(spark, sf)
-      .select(col("vec_id"), expr("transform(embedding, x -> cast(x AS double))").as("v"))
-    val src = tmp("graft-ivfc-src"); val dst = tmp("graft-ivfc-dst")
-    val base = IvfIndex.build(spark, e.filter(col("vec_id") % 2 === 0), k = 8, iters = 2)
-    IvfIndex.save(IvfIndex.add(spark, base, e.filter(col("vec_id") % 2 === 1)), src)
-    IvfIndex.compactTo(spark, src, dst)
-
-    assert(batchDirs(dst, "cells") == Seq("ingest_batch=-1"))
-    val mSrc = IvfIndex.load(spark, src)
-    val mDst = IvfIndex.load(spark, dst)
-    assert(mSrc.centroids.map(_.toSeq).toSeq == mDst.centroids.map(_.toSeq).toSeq)
-    def topk(m: IvfIndex.Model) =
-      IvfIndex.searchTopK(spark, m, e, k = 3, probes = 8).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(topk(mDst) == topk(mSrc))
   }
 
   test("compactTo refuses in-place rewrite and an uncommitted source") {

@@ -3,13 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
-import graft.ops.{IndexCommit, Pq, PqIndex, Tables}
+import graft.ops.{Pq, PqIndex, Tables}
 
 /** The persisted PQ index must honor the shared index-family contract:
   * a saved index serves exactly the direct computation (parquet adds no
-  * tolerance — d75 hash-gates this against DuckDB too), readers fail
-  * closed on an uncommitted write, and compaction is a pure layout
-  * change.
+  * tolerance — d75 hash-gates this against DuckDB too), and readers
+  * fail closed on an uncommitted write.
   */
 class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -21,11 +20,6 @@ class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def tmp(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix).toString
-
-  private def batchDirs(dir: String): Seq[String] = {
-    val f = new java.io.File(s"$dir/codes")
-    f.listFiles().toSeq.map(_.getName).filter(_.startsWith("ingest_batch=")).sorted
-  }
 
   private def hits(dir: String) =
     PqIndex.searchSaved(spark, dir, vecs).collect()
@@ -43,20 +37,6 @@ class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lcb.subDim == cb.subDim)
     assert(lcb.centroids.flatten.map(_.toSeq).toSeq ==
       cb.centroids.flatten.map(_.toSeq).toSeq)
-  }
-
-  test("compacted snapshot serves identically from one generation; source untouched") {
-    val src = tmp("graft-pqi-src"); val dst = tmp("graft-pqi-dst")
-    val cb = Pq.train(spark, vecs, m = 8, k = 16, iters = 2)
-    PqIndex.save(spark, cb, vecs, src)
-    PqIndex.compactTo(spark, src, dst)
-    assert(batchDirs(dst) == Seq("ingest_batch=-1"))
-    assert(hits(dst) == hits(src))
-    assert(batchDirs(src) == Seq("ingest_batch=-1"))
-    assert(IndexCommit.isCommitted(spark, src))
-    val direct = Pq.topKAdc(vecs, Pq.encode(spark, vecs, cb), cb).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(hits(dst) == direct)
   }
 
   test("readers fail closed on an uncommitted index") {
